@@ -182,15 +182,10 @@ object Audit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    // AQE off for the audit — see `sweep`
-    builder.config("spark.sql.adaptive.enabled", "false")
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
+    // AQE off for the audit — see `sweep`
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val results = sweep(spark, sfDir)
     results.foreach { a =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.QueryLoop.{Err, Ok, Outcome, Skip}
 
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR, prints one JSON line. A warmup action runs first
@@ -11,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: touch every table once + run the flagship query (pays
     // session init, parquet footer reads, first codegen) + stage the
@@ -27,11 +21,9 @@ object Bench {
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
     SparkEntry.queries("q05_anchor_window")(spark, sfDir).count()
     graft.queries.CapstoneQueries.stageFixtures(spark, sfDir)
-    // Optional args: query-name substrings to restrict the run (builder-side
-    // profiling); the driver invokes with no args = full suite.
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => args.exists(n.contains) }
+    // Optional args: query-name substrings to restrict the run; with
+    // none, every registered query runs.
+    val ordered = QueryLoop.select(args.toSeq)
     // Each query is timed twice and the MIN reported: on a shared box a
     // single reading carries multiplicative co-tenant noise (measured
     // round 4: two identical full runs 20 min apart differed by a
@@ -52,40 +44,16 @@ object Bench {
     // column-pruned scan while the real bin-join volume at a same-ts
     // sf10 was 48.3B rows. toRdd triggers AQE finalization and runs
     // every operator the query declares, without collecting rows.
-    // Three outcomes, not two (round-15 verdict task 3): a ScaleGuard
-    // trip is a BY-DESIGN fail-fast — the O(n²) oracle refusing a
-    // corpus-scale input and naming its production successor — and must
-    // not share a bucket with real breakage in sweep output. Skipped
-    // queries are reported under "skipped" with the successor, count
-    // toward neither n_queries nor n_errors, and a sweep with only
-    // guard trips still reports n_errors = 0.
-    sealed trait Outcome
-    case object Ok extends Outcome
-    final case class Skip(msg: String) extends Outcome
-    final case class Err(msg: String) extends Outcome
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Outcome) = {
-      val t0 = System.nanoTime()
-      val err: Outcome =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); Ok }
-        catch {
-          case g: graft.ops.ScaleGuards.ScaleGuardTrip =>
-            Skip(s"guard trip (by design); successor: ${g.successor.take(120)}")
-          case e: Throwable =>
-            Err(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // Queries that persist() intermediates can't unpersist before the
-      // terminal action runs here; drop their cached blocks now so cache
-      // pressure from one query never degrades the queries after it.
-      spark.sharedState.cacheManager.clearCache()
-      // ContextCleaner reclaims dead broadcast/shuffle/localCheckpoint
-      // blocks only after a GC notices the weak references — force one
-      // so the previous query's block-manager state can't squeeze this
-      // one's execution memory (see build.sbt's heap-size note).
-      System.gc()
-      (elapsed, err)
+    // Guard trips (QueryLoop.Skip) are reported under "skipped" with the
+    // successor, count toward neither n_queries nor n_errors, and a
+    // sweep with only guard trips still reports n_errors = 0.
+    def once(fn: QueryLoop.Query): (Double, Outcome) =
+      QueryLoop.run(spark)(fn(spark, sfDir).queryExecution.toRdd.count())
+    def message(o: Outcome): String = o match {
+      case Skip(successor) => s"guard trip (by design); successor: ${successor.take(120)}"
+      case Err(e) => s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
+      case Ok => "ok"
     }
-    val ordered = selected.toSeq.sortBy(_._1)
     val pass1 = ordered.map { case (name, fn) => (name, once(fn)) }.toMap
     val results = ordered.map { case (name, fn) =>
       val (e1, o1) = pass1(name)
@@ -102,7 +70,7 @@ object Bench {
               // stands (a flaky second run must not turn a measured success
               // into an error, nor contribute a time-to-failure to a min)
               System.err.println(s"[bench] $name: pass 2 failed after pass 1 " +
-                s"succeeded (flaky, keeping pass-1 timing): $o2")
+                s"succeeded (flaky, keeping pass-1 timing): ${message(o2)}")
               (e1, Ok)
           }
       }
@@ -112,7 +80,7 @@ object Bench {
     // so a crash is never indistinguishable from a fast result; guard
     // trips in "skipped" with the successor named.
     val ok = results.collect { case (k, v, Ok) => (k, v, Ok: Outcome) }
-    val skips = results.collect { case (k, _, Skip(m)) => (k, m) }
+    val skips = results.collect { case (k, _, o: Skip) => (k, message(o)) }
     val qs = ok.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // JSON string escape: backslash, quote, ALL control chars (<0x20),
@@ -127,9 +95,8 @@ object Bench {
       case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val errs = results.collect { case (k, _, Err(m)) =>
-      s"\"" + k + "\":" + q(m)
-    }.mkString("{", ",", "}")
+    val allErrs = results.collect { case (k, _, o: Err) => (k, message(o)) }
+    val errs = allErrs.map { case (k, m) => s"\"" + k + "\":" + q(m) }.mkString("{", ",", "}")
     val skipsJson = skips.map { case (k, m) => s"\"" + k + "\":" + q(m) }
       .mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.map(_._2).sum else 0.0
@@ -150,7 +117,6 @@ object Bench {
     // comma-decimal locale (de_DE) would emit "12,098" — unparseable JSON.
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val allErrs = results.collect { case (k, _, Err(m)) => (k, m) }
     // compact skipped map: names only (the successor prose lives in the
     // full line) so 4 guard trips cost ~60 chars of the tail window
     val skipsCompact =

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named queries to per-query files —
   * the optimization-round evidence format (plans/rNN/<query>_<tag>.txt).
@@ -22,26 +22,17 @@ object PlanDump {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <tag> <name> [name...]")
     val Array(sfDir, outDir, tag) = args.take(3)
     val names = args.drop(3).toSeq
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    def trim(plan: String): String = plan.linesIterator.map { l =>
-      if (l.length <= 400) l else l.take(400) + s"…[${l.length - 400} chars elided]"
-    }.mkString("\n")
     names.foreach { name =>
-      graft.ops.CacheScope.reset()
-      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+      val (plan, inners) = Plans.render(spark, sfDir, name, FormattedMode)
       val sb = new StringBuilder
       sb.append(s"# $name — $tag (sf: $sfDir)\n\n")
-      sb.append(trim(qe.explainString(org.apache.spark.sql.execution.FormattedMode)))
-      graft.ops.CacheScope.inners.zipWithIndex.foreach { case (inner, i) =>
+      sb.append(plan)
+      inners.zipWithIndex.foreach { case (inner, i) =>
         sb.append(s"\n\n## inner plan ${i + 1} (pre-checkpoint, as executed)\n\n")
-        sb.append(trim(inner.executedPlan.toString))
+        sb.append(inner)
       }
       sb.append("\n")
       Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), sb.toString)

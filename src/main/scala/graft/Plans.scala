@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, SimpleMode}
 
 /** Dumps the formatted physical plans of the headline queries to
   * PLANS.md — the plan shapes `PlanAuditSpec` pins, in reviewable form.
@@ -58,15 +59,28 @@ object Plans {
     "q213_prefix_filter_audit", "q214_field_control_capstone",
     "q215_coverages_capstone")
 
+  /** Query `name`'s plan in `mode`, then the inner plans its build
+    * recorded: queries that checkpoint an intermediate (CacheScope /
+    * DedupOps.neardupEdges) surface as `Scan ExistingRDD` in the outer
+    * plan, and the plan that actually did the work is the recorded
+    * inner one (pre-checkpoint, as executed). Lines past 400 chars are
+    * elided: giant inlined literals (e.g. q129's serialized bloom
+    * filter renders as ~400 KB of hex) — the plan SHAPE is the record.
+    */
+  def render(spark: SparkSession, sfDir: String, name: String,
+             mode: ExplainMode): (String, Seq[String]) = {
+    def trim(plan: String): String = plan.linesIterator.map { l =>
+      if (l.length <= 400) l else l.take(400) + s"…[${l.length - 400} chars elided]"
+    }.mkString("\n")
+    graft.ops.CacheScope.reset()
+    val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(mode)
+    (trim(plan), graft.ops.CacheScope.inners.map(qe => trim(qe.executedPlan.toString)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.drop(1).headOption.getOrElse("PLANS.md")
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — headline physical plans (generated by `graft.Plans`)\n\n")
@@ -75,22 +89,12 @@ object Plans {
     sb.append("exchange, pruned `ReadSchema`/`PushedFilters`, native `vec_dot` /\n")
     sb.append("`partial_top_k_pairs` — are asserted by `PlanAuditSpec`; this file\n")
     sb.append("is the human-readable record.\n")
-    // elide giant inlined literals (e.g. q129's serialized bloom filter
-    // renders as ~400 KB of hex) — the plan SHAPE is the record
-    def trim(plan: String): String = plan.linesIterator.map { l =>
-      if (l.length <= 400) l else l.take(400) + s"…[${l.length - 400} chars elided]"
-    }.mkString("\n")
     headline.foreach { name =>
-      graft.ops.CacheScope.reset()
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-      sb.append(s"\n## $name\n\n```\n${trim(plan)}\n```\n")
-      // queries that checkpoint an intermediate (CacheScope /
-      // DedupOps.neardupEdges) surface as `Scan ExistingRDD` above; the
-      // plan that actually did the work is the recorded inner one
-      graft.ops.CacheScope.inners.zipWithIndex.foreach { case (qe, i) =>
+      val (plan, inners) = render(spark, sfDir, name, SimpleMode)
+      sb.append(s"\n## $name\n\n```\n$plan\n```\n")
+      inners.zipWithIndex.foreach { case (inner, i) =>
         sb.append(s"\n### $name — inner plan ${i + 1} (pre-checkpoint, as executed)\n\n")
-        sb.append(s"```\n${trim(qe.executedPlan.toString)}\n```\n")
+        sb.append(s"```\n$inner\n```\n")
       }
     }
     Files.writeString(Paths.get(outFile), sb.toString)

@@ -53,13 +53,7 @@ object ScaleData {
     val dst = args.drop(1).headOption.getOrElse("/root/repo/scaledata/sf1")
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val baseScale = args.drop(3).headOption.map(_.toLong).getOrElse(1L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     try generate(spark, src, dst, factor, baseScale)
     finally spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder tooling (round-13 verdict task 2): engine-side dumps backing
   * the sf100 KEY-SAMPLED subset oracle for the queries whose FULL DuckDB
   * oracle exceeded the box at sf100 (round-12 record: q210's ground-truth
@@ -31,13 +29,7 @@ object SliceDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // `df` is BY-NAME (round-15 verdict task 4): evaluating the queries

@@ -24,11 +24,16 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    all.toMap.apply("q05_anchor_window").fn(spark, "/root/testdata/sf0.001")
+    queries("q05_anchor_window")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each readies
+    * its session first (`GraftSession.install`), so a session built
+    * without `GraftExtensions` still resolves the native functions.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (n, q) => n -> q.fn }.toMap
+    all.map { case (n, q) =>
+      n -> { (s: SparkSession, d: String) => GraftSession.install(s); q.fn(s, d) }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

@@ -169,10 +169,10 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    // deployment-grade extension loading: native functions, the binned
-    // range-join rewrite, the as-of strategy, and the as-of codegen
-    // shield rule (the AQE prep rule is ONLY injectable here — there is
-    // no imperative post-session hook for query-stage prep rules)
+    // deployment-grade extension loading: native functions, the as-of
+    // strategy, and the as-of codegen shield rule (the AQE prep rule is
+    // ONLY injectable here — there is no imperative post-session hook
+    // for query-stage prep rules)
     "spark.sql.extensions" -> "graft.expr.GraftExtensions",
     // The reference's R semantics are permissive (NaN-guards, NA casts —
     // SURVEY.md §2.I4/I10); ANSI hard-errors would change behavior.

@@ -1,61 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.QueryLoop.{Err, Ok, Skip}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), sel) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Correctness-gate-only override (round-14 ADVICE: keep it OUT of
-      // the shared sessionConfigs so Bench/tests/library sessions retain
-      // the driver-collect guardrail): the streaming gates snapshot
-      // their result through a memory sink in Complete mode (production
-      // mode is Append — q217's eviction is spec-pinned), and at sf100
-      // the q217 snapshot's serialized task results exceed the 1g
-      // default, dying in the harness, not the plan. Verify runs one
-      // query at a time in a single local JVM, so the collect is an
-      // in-process copy and the conservative cluster default buys
-      // nothing here.
-      .config("spark.driver.maxResultSize", "8g")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    // Correctness-gate-only override (round-14 ADVICE: keep it OUT of
+    // the shared sessionConfigs so Bench/tests/library sessions retain
+    // the driver-collect guardrail): the streaming gates snapshot
+    // their result through a memory sink in Complete mode (production
+    // mode is Append — q217's eviction is spec-pinned), and at sf100
+    // the q217 snapshot's serialized task results exceed the 1g
+    // default, dying in the harness, not the plan. Verify runs one
+    // query at a time in a single local JVM, so the collect is an
+    // in-process copy and the conservative cluster default buys
+    // nothing here.
+    val spark = GraftSession.create(extra = Map("spark.driver.maxResultSize" -> "8g"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional extra args: query-name substrings restricting the dump
     // (builder-side iteration); the driver invokes with 2 args = all.
-    val selected =
-      if (sel.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => sel.exists(n.contains) }
+    val selected = QueryLoop.select(sel.toSeq)
     // Queries run in name order with per-query progress on stderr: a
-    // multi-hour scale sweep (sf10/sf100) is otherwise a silent JVM, and
-    // Map iteration order made "which query is it on?" unanswerable
-    // (round-12 sweep monitoring).
+    // multi-hour scale sweep (sf10/sf100) is otherwise a silent JVM.
     var done = 0
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        done += 1
-        System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1f s ($done/${selected.size})")
-      } catch {
-        // a ScaleGuard trip is a by-design fail-fast, not a failure —
-        // keep the two distinguishable in sweep logs (round-15 task 3)
-        case g: graft.ops.ScaleGuards.ScaleGuardTrip =>
-          System.err.println(s"[verify] $name skipped by guard; successor: ${g.successor}")
-        case e: Throwable =>
+    selected.foreach { case (name, fn) =>
+      QueryLoop.run(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } match {
+        case (elapsed, Ok) =>
+          done += 1
+          System.err.println(f"[verify] $name ok in $elapsed%.1f s ($done/${selected.size})")
+        case (_, Skip(successor)) =>
+          System.err.println(s"[verify] $name skipped by guard; successor: $successor")
+        case (_, Err(e)) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop per-query persisted intermediates (see Bench)
-      spark.sharedState.cacheManager.clearCache()
-      // force ContextCleaner to reclaim dead broadcast/shuffle/
-      // checkpoint blocks between queries (see Bench + build.sbt note)
-      System.gc()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -55,129 +54,58 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-scoped registration of graft's native expressions, so queries
-  * can use them via `expr("vec_dot(a, b)")`. Idempotent.
+/** graft's native functions, spelled once: the table drives both
+  * [[GraftExtensions]] (`spark.sql.extensions`) and
+  * `graft.GraftSession.install` (sessions built without the extension).
   */
 object GraftFunctions {
-  import org.apache.spark.sql.catalyst.expressions.Cast
+  import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, ExpressionInfo}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-  /** Builders shared by both registration paths; score/payload are cast
-    * so SQL-literal arguments (e.g. DECIMAL `1.0`) just work.
+  /** (name, expression class, builder). Score/payload arguments are cast
+    * so SQL-literal arguments (e.g. DECIMAL `1.0`) just work. `bloom_agg`
+    * and `bloom_contains` expose Spark's own runtime-filter expressions
+    * by name so ops.BloomOps can plant the identical codegen'd probe
+    * explicitly.
     */
-  private[expr] def vecDotBuilder(exprs: Seq[Expression]): Expression =
-    FloatVecDot(exprs(0), exprs(1))
-  private[expr] def topKBuilder(exprs: Seq[Expression]): Expression =
-    TopKPairs(Cast(exprs(0), DoubleType), Cast(exprs(1), LongType), exprs(2))
-      .toAggregateExpression()
-  private[expr] def kmvBuilder(exprs: Seq[Expression]): Expression =
-    KmvDistinct(Cast(exprs(0), LongType), exprs(1)).toAggregateExpression()
-  private[expr] def heavyHittersBuilder(exprs: Seq[Expression]): Expression =
-    SpaceSaving(Cast(exprs(0), StringType), exprs(1)).toAggregateExpression()
-  private[expr] def countMinBuilder(exprs: Seq[Expression]): Expression =
-    CountMin(Cast(exprs(0), StringType), exprs(1)).toAggregateExpression()
-  private[expr] def cmQueryBuilder(exprs: Seq[Expression]): Expression =
-    CmQuery(exprs(0), Cast(exprs(1), StringType), exprs(2))
-  private[expr] def asofPickBuilder(exprs: Seq[Expression]): Expression =
-    AsOfPick(exprs(0), exprs(1), exprs(2), exprs(3))
-  private[expr] def jaroWinklerBuilder(exprs: Seq[Expression]): Expression =
-    JaroWinkler(Cast(exprs(0), StringType), Cast(exprs(1), StringType))
-  private[expr] def jaroWinklerBytesBuilder(exprs: Seq[Expression]): Expression =
-    JaroWinklerBytes(Cast(exprs(0), StringType), Cast(exprs(1), StringType))
-  // Spark's own runtime-filter expressions, exposed by name so
-  // ops.BloomOps can plant the identical codegen'd probe explicitly.
-  private[expr] def bloomAggBuilder(exprs: Seq[Expression]): Expression =
-    new org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-  private[expr] def bloomContainsBuilder(exprs: Seq[Expression]): Expression =
-    org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))
+  val table: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[FloatVecDot], e => FloatVecDot(e(0), e(1))),
+    ("top_k_pairs", classOf[TopKPairs],
+      e => TopKPairs(Cast(e(0), DoubleType), Cast(e(1), LongType), e(2)).toAggregateExpression()),
+    ("kmv_distinct", classOf[KmvDistinct],
+      e => KmvDistinct(Cast(e(0), LongType), e(1)).toAggregateExpression()),
+    ("heavy_hitters", classOf[SpaceSaving],
+      e => SpaceSaving(Cast(e(0), StringType), e(1)).toAggregateExpression()),
+    ("count_min", classOf[CountMin],
+      e => CountMin(Cast(e(0), StringType), e(1)).toAggregateExpression()),
+    ("cm_query", classOf[CmQuery], e => CmQuery(e(0), Cast(e(1), StringType), e(2))),
+    ("asof_pick", classOf[AsOfPick], e => AsOfPick(e(0), e(1), e(2), e(3))),
+    ("jaro_winkler", classOf[JaroWinkler],
+      e => JaroWinkler(Cast(e(0), StringType), Cast(e(1), StringType))),
+    ("jaro_winkler_bytes", classOf[JaroWinklerBytes],
+      e => JaroWinklerBytes(Cast(e(0), StringType), Cast(e(1), StringType))),
+    ("bloom_agg", classOf[BloomFilterAggregate],
+      e => new BloomFilterAggregate(e(0), e(1), e(2)).toAggregateExpression()),
+    ("bloom_contains", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", vecDotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_pairs", topKBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_distinct", kmvBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", heavyHittersBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min", countMinBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cm_query", cmQueryBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "asof_pick", asofPickBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", jaroWinklerBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler_bytes", jaroWinklerBytesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", bloomAggBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains", bloomContainsBuilder, "built-in")
-  }
+  def info(name: String, cls: Class[_]): ExpressionInfo = new ExpressionInfo(cls.getName, name)
 }
 
-/** `SparkSessionExtensions` injection of the same functions — the
-  * deployment-grade path: any session built with
+/** `SparkSessionExtensions` injection of graft's functions and rules —
+  * the deployment path: any session built with
   * `spark.sql.extensions=graft.expr.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) resolves `vec_dot` /
-  * `top_k_pairs` with no imperative registration call.
+  * `.withExtensions(new GraftExtensions)`) resolves every function in
+  * [[GraftFunctions.table]] and plans the as-of join with no imperative
+  * call.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => GraftFunctions.vecDotBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("top_k_pairs"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "top_k_pairs"),
-      (exprs: Seq[Expression]) => GraftFunctions.topKBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[KmvDistinct].getName, "kmv_distinct"),
-      (exprs: Seq[Expression]) => GraftFunctions.kmvBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[SpaceSaving].getName, "heavy_hitters"),
-      (exprs: Seq[Expression]) => GraftFunctions.heavyHittersBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("count_min"),
-      new ExpressionInfo(classOf[CountMin].getName, "count_min"),
-      (exprs: Seq[Expression]) => GraftFunctions.countMinBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("asof_pick"),
-      new ExpressionInfo(classOf[AsOfPick].getName, "asof_pick"),
-      (exprs: Seq[Expression]) => GraftFunctions.asofPickBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("cm_query"),
-      new ExpressionInfo(classOf[CmQuery].getName, "cm_query"),
-      (exprs: Seq[Expression]) => GraftFunctions.cmQueryBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => GraftFunctions.jaroWinklerBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler_bytes"),
-      new ExpressionInfo(classOf[JaroWinklerBytes].getName, "jaro_winkler_bytes"),
-      (exprs: Seq[Expression]) => GraftFunctions.jaroWinklerBytesBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (exprs: Seq[Expression]) => GraftFunctions.bloomAggBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_contains"),
-      (exprs: Seq[Expression]) => GraftFunctions.bloomContainsBuilder(exprs)))
-    // conf-gated (spark.graft.rangeJoin.binWidth) range-join rewrite
-    e.injectOptimizerRule(_ => graft.plans.BinnedRangeJoinRule)
+    GraftFunctions.table.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name, cls), builder))
+    }
     // physical planning for AsOfJoinPlan (graft.plans.AsOfJoinOps)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // post-EnsureRequirements shield insertion that lets AsOfJoinExec's

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{call_function, col, lit, xxhash64}
 
-import graft.expr.GraftFunctions
-
 /** Bloom-filter semi-join reduction (SURVEY.md §4): prune a huge fact
   * scan against a selective dim BEFORE the join's shuffle. This is the
   * technique Spark's own runtime row-level filtering
@@ -47,8 +45,6 @@ object BloomOps {
     require(ft == dt,
       s"bloomReduce keys must share one data type (xxhash64 is type-sensitive): " +
         s"$factKey is $ft, $dimKey is $dt — cast one side before calling")
-    val s = fact.sparkSession
-    GraftFunctions.register(s)
     // one bounded driver pull: the serialized filter (numBits/8 bytes)
     val bf = dim
       .select(call_function("bloom_agg",

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
@@ -460,14 +460,11 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   }
 }
 
-/** Public API + imperative strategy installation. */
+/** Public API. The joins plan through [[AsOfJoinStrategy]], which a
+  * session has when built with `GraftExtensions` (`graft.GraftSession
+  * .create`) or readied by `graft.GraftSession.install`.
+  */
 object AsOfJoinOps {
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
-
   /** As-of join: each `left` row joined to the `right` row with equal
     * `keys` and the greatest `rightTimeCol` <= `leftTimeCol` (< when
     * `strict = true`; LEFT OUTER) — or, with `forward = true`, the
@@ -486,7 +483,6 @@ object AsOfJoinOps {
                strict: Boolean = false, toleranceUs: Option[Long] = None,
                forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =
@@ -645,7 +641,6 @@ object AsOfJoinOps {
     // cost grows with the time span (time-disjoint scaledata: ~7.2k
     // hourly quotes per key at sf1). asof_pick indexes only in-bounds,
     // so the composition is ANSI-safe by construction.
-    graft.expr.GraftFunctions.register(left.sparkSession)
     val m0 = expr(s"asof_pick(__qarr, `$leftTimeCol`, $forward, $strict)")
     val matched = toleranceUs match {
       case Some(tol) =>

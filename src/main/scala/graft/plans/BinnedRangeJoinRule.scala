@@ -1,24 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, TimestampType}
 
-/** Catalyst optimizer rule: rewrite a pure range θ-join into a binned
-  * equi-join — the whole-plan form of q84's hand-written rewrite, and
-  * the (c)-tier extension point of SURVEY.md §7.3 (a `Rule[LogicalPlan]`
-  * where composing built-ins can't fix the PLAN even though it can fix
-  * the ANSWER).
+/** Logical-plan rewrite of a range θ-join into a binned equi-join — the
+  * whole-plan form of q84's hand-written rewrite, and the (c)-tier
+  * extension point of SURVEY.md §7.3 (a plan rewrite where composing
+  * built-ins can't fix the PLAN even though it can fix the ANSWER).
   *
   * Spark plans `A JOIN B ON a BETWEEN lo AND hi` (no equi-key) as a
   * BroadcastNestedLoopJoin — or a CartesianProduct when neither side
-  * broadcasts — both of which die at cluster scale. With
-  * `spark.graft.rangeJoin.binWidth = W` set, this rule rewrites the
-  * matching join:
+  * broadcasts — both of which die at cluster scale. `binned(df, W)`
+  * rewrites every matching join in `df`'s plan:
   *
   *   point side:  add `__graft_bin_p = a div W`
   *   bounds side: explode `sequence(lo div W, hi div W)` (W chosen near
@@ -52,52 +49,22 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, Ti
   * equi-keys and the bin as join keys, so a skewed coarse key gains
   * the bin as a finer co-key. The rule never re-fires on its own
   * output (the rewritten condition references the `__graft_bin_*`
-  * attributes, which the matcher rejects). Inert unless the conf is
-  * set (> 0).
+  * attributes, which the matcher rejects). Joins with no two-sided
+  * range pair are left untouched.
   */
-object BinnedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
-  val BinWidthKey = "spark.graft.rangeJoin.binWidth"
+object BinnedRangeJoinRule extends PredicateHelper {
 
-  /** Imperative activation for an existing session (the deployment path
-    * is `spark.sql.extensions=graft.expr.GraftExtensions`). Idempotent.
-    */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
-
-  /** Per-QUERY activation: eagerly rewrite the range joins in `df`'s
+  /** Per-query activation: eagerly rewrite the range joins in `df`'s
     * analyzed plan at width `w` and return a frame built on the
-    * rewritten plan. Unlike arming [[BinWidthKey]] session-wide, this
-    * cannot leak into later queries — and unlike a set/restore window
-    * around planning, it survives downstream wrapping: `count()`,
-    * `coalesce().write`, etc. each build a NEW QueryExecution from the
-    * logical plan, which here already carries the rewrite.
+    * rewritten plan. It cannot leak into later queries, and it survives
+    * downstream wrapping: `count()`, `coalesce().write`, etc. each build
+    * a NEW QueryExecution from the logical plan, which here already
+    * carries the rewrite.
     */
-  def binned(df: org.apache.spark.sql.DataFrame, w: Long): org.apache.spark.sql.DataFrame = {
+  def binned(df: DataFrame, w: Long): DataFrame = {
     require(w > 0, s"bin width must be positive, got $w")
-    org.apache.spark.sql.GraftBridge.ofRows(
-      df.sparkSession, rewriteAll(df.queryExecution.analyzed, w))
+    GraftBridge.ofRows(df.sparkSession, rewriteAll(df.queryExecution.analyzed, w))
   }
-
-  private def binWidth: Option[Long] =
-    try {
-      val v = SQLConf.get.getConfString(BinWidthKey, "")
-      if (v.isEmpty) None
-      else {
-        val w = v.toLong
-        if (w <= 0) {
-          logWarning(s"$BinWidthKey=$v is not positive; range-join rewrite disabled")
-          None
-        } else Some(w)
-      }
-    } catch {
-      case _: NumberFormatException =>
-        logWarning(s"$BinWidthKey is not a valid long; range-join rewrite disabled " +
-          "(the range join will plan as a nested loop)")
-        None
-    }
 
   /** (point a, lower lo, upper hi) when `cond`'s conjuncts include a
     * two-sided range of a point expression from `pointPlan` bounded by
@@ -176,18 +143,11 @@ object BinnedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     Project(j.output, Join(newLeft, newRight, Inner, Some(newCond), j.hint))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = binWidth match {
-    case None => plan
-    case Some(w) => rewriteAll(plan, w)
-  }
-
-  /** The rewrite itself, conf-free (shared by the optimizer-rule path
-    * and the eager [[binned]] path).
-    */
+  /** The rewrite itself, on a logical plan. */
   def rewriteAll(plan: LogicalPlan, w: Long): LogicalPlan =
     plan.transformUp {
       // the rewritten join's condition references __graft_bin_* — the
-      // guard keeps the rule fixed-point-stable now that N-conjunct
+      // guard keeps the rewrite fixed-point-stable now that N-conjunct
       // conditions (which its own output is) can match
       case j @ Join(left, right, Inner, Some(cond), _)
           if !cond.references.exists(_.name.startsWith("__graft_bin")) =>

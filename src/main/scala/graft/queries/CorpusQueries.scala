@@ -1277,7 +1277,6 @@ object CorpusQueries extends QueryModule {
     // ONE k-row partial per partition — never a corpus sort.
     "q152_bm25_topk" -> NamedQuery(
       fn = (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
@@ -1362,7 +1361,6 @@ object CorpusQueries extends QueryModule {
     "q171_rrf_fusion" -> NamedQuery(
       fn = (s, d) => {
         val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-        graft.expr.GraftFunctions.register(s)
         val vecs = Tables.embeddings(s, d)
           .withColumn("nrm", sqrt(expr("vec_dot(embedding, embedding)")))
         // candidate universe: documents that HAVE an embedding

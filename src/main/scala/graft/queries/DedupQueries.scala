@@ -654,7 +654,6 @@ object DedupQueries extends QueryModule {
     // claim available (PARITY.md rule 2), same class as q188's kappa.
     "q197_jaro_winkler_linkage" -> NamedQuery(
       fn = (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         blockedSigPairs(s, d)
           .withColumn("jw", expr("jaro_winkler(sig_a, sig_b)"))
           .filter(col("jw") >= 0.8)
@@ -685,7 +684,6 @@ object DedupQueries extends QueryModule {
     "q203_entity_resolution" -> NamedQuery(
       fn = (s, d) => {
         implicit val sp = s
-        graft.expr.GraftFunctions.register(s)
         val edges = blockedSigPairs(s, d)
           .withColumn("score",
             when(expr("jaro_winkler(sig_a, sig_b)") >= 0.8, 2L).otherwise(0L) +
@@ -772,7 +770,6 @@ object DedupQueries extends QueryModule {
     // threshold, raw unrounded doubles hash-compared.
     "q216_jw_bytes_linkage" -> NamedQuery(
       fn = (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
             (col("n_chars") / 64).cast("long").as("band"),

@@ -381,14 +381,13 @@ object EventQueries extends QueryModule {
       doc = "hourly resample + forward gap fill per user (time-series carry, §2.E extension)"),
 
     // ---------------------------------------------------------------- q94
-    // The OPTIMIZER-RULE path of the binned range join (q84 is the same
+    // The plan-rewrite path of the binned range join (q84 is the same
     // rewrite written by hand): the query is the NAÏVE range θ-join —
     // every event against each sampled user's first-hour window, no
     // equi-key — which Spark alone plans as a nested-loop/cartesian.
     // BinnedRangeJoinRule rewrites it to a bin equi-join + exact
     // residual; the user keeps the declarative BETWEEN form and opts in
-    // per query via .binned(df, w) (or session-wide via the installed
-    // rule + spark.graft.rangeJoin.binWidth). Plan-pinned: no
+    // per query via .binned(df, w). Plan-pinned: no
     // BroadcastNestedLoopJoin/CartesianProduct, __graft_bin keys +
     // Generate explode present.
     "q94_range_join_rule" -> NamedQuery(
@@ -421,7 +420,7 @@ object EventQueries extends QueryModule {
         FROM e JOIN w ON ts_us BETWEEN lo AND hi
         GROUP BY w_user
         ORDER BY w_user"""),
-      doc = "range theta-join auto-rewritten by BinnedRangeJoinRule (§7.3(c) Rule[LogicalPlan])"),
+      doc = "range theta-join rewritten by BinnedRangeJoinRule.binned (§7.3(c) logical-plan rewrite)"),
 
     // ---------------------------------------------------------------- q95
     // The custom PHYSICAL operator through the gate: two-table backward
@@ -1324,7 +1323,6 @@ object EventQueries extends QueryModule {
     // per (group, partition) partial — constant memory at any SF.
     "q155_kmv_sketch" -> NamedQuery(
       fn = (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         Tables.events(s, d)
           .withColumn("h",
             conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10).cast("long"))

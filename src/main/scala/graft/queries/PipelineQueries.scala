@@ -386,8 +386,6 @@ object PipelineQueries extends QueryModule {
     // candidate volume is ~N^1.5, same as q40/q156.
     "q65_semantic_dedup" -> NamedQuery(
       fn = (s, d) => {
-        import graft.expr.GraftFunctions
-        GraftFunctions.register(s)
         val v = Tables.embeddings(s, d)
           .withColumn("nrm", sqrt(expr("vec_dot(embedding, embedding)")))
         // the ONE sizing rule, shared with the whole IVF family (round-13

@@ -880,7 +880,6 @@ object PretrainQueries extends QueryModule {
             log((col("c_raw") + lit(1)).cast("double") / (col("tot_raw") + col("v"))), 6))
           .select("tok", "lnr")
         val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        graft.expr.GraftFunctions.register(s)
         // selection via the native partial top-k (k-sized buffers per
         // partition, payload tiebreak = doc_id — q152's pattern), never
         // a corpus-wide sort; semantics = row_number() <= 100 exactly

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
-import graft.expr.GraftFunctions
 import graft.ops.RelationalOps
 
 /** Similarity search over the `embeddings` table (`array<float>`,
@@ -24,11 +23,9 @@ import graft.ops.RelationalOps
 object SimilarityQueries extends QueryModule {
 
   /** embeddings with L2 norm (float array kept as-is for vec_dot). */
-  private def vecs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
+  private def vecs(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .withColumn("nrm", sqrt(expr("vec_dot(embedding, embedding)")))
-  }
 
   /** IVF cell count, DATA-SCALED (round-9 sf1 scale-proof): a constant
     * nlist makes in-cell work quadratic — points-per-cell grows with N
@@ -467,7 +464,6 @@ object SimilarityQueries extends QueryModule {
     "q72_kmeans_step" -> NamedQuery(
       fn = (s, d) => {
         import org.apache.spark.sql.types.DecimalType
-        GraftFunctions.register(s)
         val v = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         val cents = v.orderBy("vec_id").limit(8)
           .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -669,7 +665,6 @@ object SimilarityQueries extends QueryModule {
     // per-vec regroup — keyed by vec_id.
     "q142_pq_assign" -> NamedQuery(
       fn = (s, d) => {
-        GraftFunctions.register(s)
         val subIdx = array((0 until 4).map(lit): _*)
         val subs = Tables.embeddings(s, d)
           .select(col("vec_id"), explode(subIdx).as("sub"), col("embedding"))
@@ -748,7 +743,6 @@ object SimilarityQueries extends QueryModule {
     // (queries here: vec_id % 100 = 0).
     "q144_pq_adc_topk" -> NamedQuery(
       fn = (s, d) => {
-        GraftFunctions.register(s)
         val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val subIdx = array((0 until 4).map(lit): _*)
         val emb = Tables.embeddings(s, d)

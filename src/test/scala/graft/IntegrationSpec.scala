@@ -5,7 +5,6 @@ import org.scalacheck.{Gen, Prop, Test => ScTest}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.expr.GraftFunctions
 import graft.multimodal.MultimodalOps
 import graft.ops.RelationalOps
 
@@ -20,7 +19,6 @@ class IntegrationSpec extends AnyFunSuite {
   test("multimodal features flow into cosine nearest-neighbor search") {
     import spark.implicits._
     implicit val s = spark
-    GraftFunctions.register(spark)
     val media = MultimodalOps.syntheticMedia(Tables.documents(spark, "/root/testdata/sf0.001"))
     val feats = MultimodalOps.extractFeatures(media.as[MultimodalOps.MediaRow])
       .select(col("media_id"),
@@ -40,7 +38,6 @@ class IntegrationSpec extends AnyFunSuite {
 
   test("top_k_pairs equals window top-k on random data (property)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val gen = Gen.listOfN(40, for {
       g <- Gen.choose(1, 4)
       sc <- Gen.choose(0, 5).map(_.toDouble) // coarse scores force ties

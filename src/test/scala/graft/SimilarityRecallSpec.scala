@@ -5,8 +5,6 @@ import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.expr.GraftFunctions
-
 /** ANN quality harness: the approximate paths must actually find
   * neighbors, not just run. Ground truth is brute-force cosine top-1
   * (via the native vec_dot); the candidate path is multi-probe IVF —
@@ -21,7 +19,6 @@ class SimilarityRecallSpec extends AnyFunSuite {
 
   test("multi-probe IVF (KMeans cells, nprobe=2) reaches >=70% recall@1 vs brute force") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, sf)
       .withColumn("nrm", sqrt(expr("vec_dot(embedding, embedding)")))
 

@@ -18,7 +18,6 @@ class AsOfPickSpec extends AnyFunSuite {
   // sort_array order is by the SECOND field ('b' before 'c'), exactly
   // the order element_at used to see
   private def pick(t: Long, forward: Boolean, strict: Boolean): Option[String] = {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       s"""SELECT asof_pick(
          |  sort_array(array(struct(30L AS t, 'd' AS v), struct(20L AS t, 'c' AS v),
@@ -52,7 +51,6 @@ class AsOfPickSpec extends AnyFunSuite {
   }
 
   test("null array / null probe time / empty array yield NULL, not an error") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  asof_pick(CAST(NULL AS ARRAY<STRUCT<t: BIGINT, v: STRING>>), 5L, false, false) AS a,
@@ -63,7 +61,6 @@ class AsOfPickSpec extends AnyFunSuite {
   }
 
   test("probe type must match the quote time type exactly (raw long vs timestamp micros)") {
-    GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql(
         """SELECT asof_pick(
@@ -75,7 +72,6 @@ class AsOfPickSpec extends AnyFunSuite {
   }
 
   test("non-array first argument fails analysis cleanly, not with a ClassCastException") {
-    GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT asof_pick(42, 5L, false, false)").collect()
     }
@@ -84,7 +80,6 @@ class AsOfPickSpec extends AnyFunSuite {
   }
 
   test("null struct elements / null time fields touched by the search yield NULL, not an NPE") {
-    GraftFunctions.register(spark)
     // probe 5 sends the search to index 0 in both arrays: a null element
     // (a) and a null time field (b) — each returns NULL (ElementAt posture)
     val r = spark.sql(
@@ -98,7 +93,6 @@ class AsOfPickSpec extends AnyFunSuite {
   }
 
   test("timestamp probe/quote times work (physical-long micros path)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT asof_pick(
         |  sort_array(array(struct(TIMESTAMP '2024-01-01 00:00:00' AS t, 1 AS v),

@@ -1,14 +1,22 @@
 package graft.expr
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{GraftSession, SparkEntry, TestSpark}
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("a session built with GraftExtensions resolves the native functions without register()") {
-    // force a genuinely NEW session (getOrCreate would return the shared
-    // test session, silently skipping extension injection): clear the
-    // global default + this thread's active session, restore after
+  /** Run `body` on a genuinely NEW session built with GraftExtensions
+    * (getOrCreate would return the shared test session, silently
+    * skipping extension injection): clear the global default + this
+    * thread's active session, restore after. The shared context is
+    * started first, so it is the test session's whatever the suite
+    * order.
+    */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
+    TestSpark.spark
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
@@ -19,7 +27,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    try {
+    try body(spark)
+    finally {
+      // don't stop the session (it shares the JVM's SparkContext);
+      // restore the previous default/active so other suites are unaffected
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("a session built with GraftExtensions resolves the native functions without register()") {
+    withExtensionSession { spark =>
       val d = spark.sql(
         "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
         .head().getDouble(0)
@@ -28,9 +46,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
         """SELECT inline(top_k_pairs(s, p, 2)) FROM VALUES (1.0, 10L), (3.0, 30L), (2.0, 20L) AS t(s, p)""")
         .collect().map(r => (r.getDouble(0), r.getLong(1))).toSeq
       assert(top === Seq((3.0, 30L), (2.0, 20L)))
-      // the injected planner strategy plans AsOfJoinPlan with NO
-      // imperative install() call (AsOfJoinOps.asofJoin installs, so
-      // build the logical node directly — the conf-only deployment path)
+      // the injected planner strategy plans AsOfJoinPlan with no
+      // imperative call (the logical node is built directly — the
+      // conf-only deployment path)
       import spark.implicits._
       val probes = Seq((1L, 100L), (2L, 10L)).toDF("pid", "pt")
       val quotes = Seq((50L, "q1")).toDF("qt", "qn")
@@ -41,11 +59,30 @@ class GraftExtensionsSpec extends AnyFunSuite {
           lPlan.output.find(_.name == "pt").get, rPlan.output.find(_.name == "qt").get))
       val rows = asof.collect().map(r => (r.getLong(0), r.isNullAt(3))).toMap
       assert(rows === Map(1L -> false, 2L -> true))
-    } finally {
-      // don't stop the session (it shares the JVM's SparkContext);
-      // restore the previous default/active so other suites are unaffected
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("every function in the table resolves to its expression in a GraftExtensions session") {
+    withExtensionSession { spark =>
+      GraftFunctions.table.foreach { case (name, cls, _) =>
+        val info = spark.sessionState.catalog.lookupFunctionInfo(FunctionIdentifier(name))
+        assert(info.getClassName === cls.getName, name)
+      }
+    }
+  }
+
+  test("SparkEntry.queries readies a session missing a native function; install is idempotent") {
+    val s = TestSpark.spark.newSession()
+    val vecDot = FunctionIdentifier("vec_dot")
+    s.sessionState.functionRegistry.dropFunction(vecDot)
+    assert(!s.sessionState.functionRegistry.functionExists(vecDot))
+    val n = SparkEntry.queries("q37_cosine_topk")(s, "/root/testdata/sf0.001")
+      .queryExecution.toRdd.count()
+    assert(n > 0L)
+    assert(s.sessionState.functionRegistry.functionExists(vecDot))
+    val strategies = s.experimental.extraStrategies
+    GraftSession.install(s)
+    GraftSession.install(s)
+    assert(s.experimental.extraStrategies === strategies)
   }
 }

@@ -20,14 +20,12 @@ class KmvDistinctSpec extends AnyFunSuite {
   }
 
   test("exact below k: fewer than k distinct inputs returns the exact count") {
-    GraftFunctions.register(spark)
     val est = hashed(200, dupFactor = 3)
       .agg(expr("kmv_distinct(h, 256)")).collect()(0).getDouble(0)
     assert(est === 200.0)
   }
 
   test("partition-order invariance: same estimate under any repartitioning") {
-    GraftFunctions.register(spark)
     val df = hashed(10000)
     val ests = Seq(1, 7, 32).map { p =>
       df.repartition(p).agg(expr("kmv_distinct(h, 256)")).collect()(0).getDouble(0)
@@ -36,7 +34,6 @@ class KmvDistinctSpec extends AnyFunSuite {
   }
 
   test("estimator lands inside the 4-sigma band on 10k distinct values") {
-    GraftFunctions.register(spark)
     val est = hashed(10000).agg(expr("kmv_distinct(h, 256)")).collect()(0).getDouble(0)
     val rse = 1.0 / math.sqrt(256 - 2)
     assert(math.abs(est - 10000.0) / 10000.0 < 4 * rse,
@@ -44,7 +41,6 @@ class KmvDistinctSpec extends AnyFunSuite {
   }
 
   test("duplicates do not move the estimate (set semantics)") {
-    GraftFunctions.register(spark)
     val e1 = hashed(5000).agg(expr("kmv_distinct(h, 256)")).collect()(0).getDouble(0)
     val e2 = hashed(5000, dupFactor = 4).agg(expr("kmv_distinct(h, 256)")).collect()(0).getDouble(0)
     assert(e1 === e2)

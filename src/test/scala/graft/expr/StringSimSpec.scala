@@ -43,7 +43,6 @@ class StringSimSpec extends AnyFunSuite {
 
   test("codegen'd column path produces the identical bits as the scalar impl") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = pinned.map { case (a, b, w) => (a, b, w) }.toDF("a", "b", "want")
     val rows = df.withColumn("got", expr("jaro_winkler(a, b)"))
       .select("a", "b", "want", "got").collect()
@@ -107,7 +106,6 @@ class StringSimSpec extends AnyFunSuite {
 
   test("jaro_winkler_bytes codegen path: identical bits to the scalar impl, whole-stage codegen engaged") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = (pinned.map { case (a, b, _) => (a, b) } ++
       Seq(("héllo", "hello"), ("日本語テキスト", "日本語のテキスト"))).toDF("a", "b")
     val rows = df.repartition(2)
@@ -128,7 +126,6 @@ class StringSimSpec extends AnyFunSuite {
 
   test("metric properties on a deterministic fuzz: symmetry, bounds, identity, null") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(42)
     val alpha = "abcde "
     val pairs = Seq.fill(2000) {

@@ -11,7 +11,6 @@ class TopKPairsSpec extends AnyFunSuite {
 
   test("top_k_pairs equals the row_number window formulation incl. ties (§7.3(b))") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // ties at the k boundary: three payloads share score 5.0
     val df = Seq(
       (1, 5.0, 10L), (1, 5.0, 11L), (1, 5.0, 12L), (1, 7.0, 99L), (1, 1.0, 1L),
@@ -32,7 +31,6 @@ class TopKPairsSpec extends AnyFunSuite {
 
   test("top_k_pairs ranks NaN first and folds -0.0, matching the window sort (round-14 ADVICE)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // g=1: a NaN score (zero-norm-embedding cosine) must rank ABOVE 9.0
     //   and NaN ties resolve by payload — row_number's double sort order.
     // g=2: -0.0 and 0.0 are the SAME score; the tie goes to the payload.
@@ -55,7 +53,6 @@ class TopKPairsSpec extends AnyFunSuite {
 
   test("top_k_pairs survives partial/merge across many partitions") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = (1 to 1000).map(i => (i % 5, i.toDouble, i.toLong)).toDF("g", "score", "payload")
       .repartition(13)
     val top = df.groupBy("g").agg(expr("top_k_pairs(score, payload, 2)").as("t"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.plans.BinnedRangeJoinRule.binned
 
 /** BinnedRangeJoinRule semantics: the rewrite must be EXACT (bin
   * candidates are a superset, the residual filter restores equality
@@ -12,13 +13,6 @@ import graft.TestSpark
   */
 class BinnedRangeJoinRuleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  private def withRule[A](binWidth: Long)(body: => A): A = {
-    BinnedRangeJoinRule.install(spark)
-    spark.conf.set(BinnedRangeJoinRule.BinWidthKey, binWidth.toString)
-    try body
-    finally spark.conf.unset(BinnedRangeJoinRule.BinWidthKey)
-  }
 
   private def fixtures = {
     import spark.implicits._
@@ -38,12 +32,10 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
       .select("iid", "x").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected.nonEmpty)
     for (w <- Seq(1L, 13L, 100L, 10000L)) {
-      val got = withRule(w) {
-        val df = points.join(intervals, cond).select("iid", "x")
-        assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
-          s"rule did not fire at binWidth=$w")
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
+      val df = binned(points.join(intervals, cond).select("iid", "x"), w)
+      assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
+        s"rule did not fire at binWidth=$w")
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected, s"binWidth=$w")
     }
   }
@@ -69,27 +61,18 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
     val expected = points.join(intervals, cond)
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (w <- Seq(7L, 64L, 1000L)) {
-      val got = withRule(w) {
-        points.join(intervals, cond).select("pid", "iid")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
+      val got = binned(points.join(intervals, cond).select("pid", "iid"), w)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected, s"binWidth=$w")
     }
   }
 
-  test("rule is inert without the conf, and on joins with no range pair") {
+  test("binned leaves a join with no range pair untouched") {
     val (points, intervals) = fixtures
-    val cond = col("x") >= col("lo") && col("x") <= col("hi")
-    BinnedRangeJoinRule.install(spark)
-    // conf unset -> naive plan untouched
-    val p0 = points.join(intervals, cond).queryExecution.executedPlan.toString
-    assert(!p0.contains("__graft_bin"))
     // pure equi-join (no lower+upper pair) -> matcher declines
-    val keyed = withRule(10L) {
-      points.withColumn("k", col("x") % 3)
-        .join(intervals.withColumn("k", col("iid") % 3), Seq("k"))
-        .queryExecution.executedPlan.toString
-    }
+    val keyed = binned(points.withColumn("k", col("x") % 3)
+        .join(intervals.withColumn("k", col("iid") % 3), Seq("k")), 10L)
+      .queryExecution.executedPlan.toString
     assert(!keyed.contains("__graft_bin"))
   }
 
@@ -103,17 +86,15 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
       .select("iid", "x").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected.nonEmpty)
     for (w <- Seq(1L, 13L, 100L)) {
-      val got = withRule(w) {
-        val df = p2.join(i2, cond).select("iid", "x")
-        val plan = df.queryExecution.executedPlan.toString
-        assert(plan.contains("__graft_bin"), s"rule did not fire at binWidth=$w")
-        // the user's equi-key AND the bin both reach the join keys — the
-        // planner's key list carries them together on one side
-        assert("\\[k#\\d+L?, __graft_bin_p#\\d+L\\]".r.findFirstIn(plan).isDefined ||
-          "\\[__graft_bin_p#\\d+L, k#\\d+L?\\]".r.findFirstIn(plan).isDefined,
-          s"equi-key not joined with the bin at binWidth=$w:\n$plan")
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
+      val df = binned(p2.join(i2, cond).select("iid", "x"), w)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("__graft_bin"), s"rule did not fire at binWidth=$w")
+      // the user's equi-key AND the bin both reach the join keys — the
+      // planner's key list carries them together on one side
+      assert("\\[k#\\d+L?, __graft_bin_p#\\d+L\\]".r.findFirstIn(plan).isDefined ||
+        "\\[__graft_bin_p#\\d+L, k#\\d+L?\\]".r.findFirstIn(plan).isDefined,
+        s"equi-key not joined with the bin at binWidth=$w:\n$plan")
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected, s"binWidth=$w")
     }
   }
@@ -123,11 +104,9 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
     val cond = col("x") > col("lo") && col("x") < col("hi")
     val expected = points.join(intervals, cond)
       .select("iid", "x").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = withRule(50L) {
-      val df = points.join(intervals, cond).select("iid", "x")
-      assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
+    val df = binned(points.join(intervals, cond).select("iid", "x"), 50L)
+    assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected)
     // boundary rows excluded: no (iid, x) pair with x == lo or x == hi
     val boundary = points.join(intervals,
@@ -141,13 +120,11 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
     val cond = col("x") >= col("lo") && col("x") <= col("hi")
     val expected = points.join(intervals, cond)
       .select("iid", "x").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(spark.conf.getOption(BinnedRangeJoinRule.BinWidthKey).isEmpty)
-    val df = BinnedRangeJoinRule.binned(points.join(intervals, cond).select("iid", "x"), 100L)
-    assert(spark.conf.getOption(BinnedRangeJoinRule.BinWidthKey).isEmpty)
+    val df = binned(points.join(intervals, cond).select("iid", "x"), 100L)
     assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
     // downstream wrapping re-plans from the logical plan: the rewrite
-    // must still be there (this is why binned() exists — a set/restore
-    // conf window around planning would lose it here)
+    // must still be there (a set/restore conf window around planning
+    // would lose it here)
     val wrapped = df.coalesce(1)
     assert(wrapped.queryExecution.executedPlan.toString.contains("__graft_bin"))
     assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === expected)
@@ -169,12 +146,10 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
       .select("iid", "pid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected.nonEmpty)
     // binWidth is µs for timestamps: 7 minutes per bin
-    val got = withRule(7L * 60_000_000L) {
-      val df = points.join(intervals, cond).select("iid", "pid")
-      assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
-        "rule did not fire on TimestampType points")
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
+    val df = binned(points.join(intervals, cond).select("iid", "pid"), 7L * 60_000_000L)
+    assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
+      "rule did not fire on TimestampType points")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected)
   }
 
@@ -191,12 +166,10 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
     val expected = points.join(intervals, cond)
       .select("iid", "pid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected.nonEmpty)
-    val gotDate = withRule(30L) { // 30-day bins
-      val df = points.join(intervals, cond).select("iid", "pid")
-      assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
-        "rule did not fire on DateType points")
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
+    val df = binned(points.join(intervals, cond).select("iid", "pid"), 30L) // 30-day bins
+    assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
+      "rule did not fire on DateType points")
+    val gotDate = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(gotDate === expected)
     // IntegerType points
     val ip = (-50 to 150).map(x => (x.toLong, x)).toDF("pid", "x")
@@ -204,12 +177,10 @@ class BinnedRangeJoinRuleSpec extends AnyFunSuite {
     val icond = col("x") >= col("lo") && col("x") <= col("hi")
     val iexp = ip.join(ii, icond).select("iid", "pid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val igot = withRule(16L) {
-      val df = ip.join(ii, icond).select("iid", "pid")
-      assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
-        "rule did not fire on IntegerType points")
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
+    val idf = binned(ip.join(ii, icond).select("iid", "pid"), 16L)
+    assert(idf.queryExecution.executedPlan.toString.contains("__graft_bin"),
+      "rule did not fire on IntegerType points")
+    val igot = idf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(igot === iexp)
   }
 
