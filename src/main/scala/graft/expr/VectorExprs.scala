@@ -96,8 +96,9 @@ object GraftFunctions {
   * the deployment path: any session built with
   * `spark.sql.extensions=graft.expr.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) resolves every function in
-  * [[GraftFunctions.table]] and plans the as-of join with no imperative
-  * call.
+  * [[GraftFunctions.table]], plans the as-of join and defers row-wise
+  * projections past global sorts (`graft.plans.DeferProjectPastSort`)
+  * with no imperative call.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -106,6 +107,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     GraftFunctions.table.foreach { case (name, cls, builder) =>
       e.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name, cls), builder))
     }
+    // row-wise projections run after a global sort's range exchange,
+    // once, instead of twice below it (in the operator-optimization batch)
+    e.injectOptimizerRule(_ => graft.plans.DeferProjectPastSort)
     // physical planning for AsOfJoinPlan (graft.plans.AsOfJoinOps)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // post-EnsureRequirements shield insertion that lets AsOfJoinExec's

@@ -4,6 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val allCores = Runtime.getRuntime.availableProcessors
+
+  test("a blank SPARK_GRAFT_CPUS means every core, not a NumberFormatException") {
+    assert(GraftSession.cpusFrom(Some("")) === allCores)
+    assert(GraftSession.cpusFrom(Some("  ")) === allCores)
+    assert(GraftSession.cpusFrom(None) === allCores)
+    assert(GraftSession.cpusFrom(Some(" 3 ")) === 3)
+  }
+
+  test("a zero or negative SPARK_GRAFT_CPUS means every core, not local[0]") {
+    assert(GraftSession.cpusFrom(Some("0")) === allCores)
+    assert(GraftSession.cpusFrom(Some("-2")) === allCores)
+  }
 
   test("registerTables exposes the corpus to plain SQL with native functions") {
     GraftSession.registerTables(spark, "/root/testdata/sf0.001")

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Round, Sin}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests (SURVEY.md §4): the physical plans that
@@ -44,6 +49,20 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan("q13_kinematics")
     assert(!p.contains("hashpartitioning"))
     assert(p.contains("FileScan parquet"))
+    // DeferProjectPastSort: the range exchange carries only the sort keys
+    // and the base columns the kinematics read, and the math runs once,
+    // above the Sort, instead of twice in the scan task (sample + map)
+    val exec = SparkEntry.queries("q13_kinematics")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val range = exec.collectFirst { case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
+    assert(range.map(_.child.output.map(_.name).toSet) ===
+      Some(Set("l_orderkey", "l_linenumber", "l_quantity", "l_tax", "l_discount")))
+    def math(n: SparkPlan) = n.expressions.exists(_.exists(e => e.isInstanceOf[Round] || e.isInstanceOf[Sin]))
+    val sort = exec.collectFirst { case s: SortExec => s }.get
+    assert(!sort.exists(math), s"round/SIN below the Sort:\n$exec")
+    assert(exec.exists(n => n.isInstanceOf[ProjectExec] && math(n) && n.exists(_ eq sort)))
   }
 
   test("q37 top-k runs as partial+final native aggregate (k-sized buffers, no pair sort)") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSession, SparkEntry, TestSpark}
+import graft.plans.DeferProjectPastSort
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -15,17 +16,24 @@ class GraftExtensionsSpec extends AnyFunSuite {
     * started first, so it is the test session's whatever the suite
     * order.
     */
-  private def withExtensionSession(body: SparkSession => Unit): Unit = {
+  private def withExtensionSession(body: SparkSession => Unit): Unit =
+    withNewSession(_.withExtensions(new GraftExtensions))(body)
+
+  /** As [[withExtensionSession]], but the new session gets its
+    * extensions only from `spark.sql.extensions` — the conf
+    * `GraftSession.create` sets, which the shared context carries.
+    */
+  private def withNewSession(configure: SparkSession.Builder => SparkSession.Builder)(
+      body: SparkSession => Unit): Unit = {
     TestSpark.spark
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
+    val spark = configure(SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     try body(spark)
     finally {
@@ -71,6 +79,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("a GraftExtensions session holds DeferProjectPastSort once; install adds no second copy") {
+    // not withExtensionSession: in this JVM the shared context's
+    // spark.sql.extensions applies GraftExtensions too, so a
+    // withExtensions session holds each injection twice
+    withNewSession(identity) { spark =>
+      def copies = (spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
+        spark.experimental.extraOptimizations).count(_ == DeferProjectPastSort)
+      assert(copies === 1)
+      val extra = spark.experimental.extraOptimizations
+      GraftSession.install(spark)
+      GraftSession.install(spark)
+      assert(spark.experimental.extraOptimizations === extra)
+      assert(copies === 1)
+    }
+  }
+
   test("SparkEntry.queries readies a session missing a native function; install is idempotent") {
     val s = TestSpark.spark.newSession()
     val vecDot = FunctionIdentifier("vec_dot")
@@ -81,8 +105,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(n > 0L)
     assert(s.sessionState.functionRegistry.functionExists(vecDot))
     val strategies = s.experimental.extraStrategies
+    val optimizations = s.experimental.extraOptimizations
     GraftSession.install(s)
     GraftSession.install(s)
     assert(s.experimental.extraStrategies === strategies)
+    assert(s.experimental.extraOptimizations === optimizations)
   }
 }
