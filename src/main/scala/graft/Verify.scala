@@ -11,7 +11,8 @@ object Verify {
     // Correctness-gate-only override (round-14 ADVICE: keep it OUT of
     // the shared sessionConfigs so Bench/tests/library sessions retain
     // the driver-collect guardrail): the streaming gates snapshot
-    // their result through a memory sink in Complete mode (production
+    // their result through a memory sink — GateRun.replay is the one
+    // sink site — in Complete mode for the windowed gates (production
     // mode is Append — q217's eviction is spec-pinned), and at sf100
     // the q217 snapshot's serialized task results exceed the 1g
     // default, dying in the harness, not the plan. Verify runs one

@@ -53,9 +53,8 @@ object LakehouseQueries extends QueryModule {
             .groupBy("user_id").agg(max(col("st")).as("st"))
         // foreachBatch has no watermark — nothing emits from a no-data
         // batch, so the GateRun scope is pure overhead removal
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(new java.io.File(slices))) {
-          val q = s.readStream.schema(raw.schema)
+        graft.streaming.GateRun.withStreamGateConfs(s, new java.io.File(slices)) {
+          s.readStream.schema(raw.schema)
             .option("maxFilesPerTrigger", 1).parquet(slices)
             .writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
               val b = packed(batch)
@@ -68,7 +67,6 @@ object LakehouseQueries extends QueryModule {
               merged.write.mode("overwrite").parquet(dir)
               committed = Some(dir)
             }.start()
-          try q.processAllAvailable() finally q.stop()
         }
         s.read.parquet(committed.get)
           .select(col("user_id"), col("st.last_event_id").as("last_event_id"),

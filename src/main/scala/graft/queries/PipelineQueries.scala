@@ -1,10 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.streaming.{EventWindows, GateRun}
 
 /** Training-data-pipeline extensions through the driver gate (builder
   * prompt north-star): BPE-ish regex tokenization, the streaming window
@@ -35,6 +37,14 @@ object PipelineQueries extends QueryModule {
     require(hit == 0,
       s"q163/q164 round-trip gate: $hit rows contain the literal string \\N, " +
         "which collides with the CSV nullValue sentinel; change the sentinel for this corpus")
+  }
+
+  /** Latest event time in epoch µs, or None for an empty events table:
+    * the sentinel-flush gates (q74, q123) then have nothing to flush.
+    */
+  private def maxEventUs(raw: DataFrame): Option[Long] = {
+    val r = Tables.normalizeEventTs(raw).agg(max(col("ts_us"))).head()
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
   }
 
   private val rowFoldOracle: String = """
@@ -79,40 +89,27 @@ object PipelineQueries extends QueryModule {
       doc = "BPE-ish regex pre-tokenization counts (north-star)"),
 
     // ---------------------------------------------------------------- q60
-    // The streaming surface through the correctness gate: the SAME
-    // watermarked tumbling-window aggregation EventWindows ships runs
-    // here as a real Structured Streaming query (file source over the
-    // events parquet, AvailableNow semantics via processAllAvailable,
-    // Complete mode to a memory sink) and must hash-match the batch
-    // DuckDB oracle — incremental execution, identical answer.
+    // The streaming surface through the correctness gate: a watermarked
+    // hourly tumbling-window aggregation (per event type: count and
+    // exact decimal sum — its own shape, not EventWindows.tumblingCounts'
+    // 1-minute double-sum windows) runs as a real Structured Streaming
+    // query (file source over the events parquet, AvailableNow semantics
+    // via processAllAvailable, Complete mode to a memory sink) and must
+    // hash-match the batch DuckDB oracle — incremental execution,
+    // identical answer. Complete mode: the final data batch already
+    // holds the full answer.
     "q60_stream_hourly" -> NamedQuery(
-      fn = (s, d) => {
-        // the parquet file source lists a DIRECTORY — stage the single
-        // events file into one (what a production stream's watched
-        // landing dir is; at 100 TB this is the object-store prefix).
-        // Session-scoped + overwrite: no per-invocation dir leak.
-        val dir = TempPaths.stageFile(s, "q60_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema // ts: whatever the testdata ships; normalized below
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-        val windowed = stream
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            count(lit(1)).as("n_events"),
-            sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("event_type"), col("n_events"), col("sum_value"))
-        // Complete mode: the final data batch already holds the full
-        // answer — GateRun drops the trailing no-data batch too.
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = windowed.writeStream.outputMode(OutputMode.Complete)
-            .format("memory").queryName("q60_stream_hourly").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q60_stream_hourly").orderBy("window_start_us", "event_type")
-      },
+      fn = (s, d) =>
+        GateRun.replay(s, d, "q60_stream_hourly", OutputMode.Complete) { stream =>
+          stream
+            .withWatermark("ts", "10 minutes")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(
+              count(lit(1)).as("n_events"),
+              sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
+            .select(unix_micros(col("window.start")).as("window_start_us"),
+              col("event_type"), col("n_events"), col("sum_value"))
+        }.orderBy("window_start_us", "event_type"),
       oracle = Some("""
         SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
                event_type, COUNT(*) AS n_events,
@@ -456,36 +453,22 @@ object PipelineQueries extends QueryModule {
     // (that timeout path still exists for genuinely unbounded runs;
     // here processAllAvailable alone is deterministic). Sentinel
     // "sessions" start at the sentinel timestamp and are filtered out.
+    // An empty events table has no session to close: no flush.
     "q74_stream_sessions" -> NamedQuery(
       fn = (s, d) => {
-        import graft.streaming.EventWindows
         implicit val sp = s
         import s.implicits._
-        val dir = TempPaths.stageFile(s, "q74_events", s"$d/events.parquet", "events.parquet").toPath
         val raw = Tables.load(s, d, "events")
-        val maxUs = Tables.normalizeEventTs(raw).agg(max(col("ts_us"))).head().getLong(0)
-        val sentinelUs = maxUs + 2L * 3600 * 1000000L
-        raw.select(col("user_id")).distinct()
+        val sentinelUs = maxEventUs(raw).map(_ + 2L * 3600 * 1000000L)
+        val flushes = sentinelUs.toSeq.map(us => raw.select(col("user_id")).distinct()
           .select(lit(-1L).as("event_id"),
-            Tables.tsLiteral(sentinelUs, raw.schema("ts").dataType).as("ts"), col("user_id"),
-            lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("{}").as("props"))
-          .write.mode("overwrite").parquet(s"$dir/sentinels.parquet")
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(raw.schema).parquet(s"$dir/*.parquet"))
-          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-          .as[EventWindows.Event]
-        // Sentinel events close every session inside the data batch —
-        // the GateRun scope (8 state partitions, no-data batches off)
-        // never touches emission here.
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = EventWindows.sessionize(stream).toDF()
-            .writeStream.outputMode(OutputMode.Append)
-            .format("memory").queryName("q74_stream_sessions").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q74_stream_sessions")
-          .filter(col("session_start_us") < sentinelUs)
+            Tables.tsLiteral(us, raw.schema("ts").dataType).as("ts"), col("user_id"),
+            lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("{}").as("props")))
+        GateRun.replay(s, d, "q74_stream_sessions", OutputMode.Append, flushes) { stream =>
+          EventWindows.sessionize(stream
+            .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+            .as[EventWindows.Event]).toDF()
+        }.filter(col("session_start_us") < sentinelUs.getOrElse(Long.MaxValue))
           .orderBy("user_id", "session_start_us")
       },
       oracle = Some(s"""
@@ -553,24 +536,10 @@ object PipelineQueries extends QueryModule {
     // stateful flush); the watermark's role here is state CLEANUP, which
     // is what keeps the buffered sides finite on an unbounded stream.
     "q78_stream_attribution" -> NamedQuery(
-      fn = (s, d) => {
-        import graft.streaming.EventWindows
-        val dir = TempPaths.stageFile(s, "q78_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema // ts: whatever the testdata ships; normalized below
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-        val joined = EventWindows.clickToPurchase(stream)
-        // inner-join rows emit as matches arrive (watermark = cleanup
-        // only), so the GateRun scope is emission-safe
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = joined.writeStream.outputMode(OutputMode.Append)
-            .format("memory").queryName("q78_stream_attribution").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q78_stream_attribution")
-          .orderBy("user_id", "click_id", "purchase_id")
-      },
+      fn = (s, d) =>
+        GateRun.replay(s, d, "q78_stream_attribution", OutputMode.Append)(
+          EventWindows.clickToPurchase)
+          .orderBy("user_id", "click_id", "purchase_id"),
       oracle = Some(s"""
         SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
                p.value AS purchase_value
@@ -583,33 +552,20 @@ object PipelineQueries extends QueryModule {
       doc = "stream-stream interval join vs the batch oracle (§2.J hardest shape)"),
 
     // ---------------------------------------------------------------- q80
-    // SLIDING windows through the gate: EventWindows.slidingCounts'
-    // shape (5-minute windows every minute — each event lands in 5
+    // SLIDING windows through the gate: EventWindows.slidingCounts
+    // (5-minute windows every minute — each event lands in 5
     // overlapping windows) as a real Structured Streaming query,
     // hash-matched to a batch oracle that materializes the same 5
     // window starts per event with unnest(range(0,5)). Complete mode
     // like q60: window finalization never depends on a trailing
     // no-data batch advancing the watermark.
     "q80_stream_sliding" -> NamedQuery(
-      fn = (s, d) => {
-        val dir = TempPaths.stageFile(s, "q80_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema // ts: whatever the testdata ships; normalized below
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-        val windowed = stream
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "5 minutes", "1 minute"), col("user_id"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("user_id"), col("n_events"))
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = windowed.writeStream.outputMode(OutputMode.Complete)
-            .format("memory").queryName("q80_stream_sliding").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q80_stream_sliding").orderBy("window_start_us", "user_id")
-      },
+      fn = (s, d) =>
+        GateRun.replay(s, d, "q80_stream_sliding", OutputMode.Complete) { stream =>
+          EventWindows.slidingCounts(stream)
+            .select(unix_micros(col("window_start")).as("window_start_us"),
+              col("user_id"), col("n_events"))
+        }.orderBy("window_start_us", "user_id"),
       oracle = Some("""
         WITH slid AS (
           SELECT user_id,
@@ -630,23 +586,11 @@ object PipelineQueries extends QueryModule {
     // dropDuplicates keeps. Fingerprint uses integer/string columns
     // only — no float-to-string formatting to disagree on cross-engine.
     "q81_stream_dedup" -> NamedQuery(
-      fn = (s, d) => {
-        import graft.streaming.EventWindows
-        val dir = TempPaths.stageFile(s, "q81_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-        val deduped = EventWindows
-          .dedupStream(stream, keyCols = Seq("user_id", "event_type"))
-          .select(col("fp"), unix_micros(col("ts")).as("ts_us"))
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = deduped.writeStream.outputMode(OutputMode.Append)
-            .format("memory").queryName("q81_stream_dedup").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q81_stream_dedup").orderBy("fp", "ts_us")
-      },
+      fn = (s, d) =>
+        GateRun.replay(s, d, "q81_stream_dedup", OutputMode.Append) { stream =>
+          EventWindows.dedupStream(stream, keyCols = Seq("user_id", "event_type"))
+            .select(col("fp"), unix_micros(col("ts")).as("ts_us"))
+        }.orderBy("fp", "ts_us"),
       oracle = Some("""
         SELECT DISTINCT md5(CAST(user_id AS VARCHAR) || '#' || event_type) AS fp,
                epoch_us(ts) AS ts_us
@@ -666,24 +610,15 @@ object PipelineQueries extends QueryModule {
     // batch oracles.
     "q109_stream_static_join" -> NamedQuery(
       fn = (s, d) => {
-        val dir = TempPaths.stageFile(s, "q109_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema
-        val stream = s.readStream.schema(schema).parquet(dir.toString)
-          .select(col("user_id"), col("event_type"), col("value"))
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
-        val joined = stream
-          .join(broadcast(cust), col("user_id") === col("c_custkey"))
-          .groupBy("c_mktsegment", "event_type")
-          .agg(
-            count(lit(1)).as("n_events"),
-            sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = joined.writeStream.outputMode(OutputMode.Complete)
-            .format("memory").queryName("q109_stream_static_join").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q109_stream_static_join").orderBy("c_mktsegment", "event_type")
+        GateRun.replay(s, d, "q109_stream_static_join", OutputMode.Complete) { stream =>
+          stream.select(col("user_id"), col("event_type"), col("value"))
+            .join(broadcast(cust), col("user_id") === col("c_custkey"))
+            .groupBy("c_mktsegment", "event_type")
+            .agg(
+              count(lit(1)).as("n_events"),
+              sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
+        }.orderBy("c_mktsegment", "event_type")
       },
       oracle = Some("""
         SELECT c_mktsegment, event_type, COUNT(*) AS n_events,
@@ -713,28 +648,12 @@ object PipelineQueries extends QueryModule {
     // REAL batch that runs under that watermark and emits every
     // remaining unmatched click — deterministic, no reliance on a
     // no-data micro-batch racing processAllAvailable. Sentinels are
-    // filtered from the result.
+    // filtered from the result. An empty events table has no click to
+    // release: no flush.
     "q123_stream_outer_join" -> NamedQuery(
       fn = (s, d) => {
-        import graft.streaming.EventWindows
-        val dir = TempPaths.stageFile(s, "q123_events", s"$d/events.parquet", "events.parquet").toPath
-        // Re-runs in one session (Bench times every query twice): the
-        // flush protocol assumes sentinel2 does NOT exist when the
-        // stream starts — a stale copy from a previous invocation would
-        // ride into batch #1 instead of triggering the flush batch.
-        // Drop stale sentinels so every invocation replays identically.
-        Seq("sentinel1.parquet", "sentinel2.parquet").foreach { sd =>
-          val f = dir.resolve(sd).toFile
-          if (f.exists()) {
-            def rm(x: java.io.File): Unit = {
-              Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
-            }
-            rm(f)
-          }
-        }
         val raw = Tables.load(s, d, "events")
-        val maxUs = Tables.normalizeEventTs(raw).agg(max(col("ts_us"))).head().getLong(0)
-        def sentinel(path: String, us: Long): Unit =
+        def sentinel(us: Long): DataFrame =
           s.range(1).select(explode(array(
             struct(lit(-1L).as("event_id"),
               Tables.tsLiteral(us, raw.schema("ts").dataType).as("ts"),
@@ -745,24 +664,10 @@ object PipelineQueries extends QueryModule {
               lit(-2L).as("user_id"), lit("purchase").as("event_type"),
               lit(0.0).as("value"), lit("{}").as("props")))).as("e"))
             .select("e.*")
-            .write.mode("overwrite").parquet(s"$dir/$path")
-        sentinel("sentinel1.parquet", maxUs + 3L * 3600 * 1000000L)
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(raw.schema).parquet(s"$dir/*.parquet"))
-        val joined = EventWindows.clickToPurchaseOuter(stream)
-        // flush protocol is sentinel-driven by design ("no reliance on a
-        // no-data micro-batch") — GateRun makes that literal
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = joined.writeStream.outputMode(OutputMode.Append)
-            .format("memory").queryName("q123_stream_outer_join").start()
-          try {
-            q.processAllAvailable()
-            sentinel("sentinel2.parquet", maxUs + 4L * 3600 * 1000000L)
-            q.processAllAvailable()
-          } finally q.stop()
-        }
-        s.table("q123_stream_outer_join")
+        val flushes = maxEventUs(raw).toSeq.flatMap(maxUs => Seq(
+          sentinel(maxUs + 3L * 3600 * 1000000L), sentinel(maxUs + 4L * 3600 * 1000000L)))
+        GateRun.replay(s, d, "q123_stream_outer_join", OutputMode.Append, flushes)(
+          EventWindows.clickToPurchaseOuter)
           .filter(col("user_id") >= 0L)
           .orderBy("user_id", "click_id", "purchase_id")
       },
@@ -792,24 +697,14 @@ object PipelineQueries extends QueryModule {
     // is exact. State: one row per in-flight key within the watermark
     // horizon.
     "q153_stream_dedup_wm" -> NamedQuery(
-      fn = (s, d) => {
-        val dir = TempPaths.stageFile(s, "q153_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-        val deduped = stream
-          .select(col("user_id"), col("event_type"), col("ts"))
-          .withWatermark("ts", "10 minutes")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .select("user_id", "event_type")
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = deduped.writeStream.outputMode(OutputMode.Append)
-            .format("memory").queryName("q153_stream_dedup_wm").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q153_stream_dedup_wm").orderBy("user_id", "event_type")
-      },
+      fn = (s, d) =>
+        GateRun.replay(s, d, "q153_stream_dedup_wm", OutputMode.Append) { stream =>
+          stream
+            .select(col("user_id"), col("event_type"), col("ts"))
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark("user_id", "event_type")
+            .select("user_id", "event_type")
+        }.orderBy("user_id", "event_type"),
       oracle = Some("""
         SELECT DISTINCT user_id, event_type
         FROM events
@@ -824,32 +719,19 @@ object PipelineQueries extends QueryModule {
     // per-user running count + running max so far
     // (EventWindows.RunningTotalsProcessor). Requires the RocksDB
     // state-store provider (the API refuses HDFS-backed stores) —
-    // scoped via GateRun's extra confs. No watermark/sentinels needed:
+    // GateRun.replay picks it from the plan. No watermark/sentinels needed:
     // output is emitted for every input row inside the data batch.
     // Count and max are increment/selection ops — bit-exact vs the
     // batch running-window oracle, no float accumulation.
     "q173_stream_transform_state" -> NamedQuery(
       fn = (s, d) => {
-        import graft.streaming.EventWindows
         implicit val sp = s
         import s.implicits._
-        val dir = TempPaths.stageFile(s, "q173_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-          .as[EventWindows.Event]
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile), extra = Map(
-          "spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-          val q = EventWindows.runningTotals(stream).toDF()
-            .writeStream.outputMode(OutputMode.Append)
-            .format("memory").queryName("q173_stream_transform_state").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q173_stream_transform_state")
-          .orderBy("user_id", "run_n")
+        GateRun.replay(s, d, "q173_stream_transform_state", OutputMode.Append) { stream =>
+          EventWindows.runningTotals(stream
+            .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+            .as[EventWindows.Event]).toDF()
+        }.orderBy("user_id", "run_n")
       },
       oracle = Some("""
         WITH e AS (
@@ -876,28 +758,17 @@ object PipelineQueries extends QueryModule {
     // contract, now under streaming state); the same query with a
     // larger domain degrades per q168's bands, not silently.
     "q186_stream_heavy_hitters" -> NamedQuery(
-      fn = (s, d) => {
-        val dir = TempPaths.stageFile(s, "q186_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
-        val windowed = stream
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"))
-          .agg(expr("heavy_hitters(event_type, 8)").as("hh"))
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            explode(col("hh")).as("e"))
-          .select(col("window_start_us"), col("e.item").as("item"),
-            col("e.est").as("est"), col("e.err").as("err"))
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = windowed.writeStream.outputMode(OutputMode.Complete)
-            .format("memory").queryName("q186_stream_heavy_hitters").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q186_stream_heavy_hitters")
-          .orderBy(col("window_start_us"), col("est").desc, col("item"))
-      },
+      fn = (s, d) =>
+        GateRun.replay(s, d, "q186_stream_heavy_hitters", OutputMode.Complete) { stream =>
+          stream
+            .withWatermark("ts", "10 minutes")
+            .groupBy(window(col("ts"), "1 hour"))
+            .agg(expr("heavy_hitters(event_type, 8)").as("hh"))
+            .select(unix_micros(col("window.start")).as("window_start_us"),
+              explode(col("hh")).as("e"))
+            .select(col("window_start_us"), col("e.item").as("item"),
+              col("e.est").as("est"), col("e.err").as("err"))
+        }.orderBy(col("window_start_us"), col("est").desc, col("item")),
       oracle = Some("""
         SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
                event_type AS item, COUNT(*) AS est, CAST(0 AS BIGINT) AS err
@@ -924,24 +795,14 @@ object PipelineQueries extends QueryModule {
     // evict). Oracle: each event lands in exactly 600/120 = 5 windows,
     // materialized with unnest(range(0,5)) — the q80 idiom, unkeyed.
     "q217_stream_global_sliding" -> NamedQuery(
-      fn = (s, d) => {
-        val dir = TempPaths.stageFile(s, "q217_events", s"$d/events.parquet", "events.parquet").toPath
-        val schema = Tables.load(s, d, "events").schema
-        val stream = Tables.tsAsTimestamp(
-          s.readStream.schema(schema).parquet(dir.toString))
+      fn = (s, d) =>
         // shared transform (EventWindows.globalSliding) — the spec pins
         // its production Append mode's state eviction on the same plan
-        val windowed = graft.streaming.EventWindows.globalSliding(stream)
-          .select(unix_micros(col("window_start")).as("window_start_us"),
-            col("n_events"), col("sum_value"))
-        graft.streaming.GateRun.withStreamGateConfs(s,
-            parts = graft.streaming.GateRun.scaledParts(dir.toFile)) {
-          val q = windowed.writeStream.outputMode(OutputMode.Complete)
-            .format("memory").queryName("q217_stream_global_sliding").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table("q217_stream_global_sliding").orderBy("window_start_us")
-      },
+        GateRun.replay(s, d, "q217_stream_global_sliding", OutputMode.Complete) { stream =>
+          EventWindows.globalSliding(stream)
+            .select(unix_micros(col("window_start")).as("window_start_us"),
+              col("n_events"), col("sum_value"))
+        }.orderBy("window_start_us"),
       oracle = Some("""
         WITH slid AS (
           SELECT ((epoch_us(ts) // 120000000) - unnest(range(0, 5))) * 120000000 AS window_start_us,
