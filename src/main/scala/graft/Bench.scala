@@ -1,6 +1,6 @@
 package graft
 
-import graft.QueryLoop.{Err, Ok, Outcome, Skip}
+import graft.QueryLoop.{jsonString, Err, Ok, Outcome, Skip}
 
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR, prints one JSON line. A warmup action runs first
@@ -83,21 +83,9 @@ object Bench {
     val skips = results.collect { case (k, _, o: Skip) => (k, message(o)) }
     val qs = ok.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // JSON string escape: backslash, quote, ALL control chars (<0x20),
-    // AND everything non-ASCII — an exotic control char or a surrogate
-    // half (e.g. after take(80) splits a pair mid-emoji) in an exception
-    // message must not produce an invalid BENCH json line. Escaping
-    // non-ASCII makes the output pure ASCII, so no byte-level truncation
-    // downstream can ever cut a multi-byte sequence.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val allErrs = results.collect { case (k, _, o: Err) => (k, message(o)) }
-    val errs = allErrs.map { case (k, m) => s"\"" + k + "\":" + q(m) }.mkString("{", ",", "}")
-    val skipsJson = skips.map { case (k, m) => s"\"" + k + "\":" + q(m) }
+    val errs = allErrs.map { case (k, m) => s"\"" + k + "\":" + jsonString(m) }.mkString("{", ",", "}")
+    val skipsJson = skips.map { case (k, m) => s"\"" + k + "\":" + jsonString(m) }
       .mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.map(_._2).sum else 0.0
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"skipped":$skipsJson,"sf":"$sfDir"}"""
@@ -121,7 +109,7 @@ object Bench {
     // full line) so 4 guard trips cost ~60 chars of the tail window
     val skipsCompact =
       if (skips.isEmpty) ""
-      else skips.map { case (k, _) => q(k) }
+      else skips.map { case (k, _) => jsonString(k) }
         .mkString(""","skipped":[""", ",", "]")
     val sfName = sfDir.split('/').last
     // the driver's stdout tail window is ~2000 chars and sbt's
@@ -183,7 +171,7 @@ object Bench {
             val t = m.take(80)
             val trimmed =
               if (t.nonEmpty && Character.isHighSurrogate(t.last)) t.dropRight(1) else t
-            s"\"" + k + "\":" + q(trimmed)
+            s"\"" + k + "\":" + jsonString(trimmed)
           }
           .mkString("{", ",", "}")
         // sf spelled as basename in BOTH formats so a comparison keyed

@@ -28,6 +28,24 @@ object QueryLoop {
       .filter { case (n, _) => selectors.isEmpty || selectors.exists(n.contains) }
       .sortBy(_._1)
 
+  /** `s` as a JSON string literal, pure ASCII: quote, backslash, `\n`,
+    * `\r` and `\t` get their short escapes, every other control char
+    * and everything non-ASCII a `\uXXXX` escape per UTF-16 unit. An
+    * exotic control char or a surrogate half (a `take(n)` that splits an
+    * emoji) in an exception message or query SQL still yields a line
+    * `json.load` accepts, and no byte-level truncation downstream can
+    * cut a multi-byte sequence.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Run one query's `action`, classify how it ended, then clean up.
     * Returns the action's wall seconds (cleanup excluded) and outcome.
     */

@@ -164,7 +164,11 @@ object Tables {
           "Teach Tables.tsLiteral the new type.")
   }
 
-  /** Required session settings for reading the driver testdata. */
+  /** Required session settings for reading the test tables. No
+    * `spark.sql.streaming.*` key belongs here: it would reach every
+    * stream on the session. The bounded-replay gates scope their own
+    * (no-data micro-batches off) in `graft.streaming.GateRun`.
+    */
   def sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
@@ -178,16 +182,5 @@ object Tables {
     // SURVEY.md §2.I4/I10); ANSI hard-errors would change behavior.
     // Division-by-zero is still guarded explicitly in each query for
     // DuckDB parity (DuckDB: double x/0 → NULL; Java: ±Inf).
-    "spark.sql.ansi.enabled" -> "false",
-    // The streaming harness queries are sentinel-driven by design: every
-    // watermark-gated emission (q74 session close, q123 outer-join
-    // release) is forced by a far-future sentinel ROW riding a real
-    // batch, never by the no-data micro-batch race (see q123's flush
-    // protocol). No-data batches therefore only add cost here — each one
-    // replays the full stateful plan for zero rows (measured: ~0.7 s per
-    // batch on the stream-stream outer join, 2 of q123's 4 batches).
-    // Unbounded production streams SHOULD leave this on (it is how idle
-    // streams emit on watermark advance); this is the bounded-replay
-    // harness session.
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    "spark.sql.ansi.enabled" -> "false")
 }

@@ -57,6 +57,9 @@ case class FloatVecDot(left: Expression, right: Expression)
 /** graft's native functions, spelled once: the table drives both
   * [[GraftExtensions]] (`spark.sql.extensions`) and
   * `graft.GraftSession.install` (sessions built without the extension).
+  * The as-of join is not among them: it is a plan node
+  * (`graft.plans.AsOfJoinOps`), whose strategy and shield rule the
+  * extension installs.
   */
 object GraftFunctions {
   import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, ExpressionInfo}
@@ -79,7 +82,6 @@ object GraftFunctions {
     ("count_min", classOf[CountMin],
       e => CountMin(Cast(e(0), StringType), e(1)).toAggregateExpression()),
     ("cm_query", classOf[CmQuery], e => CmQuery(e(0), Cast(e(1), StringType), e(2))),
-    ("asof_pick", classOf[AsOfPick], e => AsOfPick(e(0), e(1), e(2), e(3))),
     ("jaro_winkler", classOf[JaroWinkler],
       e => JaroWinkler(Cast(e(0), StringType), Cast(e(1), StringType))),
     ("jaro_winkler_bytes", classOf[JaroWinklerBytes],

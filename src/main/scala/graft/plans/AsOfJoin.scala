@@ -6,25 +6,36 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, BinaryNode, HintInfo, LogicalPlan, Project, ResolvedHint}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, BroadcastMode, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 
-/** Backward as-of join as a first-class operator — the full §7.3(c)
-  * extension ladder (logical node → strategy → physical exec), for the
-  * one shape where composing built-ins has the right ANSWER but the
-  * wrong PLAN: the two-table "attach the latest quote at or before each
-  * probe" join. The union+window encoding (q44's single-table form)
-  * shuffles probe and quote rows through one window and carries every
-  * quote column as a conditional lag; this operator instead
-  * hash-partitions each side on its keys, sorts (key, time) — both
-  * demands EnsureRequirements satisfies with ordinary exchanges, and
-  * both REUSABLE from bucketed/sorted layouts — then streams a
-  * per-partition two-pointer merge: O(|L| + |R|), constant memory (one
-  * retained match row), no per-row search.
+/** As-of join as a first-class operator — the full §7.3(c) extension
+  * ladder (logical node → strategy → physical exec), for the one shape
+  * where composing built-ins has the right ANSWER but the wrong PLAN:
+  * the two-table "attach the latest quote at or before each probe"
+  * join. The union+window encoding (q44's single-table form) shuffles
+  * probe and quote rows through one window and carries every quote
+  * column as a conditional lag; this operator instead streams a
+  * per-partition two-pointer merge over inputs sorted on (keys, time):
+  * O(|L| + |R|) per partition, constant memory (one retained match
+  * row), no per-row search.
+  *
+  * One kernel, two distributions of the quote side:
+  *  - shuffled (default): both sides hash-partition on the keys and
+  *    sort (key, time) — the demands a sort-merge join makes, so
+  *    EnsureRequirements satisfies them with ordinary exchanges (or
+  *    none, over bucketed layouts);
+  *  - broadcast (`broadcastRight`, set when the right frame carries
+  *    Spark's `broadcast()` hint): the quote rows are collected,
+  *    sorted on (key, time) once by [[AsOfBroadcastMode]] and
+  *    broadcast; the probe side keeps its partitioning and only sorts
+  *    locally, and every probe partition runs the same merge over the
+  *    sorted broadcast rows. The right plan for a dim-sized reference
+  *    table (rates, calibrations, config history) against a large fact.
   *
   * Semantics: LEFT OUTER; backward by default — each left row pairs
   * with the right row of equal keys having the greatest time <= left
@@ -46,7 +57,7 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     leftTime: Expression, rightTime: Expression,
     strict: Boolean = false, toleranceUs: Option[Long] = None,
-    forward: Boolean = false) extends BinaryNode {
+    forward: Boolean = false, broadcastRight: Boolean = false) extends BinaryNode {
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
   override lazy val resolved: Boolean = childrenResolved &&
@@ -58,8 +69,8 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
 
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinPlan(l, r, lk, rk, lt, rt, strict, tol, fwd) =>
-      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, strict, tol, fwd) :: Nil
+    case AsOfJoinPlan(l, r, lk, rk, lt, rt, strict, tol, fwd, bc) =>
+      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, strict, tol, fwd, bc) :: Nil
     case _ => Nil
   }
 }
@@ -96,11 +107,13 @@ case class AsOfInputExec(child: SparkPlan) extends UnaryExecNode {
   * present). Idempotent — AQE re-applies prep rules on each replan.
   * Injected via `GraftExtensions` (`spark.sql.extensions`); sessions
   * without the extension (or with AQE off) simply keep the interpreted
-  * exec, whose plan is unchanged from rounds 4-7.
+  * exec. Broadcast-mode joins are left alone: their quote side is a
+  * broadcast, which has no row iterator to feed generated code, so
+  * they run interpreted.
   */
 object AsOfShieldRule extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
-    case j: AsOfJoinExec if !j.left.isInstanceOf[AsOfInputExec] =>
+    case j: AsOfJoinExec if !j.broadcastRight && !j.left.isInstanceOf[AsOfInputExec] =>
       j.copy(left = AsOfInputExec(j.left), right = AsOfInputExec(j.right))
   }
 }
@@ -130,24 +143,48 @@ class AsOfCodegenRuntime(
   }
 }
 
+/** The broadcast-mode quote side: the collected rows sorted once,
+  * before they are broadcast, by `ordering` (bound to the right
+  * output) — the order the shuffled mode gets from its per-partition
+  * sort. The sort is stable, so tied (key, time) rows keep their
+  * collect order.
+  */
+case class AsOfBroadcastMode(ordering: Seq[SortOrder]) extends BroadcastMode {
+  override def transform(rows: Array[InternalRow]): Array[InternalRow] =
+    rows.sorted(new InterpretedOrdering(ordering))
+  override def transform(rows: Iterator[InternalRow], sizeHint: Option[Long]): Array[InternalRow] =
+    transform(rows.toArray)
+  override def canonicalized: BroadcastMode =
+    copy(ordering = ordering.map(_.canonicalized.asInstanceOf[SortOrder]))
+}
+
 case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     leftTime: Expression, rightTime: Expression,
     strict: Boolean, toleranceUs: Option[Long],
-    forward: Boolean = false) extends BinaryExecNode with CodegenSupport {
+    forward: Boolean = false, broadcastRight: Boolean = false)
+  extends BinaryExecNode with CodegenSupport {
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
 
-  // co-partition on the keys, sort (keys, time) — the same demands a
-  // sort-merge join makes, so AQE/EnsureRequirements handle them with
-  // standard exchanges (or none, over bucketed layouts)
+  private def leftOrder = leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTime, Ascending)
+  private def rightOrder = rightKeys.map(SortOrder(_, Ascending)) :+ SortOrder(rightTime, Ascending)
+
+  // shuffled: co-partition on the keys, sort (keys, time) — the same
+  // demands a sort-merge join makes, so AQE/EnsureRequirements handle
+  // them with standard exchanges (or none, over bucketed layouts).
+  // broadcast: the probe side stays where it is and sorts locally; the
+  // quote side arrives whole and already sorted (AsOfBroadcastMode)
   override def requiredChildDistribution: Seq[Distribution] =
-    if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
+    if (broadcastRight)
+      UnspecifiedDistribution ::
+        BroadcastDistribution(AsOfBroadcastMode(
+          rightOrder.map(BindReferences.bindReference(_, right.output)))) :: Nil
+    else if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
     else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTime, Ascending),
-    rightKeys.map(SortOrder(_, Ascending)) :+ SortOrder(rightTime, Ascending))
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    Seq(leftOrder, if (broadcastRight) Nil else rightOrder)
   override def outputPartitioning: Partitioning = left.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = left.outputOrdering
 
@@ -165,8 +202,8 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   // as it treats SortMergeJoinExec's (InputAdapter + own stages below),
   // so fusing the merge loop UP into the parent stage never costs the
   // subtree BELOW its codegen. Without shields (AQE off, extension not
-  // installed) supportCodegen=false and the plan is byte-identical to
-  // the interpreted rounds-4-7 shape.
+  // installed, broadcast mode) supportCodegen=false and the exec runs
+  // its interpreted merge.
   override def supportCodegen: Boolean =
     left.isInstanceOf[AsOfInputExec] && right.isInstanceOf[AsOfInputExec]
 
@@ -323,6 +360,21 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
+    val merge = mergeFn()
+    if (broadcastRight) {
+      val quotes = right.executeBroadcast[Array[InternalRow]]()
+      left.execute().mapPartitions(lIter => merge(lIter, quotes.value.iterator))
+    } else {
+      left.execute().zipPartitions(right.execute())(merge)
+    }
+  }
+
+  /** The interpreted merge of one probe partition against a quote
+    * iterator sorted on (keys, time): a co-partition in the shuffled
+    * mode, the whole sorted broadcast in the broadcast mode. Captures
+    * only serializable locals, so the closure ships to the tasks.
+    */
+  private def mergeFn(): (Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
     val lKeyExprs = leftKeys
@@ -341,7 +393,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     // still match this probe when inclusive)
     val consumeEq = if (fwd) strict else !strict
 
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
+    (lIter, rIter) => {
       val lKeyProj = UnsafeProjection.create(lKeyExprs, lOut)
       val rKeyProj = UnsafeProjection.create(rKeyExprs, rOut)
       val keyOrd = RowOrdering.createNaturalAscendingOrdering(keyTypes)
@@ -462,7 +514,9 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 
 /** Public API. The joins plan through [[AsOfJoinStrategy]], which a
   * session has when built with `GraftExtensions` (`graft.GraftSession
-  * .create`) or readied by `graft.GraftSession.install`.
+  * .create`) or readied by `graft.GraftSession.install`. Both entry
+  * points return `left`'s columns followed by `right`'s minus its key
+  * columns, so a key name resolves to the probe side's column.
   */
 object AsOfJoinOps {
   /** As-of join: each `left` row joined to the `right` row with equal
@@ -475,8 +529,12 @@ object AsOfJoinOps {
     * share one type: LongType (any integer clock — then `toleranceUs`
     * is in those units) or TimestampType (compared on epoch micros, so
     * the tolerance is microseconds). Column names must be disjoint
-    * apart from the shared key names; right key/time columns keep
-    * their names in the output.
+    * apart from the shared key names, and the sides must not share
+    * attributes (alias a self-joined side's columns first).
+    *
+    * Pass `broadcast(right)` to run the broadcast distribution (see
+    * [[AsOfJoinPlan]]): the probe side never shuffles, and Spark's own
+    * broadcast size limits apply to the quote side.
     */
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftTimeCol: String, rightTimeCol: String,
@@ -484,7 +542,10 @@ object AsOfJoinOps {
                forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
     val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
+    val (rPlan, broadcastRight) = right.queryExecution.analyzed match {
+      case ResolvedHint(child, HintInfo(Some(BROADCAST))) => (child, true)
+      case p => (p, false)
+    }
     def attr(p: LogicalPlan, n: String): Attribute =
       p.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(s"column $n not found in ${p.output.map(_.name)}"))
@@ -505,8 +566,10 @@ object AsOfJoinOps {
     require(lPlan.outputSet.intersect(rPlan.outputSet).isEmpty,
       "as-of join sides share attributes (self-join without re-aliasing); " +
         "alias the right side's columns (df.select(col(\"x\").as(\"x2\"), ...)) first")
-    GraftBridge.ofRows(spark,
-      AsOfJoinPlan(lPlan, rPlan, lKeys, rKeys, lt, rt, strict, toleranceUs, forward))
+    val join = AsOfJoinPlan(lPlan, rPlan, lKeys, rKeys, lt, rt, strict, toleranceUs, forward,
+      broadcastRight)
+    val rKeySet = AttributeSet(rKeys)
+    GraftBridge.ofRows(spark, Project(join.output.filterNot(rKeySet.contains), join))
   }
 
   /** Skew-resilient as-of join — the hot-key composition of
@@ -551,105 +614,8 @@ object AsOfJoinOps {
     val saltedLeft = left.withColumn(salt, pmod(hash(saltSrc.map(col): _*), lit(saltBuckets)))
     val saltedRight = right.withColumn(salt,
       explode(lit((0 until saltBuckets).toArray)))
-    val joined = asofJoin(saltedLeft, saltedRight, keys :+ salt,
-      leftTimeCol, rightTimeCol, strict, toleranceUs, forward)
-    // drop both salt columns positionally (they share a name): output is
-    // left-cols ++ salt ++ right-cols ++ salt
-    val lSaltIdx = left.columns.length
-    val rSaltIdx = joined.columns.length - 1
-    val tmp = joined.toDF(joined.columns.indices.map(i => s"__c$i"): _*)
-    tmp.select(joined.columns.indices
-        .filterNot(i => i == lSaltIdx || i == rSaltIdx)
-        .map(i => col(s"__c$i")): _*)
-      .toDF((left.columns ++ right.columns).toIndexedSeq: _*)
-  }
-
-  /** Broadcast as-of join — the dim-sized-right composition of
-    * [[asofJoin]]. Per-key quote rows collapse into ONE time-sorted
-    * struct array (time is the struct's FIRST field, so `sort_array`
-    * orders by it), the array table broadcasts, and each probe row
-    * picks its match with a higher-order `filter` + `element_at` —
-    * entirely codegen'd column expressions. The probe side NEVER
-    * shuffles or sorts: the whole join is a map over the probe scan
-    * behind one BroadcastHashJoin, which is the plan you want when the
-    * right side is a small reference table (rates, calibrations,
-    * config history) and the probe side is the 100 TB fact — the merge
-    * operator above would shuffle+sort BOTH sides on the keys.
-    *
-    * Same semantics as [[asofJoin]] (LEFT OUTER; backward/forward,
-    * strict, tolerance), with two deliberate narrowings: every per-key
-    * quote list must fit in one row (the broadcast-dim assumption —
-    * per-probe match cost is O(quotes per key), linear scan), and time
-    * ties among quotes break by the remaining struct fields in column
-    * order (the merge exec retains the last-read tied row instead;
-    * identical results whenever key+time is unique on the right, the
-    * usual reference-table shape).
-    *
-    * The dim assumption is ENFORCED: the right side is counted and must
-    * come in under `maxRightRows` (default 1M) — per-key collect_list
-    * arrays blow the row size long before the broadcast itself fails
-    * cleanly, so misuse fails fast with the scale path named (the same
-    * medicine ScaleGuards.requireAllPairsSafe gives the O(n²)
-    * baselines). The count is one extra action over a dim-sized frame —
-    * negligible against the collect+broadcast it protects.
-    */
-  def asofJoinBroadcast(left: DataFrame, right: DataFrame, keys: Seq[String],
-                        leftTimeCol: String, rightTimeCol: String,
-                        strict: Boolean = false, toleranceUs: Option[Long] = None,
-                        forward: Boolean = false,
-                        maxRightRows: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions.{broadcast, col, collect_list, expr, sort_array, struct, unix_micros, when}
-    val lt = left.schema(leftTimeCol).dataType
-    val rt = right.schema(rightTimeCol).dataType
-    require(Seq(LongType, TimestampType).contains(lt) && rt == lt,
-      s"as-of time columns must both be LongType or both TimestampType, got $lt/$rt")
-    require(toleranceUs.forall(_ >= 0), "as-of tolerance must be >= 0")
-    require(!left.columns.contains("__qarr"), "probe side may not contain __qarr")
-    keys.foreach { k =>
-      require(left.columns.contains(k) && right.columns.contains(k),
-        s"as-of key '$k' missing from a side")
-    }
-    val nRight = right.count()
-    require(nRight <= maxRightRows,
-      s"asofJoinBroadcast: right side has $nRight rows (> $maxRightRows); this " +
-        "operator collects per-key quote arrays and broadcasts them, which is " +
-        "only sound for a dim-sized right side — use the keyed merge asofJoin " +
-        "for a large right side, or raise maxRightRows if the frame is " +
-        "provably dim-sized")
-    // time first so sort_array orders the quotes by it; null-time quotes
-    // can never match (every direction's comparison excludes them) and
-    // would sort FIRST, breaking asof_pick's binary-search invariant —
-    // drop them before collecting
-    val ordered = (rightTimeCol +: right.columns.filterNot(c =>
-      keys.contains(c) || c == rightTimeCol)).toIndexedSeq
-    val qarr = sort_array(collect_list(struct(ordered.map(col): _*))).as("__qarr")
-    val rightNonNull = right.filter(col(rightTimeCol).isNotNull)
-    val qagg =
-      if (keys.nonEmpty) rightNonNull.groupBy(keys.map(col): _*).agg(qarr)
-      else rightNonNull.agg(qarr)
-    val joined =
-      if (keys.nonEmpty) left.join(broadcast(qagg), keys, "left")
-      else left.crossJoin(broadcast(qagg))
-    def us(c: Column): Column = if (lt == TimestampType) unix_micros(c) else c
-    // Per-probe match: binary search over the sorted quote array via the
-    // native asof_pick expression (expr/AsOfPick.scala) — O(log |quotes|)
-    // per row. The previous filter(__qarr, pred) + element_at(±1)
-    // composition evaluated an interpreted lambda over EVERY element per
-    // probe row; the round-13 honest (toRdd) re-measure exposed that as
-    // the whole cost of q124 once the join actually executed, and the
-    // cost grows with the time span (time-disjoint scaledata: ~7.2k
-    // hourly quotes per key at sf1). asof_pick indexes only in-bounds,
-    // so the composition is ANSI-safe by construction.
-    val m0 = expr(s"asof_pick(__qarr, `$leftTimeCol`, $forward, $strict)")
-    val matched = toleranceUs match {
-      case Some(tol) =>
-        val mt = m0.getField(rightTimeCol)
-        val dist = if (forward) us(mt) - us(col(leftTimeCol)) else us(col(leftTimeCol)) - us(mt)
-        when(m0.isNotNull && dist <= tol, m0)
-      case None => m0
-    }
-    val out = left.columns.map(col).toSeq ++ ordered.map(c => matched.getField(c).as(c))
-    joined.select(out: _*)
+    // the right salt is a key, so only the probe side's salt survives
+    asofJoin(saltedLeft, saltedRight, keys :+ salt,
+      leftTimeCol, rightTimeCol, strict, toleranceUs, forward).drop(salt)
   }
 }

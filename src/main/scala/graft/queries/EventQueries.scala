@@ -439,16 +439,8 @@ object EventQueries extends QueryModule {
           .groupBy(col("user_id").as("q_user"), col("ts_us").as("q_ts"))
           .agg(max(col("value")).as("signup_value"))
           .withColumnRenamed("q_user", "user_id")
-        val joined = graft.plans.AsOfJoinOps.asofJoin(
+        graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "ts_us", "q_ts")
-        // positional re-label of the duplicate right key — guard the
-        // assumed left++right column order so an operator/projection
-        // reorder fails loudly here, not as an opaque oracle mismatch
-        require(joined.columns.toSeq ==
-          Seq("event_id", "user_id", "ts_us", "user_id", "q_ts", "signup_value"),
-          s"unexpected as-of output order: " + joined.columns.mkString(","))
-        joined
-          .toDF("event_id", "user_id", "ts_us", "q_user", "q_ts", "signup_value")
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("ts_us") - col("q_ts")).as("us_since_signup"))
           .orderBy("event_id")
@@ -479,8 +471,9 @@ object EventQueries extends QueryModule {
     // event_id with the probe time (saltOn) — the production form that
     // stays a real spread even when a hot key's timestamps tie
     // (batch-stamped events would collapse a time-only salt into one
-    // bucket). Oracle: DuckDB's native ASOF again — salting must be
-    // row-invisible.
+    // bucket). asofJoinSalted returns asofJoin's columns (the salt
+    // dropped by name), so the projection is q95's. Oracle: DuckDB's
+    // native ASOF again — salting must be row-invisible.
     "q157_asof_salted" -> NamedQuery(
       fn = (s, d) => {
         val e = Tables.events(s, d)
@@ -490,14 +483,9 @@ object EventQueries extends QueryModule {
           .groupBy(col("user_id").as("q_user"), col("ts_us").as("q_ts"))
           .agg(max(col("value")).as("signup_value"))
           .withColumnRenamed("q_user", "user_id")
-        val joined = graft.plans.AsOfJoinOps.asofJoinSalted(
+        graft.plans.AsOfJoinOps.asofJoinSalted(
           probes, quotes, Seq("user_id"), "ts_us", "q_ts", saltBuckets = 8,
           saltOn = Seq("ts_us", "event_id"))
-        require(joined.columns.toSeq ==
-          Seq("event_id", "user_id", "ts_us", "user_id", "q_ts", "signup_value"),
-          s"unexpected salted as-of output order: " + joined.columns.mkString(","))
-        joined
-          .toDF("event_id", "user_id", "ts_us", "q_user", "q_ts", "signup_value")
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("ts_us") - col("q_ts")).as("us_since_signup"))
           .orderBy("event_id")
@@ -775,13 +763,8 @@ object EventQueries extends QueryModule {
           .groupBy(col("user_id").as("q_user"), timestamp_micros(col("ts_us")).as("q_ts"))
           .agg(max(col("value")).as("signup_value"))
           .withColumnRenamed("q_user", "user_id")
-        val joined = graft.plans.AsOfJoinOps.asofJoin(
+        graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "ts", "q_ts", toleranceUs = Some(dayUs))
-        require(joined.columns.toSeq ==
-          Seq("event_id", "user_id", "ts", "user_id", "q_ts", "signup_value"),
-          "unexpected as-of output order: " + joined.columns.mkString(","))
-        joined
-          .toDF("event_id", "user_id", "ts", "q_user", "q_ts", "signup_value")
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (unix_micros(col("ts")) - unix_micros(col("q_ts"))).as("us_since_signup"))
           .orderBy("event_id")
@@ -818,13 +801,8 @@ object EventQueries extends QueryModule {
           .groupBy(col("user_id").as("q_user"), col("h").as("q_h"))
           .agg(max(col("value")).as("signup_value"))
           .withColumnRenamed("q_user", "user_id")
-        val joined = graft.plans.AsOfJoinOps.asofJoin(
+        graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "h", "q_h", strict = true)
-        require(joined.columns.toSeq ==
-          Seq("event_id", "user_id", "h", "user_id", "q_h", "signup_value"),
-          "unexpected as-of output order: " + joined.columns.mkString(","))
-        joined
-          .toDF("event_id", "user_id", "h", "q_user", "q_h", "signup_value")
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("h") - col("q_h")).as("hours_since_signup"))
           .orderBy("event_id")
@@ -949,13 +927,8 @@ object EventQueries extends QueryModule {
           .groupBy(col("user_id").as("q_user"), col("h").as("q_h"))
           .agg(max(col("value")).as("signup_value"))
           .withColumnRenamed("q_user", "user_id")
-        val joined = graft.plans.AsOfJoinOps.asofJoin(
+        graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "h", "q_h", forward = true)
-        require(joined.columns.toSeq ==
-          Seq("event_id", "user_id", "h", "user_id", "q_h", "signup_value"),
-          "unexpected as-of output order: " + joined.columns.mkString(","))
-        joined
-          .toDF("event_id", "user_id", "h", "q_user", "q_h", "signup_value")
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("q_h") - col("h")).as("hours_until_signup"))
           .orderBy("event_id")
@@ -1185,14 +1158,17 @@ object EventQueries extends QueryModule {
       doc = "native session_window batch sessionization (§2.J operator form of q21)"),
 
     // --------------------------------------------------------------- q124
-    // BROADCAST as-of join (AsOfJoinOps.asofJoinBroadcast): each
+    // BROADCAST as-of join (asofJoin over broadcast(quotes)): each
     // purchase picks the latest hourly per-type checkpoint STRICTLY
     // before it. The checkpoint table is dim-sized (types × hours), so
-    // the right plan is NOT q95's two-sided shuffle+sort merge: quotes
-    // collapse to one time-sorted array per key, broadcast, and the
-    // probe side never shuffles — the join is a map over the probe
-    // scan (plan-pinned). Validated against DuckDB's native ASOF JOIN
-    // with the strict (<) comparator.
+    // the right plan is NOT q95's two-sided shuffle+sort merge: the
+    // hint selects AsOfJoinExec's broadcast distribution — the quotes
+    // are sorted once and broadcast, and the probe side only sorts
+    // within its partitions and never shuffles (plan-pinned). The
+    // quote key is re-aliased (q_type) because the two sides come from
+    // one events scan and asofJoin rejects shared attributes.
+    // Validated against DuckDB's native ASOF JOIN with the strict (<)
+    // comparator.
     "q124_asof_broadcast" -> NamedQuery(
       fn = (s, d) => {
         val ev = Tables.events(s, d)
@@ -1201,7 +1177,7 @@ object EventQueries extends QueryModule {
         // (2·10^4·cents + n) div (2n) — round(double, 6) splits engines
         // on decimal midpoints (q70 hit one at sf1)
         val quotes = ev
-          .groupBy(col("event_type"),
+          .groupBy(col("event_type").as("q_type"),
             (expr(s"ts_us div ${HourUs}L") * HourUs).as("q_ts_us"))
           .agg(sum(dec(col("value"))).as("sv"), count(lit(1)).as("n"))
           // sv stays DECIMAL here (dsum's double cast would truncate a
@@ -1211,11 +1187,11 @@ object EventQueries extends QueryModule {
             (when(col("cents") < 0, lit(-1L)).otherwise(lit(1L)) *
               expr("(2 * 10000 * abs(cents) + n) div (2 * n)"))
               .cast("double") / lit(1e6))
-          .select("event_type", "q_ts_us", "q_rate")
+          .select(col("q_type").as("event_type"), col("q_ts_us"), col("q_rate"))
         val probe = ev.filter(col("event_type") === "purchase")
           .select(col("event_id"), col("event_type"), col("ts_us"))
-        graft.plans.AsOfJoinOps.asofJoinBroadcast(
-          probe, quotes, Seq("event_type"), "ts_us", "q_ts_us", strict = true)
+        graft.plans.AsOfJoinOps.asofJoin(
+          probe, broadcast(quotes), Seq("event_type"), "ts_us", "q_ts_us", strict = true)
           .select("event_id", "event_type", "ts_us", "q_ts_us", "q_rate")
           .orderBy("event_id")
       },

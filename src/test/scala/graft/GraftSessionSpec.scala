@@ -18,6 +18,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.cpusFrom(Some("-2")) === allCores)
   }
 
+  test("sessionConfigs sets no spark.sql.streaming.* key (streaming confs are scoped per run)") {
+    assert(Tables.sessionConfigs.keys.filter(_.startsWith("spark.sql.streaming.")).isEmpty)
+  }
+
   test("registerTables exposes the corpus to plain SQL with native functions") {
     GraftSession.registerTables(spark, "/root/testdata/sf0.001")
     val n = spark.sql("SELECT count(*) FROM lineitem").head().getLong(0)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Round, Sin}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests (SURVEY.md §4): the physical plans that
@@ -300,18 +300,25 @@ class PlanAuditSpec extends AnyFunSuite {
       s"events scan not pruned to (ts, user_id):\n$p")
   }
 
-  test("q124 broadcast as-of matches via the native asof_pick binary search (no per-element ArrayFilter)") {
-    // Round-13 honest re-measure: once the toRdd forcing actually
-    // executed q124's join, the filter(__qarr, λ) + element_at match was
-    // the whole cost — an INTERPRETED lambda over every quote element
-    // per probe row, O(|probe| × |quotes|) with |quotes| growing with
-    // the time span (7.2k hourly quotes at sf1). asof_pick binary-
-    // searches the sorted array in codegen. A reappearing ArrayFilter
-    // here is a quadratic regression at scale.
-    val p = plan("q124_asof_broadcast")
-    assert(p.contains("asof_pick"), s"asof_pick not in q124's plan:\n${p.take(2000)}")
-    assert(!p.contains("ArrayFilter") && !p.contains("filter(__qarr"),
-      "q124's match path fell back to a per-element array filter")
+  test("q124 plans AsOfJoin over a BroadcastExchange, with no hash exchange on the probe side") {
+    // q124's quote side is dim-sized (types × hours): broadcast(quotes)
+    // selects AsOfJoinExec's broadcast distribution, so the purchase
+    // probes are only sorted within their scan partitions. A
+    // hashpartitioning exchange here means the probe side shuffles
+    // again, which at scale is the cost the hint exists to avoid.
+    val exec = SparkEntry.queries("q124_asof_broadcast")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val p = exec.toString
+    val join = exec.collectFirst { case j: graft.plans.AsOfJoinExec => j }
+      .getOrElse(fail(s"no AsOfJoinExec in q124's plan:\n$p"))
+    assert(join.broadcastRight, s"q124's as-of join is not in broadcast mode:\n$p")
+    assert(join.right.isInstanceOf[BroadcastExchangeExec], s"quote side is not a broadcast:\n$p")
+    // between the probe scan and the join, nothing but local operators
+    val probeExchanges = join.left.collect { case e: ShuffleExchangeExec => e }
+    assert(probeExchanges.isEmpty, s"probe side shuffles:\n$p")
+    assert(!join.left.toString.contains("hashpartitioning"), s"probe side hash-partitions:\n$p")
   }
 
   test("q157 salted as-of shuffles on (user, salt): the hot-key spread is in the plan") {

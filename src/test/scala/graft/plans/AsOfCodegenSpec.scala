@@ -88,7 +88,7 @@ class AsOfCodegenSpec extends AnyFunSuite {
   test("codegen survives a fused parent aggregate (stage above consumes join vars)") {
     withConf("spark.sql.codegen.fallback" -> "false") {
       val df = AsOfJoinOps.asofJoin(probes, quotes, Seq("kk"), "pt", "qt")
-        .toDF("pid", "kk_l", "pt", "kk_r", "qt", "qv") // key kept from BOTH sides
+        .toDF("pid", "kk_l", "pt", "qt", "qv") // left ++ right minus the key
         .groupBy("kk_l").agg(count(col("qv")).as("n_matched"))
         .orderBy("kk_l")
       val got = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq

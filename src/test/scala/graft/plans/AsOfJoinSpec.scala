@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,8 @@ import graft.TestSpark
 /** AsOfJoinExec semantics vs an independent SQL formulation (correlated
   * max-per-probe), plus the operator's plan shape and edge cases: empty
   * right, null times, keys present on only one side, multi-column keys.
+  * The broadcast distribution (`broadcast(right)`) is checked row-equal
+  * to the shuffled one on each edge case.
   */
 class AsOfJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -277,13 +280,32 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(viaOp === viaSql2)
   }
 
-  test("asofJoinBroadcast equals the merge operator on randomized data, all variants") {
+  /** The broadcast distribution (`broadcast(right)`) against the
+    * shuffled one on the same inputs: the rows must be equal, and each
+    * frame must have planned the mode it was asked for. Returns the
+    * broadcast-mode frame.
+    */
+  private def sameInBothModes(l: DataFrame, r: DataFrame, keys: Seq[String],
+      strict: Boolean = false, tol: Option[Long] = None, fwd: Boolean = false): DataFrame = {
+    val shuffled = AsOfJoinOps.asofJoin(l, r, keys, "pt", "qt", strict, tol, fwd)
+    val bcast = AsOfJoinOps.asofJoin(l, broadcast(r), keys, "pt", "qt", strict, tol, fwd)
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+    assert(rows(bcast) === rows(shuffled), s"strict=$strict tol=$tol fwd=$fwd")
+    assert(bcast.columns.toSeq === shuffled.columns.toSeq)
+    assert(bcast.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
+    assert(!shuffled.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
+    bcast
+  }
+
+  private def keyedProbes = probes.withColumnRenamed("k", "kk")
+  private def keyedQuotes = quotes.withColumnRenamed("k2", "kk")
+
+  test("broadcast mode equals the shuffled mode on randomized data, all variants") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260813)
     val ps = (1 to 400).map(i =>
       (i.toLong, s"k${rnd.nextInt(6)}", rnd.nextInt(1000).toLong)).toDF("pid", "k", "pt")
-    // unique (k, qt) on the right — the shape where broadcast and merge
-    // tie-breaking provably coincide
+    // unique (k, qt) on the right, so tie-breaking cannot differ
     val qs = (1 to 150).map(i => (s"k${i % 8}", (i * 13L) % 1000, i.toDouble))
       .distinct.toDF("k", "qt", "qv")
       .groupBy("k", "qt").agg(max("qv").as("qv"))
@@ -291,46 +313,93 @@ class AsOfJoinSpec extends AnyFunSuite {
       strict <- Seq(false, true)
       forward <- Seq(false, true)
       tol <- Seq(None, Some(120L))
-    } {
-      def shape(df: org.apache.spark.sql.DataFrame) =
-        df.select("pid", "qt", "qv").collect()
-          .map(r => (r.getLong(0),
-            if (r.isNullAt(1)) None else Some(r.getLong(1)),
-            if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-      val merge = shape(AsOfJoinOps.asofJoin(ps, qs, Seq("k"), "pt", "qt",
-        strict = strict, toleranceUs = tol, forward = forward))
-      val bcast = shape(AsOfJoinOps.asofJoinBroadcast(ps, qs, Seq("k"), "pt", "qt",
-        strict = strict, toleranceUs = tol, forward = forward))
-      assert(bcast === merge, s"strict=$strict forward=$forward tol=$tol")
-    }
+    } sameInBothModes(ps, qs, Seq("k"), strict, tol, forward)
   }
 
-  test("asofJoinBroadcast: probe side never shuffles (BroadcastHashJoin, no AsOfJoinExec)") {
+  test("broadcast mode: the probe side never shuffles (AsOfJoin over a BroadcastExchange)") {
     import spark.implicits._
     val ps = (1 to 50).map(i => (i.toLong, s"k${i % 3}", i * 7L)).toDF("pid", "k", "pt")
     val qs = Seq(("k0", 10L, 1.0), ("k1", 20L, 2.0)).toDF("k", "qt", "qv")
-    val df = AsOfJoinOps.asofJoinBroadcast(ps, qs, Seq("k"), "pt", "qt")
+    val df = AsOfJoinOps.asofJoin(ps, broadcast(qs), Seq("k"), "pt", "qt")
+    df.collect() // materialize so AQE finalizes the plan
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
-    assert(!p.contains("AsOfJoinExec"))
-    // keys with no quotes yield null right columns (left outer)
+    assert(p.contains("AsOfJoin") && p.contains("BroadcastExchange"), s"not broadcast mode:\n$p")
+    assert(!p.contains("hashpartitioning"), s"a side was hash-shuffled:\n$p")
+    // the broadcast side is never wrapped for codegen: it has no rows to iterate
+    assert(!p.contains("AsOfInput"), s"broadcast-mode join got codegen shields:\n$p")
+    // left ++ right minus keys; keys with no quotes yield null right columns
+    assert(df.columns.toSeq === Seq("pid", "k", "pt", "qt", "qv"))
     val missing = df.filter(col("k") === "k2")
     assert(missing.count() > 0 && missing.filter(col("qv").isNotNull).count() === 0)
   }
 
-  test("asofJoinBroadcast refuses an oversized right side, naming the keyed scale path") {
+  test("broadcast mode, keyless: every probe takes the globally latest quote, as shuffled") {
+    val df = sameInBothModes(probes, quotes, Seq.empty)
+    assert(df.filter(col("pid") === 4L).select("qt").head().getLong(0) === 5L)
+  }
+
+  test("broadcast mode, empty right: every probe is kept with null matches, as shuffled") {
+    val empty = keyedQuotes.filter(lit(false))
+    val keyed = sameInBothModes(keyedProbes, empty, Seq("kk"))
+    assert(keyed.count() === probes.count() && keyed.filter(col("qt").isNotNull).count() === 0)
+    assert(sameInBothModes(probes, quotes.filter(lit(false)), Seq.empty).count() === probes.count())
+  }
+
+  test("broadcast mode: null right times and keys never match, as shuffled") {
     import spark.implicits._
-    val ps = Seq((1L, "k0", 10L)).toDF("pid", "k", "pt")
-    val qs = (1 to 40).map(i => (s"k${i % 3}", i.toLong, i.toDouble)).toDF("k", "qt", "qv")
-    // per-key collect_list + broadcast is only sound for a dim-sized
-    // right side — an unbounded one blows per-key row sizes before the
-    // broadcast itself fails cleanly, so the op must fail FAST
-    val e = intercept[IllegalArgumentException] {
-      AsOfJoinOps.asofJoinBroadcast(ps, qs, Seq("k"), "pt", "qt", maxRightRows = 10L)
+    val ps = Seq((1L, Some("a"), Some(100L)), (2L, None, Some(100L)), (3L, Some("b"), Some(100L)),
+      (4L, Some("a"), None), (5L, Some("a"), Some(40L))).toDF("pid", "kk", "pt")
+    val qs = Seq((Some("a"), Some(50L), 1.0), (None, Some(50L), 2.0), (Some("a"), None, 3.0),
+      (Some("b"), None, 4.0), (None, None, 5.0), (Some("a"), Some(30L), 6.0)).toDF("kk", "qt", "qv")
+    for (strict <- Seq(false, true); fwd <- Seq(false, true)) {
+      val got = sameInBothModes(ps, qs, Seq("kk"), strict = strict, fwd = fwd)
+        .select("pid", "qv").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+      // NULL-keyed and NULL-timed quotes never match, nor do such probes
+      assert(got(2L) === None && got(3L) === None && got(4L) === None)
+      if (!fwd) assert(got(1L) === Some(1.0) && got(5L) === Some(6.0))
     }
-    assert(e.getMessage.contains("asofJoin"), e.getMessage)
-    assert(e.getMessage.contains("40"), e.getMessage)
-    // the default bound admits the dim-sized case unchanged
-    assert(AsOfJoinOps.asofJoinBroadcast(ps, qs, Seq("k"), "pt", "qt").count() === 1)
+  }
+
+  test("broadcast mode: TimestampType time columns with a tolerance in micros, as shuffled") {
+    import spark.implicits._
+    val ps = Seq((1L, "a", 1000000L), (2L, "a", 5000000L), (3L, "b", 2000000L)).toDF("pid", "kk", "ptu")
+      .withColumn("pt", timestamp_micros(col("ptu"))).drop("ptu")
+    val qs = Seq(("a", 900000L, 1.0), ("a", 1500000L, 2.0), ("b", 2100000L, 3.0)).toDF("kk", "qtu", "qv")
+      .withColumn("qt", timestamp_micros(col("qtu"))).drop("qtu")
+    for (fwd <- Seq(false, true); tol <- Seq(None, Some(200000L))) {
+      val got = sameInBothModes(ps, qs, Seq("kk"), tol = tol, fwd = fwd)
+        .select("pid", "qv").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+      if (!fwd && tol.isDefined) assert(got === Map(1L -> Some(1.0), 2L -> None, 3L -> None))
+      if (fwd && tol.isDefined) assert(got === Map(1L -> None, 2L -> None, 3L -> Some(3.0)))
+    }
+  }
+
+  test("broadcast mode: forward and strict variants on tied quote times, as shuffled") {
+    for (strict <- Seq(false, true); fwd <- Seq(false, true)) {
+      val got = sameInBothModes(keyedProbes, keyedQuotes, Seq("kk"), strict = strict, fwd = fwd)
+        .select("pid", "qt").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+      // probe 7 sits exactly on the a@200 quote
+      val expect7 = (strict, fwd) match {
+        case (false, _)    => 200L
+        case (true, false) => 90L
+        case (true, true)  => 290L
+      }
+      assert(got(7L) === Some(expect7), s"strict=$strict fwd=$fwd")
+    }
+  }
+
+  test("broadcast mode plans and matches with AQE off (the Audit session)") {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val df = sameInBothModes(keyedProbes, keyedQuotes, Seq("kk"), strict = true)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("AdaptiveSparkPlan") && p.contains("AsOfJoin"), p)
+      assert(!p.contains("hashpartitioning"), s"a side was hash-shuffled:\n$p")
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -12,8 +12,8 @@ import graft.TestSpark
   * sets (few keys to force collisions, duplicate and tied times, null
   * times) checked against a driver-side brute-force reference on every
   * variant (backward/forward × strict × tolerance), and the
-  * merge-vs-broadcast implementation equivalence the q124 composition
-  * promises when (key, time) is unique on the right.
+  * shuffled-vs-broadcast distribution equivalence (q124 runs the
+  * broadcast one) when (key, time) is unique on the right.
   */
 class AsOfPropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -62,21 +62,44 @@ class AsOfPropertySpec extends AnyFunSuite {
       (pid, best)
     }.toSet
 
+  private type Variant = (Boolean, Option[Long], Boolean) // (strict, tol, forward)
+
+  private val allVariants: Seq[Variant] = for {
+    strict <- Seq(false, true); fwd <- Seq(false, true)
+    tol <- Seq(None, Some(7L))
+  } yield (strict, tol, fwd)
+
+  /** Every frame in `runs` (each with `pid`, `qt`, `qv`) collected as
+    * ONE tagged union: one Spark job per generated input instead of one
+    * per variant and implementation. Returns each run's
+    * (pid, qt, qv) rows, in `runs` order.
+    */
+  private def collectTagged(runs: Seq[org.apache.spark.sql.DataFrame])
+      : Seq[Set[(Int, Option[Long], Option[Long])]] = {
+    val union = runs.zipWithIndex
+      .map { case (df, i) => df.select(lit(i).as("run"), col("pid"), col("qt"), col("qv")) }
+      .reduce(_ union _)
+    val byRun = union.collect().groupBy(_.getInt(0)).map { case (i, rows) =>
+      i -> rows.map(r => (r.getInt(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+    }
+    runs.indices.map(byRun.getOrElse(_, Set.empty))
+  }
+
+  private def frames(ps: Seq[(String, Option[Long])], qs: Seq[(String, Option[Long], Long)]) =
+    (ps.zipWithIndex.map { case ((k, t), i) => (i, k, t) }.toDF("pid", "kk", "pt"),
+      qs.toDF("kk", "qt", "qv"))
+
   test("asofJoin matches brute force on random inputs, every variant") {
-    val variants = for {
-      strict <- Seq(false, true); fwd <- Seq(false, true)
-      tol <- Seq(None, Some(7L))
-    } yield (strict, tol, fwd)
     check(Prop.forAll(probeGen, quoteGen) { (ps, qs) =>
       (ps.nonEmpty && qs.nonEmpty) ==> {
-        val pdf = ps.zipWithIndex.map { case ((k, t), i) => (i, k, t) }
-          .toDF("pid", "kk", "pt")
-        val qdf = qs.toDF("kk", "qt", "qv")
-        variants.forall { case (strict, tol, fwd) =>
-          val got = AsOfJoinOps.asofJoin(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd)
-            .select(col("pid"), col("qt")).collect()
-            .map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
-          got == reference(ps, qs, strict, tol, fwd)
+        val (pdf, qdf) = frames(ps, qs)
+        val got = collectTagged(allVariants.map { case (strict, tol, fwd) =>
+          AsOfJoinOps.asofJoin(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd)
+        })
+        allVariants.zip(got).forall { case ((strict, tol, fwd), rows) =>
+          rows.map { case (pid, qt, _) => (pid, qt) } == reference(ps, qs, strict, tol, fwd)
         }
       }
     })
@@ -86,49 +109,35 @@ class AsOfPropertySpec extends AnyFunSuite {
     val variants = Seq((false, None, false), (true, Some(7L), false), (false, None, true))
     check(Prop.forAll(probeGen, quoteGen) { (ps, qs) =>
       (ps.nonEmpty && qs.nonEmpty) ==> {
-        val pdf = ps.zipWithIndex.map { case ((k, t), i) => (i, k, t) }
-          .toDF("pid", "kk", "pt")
-        val qdf = qs.toDF("kk", "qt", "qv")
-        variants.forall { case (strict, tol, fwd) =>
-          def norm(df: org.apache.spark.sql.DataFrame): Set[(Int, Option[Long])] =
-            df.select(col("pid"), col("qt")).collect()
-              .map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
-          val plain = norm(AsOfJoinOps.asofJoin(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd))
-          val salted = norm(AsOfJoinOps.asofJoinSalted(pdf, qdf, Seq("kk"), "pt", "qt",
-            strict, tol, fwd, saltBuckets = 3))
-          // saltOn with a per-row-unique column (the tied-timestamp
-          // degeneracy escape hatch) must also be row-identical
-          val saltedById = norm(AsOfJoinOps.asofJoinSalted(pdf, qdf, Seq("kk"), "pt", "qt",
-            strict, tol, fwd, saltBuckets = 3, saltOn = Seq("pt", "pid")))
+        val (pdf, qdf) = frames(ps, qs)
+        val got = collectTagged(variants.flatMap { case (strict, tol, fwd) =>
+          Seq(
+            AsOfJoinOps.asofJoin(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd),
+            AsOfJoinOps.asofJoinSalted(pdf, qdf, Seq("kk"), "pt", "qt",
+              strict, tol, fwd, saltBuckets = 3),
+            // saltOn with a per-row-unique column (the tied-timestamp
+            // degeneracy escape hatch) must also be row-identical
+            AsOfJoinOps.asofJoinSalted(pdf, qdf, Seq("kk"), "pt", "qt",
+              strict, tol, fwd, saltBuckets = 3, saltOn = Seq("pt", "pid")))
+        }).map(_.map { case (pid, qt, _) => (pid, qt) })
+        got.grouped(3).forall { case Seq(plain, salted, saltedById) =>
           plain == salted && plain == saltedById
         }
       }
     })
   }
 
-  test("merge exec and broadcast composition agree when (key, time) is unique on the right") {
+  test("shuffled and broadcast modes agree when (key, time) is unique on the right") {
     val uniqueQuoteGen = quoteGen.map(_.distinctBy(q => (q._1, q._2)))
-    val variants = for {
-      strict <- Seq(false, true); fwd <- Seq(false, true)
-      tol <- Seq(None, Some(7L))
-    } yield (strict, tol, fwd)
     check(Prop.forAll(probeGen, uniqueQuoteGen) { (ps, qs) =>
       (ps.nonEmpty && qs.nonEmpty) ==> {
-        val pdf = ps.zipWithIndex.map { case ((k, t), i) => (i, k, t) }
-          .toDF("pid", "kk", "pt")
-        val qdf = qs.toDF("kk", "qt", "qv")
-        variants.forall { case (strict, tol, fwd) =>
-          def norm(df: org.apache.spark.sql.DataFrame): Set[(Int, Option[Long], Option[Long])] =
-            df.collect().map(r => (
-              r.getInt(r.fieldIndex("pid")),
-              if (r.isNullAt(r.fieldIndex("qt"))) None else Some(r.getLong(r.fieldIndex("qt"))),
-              if (r.isNullAt(r.fieldIndex("qv"))) None else Some(r.getLong(r.fieldIndex("qv"))))).toSet
-          val merge = norm(AsOfJoinOps.asofJoin(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd)
-            .select(col("pid"), col("qt"), col("qv")))
-          val bcast = norm(AsOfJoinOps.asofJoinBroadcast(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd)
-            .select(col("pid"), col("qt"), col("qv")))
-          merge == bcast
-        }
+        val (pdf, qdf) = frames(ps, qs)
+        val got = collectTagged(allVariants.flatMap { case (strict, tol, fwd) =>
+          Seq(
+            AsOfJoinOps.asofJoin(pdf, qdf, Seq("kk"), "pt", "qt", strict, tol, fwd),
+            AsOfJoinOps.asofJoin(pdf, broadcast(qdf), Seq("kk"), "pt", "qt", strict, tol, fwd))
+        })
+        got.grouped(2).forall { case Seq(shuffled, bcast) => shuffled == bcast }
       }
     })
   }

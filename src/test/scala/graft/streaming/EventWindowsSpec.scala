@@ -14,19 +14,6 @@ class EventWindowsSpec extends AnyFunSuite {
   private def ts(minute: Int, sec: Int = 0) =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:$sec%02d")
 
-  /** The harness session disables no-data micro-batches (its emissions
-    * are all sentinel-driven — Tables.sessionConfigs). The two tests
-    * below document UNBOUNDED-stream semantics, where the no-data batch
-    * is precisely how an idle stream emits once the watermark passes a
-    * window end — so they run with the production setting restored.
-    */
-  private def withNoDataBatches[A](body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try body finally spark.conf.set(key, prev)
-  }
-
   private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
                           mode: OutputMode): org.apache.spark.sql.DataFrame = {
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
@@ -108,7 +95,7 @@ class EventWindowsSpec extends AnyFunSuite {
     assert(tiers(7L) === None)
   }
 
-  test("streaming parquet sink writes windowed results that read back (A6, streaming form)") { withNoDataBatches {
+  test("streaming parquet sink writes windowed results that read back (A6, streaming form)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = java.nio.file.Paths.get("target", "stream-sink", "data").toAbsolutePath
@@ -134,7 +121,7 @@ class EventWindowsSpec extends AnyFunSuite {
     val back = spark.read.parquet(outDir.toString)
     val clicks = back.filter($"event_type" === "click").select("n_events", "sum_value").head()
     assert(clicks.getLong(0) === 2L && clicks.getDouble(1) === 3.0)
-  } }
+  }
 
   test("stream-stream interval join attributes purchases to prior clicks within 30 min (J)") {
     import spark.implicits._
@@ -166,7 +153,7 @@ class EventWindowsSpec extends AnyFunSuite {
     assert(out.select("event_type").collect().map(_.getString(0)).toSet === Set("click", "view"))
   }
 
-  test("append-mode sliding windows emit finalized rows once and EVICT their state (production path)") { withNoDataBatches {
+  test("append-mode sliding windows emit finalized rows once and EVICT their state (production path)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventWindows.Event]
@@ -195,9 +182,9 @@ class EventWindowsSpec extends AnyFunSuite {
     assert(removed >= 5L, s"expected >=5 evicted state rows, got $removed")
     assert(finalState.numRowsTotal === 5L,
       s"state not bounded to in-flight windows: ${finalState.numRowsTotal}")
-  } }
+  }
 
-  test("q217 global sliding windows in Append mode emit once and EVICT state (production path)") { withNoDataBatches {
+  test("q217 global sliding windows in Append mode emit once and EVICT state (production path)") {
     // q217's gate runs EventWindows.globalSliding in Complete mode (the
     // finite-replay oracle harness); this is the production-mode pin the
     // round-12 verdict asked for — the q80 treatment applied to the
@@ -232,9 +219,9 @@ class EventWindowsSpec extends AnyFunSuite {
     assert(removed >= 5L, s"expected >=5 evicted state rows, got $removed")
     assert(finalState.numRowsTotal === 5L,
       s"state not bounded to in-flight windows: ${finalState.numRowsTotal}")
-  } }
+  }
 
-  test("watermark drops events later than 10 minutes (J: late-data semantics)") { withNoDataBatches {
+  test("watermark drops events later than 10 minutes (J: late-data semantics)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventWindows.Event]
@@ -256,7 +243,7 @@ class EventWindowsSpec extends AnyFunSuite {
     val types = spark.table("late_out").collect().map(_.getString(1)).toSet
     assert(types.contains("ok"))     // within watermark: emitted
     assert(!types.contains("late"))  // beyond watermark: dropped
-  } }
+  }
 
   test("stateful sessionization closes a session on gap > 30 min (J: flatMapGroupsWithState)") {
     import spark.implicits._

@@ -26,17 +26,6 @@ class StreamingRecoverySpec extends AnyFunSuite {
   private def ts(minute: Int, sec: Int = 0) =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:$sec%02d")
 
-  /** Same rationale as EventWindowsSpec: the harness session disables
-    * no-data micro-batches; restart semantics are a production
-    * property, so these tests run with the production setting.
-    */
-  private def withNoDataBatches[A](body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try body finally spark.conf.set(key, prev)
-  }
-
   test("stateless file-source stream restarts exactly-once from its checkpoint") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-recovery-stateless")
@@ -102,7 +91,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     } finally spark.conf.set(key, default)
   }
 
-  test("windowed aggregation state survives a restart (watermark + counts from the store)") { withNoDataBatches {
+  test("windowed aggregation state survives a restart (watermark + counts from the store)") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-recovery-stateful")
     val in = base.resolve("in"); Files.createDirectories(in)
@@ -140,5 +129,5 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val w1000 = java.time.Instant.parse("2024-01-01T10:00:00Z").toEpochMilli * 1000L
     assert(rows.get(w1000) === Some(3L),
       s"10:00 window must finalize with the 3 pre-restart events, got $rows")
-  } }
+  }
 }
