@@ -41,7 +41,7 @@ object FieldControlPipeline {
     // football rows themselves don't project influence (Field Control.R:230)
     val withBall = CoveragePipeline.withBall(Standardize.directionStandardize(tracking))
       .filter(col("team") =!= "football")
-    val k = Kinematics.withProjection()(Kinematics.withVelocity(withBall))
+    val k = Kinematics.withProjection(Kinematics.withVelocity(withBall))
       .withColumn("dist_from_ball",
         Kinematics.dist(col("x"), col("y"), col("xFootball"), col("yFootball")))
       .withColumn("r", Kinematics.radiusOfInfluence(col("dist_from_ball")))

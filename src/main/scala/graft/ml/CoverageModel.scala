@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object CoverageModel {
 
+  /** The seed of the split and the forest (the reference's 123). */
+  val Seed = 123L
+
   final case class Fitted(
       model: PipelineModel,
       labels: Array[String],
@@ -62,7 +65,7 @@ object CoverageModel {
   /** K1 (all coverages.R:202-204): fit on a labeled feature frame
     * (label column `coverage`; every other numeric column a feature).
     */
-  def fit(labeled: DataFrame, seed: Long = 123L, numTrees: Int = 50): Fitted = {
+  def fit(labeled: DataFrame, numTrees: Int = 50): Fitted = {
     val featureCols = labeled.schema.fields
       .filter(f => f.name != "coverage" && (f.dataType.typeName == "double" || f.dataType.typeName == "integer" || f.dataType.typeName == "long"))
       .map(_.name)
@@ -72,7 +75,7 @@ object CoverageModel {
       .setInputCols(featureCols).setOutputCol("features").setHandleInvalid("keep")
     val rf = new RandomForestClassifier()
       .setLabelCol("label").setFeaturesCol("features")
-      .setNumTrees(numTrees).setSeed(seed)
+      .setNumTrees(numTrees).setSeed(Seed)
     val pipeline = new Pipeline().setStages(Array(indexer, assembler, rf))
     val model = pipeline.fit(labeled)
     val labels = model.stages.collectFirst { case m: StringIndexerModel => m }.get.labelsArray.head
@@ -82,8 +85,8 @@ object CoverageModel {
   }
 
   /** F4 (all coverages.R:192-199): seeded 75/25 split. */
-  def trainTestSplit(df: DataFrame, seed: Long = 123L): (DataFrame, DataFrame) = {
-    val Array(train, test) = df.randomSplit(Array(0.75, 0.25), seed)
+  def trainTestSplit(df: DataFrame): (DataFrame, DataFrame) = {
+    val Array(train, test) = df.randomSplit(Array(0.75, 0.25), Seed)
     (train, test)
   }
 }

@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
+  /** The near-dup family's LSH shape: k = 8 signatures in bands of 2 —
+    * the decision the DuckDB oracles spell `generate_series(0, 7)` and
+    * `seed // 2` (DedupQueries.minhashBandsSql).
+    */
+  val SignatureCount = 8
+  val RowsPerBand = 2
+
   /** First 60 bits of md5(s) as a non-negative long — the hash-aggregable
     * minhash primitive (15 hex digits < 2^60, so the cast is exact).
     */
@@ -205,25 +212,14 @@ object DedupOps {
       .select((scopeCols.map(col) :+ col("d1") :+ col("d2")): _*).distinct()
   }
 
-  /** Exact intersection verify on prefix candidates, thresholded in
-    * INTEGER math — J ≥ p/q ⟺ (p+q)·c ≥ p·(n1+n2) — plus the
-    * catalog's exact-rational micro rounding for the reported jacc.
-    * Scope columns from the candidate list ride through.
+  /** Exact intersection verify on prefix candidates: `jaccardExploded`
+    * per scope, thresholded in INTEGER math — J ≥ p/q ⟺
+    * (p+q)·c ≥ p·(n1+n2).
     */
   def verifyJaccardThreshold(toks: DataFrame, candidates: DataFrame,
-      scopeCols: Seq[String], p: Int, q: Int): DataFrame = {
-    val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val t1 = toks.select(col("doc_id").as("d1"), col("tok"))
-    val t2 = toks.select(col("doc_id").as("d2"), col("tok"))
-    candidates.join(t1, Seq("d1")).join(t2, Seq("d2", "tok"))
-      .groupBy((scopeCols ++ Seq("d1", "d2")).map(col): _*).agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
+      scopeCols: Seq[String], p: Int, q: Int): DataFrame =
+    jaccardExploded(toks, candidates, scopeCols)
       .filter(lit((p + q).toLong) * col("c") >= lit(p.toLong) * (col("n1") + col("n2")))
-      .withColumn("jacc",
-        expr("(2 * 1000000 * c + (n1 + n2 - c)) div (2 * (n1 + n2 - c))")
-          .cast("double") / lit(1e6))
-  }
 
   /** The full exact threshold join: emit every same-scope pair with
     * Jaccard ≥ p/q over the (doc_id, scope..., tok) set relation —
@@ -237,17 +233,16 @@ object DedupOps {
   /** Exact unigram Jaccard on a candidate pair list, exploded-join
     * form: intersection counts come from joining the (doc, tok) table
     * onto the candidates and hash-aggregating — compact fixed-width
-    * shuffle rows, no per-pair array work. Wins when documents are
-    * SHORT (the candidates×tokens intermediate stays small). See
-    * [[jaccardOnCandidates]] for the long-document alternative; both
-    * return identical exact-integer Jaccard.
+    * shuffle rows, no per-pair array work. `scopeCols` of the candidate
+    * list ride through as leading output columns.
     */
-  def jaccardExploded(toks: DataFrame, candidates: DataFrame): DataFrame = {
+  def jaccardExploded(toks: DataFrame, candidates: DataFrame,
+      scopeCols: Seq[String] = Seq.empty): DataFrame = {
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val t1 = toks.select(col("doc_id").as("d1"), col("tok"))
     val t2 = toks.select(col("doc_id").as("d2"), col("tok"))
     candidates.join(t1, Seq("d1")).join(t2, Seq("d2", "tok"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("c"))
+      .groupBy((scopeCols ++ Seq("d1", "d2")).map(col): _*).agg(count(lit(1)).as("c"))
       .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
       .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
       .withColumn("jacc",
@@ -257,41 +252,7 @@ object DedupOps {
         // one at sf1; unions divisible by 2^7*5^j make them reachable)
         expr("(2 * 1000000 * c + (n1 + n2 - c)) div (2 * (n1 + n2 - c))")
           .cast("double") / lit(1e6))
-      .select("d1", "d2", "c", "n1", "n2", "jacc")
-  }
-
-  /** Exact unigram Jaccard on a candidate pair list, array form: each
-    * doc's token set is collected into ONE array row, then |A∩B| is a
-    * map-side `array_intersect` on the joined pair. Shuffles |docs|
-    * array rows instead of 2×|tokens| rows and never materializes the
-    * candidates×tokens intermediate — wins when documents are LONG
-    * (hundreds+ of tokens) relative to the candidate count. Counts are
-    * exact integers — Jaccard is bit-identical to [[jaccardExploded]].
-    */
-  def jaccardOnCandidates(toks: DataFrame, candidates: DataFrame): DataFrame = {
-    // lazily checkpointed: both join branches (d1/d2) consume the same
-    // aggregate — without reuse the collect_set shuffle runs twice. A
-    // lazy localCheckpoint materializes on the caller's first action and
-    // is reclaimed by ContextCleaner when the frame is unreachable, so
-    // the op stays lazy (no action of its own) yet leaves no persisted
-    // state behind for a harness to clean (same lifetime rule as
-    // duplicateClusters' iteration checkpoints).
-    val arrs = toks.groupBy("doc_id").agg(collect_set(col("tok")).as("tokset"))
-      .localCheckpoint(false)
-    candidates
-      .join(arrs.select(col("doc_id").as("d1"), col("tokset").as("ts1")), Seq("d1"))
-      .join(arrs.select(col("doc_id").as("d2"), col("tokset").as("ts2")), Seq("d2"))
-      .withColumn("c", size(array_intersect(col("ts1"), col("ts2"))).cast("long"))
-      .withColumn("n1", size(col("ts1")).cast("long"))
-      .withColumn("n2", size(col("ts2")).cast("long"))
-      .withColumn("jacc",
-        // exact rational cnt/union rounded half-away in integer math
-        // (PARITY rule 4 fix 2): round(double, 6) splits engines when
-        // the true rational lands on a decimal micro-midpoint (q70 hit
-        // one at sf1; unions divisible by 2^7*5^j make them reachable)
-        expr("(2 * 1000000 * c + (n1 + n2 - c)) div (2 * (n1 + n2 - c))")
-          .cast("double") / lit(1e6))
-      .select("d1", "d2", "c", "n1", "n2", "jacc")
+      .select((scopeCols ++ Seq("d1", "d2", "c", "n1", "n2", "jacc")).map(col): _*)
   }
 
   /** The near-dup EDGE derivation the whole graph family shares —
@@ -318,12 +279,11 @@ object DedupOps {
     * itself is the near-dup rate times the corpus — orders of magnitude
     * smaller than the input, which is what makes the checkpoint cheap.
     */
-  def neardupEdges(docs: DataFrame, textCol: String, scopeCols: Seq[String],
-                   threshold: Double, k: Int = 8, rowsPerBand: Int = 2)
+  def neardupEdges(docs: DataFrame, textCol: String, scopeCols: Seq[String], threshold: Double)
                   (implicit s: SparkSession): DataFrame = {
     val toks = tokenSet(docs, textCol, scopeCols).persist()
     try {
-      val bands = bandHashes(toks, k, rowsPerBand, scopeCols)
+      val bands = bandHashes(toks, SignatureCount, RowsPerBand, scopeCols)
       val candidates = candidatePairs(bands, scopeCols)
       val edges = jaccardExploded(toks, candidates)
         .filter(col("jacc") >= threshold)

@@ -13,6 +13,7 @@ object Kinematics {
   val MinRadius = 4.0          // Field Control.R:279
   val MaxRadius = 10.0         // Field Control.R:280
   val MaxDistFromBall = 20.0   // Field Control.R:281
+  val ProjectionSeconds = 0.5  // next-location horizon, Field Control.R:247-267
 
   /** I3/I4/I12 (Field Control.R:31-44): direction (degrees) + speed →
     * velocity components and velocity angle. The reference NaN-guards
@@ -32,12 +33,12 @@ object Kinematics {
           .otherwise(atan(col("v_y") / col("v_x"))))
 
   /** I12 (Field Control.R:247-267): speed ratio and projected next
-    * location at `dt` seconds (reference uses 0.5 s).
+    * location `ProjectionSeconds` ahead.
     */
-  def withProjection(dt: Double = 0.5)(df: DataFrame): DataFrame =
+  def withProjection(df: DataFrame): DataFrame =
     df.withColumn("s_ratio", col("s") / lit(MaxSpeed))
-      .withColumn("next_x", col("x") + col("v_x") * lit(dt))
-      .withColumn("next_y", col("y") + col("v_y") * lit(dt))
+      .withColumn("next_x", col("x") + col("v_x") * lit(ProjectionSeconds))
+      .withColumn("next_y", col("y") + col("v_y") * lit(ProjectionSeconds))
 
   /** I2/I6 + quirk Q8 (Field Control.R:277-290): radius of influence.
     * Implements the code's *actual* formula (cubic over un-cubed

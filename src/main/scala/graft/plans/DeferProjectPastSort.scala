@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeSet, NamedExpression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeSet, NamedExpression, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.CollapseProject
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -28,10 +28,13 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.{PROJECT, SORT}
   *
   * Fires only when the sort is global, every projection in the stack is
   * deterministic, every sort key is a pass-through base column (possibly
-  * renamed), and at least one output is computed. Declines when the base
-  * columns the sort would newly carry are wider (Σ `defaultSize`) than
-  * the computed outputs they replace, so shuffle bytes never grow: a
-  * narrowing projection such as `length(text)` stays below the sort.
+  * renamed), and at least one output is computed. Declines when a base
+  * column the sort would newly carry is not fixed-width (a string, array
+  * or map: `defaultSize` counts a string as 20 bytes and an array as one
+  * element, so no byte estimate bounds it), and when the fixed-width
+  * ones are wider (Σ `defaultSize`) than the computed outputs they
+  * replace, so shuffle bytes never grow: a narrowing projection such as
+  * `length(text)` or `element_at(arr, 1)` stays below the sort.
   * Idempotent: after a rewrite the sort's child projects attributes only.
   *
   * Injected by `graft.expr.GraftExtensions` and added by
@@ -65,8 +68,9 @@ object DeferProjectPastSort extends Rule[LogicalPlan] {
     val deferred = flat.filterNot(e => through.contains(e.toAttribute))
     if (deferred.isEmpty || keys.exists(_.isEmpty)) return None
     val needed = AttributeSet(flat.flatMap(_.references))
-    val newlyCarried = needed -- through.values
-    if (width(newlyCarried.toSeq) > width(deferred)) return None
+    val newlyCarried = (needed -- through.values).toSeq
+    if (!newlyCarried.forall(a => UnsafeRow.isFixedLength(a.dataType))) return None
+    if (width(newlyCarried) > width(deferred)) return None
     Some(Project(flat, sort.copy(order = keys.flatten, child = Project(base.output.filter(needed.contains), base))))
   }
 

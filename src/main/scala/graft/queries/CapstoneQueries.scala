@@ -58,25 +58,21 @@ import graft.football.{BdbSchemas, CoveragePipeline, FieldControlPipeline}
   * global window.
   */
 object CapstoneQueries extends QueryModule {
+  import MotionQueries.{axesSql, gridSql, influenceSql, projectionSql, velocitySql}
 
   /** Warmup hook (Bench): stage the BDB CSV fixtures up front so no
     * capstone's FIRST timed pass pays the one-time synthesis+write —
     * staging is environment setup (the reference's CSVs exist on disk
     * before its scripts run), not part of any query's cost. Idempotent
-    * via the marker below.
+    * via `TempPaths.buildOnce`.
     */
   def stageFixtures(s: SparkSession, d: String): Unit = { bdbFixtures(s, d); () }
 
   /** Synthesize + stage the games/plays/tracking/coverages CSVs once per
-    * (session, dataset) — the q169/q209 marker pattern. Returns the dir.
+    * (session, dataset) with `TempPaths.buildOnce`. Returns the dir.
     */
-  private def bdbFixtures(s: SparkSession, d: String): java.io.File = {
-    val dir = TempPaths.dir(s, "q211_bdb_fixtures")
-    val dsKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val marker = new java.io.File(dir, s"_built_$dsKey")
-    if (!marker.exists()) {
-      Option(dir.listFiles()).foreach(_.filter(_.getName.startsWith("_built_")).foreach(_.delete()))
+  private def bdbFixtures(s: SparkSession, d: String): java.io.File =
+    TempPaths.buildOnce(s, "q211_bdb_fixtures", Seq(d)) { dir =>
       val p = math.max(14L, Tables.events(s, d).count() / 100)
 
       val games = s.range(1, 3).select(
@@ -200,10 +196,7 @@ object CapstoneQueries extends QueryModule {
           lit(null).cast("string").as("route"))
       tracking.write.option("header", "true").mode("overwrite")
         .csv(new java.io.File(dir, "tracking").getAbsolutePath)
-      marker.createNewFile(): Unit
     }
-    dir
-  }
 
   /** The shared fixture-reconstruction CTE head every capstone oracle
     * reuses: plays-per-game scalar, the tracking relation with EVERY
@@ -368,7 +361,7 @@ object CapstoneQueries extends QueryModule {
             round(col("control"), 6).as("control"))
           .orderBy("frameId", "grid_x", "grid_y")
       },
-      oracle = Some(bdbSqlHead + """,
+      oracle = Some(bdbSqlHead + s""",
         picked AS (
           SELECT gameId, playId FROM (
             SELECT gameId, playId, (playId * 37) % 60 + 26 AS res
@@ -392,33 +385,18 @@ object CapstoneQueries extends QueryModule {
                    OVER (PARTITION BY frameId) AS yF
           FROM sp),
         k AS (
-          SELECT frameId, nflId, team, x, y, s, xF, yF,
-                 sin(radians(dir)) * s AS v_x, cos(radians(dir)) * s AS v_y
+          SELECT frameId, nflId, team, x, y, s, xF, yF, $velocitySql
           FROM wb WHERE fb = 1 AND team <> 'football'),
         k2 AS (
-          SELECT *,
-                 CASE WHEN v_x = 0 AND v_y = 0 THEN 0.0
-                      WHEN v_x = 0 THEN sign(v_y) * pi() / 2.0
-                      ELSE atan(v_y / v_x) END AS v_theta,
-                 s / 13.0 AS s_ratio,
-                 x + v_x * 0.5 AS next_x, y + v_y * 0.5 AS next_y,
-                 least(4.0 + pow(sqrt(pow(x - xF, 2) + pow(y - yF, 2)), 3) * 0.3,
-                       10.0) AS r
+          SELECT *, ${projectionSql("sqrt(pow(x - xF, 2) + pow(y - yF, 2))")}
           FROM k),
         k3 AS (
-          SELECT *, r * (1.0 + s_ratio) AS sx, r * (1.0 - s_ratio) AS sy,
+          SELECT *, $axesSql,
                  CASE WHEN team = 'home' THEN -1.0 ELSE 1.0 END AS sgn
           FROM k2),
-        g AS (
-          SELECT gx.i * (120.0 / 120) AS grid_x, gy.j * (160.0 / 3.0 / 53) AS grid_y
-          FROM generate_series(0, 119) gx(i) CROSS JOIN generate_series(0, 52) gy(j)),
+        g AS (${gridSql(120, 53)}),
         e AS (
-          SELECT frameId, nflId, grid_x, grid_y, sgn,
-                 exp(-0.5 * (
-                     (sx*sx*sin(v_theta)*sin(v_theta) + sy*sy*cos(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_x-next_x)
-                   - 2.0 * ((sx*sx - sy*sy)*sin(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_y-next_y)
-                   + (sx*sx*cos(v_theta)*cos(v_theta) + sy*sy*sin(v_theta)*sin(v_theta)) * (grid_y-next_y) * (grid_y-next_y)
-                 ) / (sx*sx*sy*sy)) AS influence
+          SELECT frameId, nflId, grid_x, grid_y, sgn, $influenceSql
           FROM k3 CROSS JOIN g),
         n AS (
           SELECT frameId, grid_x, grid_y, sgn,

@@ -12,6 +12,8 @@ import graft.Tables
   * candidates (never all-pairs; SCALING.md "Dedup").
   */
 object CorpusQueries extends QueryModule {
+  import DedupQueries.{bandOverlapSql, componentsSql, interJaccSql, minhashBandsSql,
+    neardupPairsSql, neardupSql, undirectedEdgesSql, verifiedSql}
 
   /** Cleaning expression shared by queries: strip URLs, emails, digits. */
   private def cleanedCol(c: String) = graft.ops.TextOps.cleaned(col(c))
@@ -21,32 +23,37 @@ object CorpusQueries extends QueryModule {
 
   /** The q169/q170 shared artifact: the verified near-dup edge table,
     * derived once per (session, dataset) and written partitioned by an
-    * 8-way d1 bucket. `rebuild = true` (the write-side gate q169)
-    * always re-derives; otherwise a dataset-keyed marker skips the
-    * build so consumers (q170) pay only the parquet read — the driver
-    * iterates queries in Map order, so the consumer must be able to
-    * build on first touch. Returns the table path.
+    * 8-way d1 bucket (`TempPaths.buildOnce`). `rebuild = true` (the
+    * write-side gate q169) always re-derives; consumers (q170) pay only
+    * the parquet read, and build on first touch when they run before
+    * q169. Returns the table path.
     */
   private def edgeArtifact(s: SparkSession, d: String, rebuild: Boolean = false): String = {
-    val dir = TempPaths.dir(s, "q169_edge_artifact")
-    val table = new java.io.File(dir, "edges")
-    val dsKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val marker = new java.io.File(dir, s"_built_$dsKey")
-    if (rebuild || !marker.exists()) {
+    val dir = TempPaths.buildOnce(s, "q169_edge_artifact", Seq(d), rebuild) { dir =>
       implicit val sp: SparkSession = s
-      // dataset switched (or write-side gate): stale markers go first so
-      // a failed write can't leave a fresh marker over an old table
-      Option(dir.listFiles()).foreach(_.filter(_.getName.startsWith("_built_")).foreach(_.delete()))
       graft.ops.DedupOps.neardupEdges(
           Tables.documents(s, d), "text", Seq("lang", "source"), 0.5)
         .withColumn("bucket", pmod(col("d1"), lit(8)))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(table.getAbsolutePath)
-      marker.createNewFile(): Unit
+        .write.mode("overwrite").partitionBy("bucket").parquet(new java.io.File(dir, "edges").getAbsolutePath)
     }
-    table.getAbsolutePath
+    new java.io.File(dir, "edges").getAbsolutePath
   }
+
+  /** The oracle of q50 and q169: the verified near-dup edges. */
+  private val neardupEdgesOracle = s"""
+        WITH $neardupSql
+        SELECT d1, d2,
+               $interJaccSql AS jacc$verifiedSql
+        ORDER BY d1, d2"""
+
+  /** The oracle of q55 and q170: cluster sizes of the near-dup components. */
+  private val clusterSizesOracle = s"""
+        WITH RECURSIVE $neardupPairsSql,$componentsSql
+        SELECT cluster, COUNT(*) AS n_docs
+        FROM labels
+        GROUP BY cluster
+        ORDER BY cluster"""
 
   def queries: Seq[(String, NamedQuery)] = Seq(
 
@@ -148,50 +155,12 @@ object CorpusQueries extends QueryModule {
       fn = (s, d) => {
         implicit val sp = s
         // the whole pipeline (tokenize → bands → candidates →
-        // exploded-join Jaccard verify) is the shared family op; these
-        // docs are short (~25 tokens), so the compact (doc, tok)
-        // shuffle beats per-pair array work — DedupOps
-        // .jaccardOnCandidates is the long-document alternative
+        // exploded-join Jaccard verify) is the shared family op
         graft.ops.DedupOps.neardupEdges(
             Tables.documents(s, d), "text", Seq("lang", "source"), 0.5)
           .orderBy("d1", "d2")
       },
-      oracle = Some("""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2)
-        SELECT d1, d2,
-               CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 AS jacc
-        FROM inter
-        JOIN sizes n1 ON d1 = n1.doc_id
-        JOIN sizes n2 ON d2 = n2.doc_id
-        WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5
-        ORDER BY d1, d2"""),
+      oracle = Some(neardupEdgesOracle),
       doc = "composed dedup: LSH candidates -> exact Jaccard verify (north-star scale path)"),
 
     // ---------------------------------------------------------------- q55
@@ -212,56 +181,7 @@ object CorpusQueries extends QueryModule {
           .groupBy("cluster").agg(count(lit(1)).as("n_docs"))
           .orderBy("cluster")
       },
-      oracle = Some("""
-        WITH RECURSIVE toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT d1, d2
-          FROM inter
-          JOIN sizes n1 ON d1 = n1.doc_id
-          JOIN sizes n2 ON d2 = n2.doc_id
-          WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5),
-        edges AS (
-          SELECT d1 AS src, d2 AS dst FROM pairs
-          UNION ALL
-          SELECT d2, d1 FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT doc_id, doc_id AS lab FROM documents
-          UNION
-          SELECT e.dst AS doc_id, r.lab
-          FROM reach r JOIN edges e ON e.src = r.doc_id),
-        labels AS (
-          SELECT doc_id, MIN(lab) AS cluster FROM reach GROUP BY doc_id)
-        SELECT cluster, COUNT(*) AS n_docs
-        FROM labels
-        GROUP BY cluster
-        ORDER BY cluster"""),
+      oracle = Some(clusterSizesOracle),
       doc = "duplicate clusters: iterative components vs recursive-CTE oracle (north-star)"),
 
     // --------------------------------------------------------------- q169
@@ -283,42 +203,7 @@ object CorpusQueries extends QueryModule {
           .select("d1", "d2", "jacc")
           .orderBy("d1", "d2")
       },
-      oracle = Some("""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2)
-        SELECT d1, d2,
-               CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 AS jacc
-        FROM inter
-        JOIN sizes n1 ON d1 = n1.doc_id
-        JOIN sizes n2 ON d2 = n2.doc_id
-        WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5
-        ORDER BY d1, d2"""),
+      oracle = Some(neardupEdgesOracle),
       doc = "dedup artifact write side: verified edge table written partitioned once, full read-back hash-matched (write-once/read-many)"),
 
     // --------------------------------------------------------------- q170
@@ -338,56 +223,7 @@ object CorpusQueries extends QueryModule {
           .groupBy("cluster").agg(count(lit(1)).as("n_docs"))
           .orderBy("cluster")
       },
-      oracle = Some("""
-        WITH RECURSIVE toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT d1, d2
-          FROM inter
-          JOIN sizes n1 ON d1 = n1.doc_id
-          JOIN sizes n2 ON d2 = n2.doc_id
-          WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5),
-        edges AS (
-          SELECT d1 AS src, d2 AS dst FROM pairs
-          UNION ALL
-          SELECT d2, d1 FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT doc_id, doc_id AS lab FROM documents
-          UNION
-          SELECT e.dst AS doc_id, r.lab
-          FROM reach r JOIN edges e ON e.src = r.doc_id),
-        labels AS (
-          SELECT doc_id, MIN(lab) AS cluster FROM reach GROUP BY doc_id)
-        SELECT cluster, COUNT(*) AS n_docs
-        FROM labels
-        GROUP BY cluster
-        ORDER BY cluster"""),
+      oracle = Some(clusterSizesOracle),
       doc = "dedup artifact consumer side: components from the written edge table (no re-derivation), vs recursive-CTE oracle"),
 
     // ---------------------------------------------------------------- q73
@@ -411,7 +247,8 @@ object CorpusQueries extends QueryModule {
           .groupBy("doc_id").agg(min(col("old_id")).as("exact_match"))
         val toks = graft.ops.DedupOps.tokenSet(docs, "text", scope)
         graft.ops.CacheScope.withPersisted(toks) {
-          val bands = graft.ops.DedupOps.bandHashes(toks, 8, 2, scope)
+          val bands = graft.ops.DedupOps.bandHashes(toks, graft.ops.DedupOps.SignatureCount,
+            graft.ops.DedupOps.RowsPerBand, scope)
           val joinCols = scope ++ Seq("band", "band_hash")
           val cand = bands.filter(isNew)
             .select((joinCols :+ "doc_id").map(col): _*).withColumnRenamed("doc_id", "d1")
@@ -441,41 +278,10 @@ object CorpusQueries extends QueryModule {
           SELECT n.doc_id, MIN(o.doc_id) AS exact_match
           FROM fp n JOIN fp o ON n.fp = o.fp
           WHERE n.doc_id % 10 = 9 AND o.doc_id % 10 <> 9
-          GROUP BY n.doc_id),
-        toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-          WHERE b1.doc_id % 10 = 9 AND b2.doc_id % 10 <> 9),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2),
+          GROUP BY n.doc_id),""" + minhashBandsSql + "," +
+        bandOverlapSql("WHERE b1.doc_id % 10 = 9 AND b2.doc_id % 10 <> 9") + s""",
         near AS (
-          SELECT d1 AS doc_id, MIN(d2) AS near_match
-          FROM inter
-          JOIN sizes n1 ON d1 = n1.doc_id
-          JOIN sizes n2 ON d2 = n2.doc_id
-          WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5
+          SELECT d1 AS doc_id, MIN(d2) AS near_match$verifiedSql
           GROUP BY d1)
         SELECT d.doc_id,
                CASE WHEN e.exact_match IS NOT NULL THEN 'exact_dup'
@@ -607,41 +413,10 @@ object CorpusQueries extends QueryModule {
               expr("(2 * 1000000 * n_triangles + n_wedges) div (2 * n_wedges)")
                 .cast("double") / lit(1e6)).otherwise(0.0))
       },
-      oracle = Some("""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2),
+      oracle = Some(s"""
+        WITH $neardupSql,
         e AS (
-          SELECT d1 AS a, d2 AS b
-          FROM inter
-          JOIN sizes n1 ON d1 = n1.doc_id
-          JOIN sizes n2 ON d2 = n2.doc_id
-          WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5),
+          SELECT d1 AS a, d2 AS b$verifiedSql),
         w AS (
           SELECT e1.a, e1.b, e2.b AS c
           FROM e e1 JOIN e e2 ON e1.b = e2.a),
@@ -690,52 +465,8 @@ object CorpusQueries extends QueryModule {
           .select("cluster", "n_docs", "keep_doc", "keep_chars", "n_dropped")
           .orderBy("cluster")
       },
-      oracle = Some("""
-        WITH RECURSIVE toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT d1, d2
-          FROM inter
-          JOIN sizes n1 ON d1 = n1.doc_id
-          JOIN sizes n2 ON d2 = n2.doc_id
-          WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5),
-        edges AS (
-          SELECT d1 AS src, d2 AS dst FROM pairs
-          UNION ALL
-          SELECT d2, d1 FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT doc_id, doc_id AS lab FROM documents
-          UNION
-          SELECT e.dst AS doc_id, r.lab
-          FROM reach r JOIN edges e ON e.src = r.doc_id),
-        labels AS (
-          SELECT doc_id, MIN(lab) AS cluster FROM reach GROUP BY doc_id)
+      oracle = Some(s"""
+        WITH RECURSIVE $neardupPairsSql,$componentsSql
         SELECT l.cluster, COUNT(*) AS n_docs,
                arg_max(d.doc_id, d.n_chars * 10000000000 - d.doc_id) AS keep_doc,
                MAX(d.n_chars) AS keep_chars,
@@ -843,45 +574,8 @@ object CorpusQueries extends QueryModule {
             coalesce(col("deg"), lit(0L)).as("deg"), col("r"))
           .orderBy("doc_id")
       },
-      oracle = Some("""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT d1, d2
-          FROM inter
-          JOIN sizes n1 ON d1 = n1.doc_id
-          JOIN sizes n2 ON d2 = n2.doc_id
-          WHERE CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6 >= 0.5),
-        edges AS (
-          SELECT d1 AS src, d2 AS dst FROM pairs
-          UNION ALL
-          SELECT d2, d1 FROM pairs),
+      oracle = Some(s"""
+        WITH $neardupPairsSql,$undirectedEdgesSql,
         deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
         r0 AS (SELECT doc_id, CAST(1000000000 AS BIGINT) AS r FROM documents),
         i1 AS (

@@ -291,7 +291,7 @@ object CoverageGapQueries extends QueryModule {
             col("o_totalprice"),
             year(col("o_orderdate")).cast("double").as("order_year"),
             (col("o_custkey") % 100).cast("double").as("cust_bucket"))
-        val fitted = graft.ml.CoverageModel.fit(labeled, seed = 123L, numTrees = 10)
+        val fitted = graft.ml.CoverageModel.fit(labeled, numTrees = 10)
         val imp = fitted.importances
         require(imp.forall(_._2 >= 0.0) && math.abs(imp.map(_._2).sum - 1.0) < 1e-6,
           s"q46: degenerate feature importances $imp")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
-import graft.ops.RelationalOps
+import graft.ops.{DedupOps, RelationalOps}
 
 /** Deduplication operators over `documents` (builder-prompt north-star):
   * exact (hash-groupBy), n-gram-shingle Jaccard, MinHash+LSH banding,
@@ -27,6 +27,92 @@ object DedupQueries extends QueryModule {
   private def docTokens(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), explode(array_distinct(split(trim(col("text")), "\\s+"))).as("tok"))
+
+  // The DuckDB side of DedupOps.neardupEdges, written once for every
+  // oracle of the near-dup family. No fragment carries WITH, so a caller
+  // opens with WITH or WITH RECURSIVE, or appends them to its own CTEs.
+
+  /** `toks` (the (lang, source)-scoped unigram set), `sig` (k = 8
+    * signatures, DedupOps' double hash mod 2^61 − 1) and `bands`
+    * (`DedupOps.RowsPerBand` = 2 signatures per band).
+    */
+  private[queries] val minhashBandsSql = """
+        toks AS (
+          SELECT DISTINCT doc_id, lang, source,
+                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+          FROM documents),
+        sig AS (
+          SELECT doc_id, lang, source, seed,
+                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
+                   + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
+          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
+          GROUP BY 1, 2, 3, 4),
+        bands AS (
+          SELECT doc_id, lang, source, seed // 2 AS band,
+                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
+          FROM sig
+          GROUP BY doc_id, lang, source, seed // 2)"""
+
+  /** `candidates` (same-scope band collisions kept by `pairFilter`, a
+    * trailing join conjunct or a WHERE clause), token-set `sizes` and
+    * candidate intersections `inter` (d1, d2, cnt).
+    */
+  private[queries] def bandOverlapSql(pairFilter: String): String = s"""
+        candidates AS (
+          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
+          FROM bands b1 JOIN bands b2
+            ON b1.lang = b2.lang AND b1.source = b2.source
+           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
+          $pairFilter),
+        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
+        inter AS (
+          SELECT c.d1, c.d2, COUNT(*) AS cnt
+          FROM candidates c
+          JOIN toks t1 ON t1.doc_id = c.d1
+          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
+          GROUP BY 1, 2)"""
+
+  /** An `inter` row's exact Jaccard, rounded half-away to 6 decimals in
+    * integer math (DedupOps.jaccardExploded's `jacc`).
+    */
+  private[queries] val interJaccSql =
+    "CAST((2 * 1000000 * cnt + (n1.n + n2.n - cnt)) // (2 * (n1.n + n2.n - cnt)) AS DOUBLE) / 1e6"
+
+  /** FROM and WHERE of the verified pairs: `inter` at Jaccard >= 0.5. */
+  private[queries] val verifiedSql = s"""
+        FROM inter
+        JOIN sizes n1 ON d1 = n1.doc_id
+        JOIN sizes n2 ON d2 = n2.doc_id
+        WHERE $interJaccSql >= 0.5"""
+
+  /** neardupEdges' candidates (every collision with d1 < d2) up to `inter`. */
+  private[queries] val neardupSql = minhashBandsSql + "," + bandOverlapSql("AND b1.doc_id < b2.doc_id")
+
+  /** `neardupSql` plus `pairs` (d1, d2), the verified edges. */
+  private[queries] val neardupPairsSql = s"""$neardupSql,
+        pairs AS (
+          SELECT d1, d2$verifiedSql)"""
+
+  /** `edges` (src, dst): every `pairs` row (d1, d2) in both directions. */
+  private[queries] val undirectedEdgesSql = """
+        edges AS (
+          SELECT d1 AS src, d2 AS dst FROM pairs
+          UNION ALL
+          SELECT d2, d1 FROM pairs)"""
+
+  /** Connected components of `pairs` over all `documents` — the oracle
+    * of DedupOps.duplicateClusters: `edges`, the recursive `reach`
+    * (every label reachable from a document) and `labels` (doc_id,
+    * cluster = the smallest). Needs WITH RECURSIVE.
+    */
+  private[queries] val componentsSql = s"""$undirectedEdgesSql,
+        reach(doc_id, lab) AS (
+          SELECT doc_id, doc_id AS lab FROM documents
+          UNION
+          SELECT e.dst AS doc_id, r.lab
+          FROM reach r JOIN edges e ON e.src = r.doc_id),
+        labels AS (
+          SELECT doc_id, MIN(lab) AS cluster FROM reach GROUP BY doc_id)"""
 
   def queries: Seq[(String, NamedQuery)] = Seq(
 
@@ -124,7 +210,7 @@ object DedupQueries extends QueryModule {
       fn = (s, d) => {
         implicit val sp = s
         val toks = docTokens(s, d)
-        val bands = graft.ops.DedupOps.bandHashes(toks, 8, 2, Seq.empty)
+        val bands = DedupOps.bandHashes(toks, DedupOps.SignatureCount, DedupOps.RowsPerBand, Seq.empty)
         val buckets = bands.groupBy("band", "band_hash")
           .agg(count(lit(1)).as("bucket_size"))
         buckets.groupBy("band")
@@ -382,22 +468,7 @@ object DedupQueries extends QueryModule {
             .orderBy("n_eq")
         }
       },
-      oracle = Some("""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-              + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
+      oracle = Some("WITH" + minhashBandsSql + """,
         cand AS (
           SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
           FROM bands b1 JOIN bands b2
@@ -461,10 +532,10 @@ object DedupQueries extends QueryModule {
     "q183_containment_dedup" -> NamedQuery(
       fn = (s, d) => {
         implicit val sp = s
-        import graft.ops.DedupOps
         val scope = Seq("lang", "source")
         val toks = DedupOps.tokenSet(Tables.documents(s, d), "text", scope)
-        val cands = DedupOps.candidatePairs(DedupOps.bandHashes(toks, 8, 2, scope), scope)
+        val cands = DedupOps.candidatePairs(
+          DedupOps.bandHashes(toks, DedupOps.SignatureCount, DedupOps.RowsPerBand, scope), scope)
         DedupOps.jaccardExploded(toks, cands)
           .withColumn("containment",
             greatest(
@@ -474,35 +545,7 @@ object DedupQueries extends QueryModule {
           .select("d1", "d2", "c", "n1", "n2", "containment")
           .orderBy("d1", "d2")
       },
-      oracle = Some("""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents),
-        sig AS (
-          SELECT doc_id, lang, source, seed,
-                 min((CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)
-     + seed * CAST('0x' || substr(md5(tok), 17, 15) AS BIGINT)) % 2305843009213693951) AS mh
-          FROM toks CROSS JOIN generate_series(0, 7) s(seed)
-          GROUP BY 1, 2, 3, 4),
-        bands AS (
-          SELECT doc_id, lang, source, seed // 2 AS band,
-                 md5(CAST(min(mh) AS VARCHAR) || '#' || CAST(max(mh) AS VARCHAR)) AS band_hash
-          FROM sig
-          GROUP BY doc_id, lang, source, seed // 2),
-        candidates AS (
-          SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2
-          FROM bands b1 JOIN bands b2
-            ON b1.lang = b2.lang AND b1.source = b2.source
-           AND b1.band = b2.band AND b1.band_hash = b2.band_hash
-           AND b1.doc_id < b2.doc_id),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
-        inter AS (
-          SELECT c.d1, c.d2, COUNT(*) AS cnt
-          FROM candidates c
-          JOIN toks t1 ON t1.doc_id = c.d1
-          JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
-          GROUP BY 1, 2)
+      oracle = Some("WITH" + neardupSql + """
         SELECT d1, d2, cnt AS c, n1.n AS n1, n2.n AS n2,
                greatest(CAST((2 * 1000000 * cnt + n1.n) // (2 * n1.n) AS DOUBLE) / 1e6,
                         CAST((2 * 1000000 * cnt + n2.n) // (2 * n2.n) AS DOUBLE) / 1e6) AS containment
@@ -730,18 +773,7 @@ object DedupQueries extends QueryModule {
                          <= greatest(length(sig_a), length(sig_b)) // 2 THEN 1 ELSE 0 END)
                + (CASE WHEN abs(nc_a - nc_b) <= 16 THEN 1 ELSE 0 END) AS score
           FROM cand),
-        pairs AS (SELECT d1, d2 FROM p WHERE score >= 3),
-        edges AS (
-          SELECT d1 AS src, d2 AS dst FROM pairs
-          UNION ALL
-          SELECT d2, d1 FROM pairs),
-        reach(doc_id, lab) AS (
-          SELECT doc_id, doc_id AS lab FROM documents
-          UNION
-          SELECT e.dst AS doc_id, r.lab
-          FROM reach r JOIN edges e ON e.src = r.doc_id),
-        labels AS (
-          SELECT doc_id, MIN(lab) AS cluster FROM reach GROUP BY doc_id)
+        pairs AS (SELECT d1, d2 FROM p WHERE score >= 3),""" + componentsSql + """
         SELECT cluster, COUNT(*) AS n_docs
         FROM labels
         GROUP BY cluster
@@ -898,7 +930,6 @@ object DedupQueries extends QueryModule {
     // model's x-axis, and the ratio is what the prefix buys.
     "q213_prefix_filter_audit" -> NamedQuery(
       fn = (s, d) => {
-        import graft.ops.DedupOps
         val sh = shingleSets(s, d)
         graft.ops.CacheScope.withPersisted(sh) {
           val pre = DedupOps.prefixRows(sh, prefixScope, 1, 2)

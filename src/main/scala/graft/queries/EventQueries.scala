@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -17,6 +18,66 @@ object EventQueries extends QueryModule {
 
   private val SessionGapUs = 30L * 60 * 1000 * 1000 // 30 min in μs
   private val HourUs = 3600L * 1000 * 1000
+
+  /** 30-minute-gap session ids per user: `prev_ts`, `new_session` (1
+    * where a gap opens a session) and `session_id`, their running sum.
+    */
+  private def withSessionIds(events: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    events
+      .withColumn("prev_ts", lag(col("ts_us"), 1).over(byUser))
+      .withColumn("new_session",
+        when(col("prev_ts").isNull || col("ts_us") - col("prev_ts") > SessionGapUs, 1L)
+          .otherwise(0L))
+      .withColumn("session_id",
+        sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** The DuckDB side of `withSessionIds` up to `new_session`: CTEs `t`
+    * and `m`, no WITH.
+    */
+  private val sessionGapsSql = s"""
+        t AS (
+          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+                 lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_ts
+          FROM events),
+        m AS (
+          SELECT *, CASE WHEN prev_ts IS NULL OR ts_us - prev_ts > $SessionGapUs THEN 1 ELSE 0 END AS new_session
+          FROM t)"""
+
+  /** `sessionGapsSql` plus `sid`, the BIGINT session_id per event. */
+  private[queries] val sessionIdsSql = s"""$sessionGapsSql,
+        sid AS (
+          SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+                                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+          FROM m)"""
+
+  /** The as-of join's two sides over events `e`: probes are the
+    * non-signup events (event_id, user_id, `clock`), quotes the largest
+    * signup value per (user_id, `clock` as `quoteClock`), unique per key
+    * and time so the match is deterministic.
+    */
+  private def signupSides(e: DataFrame, clock: String, quoteClock: String): (DataFrame, DataFrame) = {
+    val probes = e.filter(col("event_type") =!= "signup")
+      .select(col("event_id"), col("user_id"), col(clock))
+    val quotes = e.filter(col("event_type") === "signup")
+      .groupBy(col("user_id").as("q_user"), col(clock).as(quoteClock))
+      .agg(max(col("value")).as("signup_value"))
+      .withColumnRenamed("q_user", "user_id")
+    (probes, quotes)
+  }
+
+  /** The DuckDB side of `signupSides`: `e` (events with `clockSql` as
+    * `clock`), `probes` and `quotes`; no WITH.
+    */
+  private def signupSidesSql(clockSql: String, clock: String, quoteClock: String): String = s"""
+        e AS (
+          SELECT event_id, user_id, $clockSql AS $clock, event_type, value FROM events),
+        probes AS (
+          SELECT event_id, user_id, $clock FROM e WHERE event_type <> 'signup'),
+        quotes AS (
+          SELECT user_id, $clock AS $quoteClock, MAX(value) AS signup_value
+          FROM e WHERE event_type = 'signup' GROUP BY 1, 2)"""
 
   def queries: Seq[(String, NamedQuery)] = Seq(
 
@@ -75,14 +136,7 @@ object EventQueries extends QueryModule {
     // lag + running sum, all exact integer ns math.
     "q21_sessionize" -> NamedQuery(
       fn = (s, d) => {
-        val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        Tables.events(s, d)
-          .withColumn("prev_ts", lag(col("ts_us"), 1).over(byUser))
-          .withColumn("new_session",
-            when(col("prev_ts").isNull || col("ts_us") - col("prev_ts") > SessionGapUs, 1L)
-              .otherwise(0L))
-          .withColumn("session_id",
-            sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+        withSessionIds(Tables.events(s, d))
           .groupBy("user_id", "session_id")
           .agg(
             count(lit(1)).as("n_events"),
@@ -90,17 +144,7 @@ object EventQueries extends QueryModule {
           .orderBy("user_id", "session_id")
       },
       oracle = Some(s"""
-        WITH t AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_ts
-          FROM events),
-        m AS (
-          SELECT *, CASE WHEN prev_ts IS NULL OR ts_us - prev_ts > ${30L * 60 * 1000 * 1000} THEN 1 ELSE 0 END AS new_session
-          FROM t),
-        sid AS (
-          SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          FROM m)
+        WITH $sessionIdsSql
         SELECT user_id, session_id, COUNT(*) AS n_events,
                MAX(ts_us) - MIN(ts_us) AS span_us
         FROM sid
@@ -432,27 +476,14 @@ object EventQueries extends QueryModule {
     // two independent as-of implementations agreeing row-for-row.
     "q95_asof_operator" -> NamedQuery(
       fn = (s, d) => {
-        val e = Tables.events(s, d)
-        val probes = e.filter(col("event_type") =!= "signup")
-          .select(col("event_id"), col("user_id"), col("ts_us"))
-        val quotes = e.filter(col("event_type") === "signup")
-          .groupBy(col("user_id").as("q_user"), col("ts_us").as("q_ts"))
-          .agg(max(col("value")).as("signup_value"))
-          .withColumnRenamed("q_user", "user_id")
+        val (probes, quotes) = signupSides(Tables.events(s, d), "ts_us", "q_ts")
         graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "ts_us", "q_ts")
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("ts_us") - col("q_ts")).as("us_since_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type, value FROM events),
-        probes AS (
-          SELECT event_id, user_id, ts_us FROM e WHERE event_type <> 'signup'),
-        quotes AS (
-          SELECT user_id, ts_us AS q_ts, MAX(value) AS signup_value
-          FROM e WHERE event_type = 'signup' GROUP BY 1, 2)
+      oracle = Some("WITH" + signupSidesSql("epoch_us(ts)", "ts_us", "q_ts") + """
         SELECT p.event_id, p.user_id, q.signup_value,
                p.ts_us - q.q_ts AS us_since_signup
         FROM probes p ASOF LEFT JOIN quotes q
@@ -476,13 +507,7 @@ object EventQueries extends QueryModule {
     // native ASOF again — salting must be row-invisible.
     "q157_asof_salted" -> NamedQuery(
       fn = (s, d) => {
-        val e = Tables.events(s, d)
-        val probes = e.filter(col("event_type") =!= "signup")
-          .select(col("event_id"), col("user_id"), col("ts_us"))
-        val quotes = e.filter(col("event_type") === "signup")
-          .groupBy(col("user_id").as("q_user"), col("ts_us").as("q_ts"))
-          .agg(max(col("value")).as("signup_value"))
-          .withColumnRenamed("q_user", "user_id")
+        val (probes, quotes) = signupSides(Tables.events(s, d), "ts_us", "q_ts")
         graft.plans.AsOfJoinOps.asofJoinSalted(
           probes, quotes, Seq("user_id"), "ts_us", "q_ts", saltBuckets = 8,
           saltOn = Seq("ts_us", "event_id"))
@@ -490,14 +515,7 @@ object EventQueries extends QueryModule {
             (col("ts_us") - col("q_ts")).as("us_since_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type, value FROM events),
-        probes AS (
-          SELECT event_id, user_id, ts_us FROM e WHERE event_type <> 'signup'),
-        quotes AS (
-          SELECT user_id, ts_us AS q_ts, MAX(value) AS signup_value
-          FROM e WHERE event_type = 'signup' GROUP BY 1, 2)
+      oracle = Some("WITH" + signupSidesSql("epoch_us(ts)", "ts_us", "q_ts") + """
         SELECT p.event_id, p.user_id, q.signup_value,
                p.ts_us - q.q_ts AS us_since_signup
         FROM probes p ASOF LEFT JOIN quotes q
@@ -588,14 +606,7 @@ object EventQueries extends QueryModule {
     // "orders of magnitude smaller than events".
     "q99_concurrency" -> NamedQuery(
       fn = (s, d) => {
-        val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        val sessions = Tables.events(s, d)
-          .withColumn("prev_ts", lag(col("ts_us"), 1).over(byUser))
-          .withColumn("new_session",
-            when(col("prev_ts").isNull || col("ts_us") - col("prev_ts") > SessionGapUs, 1L)
-              .otherwise(0L))
-          .withColumn("session_id",
-            sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+        val sessions = withSessionIds(Tables.events(s, d))
           .groupBy("user_id", "session_id")
           .agg(min(col("ts_us")).as("t0"), max(col("ts_us")).as("t1"))
           // session-grain and consumed by THREE branches (start deltas,
@@ -623,13 +634,7 @@ object EventQueries extends QueryModule {
           .orderBy("hour_bucket")
       },
       oracle = Some(s"""
-        WITH t AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_ts
-          FROM events),
-        m AS (
-          SELECT *, CASE WHEN prev_ts IS NULL OR ts_us - prev_ts > ${30L * 60 * 1000 * 1000} THEN 1 ELSE 0 END AS new_session
-          FROM t),
+        WITH $sessionGapsSql,
         sid AS (
           SELECT *, SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
                                            ROWS UNBOUNDED PRECEDING) AS session_id
@@ -769,14 +774,7 @@ object EventQueries extends QueryModule {
             (unix_micros(col("ts")) - unix_micros(col("q_ts"))).as("us_since_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type, value FROM events),
-        probes AS (
-          SELECT event_id, user_id, ts_us FROM e WHERE event_type <> 'signup'),
-        quotes AS (
-          SELECT user_id, ts_us AS q_ts, MAX(value) AS signup_value
-          FROM e WHERE event_type = 'signup' GROUP BY 1, 2)
+      oracle = Some("WITH" + signupSidesSql("epoch_us(ts)", "ts_us", "q_ts") + """
         SELECT p.event_id, p.user_id,
                CASE WHEN p.ts_us - q.q_ts <= 86400000000 THEN q.signup_value END AS signup_value,
                CASE WHEN p.ts_us - q.q_ts <= 86400000000 THEN p.ts_us - q.q_ts END AS us_since_signup
@@ -794,28 +792,15 @@ object EventQueries extends QueryModule {
     // natively, giving an independent implementation to agree with.
     "q103_asof_strict" -> NamedQuery(
       fn = (s, d) => {
-        val e = Tables.events(s, d).withColumn("h", expr(s"ts_us div ${HourUs}L"))
-        val probes = e.filter(col("event_type") =!= "signup")
-          .select(col("event_id"), col("user_id"), col("h"))
-        val quotes = e.filter(col("event_type") === "signup")
-          .groupBy(col("user_id").as("q_user"), col("h").as("q_h"))
-          .agg(max(col("value")).as("signup_value"))
-          .withColumnRenamed("q_user", "user_id")
+        val (probes, quotes) = signupSides(
+          Tables.events(s, d).withColumn("h", expr(s"ts_us div ${HourUs}L")), "h", "q_h")
         graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "h", "q_h", strict = true)
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("h") - col("q_h")).as("hours_since_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, user_id, epoch_us(ts) // 3600000000 AS h, event_type, value
-          FROM events),
-        probes AS (
-          SELECT event_id, user_id, h FROM e WHERE event_type <> 'signup'),
-        quotes AS (
-          SELECT user_id, h AS q_h, MAX(value) AS signup_value
-          FROM e WHERE event_type = 'signup' GROUP BY 1, 2)
+      oracle = Some("WITH" + signupSidesSql("epoch_us(ts) // 3600000000", "h", "q_h") + """
         SELECT p.event_id, p.user_id, q.signup_value,
                p.h - q.q_h AS hours_since_signup
         FROM probes p ASOF LEFT JOIN quotes q
@@ -920,28 +905,15 @@ object EventQueries extends QueryModule {
     // ASOF ... ON p.h <= q.h.
     "q108_asof_forward" -> NamedQuery(
       fn = (s, d) => {
-        val e = Tables.events(s, d).withColumn("h", expr(s"ts_us div ${HourUs}L"))
-        val probes = e.filter(col("event_type") =!= "signup")
-          .select(col("event_id"), col("user_id"), col("h"))
-        val quotes = e.filter(col("event_type") === "signup")
-          .groupBy(col("user_id").as("q_user"), col("h").as("q_h"))
-          .agg(max(col("value")).as("signup_value"))
-          .withColumnRenamed("q_user", "user_id")
+        val (probes, quotes) = signupSides(
+          Tables.events(s, d).withColumn("h", expr(s"ts_us div ${HourUs}L")), "h", "q_h")
         graft.plans.AsOfJoinOps.asofJoin(
           probes, quotes, Seq("user_id"), "h", "q_h", forward = true)
           .select(col("event_id"), col("user_id"), col("signup_value"),
             (col("q_h") - col("h")).as("hours_until_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, user_id, epoch_us(ts) // 3600000000 AS h, event_type, value
-          FROM events),
-        probes AS (
-          SELECT event_id, user_id, h FROM e WHERE event_type <> 'signup'),
-        quotes AS (
-          SELECT user_id, h AS q_h, MAX(value) AS signup_value
-          FROM e WHERE event_type = 'signup' GROUP BY 1, 2)
+      oracle = Some("WITH" + signupSidesSql("epoch_us(ts) // 3600000000", "h", "q_h") + """
         SELECT p.event_id, p.user_id, q.signup_value,
                q.q_h - p.h AS hours_until_signup
         FROM probes p ASOF LEFT JOIN quotes q

@@ -28,6 +28,45 @@ object MotionQueries extends QueryModule {
       (abs(col("s_acctbal") * 1.9) % 20.0).as("d_ball"),
       when(col("s_suppkey") % 2 === 0, 1.0).otherwise(-1.0).as("sgn"))
 
+  // The DuckDB spellings of Kinematics and FieldControl, shared by the
+  // field-control oracles (q13, q14 and q159 here, q214 in
+  // CapstoneQueries). Each is a select-list or FROM fragment; the CTE
+  // names and the columns around them stay in the queries.
+
+  /** Kinematics.withVelocity's velocity components. */
+  private[queries] val velocitySql = "sin(radians(dir)) * s AS v_x, cos(radians(dir)) * s AS v_y"
+
+  /** Kinematics.withVelocity's v_theta, its divisions guarded. */
+  private val thetaSql = """CASE WHEN v_x = 0 AND v_y = 0 THEN 0.0
+                      WHEN v_x = 0 THEN sign(v_y) * pi() / 2.0
+                      ELSE atan(v_y / v_x) END"""
+
+  /** Kinematics.radiusOfInfluence at distance `dBall` from the ball. */
+  private def radiusSql(dBall: String): String = s"least(4.0 + pow($dBall, 3) * 0.3, 10.0)"
+
+  /** v_theta, Kinematics.withProjection (s_ratio, next_x, next_y at
+    * 0.5 s) and the radius `r` at distance `dBall`.
+    */
+  private[queries] def projectionSql(dBall: String): String = s"""$thetaSql AS v_theta,
+                 s / 13.0 AS s_ratio,
+                 x + v_x * 0.5 AS next_x, y + v_y * 0.5 AS next_y,
+                 ${radiusSql(dBall)} AS r"""
+
+  /** The Gaussian's axes: unsquared s_ratio, no halving (FieldControlPipeline). */
+  private[queries] val axesSql = "r * (1.0 + s_ratio) AS sx, r * (1.0 - s_ratio) AS sy"
+
+  /** FieldControl.fieldGrid: the nx × ny grid (grid_x, grid_y). */
+  private[queries] def gridSql(nx: Int, ny: Int): String = s"""
+          SELECT gx.i * (120.0 / $nx) AS grid_x, gy.j * (160.0 / 3.0 / $ny) AS grid_y
+          FROM generate_series(0, ${nx - 1}) gx(i) CROSS JOIN generate_series(0, ${ny - 1}) gy(j)"""
+
+  /** FieldControl.gaussianInfluence of (v_theta, sx, sy, next_x, next_y) at a grid cell. */
+  private[queries] val influenceSql = """exp(-0.5 * (
+                     (sx*sx*sin(v_theta)*sin(v_theta) + sy*sy*cos(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_x-next_x)
+                   - 2.0 * ((sx*sx - sy*sy)*sin(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_y-next_y)
+                   + (sx*sx*cos(v_theta)*cos(v_theta) + sy*sy*sin(v_theta)*sin(v_theta)) * (grid_y-next_y) * (grid_y-next_y)
+                 ) / (sx*sx*sy*sy)) AS influence"""
+
   def queries: Seq[(String, NamedQuery)] = Seq(
 
     // ---------------------------------------------------------------- q13
@@ -53,7 +92,7 @@ object MotionQueries extends QueryModule {
             round(col("radius"), 6).as("radius"))
           .orderBy("l_orderkey", "l_linenumber")
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH base AS (
           SELECT l_orderkey, l_linenumber,
                  fmod(l_quantity, 13.0) AS s,
@@ -61,14 +100,12 @@ object MotionQueries extends QueryModule {
                  fmod(l_discount * 100.0, 20.0) AS d_ball
           FROM lineitem),
         k AS (
-          SELECT *, sin(radians(dir)) * s AS v_x, cos(radians(dir)) * s AS v_y
+          SELECT *, $velocitySql
           FROM base)
         SELECT l_orderkey, l_linenumber,
                round(v_x, 6) + 0.0 AS v_x, round(v_y, 6) + 0.0 AS v_y,
-               round(CASE WHEN v_x = 0 AND v_y = 0 THEN 0.0
-                          WHEN v_x = 0 THEN sign(v_y) * pi() / 2.0
-                          ELSE atan(v_y / v_x) END, 6) + 0.0 AS v_theta,
-               round(least(4.0 + pow(d_ball, 3) * 0.3, 10.0), 6) AS radius
+               round($thetaSql, 6) + 0.0 AS v_theta,
+               round(${radiusSql("d_ball")}, 6) AS radius
         FROM k
         ORDER BY l_orderkey, l_linenumber"""),
       doc = "I1-I8/I12 kinematics chain (Field Control.R:31-44,277-292)"),
@@ -80,7 +117,7 @@ object MotionQueries extends QueryModule {
     "q14_field_control" -> NamedQuery(
       fn = (s, d) => {
         val players0 = supplierPlayers(s, d)
-        val k = Kinematics.withProjection()(Kinematics.withVelocity(players0))
+        val k = Kinematics.withProjection(Kinematics.withVelocity(players0))
           .withColumn("r", Kinematics.radiusOfInfluence(col("d_ball")))
           // same scaling axes as FieldControlPipeline (Field Control.R:250,
           // 304-311): unsquared s_ratio, no halving
@@ -95,7 +132,7 @@ object MotionQueries extends QueryModule {
           .select(col("grid_x"), col("grid_y"), round(col("control"), 6).as("control"))
           .orderBy("grid_x", "grid_y")
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH p AS (
           SELECT s_suppkey,
                  fmod(abs(s_acctbal), 120.0) AS x,
@@ -106,30 +143,17 @@ object MotionQueries extends QueryModule {
                  CASE WHEN s_suppkey % 2 = 0 THEN 1.0 ELSE -1.0 END AS sgn
           FROM supplier),
         k AS (
-          SELECT *, sin(radians(dir)) * s AS v_x, cos(radians(dir)) * s AS v_y
+          SELECT *, $velocitySql
           FROM p),
         k2 AS (
-          SELECT *,
-                 CASE WHEN v_x = 0 AND v_y = 0 THEN 0.0
-                      WHEN v_x = 0 THEN sign(v_y) * pi() / 2.0
-                      ELSE atan(v_y / v_x) END AS v_theta,
-                 s / 13.0 AS s_ratio,
-                 x + v_x * 0.5 AS next_x, y + v_y * 0.5 AS next_y,
-                 least(4.0 + pow(d_ball, 3) * 0.3, 10.0) AS r
+          SELECT *, ${projectionSql("d_ball")}
           FROM k),
         k3 AS (
-          SELECT *, r * (1.0 + s_ratio) AS sx, r * (1.0 - s_ratio) AS sy
+          SELECT *, $axesSql
           FROM k2),
-        g AS (
-          SELECT gx.i * (120.0 / 24) AS grid_x, gy.j * (160.0 / 3.0 / 12) AS grid_y
-          FROM generate_series(0, 23) gx(i) CROSS JOIN generate_series(0, 11) gy(j)),
+        g AS (${gridSql(24, 12)}),
         e AS (
-          SELECT grid_x, grid_y, sgn,
-                 exp(-0.5 * (
-                     (sx*sx*sin(v_theta)*sin(v_theta) + sy*sy*cos(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_x-next_x)
-                   - 2.0 * ((sx*sx - sy*sy)*sin(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_y-next_y)
-                   + (sx*sx*cos(v_theta)*cos(v_theta) + sy*sy*sin(v_theta)*sin(v_theta)) * (grid_y-next_y) * (grid_y-next_y)
-                 ) / (sx*sx*sy*sy)) AS influence
+          SELECT grid_x, grid_y, sgn, $influenceSql
           FROM k3 CROSS JOIN g)
         SELECT grid_x, grid_y, round(1.0 / (1.0 + exp(control_sum)), 6) AS control
         FROM (SELECT grid_x, grid_y, sum(influence * sgn) AS control_sum
@@ -179,7 +203,7 @@ object MotionQueries extends QueryModule {
             round(col("control"), 6).as("control"))
           .orderBy("frameId", "grid_x", "grid_y")
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH sup AS (
           SELECT s_suppkey,
                  fmod(abs(s_acctbal), 120.0) AS x0,
@@ -194,29 +218,16 @@ object MotionQueries extends QueryModule {
                  120.0 - 55.0 AS xF, 160.0 / 3.0 - 20.0 AS yF
           FROM sup),
         k AS (
-          SELECT *, sin(radians(dir)) * s AS v_x, cos(radians(dir)) * s AS v_y,
+          SELECT *, $velocitySql,
                  sqrt(pow(x - xF, 2) + pow(y - yF, 2)) AS d_ball
           FROM p),
         k2 AS (
-          SELECT *,
-                 CASE WHEN v_x = 0 AND v_y = 0 THEN 0.0
-                      WHEN v_x = 0 THEN sign(v_y) * pi() / 2.0
-                      ELSE atan(v_y / v_x) END AS v_theta,
-                 s / 13.0 AS s_ratio,
-                 x + v_x * 0.5 AS next_x, y + v_y * 0.5 AS next_y,
-                 least(4.0 + pow(d_ball, 3) * 0.3, 10.0) AS r
+          SELECT *, ${projectionSql("d_ball")}
           FROM k),
-        k3 AS (SELECT *, r * (1.0 + s_ratio) AS sx, r * (1.0 - s_ratio) AS sy FROM k2),
-        g AS (
-          SELECT gx.i * (120.0 / 120) AS grid_x, gy.j * (160.0 / 3.0 / 53) AS grid_y
-          FROM generate_series(0, 119) gx(i) CROSS JOIN generate_series(0, 52) gy(j)),
+        k3 AS (SELECT *, $axesSql FROM k2),
+        g AS (${gridSql(120, 53)}),
         e AS (
-          SELECT frameId, grid_x, grid_y, sgn,
-                 exp(-0.5 * (
-                     (sx*sx*sin(v_theta)*sin(v_theta) + sy*sy*cos(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_x-next_x)
-                   - 2.0 * ((sx*sx - sy*sy)*sin(v_theta)*cos(v_theta)) * (grid_x-next_x) * (grid_y-next_y)
-                   + (sx*sx*cos(v_theta)*cos(v_theta) + sy*sy*sin(v_theta)*sin(v_theta)) * (grid_y-next_y) * (grid_y-next_y)
-                 ) / (sx*sx*sy*sy)) AS influence
+          SELECT frameId, grid_x, grid_y, sgn, $influenceSql
           FROM k3 CROSS JOIN g)
         SELECT frameId, grid_x, grid_y,
                round(1.0 / (1.0 + exp(control_sum)), 6) AS control

@@ -389,8 +389,7 @@ object PipelineQueries extends QueryModule {
         // ADVICE: the inline copy invited drift from the oracles'
         // greatest(8, ceil(sqrt(count))))
         val nlist = SimilarityQueries.ivfNlist(v)
-        val cents = v.orderBy("vec_id").limit(nlist)
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"), col("nrm").as("cent_nrm"))
+        val cents = SimilarityQueries.ivfCentroids(v, nlist)
         // narrow-product assignment (SimilarityQueries.nearestCells):
         // the full-width window sort spilled ~160 GB at sf10 and killed
         // the run — see that helper's round-13 note. Checkpointed
@@ -409,23 +408,7 @@ object PipelineQueries extends QueryModule {
           .agg(count(lit(1)).as("n_vecs"), sum(coalesce(col("dropped"), lit(0L))).as("n_dropped"))
           .orderBy("cell")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
-        assigned AS (
-          SELECT vec_id, cell, emb, nrm
-          FROM (SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
-                       row_number() OVER (PARTITION BY v.vec_id
-                         ORDER BY round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
-                                  c.cent_id ASC) AS rn
-                FROM v CROSS JOIN cents c)
-          WHERE rn = 1),
+      oracle = Some("WITH" + SimilarityQueries.ivfCellsSql + """,
         drops AS (
           SELECT DISTINCT b.vec_id
           FROM assigned a JOIN assigned b
@@ -471,18 +454,7 @@ object PipelineQueries extends QueryModule {
         }.filter(col("session_start_us") < sentinelUs.getOrElse(Long.MaxValue))
           .orderBy("user_id", "session_start_us")
       },
-      oracle = Some(s"""
-        WITH t AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_ts
-          FROM events),
-        m AS (
-          SELECT *, CASE WHEN prev_ts IS NULL OR ts_us - prev_ts > ${30L * 60 * 1000 * 1000} THEN 1 ELSE 0 END AS new_session
-          FROM t),
-        sid AS (
-          SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          FROM m)
+      oracle = Some("WITH" + EventQueries.sessionIdsSql + """
         SELECT user_id, MIN(ts_us) AS session_start_us, COUNT(*) AS n_events,
                MAX(ts_us) - MIN(ts_us) AS span_us
         FROM sid

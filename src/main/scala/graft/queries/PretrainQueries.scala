@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 
@@ -20,6 +21,39 @@ object PretrainQueries extends QueryModule {
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         split(trim(col("text")), "\\s+").as("arr"))
+
+  /** The lang × source contingency grid of q191/q208, zero cells
+    * included: observed `o`, margins `n_l`/`n_s`, total `n` and the
+    * expected count `e` = n_l·n_s/n. Both dims are bounded, so the
+    * margins cross as broadcasts; the counts are checkpointed because
+    * four frames read them.
+    */
+  private def contingencyGrid(s: SparkSession, d: String): DataFrame = {
+    val counts = Tables.documents(s, d)
+      .groupBy("lang", "source").agg(count(lit(1)).as("o"))
+      .localCheckpoint(false)
+    val langs = counts.groupBy("lang").agg(sum(col("o")).as("n_l"))
+    val sources = counts.groupBy("source").agg(sum(col("o")).as("n_s"))
+    val n = counts.agg(sum(col("o")).as("n"))
+    langs.crossJoin(broadcast(sources)).crossJoin(broadcast(n))
+      .join(counts, Seq("lang", "source"), "left")
+      .withColumn("o", coalesce(col("o"), lit(0L)))
+      .withColumn("e", col("n_l").cast("double") * col("n_s") / col("n"))
+  }
+
+  /** The DuckDB side of `contingencyGrid`: CTEs `counts`, `langs`,
+    * `sources` and `nn` (no WITH) ...
+    */
+  private val contingencyMarginsSql = """
+        counts AS (
+          SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
+        langs AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS n_l FROM counts GROUP BY 1),
+        sources AS (SELECT source, CAST(SUM(o) AS BIGINT) AS n_s FROM counts GROUP BY 1),
+        nn AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM counts)"""
+
+  /** ... and the FROM of the grid cells l × s × nn with their counts c. */
+  private val contingencyCellsSql = """FROM langs l CROSS JOIN sources s CROSS JOIN nn
+          LEFT JOIN counts c ON c.lang = l.lang AND c.source = s.source"""
 
   def queries: Seq[(String, NamedQuery)] = Seq(
 
@@ -1234,16 +1268,7 @@ object PretrainQueries extends QueryModule {
     // floor-micro units: chi2 = chi2_micro / 1e6.
     "q191_chi_square" -> NamedQuery(
       fn = (s, d) => {
-        val counts = Tables.documents(s, d)
-          .groupBy("lang", "source").agg(count(lit(1)).as("o"))
-          .localCheckpoint(false)
-        val langs = counts.groupBy("lang").agg(sum(col("o")).as("n_l"))
-        val sources = counts.groupBy("source").agg(sum(col("o")).as("n_s"))
-        val n = counts.agg(sum(col("o")).as("n"))
-        val grid = langs.crossJoin(broadcast(sources)).crossJoin(broadcast(n))
-          .join(counts, Seq("lang", "source"), "left")
-          .withColumn("o", coalesce(col("o"), lit(0L)))
-          .withColumn("e", col("n_l").cast("double") * col("n_s") / col("n"))
+        val grid = contingencyGrid(s, d)
           .withColumn("term", (col("o") - col("e")) * (col("o") - col("e")) / col("e"))
           .withColumn("term_micro", floor(col("term") * lit(1e6)).cast("long"))
         grid.agg(
@@ -1256,18 +1281,12 @@ object PretrainQueries extends QueryModule {
           .withColumn("chi2", col("chi2_micro").cast("double") / 1e6)
           .select("n", "n_cells", "dof", "chi2_micro", "chi2")
       },
-      oracle = Some("""
-        WITH counts AS (
-          SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        langs AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS n_l FROM counts GROUP BY 1),
-        sources AS (SELECT source, CAST(SUM(o) AS BIGINT) AS n_s FROM counts GROUP BY 1),
-        nn AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM counts),
+      oracle = Some("WITH" + contingencyMarginsSql + s""",
         grid AS (
           SELECT l.lang, s.source, l.n_l, s.n_s, nn.n,
                  COALESCE(c.o, 0) AS o,
                  CAST(l.n_l AS DOUBLE) * s.n_s / nn.n AS e
-          FROM langs l CROSS JOIN sources s CROSS JOIN nn
-          LEFT JOIN counts c ON c.lang = l.lang AND c.source = s.source),
+          $contingencyCellsSql),
         terms AS (
           SELECT n, lang, source,
                  CAST(floor((o - e) * (o - e) / e * 1e6) AS BIGINT) AS term_micro
@@ -1390,16 +1409,7 @@ object PretrainQueries extends QueryModule {
     // is one unrounded IEEE chain on identically-valued inputs.
     "q208_cramers_v" -> NamedQuery(
       fn = (s, d) => {
-        val counts = Tables.documents(s, d)
-          .groupBy("lang", "source").agg(count(lit(1)).as("o"))
-          .localCheckpoint(false)
-        val langs = counts.groupBy("lang").agg(sum(col("o")).as("n_l"))
-        val sources = counts.groupBy("source").agg(sum(col("o")).as("n_s"))
-        val n = counts.agg(sum(col("o")).as("n"))
-        val grid = langs.crossJoin(broadcast(sources)).crossJoin(broadcast(n))
-          .join(counts, Seq("lang", "source"), "left")
-          .withColumn("o", coalesce(col("o"), lit(0L)))
-          .withColumn("e", col("n_l").cast("double") * col("n_s") / col("n"))
+        val grid = contingencyGrid(s, d)
           .withColumn("term_micro",
             floor((col("o") - col("e")) * (col("o") - col("e")) / col("e") * lit(1e6)).cast("long"))
         grid.agg(
@@ -1414,18 +1424,12 @@ object PretrainQueries extends QueryModule {
               (col("n").cast("double") * col("dof_min").cast("double"))))
           .select("n", "dof_min", "chi2_micro", "v")
       },
-      oracle = Some("""
-        WITH counts AS (
-          SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        langs AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS n_l FROM counts GROUP BY 1),
-        sources AS (SELECT source, CAST(SUM(o) AS BIGINT) AS n_s FROM counts GROUP BY 1),
-        nn AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM counts),
+      oracle = Some("WITH" + contingencyMarginsSql + s""",
         grid AS (
           SELECT l.lang, s.source, nn.n,
                  COALESCE(c.o, 0) AS o,
                  CAST(l.n_l AS DOUBLE) * s.n_s / nn.n AS e
-          FROM langs l CROSS JOIN sources s CROSS JOIN nn
-          LEFT JOIN counts c ON c.lang = l.lang AND c.source = s.source),
+          $contingencyCellsSql),
         agg AS (
           SELECT MAX(n) AS n,
                  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,

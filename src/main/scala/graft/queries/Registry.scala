@@ -42,6 +42,28 @@ object TempPaths {
     f
   }
 
+  /** A build-once artifact: session dir `name`, filled by `build` at
+    * most once per key (the q169/q209/capstone fixture pattern). The key
+    * is the md5 of `key`'s parts joined by '#' (the dataset path, plus
+    * any content fingerprint a caller has); a `_built_<key>` marker
+    * records a finished build. A changed key or `rebuild = true` runs
+    * `build` again. Stale markers go first, so a failed build cannot
+    * leave a fresh marker over an old artifact. Returns the dir.
+    */
+  def buildOnce(s: SparkSession, name: String, key: Seq[Any], rebuild: Boolean = false)
+               (build: java.io.File => Unit): java.io.File = {
+    val d = dir(s, name)
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.mkString("#").getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    val marker = new java.io.File(d, s"_built_$hex")
+    if (rebuild || !marker.exists()) {
+      Option(d.listFiles()).foreach(_.filter(_.getName.startsWith("_built_")).foreach(_.delete()))
+      build(d)
+      marker.createNewFile(): Unit
+    }
+    d
+  }
+
   /** Stage `src` into session dir `name`; returns the dir path — e.g. a
     * streaming file source's watched dir. `src` may be either shape a
     * table ships in: a single parquet FILE (the driver's testdata

@@ -46,6 +46,44 @@ object SimilarityQueries extends QueryModule {
   private[graft] def ivfNlistFor(n: Long): Int =
     math.max(8L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
 
+  /** The IVF centroids: the `nlist` lowest vec_ids of `v` (a real IVF
+    * would k-means them; the plan shape is the same), renamed for the
+    * broadcast crossJoin of `nearestCells`.
+    */
+  private[queries] def ivfCentroids(v: DataFrame, nlist: Int): DataFrame =
+    v.orderBy("vec_id").limit(nlist)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"), col("nrm").as("cent_nrm"))
+
+  // The DuckDB side of the IVF family, written once for every oracle;
+  // no fragment carries WITH.
+
+  /** `v`: vectors as DOUBLE[] with their L2 norm (`vecs`). */
+  private val ivfVecsSql = """
+        v AS (
+          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+          FROM embeddings)"""
+
+  /** `cents`: `ivfCentroids` at nlist = `ivfNlist`. */
+  private val ivfCentsSql = """
+        cents AS (
+          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
+          FROM v ORDER BY vec_id
+          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT)))"""
+
+  /** `v`, `cents` and `assigned` (vec_id, cell, emb, nrm): every vector
+    * in its `nearestCells` cell.
+    */
+  private[queries] val ivfCellsSql = ivfVecsSql + "," + ivfCentsSql + """,
+        assigned AS (
+          SELECT vec_id, cell, emb, nrm
+          FROM (SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
+                       row_number() OVER (PARTITION BY v.vec_id
+                         ORDER BY round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
+                                  c.cent_id ASC) AS rn
+                FROM v CROSS JOIN cents c)
+          WHERE rn = 1)"""
+
   /** Nearest-cell assignment for the IVF family (k nearest centroids
     * per vector, ties to the lowest cent_id — the family's pinned
     * ranking). Ranks a NARROW (vec_id, cent_id, cent_cos) product and
@@ -123,15 +161,13 @@ object SimilarityQueries extends QueryModule {
     * the serving side can prune its scan to the probed cells instead
     * of re-deriving the assignment (the production build-once /
     * serve-many split). `rebuild = true` (the write-side gate q209)
-    * always re-derives; a dataset-keyed marker lets the consumer
-    * build on first touch in any driver order. Returns (path, nlist).
+    * always re-derives; `TempPaths.buildOnce` lets the consumer build
+    * on first touch in any query order. Returns (path, nlist).
     */
   private def ivfArtifact(s: SparkSession, d: String, rebuild: Boolean = false): (String, Int) = {
-    val dir = TempPaths.dir(s, "q209_ivf_index")
-    val table = new java.io.File(dir, "index")
     val v = vecs(s, d)
     // ONE stats job feeds the nlist sizing, the assignment fan-out bound
-    // AND the marker's content fingerprint (round-15 ADVICE ×2: the
+    // AND the build key's content fingerprint (round-15 ADVICE ×2: the
     // build previously ran three separate count jobs, and the _built_
     // marker was keyed by dataset PATH only — a regenerated dataset at
     // the same path would silently serve stale cells and fail the hash
@@ -141,15 +177,8 @@ object SimilarityQueries extends QueryModule {
     val stats = v.agg(count(lit(1)), max(col("vec_id"))).head()
     val n = stats.getLong(0)
     val maxId = if (stats.isNullAt(1)) "empty" else stats.get(1).toString
-    val dsKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d#$n#$maxId".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val marker = new java.io.File(dir, s"_built_$dsKey")
     val nlist = ivfNlistFor(n)
-    if (rebuild || !marker.exists()) {
-      Option(dir.listFiles()).foreach(_.filter(_.getName.startsWith("_built_")).foreach(_.delete()))
-      val cents = v.orderBy("vec_id").limit(nlist)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
-          col("nrm").as("cent_nrm"))
+    val dir = TempPaths.buildOnce(s, "q209_ivf_index", Seq(d, n, maxId), rebuild) { dir =>
       // co-locate each cell's rows on one task before the dynamic-
       // partition write: without this every write task holds rows of
       // EVERY cell (the join-back is keyed by vec_id), so the writer
@@ -157,12 +186,11 @@ object SimilarityQueries extends QueryModule {
       // cell it's one file per cell and the per-task sort is a few
       // cells' rows (round-15 q209 profile — the write was half the
       // build after the assignment fix)
-      nearestCells(v, cents, vRows = Some(n), centRows = Some(math.min(nlist.toLong, n)))
+      nearestCells(v, ivfCentroids(v, nlist), vRows = Some(n), centRows = Some(math.min(nlist.toLong, n)))
         .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(table.getAbsolutePath)
-      marker.createNewFile(): Unit
+        .write.mode("overwrite").partitionBy("cell").parquet(new java.io.File(dir, "index").getAbsolutePath)
     }
-    (table.getAbsolutePath, nlist)
+    (new java.io.File(dir, "index").getAbsolutePath, nlist)
   }
 
   /** q210's router + partition-pruned index scan, shared with the sf100
@@ -178,9 +206,7 @@ object SimilarityQueries extends QueryModule {
                               nQueries: Int = 20, nprobe: Int = 2): (DataFrame, Array[Long], DataFrame) = {
     val (path, nlist) = ivfArtifact(s, d)
     val v = vecs(s, d)
-    val cents = v.orderBy("vec_id").limit(nlist)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
-        col("nrm").as("cent_nrm"))
+    val cents = ivfCentroids(v, nlist)
     val qs = v.orderBy(md5(col("vec_id").cast("string"))).limit(nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"), col("nrm").as("qnrm"))
     // localCheckpoint so the Q×nlist probe-scoring product is evaluated
@@ -272,11 +298,7 @@ object SimilarityQueries extends QueryModule {
           .select(col("v1"), col("payload").as("v2"), col("score").as("cos"))
           .orderBy("v1", "v2")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
+      oracle = Some("WITH" + ivfVecsSql + """,
         pairs AS (
           SELECT a.vec_id AS v1, b.vec_id AS v2,
                  round(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm), 6) AS cos
@@ -369,8 +391,7 @@ object SimilarityQueries extends QueryModule {
     "q40_ivf_ann" -> NamedQuery(
       fn = (s, d) => {
         val v = vecs(s, d)
-        val cents = v.orderBy("vec_id").limit(ivfNlist(v))
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"), col("nrm").as("cent_nrm"))
+        val cents = ivfCentroids(v, ivfNlist(v))
         // assign: nearest centroid by rounded cosine, ties to lowest
         // cent_id. CHECKPOINTED (q176's pattern, applied round 14): the
         // assignment is consumed by BOTH sides of the in-cell join and
@@ -396,23 +417,7 @@ object SimilarityQueries extends QueryModule {
           .join(nn, Seq("vec_id"), "left")
           .orderBy("vec_id")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
-        assigned AS (
-          SELECT vec_id, cell, emb, nrm
-          FROM (SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
-                       row_number() OVER (PARTITION BY v.vec_id
-                         ORDER BY round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
-                                  c.cent_id ASC) AS rn
-                FROM v CROSS JOIN cents c)
-          WHERE rn = 1),
+      oracle = Some("WITH" + ivfCellsSql + """,
         pairs AS (
           SELECT a.vec_id AS v1, b.vec_id AS v2,
                  round(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm), 6) AS cos
@@ -898,12 +903,7 @@ object SimilarityQueries extends QueryModule {
             round(coalesce(col("hits"), lit(0L)).cast("double") / 10.0, 6).as("recall_at_10"))
           .orderBy("qid")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
+      oracle = Some("WITH" + ivfVecsSql + """,
         qs AS (SELECT vec_id AS qid, emb AS qemb, nrm AS qnrm FROM v
                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 200),
         exact AS (
@@ -913,11 +913,7 @@ object SimilarityQueries extends QueryModule {
                      round(list_dot_product(a.emb, q.qemb) / (a.nrm * q.qnrm), 6) DESC,
                      a.vec_id ASC) AS rn
             FROM v a CROSS JOIN qs q WHERE a.vec_id <> q.qid)
-          WHERE rn <= 10),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
+          WHERE rn <= 10),""" + ivfCentsSql + """,
         assigned AS (
           SELECT vec_id, cell, emb, nrm FROM (
             SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
@@ -971,9 +967,7 @@ object SimilarityQueries extends QueryModule {
       fn = (s, d) => {
         val (path, nlist) = ivfArtifact(s, d)
         val v = vecs(s, d)
-        val cents = v.orderBy("vec_id").limit(nlist)
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
-            col("nrm").as("cent_nrm"))
+        val cents = ivfCentroids(v, nlist)
         // qs is read twice (probe scoring + the final left-join spine):
         // checkpoint the 200-row limit so the N·log-N md5 sort runs once
         val qs = v.orderBy(md5(col("vec_id").cast("string"))).limit(200)
@@ -1020,16 +1014,7 @@ object SimilarityQueries extends QueryModule {
               .when(col("cos2") > col("cos1"), 1).otherwise(0))
           .orderBy("qid")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
+      oracle = Some("WITH" + ivfVecsSql + "," + ivfCentsSql + """,
         assigned AS (
           SELECT vec_id, cell, emb, nrm FROM (
             SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
@@ -1089,9 +1074,7 @@ object SimilarityQueries extends QueryModule {
         val v = graft.ops.ScaleGuards.requireAllPairsSafe(vecs(s, d),
           "q218_multiprobe_full_recall (full-corpus IVF multiprobe, Θ(N^1.5))",
           successor = "q156_ivf_multiprobe (bounded probes through the q209 artifact) / q210_ivf_bounded_serving")
-        val cents = v.orderBy("vec_id").limit(ivfNlist(v))
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
-            col("nrm").as("cent_nrm"))
+        val cents = ivfCentroids(v, ivfNlist(v))
         // ONE ranked k=2 centroid product, checkpointed, serves BOTH
         // sides (round 14): the db side is the rn=1 assignment, the
         // query side keeps rn ≤ 2 — previously two separate
@@ -1120,16 +1103,7 @@ object SimilarityQueries extends QueryModule {
           .join(nn, Seq("vec_id"), "left")
           .orderBy("vec_id")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
+      oracle = Some("WITH" + ivfVecsSql + "," + ivfCentsSql + """,
         scored AS (
           SELECT v.vec_id, c.cent_id, v.emb, v.nrm,
                  row_number() OVER (PARTITION BY v.vec_id ORDER BY
@@ -1173,9 +1147,7 @@ object SimilarityQueries extends QueryModule {
       fn = (s, d) => {
         implicit val sp = s
         val v = vecs(s, d)
-        val cents = v.orderBy("vec_id").limit(ivfNlist(v))
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"),
-            col("nrm").as("cent_nrm"))
+        val cents = ivfCentroids(v, ivfNlist(v))
         val assigned = nearestCells(v, cents)
           // vec-grain, consumed by BOTH sides of the in-cell join and
           // the components seed — without the cut the centroid
@@ -1194,23 +1166,7 @@ object SimilarityQueries extends QueryModule {
             (col("doc_id") === col("cluster")).as("keep"))
           .orderBy("vec_id")
       },
-      oracle = Some("""
-        WITH RECURSIVE v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
-        assigned AS (
-          SELECT vec_id, cell, emb, nrm
-          FROM (SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
-                       row_number() OVER (PARTITION BY v.vec_id
-                         ORDER BY round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
-                                  c.cent_id ASC) AS rn
-                FROM v CROSS JOIN cents c)
-          WHERE rn = 1),
+      oracle = Some("WITH RECURSIVE" + ivfCellsSql + """,
         p AS (
           SELECT a.vec_id AS d1, b.vec_id AS d2
           FROM assigned a JOIN assigned b
@@ -1304,11 +1260,7 @@ object SimilarityQueries extends QueryModule {
           .select("probe_id", "n_docs", "sum_d2", "rho")
           .orderBy("probe_id")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
+      oracle = Some("WITH" + ivfVecsSql + """,
         probes AS (
           SELECT vec_id AS probe_id, emb AS p_emb, nrm AS p_nrm
           FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 200),
@@ -1364,15 +1316,7 @@ object SimilarityQueries extends QueryModule {
             min(col("vec_id")).as("min_vec"), max(col("vec_id")).as("max_vec"))
           .orderBy("cell")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
+      oracle = Some("WITH" + ivfVecsSql + "," + ivfCentsSql + """,
         assigned AS (
           SELECT vec_id, cell
           FROM (SELECT v.vec_id, c.cent_id AS cell,
@@ -1414,23 +1358,7 @@ object SimilarityQueries extends QueryModule {
           .select(col("qid"), col("payload").as("nn"), col("score").as("cos"))
           .orderBy("qid", "nn")
       },
-      oracle = Some("""
-        WITH v AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-        cents AS (
-          SELECT vec_id AS cent_id, emb AS cent_emb, nrm AS cent_nrm
-          FROM v ORDER BY vec_id
-          LIMIT greatest(8, CAST(ceil(sqrt((SELECT COUNT(*) FROM v))) AS BIGINT))),
-        assigned AS (
-          SELECT vec_id, cell, emb, nrm
-          FROM (SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
-                       row_number() OVER (PARTITION BY v.vec_id
-                         ORDER BY round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
-                                  c.cent_id ASC) AS rn
-                FROM v CROSS JOIN cents c)
-          WHERE rn = 1),
+      oracle = Some("WITH" + ivfCellsSql + """,
         qs AS (
           SELECT vec_id AS qid, emb AS qemb, nrm AS qnrm
           FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 20),

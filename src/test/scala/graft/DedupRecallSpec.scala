@@ -46,18 +46,6 @@ class DedupRecallSpec extends AnyFunSuite {
     assert(recall >= 0.7, f"band recall $recall%.3f below 0.7")
   }
 
-  test("array-form Jaccard equals the exploded-join form on band candidates") {
-    implicit val s = spark
-    val scope = Seq("lang", "source")
-    val toks = DedupOps.tokenSet(Tables.documents(spark, sf), "text", scope)
-    val cands = DedupOps.candidatePairs(DedupOps.bandHashes(toks, 8, 2, scope), scope)
-    val cols = Seq("d1", "d2", "c", "n1", "n2", "jacc")
-    val exploded = DedupOps.jaccardExploded(toks, cands).select(cols.map(col): _*)
-    val arrayForm = DedupOps.jaccardOnCandidates(toks, cands).select(cols.map(col): _*)
-    assert(exploded.exceptAll(arrayForm).isEmpty && arrayForm.exceptAll(exploded).isEmpty,
-      "the two Jaccard formulations diverge")
-  }
-
   test("fused bandHashes equals the two-step minhashSignatures+lshBands path") {
     implicit val s = spark
     val scope = Seq("lang", "source")

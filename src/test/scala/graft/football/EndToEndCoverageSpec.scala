@@ -71,7 +71,7 @@ class EndToEndCoverageSpec extends AnyFunSuite {
     assert(features.count() === 40) // one pass_arrived frame per play
 
     val labeled = features.join(labels, Seq("gameId", "playId"))
-    val (train, test) = CoverageModel.trainTestSplit(labeled, seed = 123L)
+    val (train, test) = CoverageModel.trainTestSplit(labeled)
     val fitted = CoverageModel.fit(train, numTrees = 20)
     val scored = fitted.predict(test)
     val acc = fitted.accuracy(scored)
