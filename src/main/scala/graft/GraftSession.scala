@@ -11,9 +11,9 @@ import graft.plans.{AsOfJoinStrategy, DeferProjectPastSort}
   * `create` yields a session with the engine's required configs
   * (ns-timestamp reads, UTC, AQE, R-like non-ANSI semantics and the
   * `GraftExtensions` extension — see [[Tables.sessionConfigs]]), so its
-  * native functions, as-of strategy, as-of codegen shield and
-  * `DeferProjectPastSort` rule are present from the start. `install`
-  * readies a session built elsewhere;
+  * native functions, as-of strategy and `DeferProjectPastSort` rule are
+  * present from the start. `install` adds the same three to a session
+  * built elsewhere, so an as-of join plans the same way on either;
   * `SparkEntry.queries` calls it before every query, so a caller-supplied
   * session without the extension still works; a caller that runs SQL
   * on such a session calls it once itself. `registerTables` exposes the

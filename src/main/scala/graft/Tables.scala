@@ -174,9 +174,8 @@ object Tables {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     // deployment-grade extension loading: native functions, the as-of
-    // strategy, and the as-of codegen shield rule (the AQE prep rule is
-    // ONLY injectable here — there is no imperative post-session hook
-    // for query-stage prep rules)
+    // strategy and DeferProjectPastSort (GraftSession.install adds the
+    // same three to a session built without it)
     "spark.sql.extensions" -> "graft.expr.GraftExtensions",
     // The reference's R semantics are permissive (NaN-guards, NA casts —
     // SURVEY.md §2.I4/I10); ANSI hard-errors would change behavior.

@@ -58,8 +58,7 @@ case class FloatVecDot(left: Expression, right: Expression)
   * [[GraftExtensions]] (`spark.sql.extensions`) and
   * `graft.GraftSession.install` (sessions built without the extension).
   * The as-of join is not among them: it is a plan node
-  * (`graft.plans.AsOfJoinOps`), whose strategy and shield rule the
-  * extension installs.
+  * (`graft.plans.AsOfJoinOps`), whose strategy the extension installs.
   */
 object GraftFunctions {
   import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, ExpressionInfo}
@@ -114,9 +113,5 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     e.injectOptimizerRule(_ => graft.plans.DeferProjectPastSort)
     // physical planning for AsOfJoinPlan (graft.plans.AsOfJoinOps)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // post-EnsureRequirements shield insertion that lets AsOfJoinExec's
-    // whole-stage codegen engage without costing its children their own
-    // codegen stages (see AsOfInputExec's scaladoc)
-    e.injectQueryStagePrepRule(_ => graft.plans.AsOfShieldRule)
   }
 }

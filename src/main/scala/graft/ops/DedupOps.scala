@@ -360,8 +360,6 @@ object DedupOps {
       val changed = step2.filter(col("cluster") =!= col("old_cluster")).count()
       converged = changed == 0
       labels = step2.select("doc_id", "cluster")
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[duplicateClusters] round=$round changed(last)=$changed t=${System.nanoTime() / 1e9}")
     }
     if (!converged)
       // labels are WRONG for any component whose diameter exceeds the

@@ -4,14 +4,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, BinaryNode, HintInfo, LogicalPlan, Project, ResolvedHint}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, BroadcastMode, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** As-of join as a first-class operator — the full §7.3(c) extension
   * ladder (logical node → strategy → physical exec), for the one shape
@@ -75,74 +72,6 @@ object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   }
 }
 
-/** Transparent pass-through marking an [[AsOfJoinExec]] input as a
-  * whole-stage-codegen boundary. Spark's `CollapseCodegenStages` only
-  * knows to wrap the children of its OWN iterator-fed joins
-  * (`instanceof SortMergeJoinExec / ShuffledHashJoinExec` — verified
-  * against the 4.1.2 bytecode) in `InputAdapter`; a third-party
-  * codegen-supporting binary exec falls to the generic branch, which
-  * would leave the child sorts inline in the join's stage with nothing
-  * ever calling their `produce()` — silently de-optimizing the whole
-  * subtree to interpreted execution. This node does NOT implement
-  * `CodegenSupport`, so the collapse rule's `!supportCodegen` branch
-  * wraps it in `InputAdapter` and gives the subtree below its own
-  * codegen stages — exactly what Spark hand-arranges for its own merge
-  * join. Inserted by [[AsOfShieldRule]] AFTER EnsureRequirements (an
-  * AQE query-stage-prep rule), so it never disturbs exchange/sort
-  * placement; partitioning and ordering forward untouched.
-  */
-case class AsOfInputExec(child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
-  override protected def doExecute(): RDD[InternalRow] = child.execute()
-  override protected def withNewChildInternal(newChild: SparkPlan): AsOfInputExec =
-    copy(child = newChild)
-}
-
-/** AQE query-stage-preparation rule (runs after EnsureRequirements on
-  * every (re-)planning pass): wrap both [[AsOfJoinExec]] inputs in
-  * [[AsOfInputExec]] so the join's generated code can take over
-  * (`AsOfJoinExec.supportCodegen` is gated on the shields being
-  * present). Idempotent — AQE re-applies prep rules on each replan.
-  * Injected via `GraftExtensions` (`spark.sql.extensions`); sessions
-  * without the extension (or with AQE off) simply keep the interpreted
-  * exec. Broadcast-mode joins are left alone: their quote side is a
-  * broadcast, which has no row iterator to feed generated code, so
-  * they run interpreted.
-  */
-object AsOfShieldRule extends Rule[SparkPlan] {
-  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
-    case j: AsOfJoinExec if !j.broadcastRight && !j.left.isInstanceOf[AsOfInputExec] =>
-      j.copy(left = AsOfInputExec(j.left), right = AsOfInputExec(j.right))
-  }
-}
-
-/** Serializable per-task helpers for the generated as-of merge: the
-  * key projections, key ordering, and row-to-unsafe fallback are the
-  * SAME battle-tested objects the interpreted path uses — shipped as a
-  * codegen reference object (bound `Expression`s serialize; the
-  * projections/ordering rebuild lazily per task). The generated code
-  * inlines the time comparisons and the merge control flow; these
-  * helpers keep UnsafeRow key handling (copies, null checks, ordering)
-  * on one shared, spec-pinned implementation instead of duplicating it
-  * in generated Java.
-  */
-class AsOfCodegenRuntime(
-    lKeyExprs: Seq[Expression], rKeyExprs: Seq[Expression],
-    keyTypes: Seq[DataType], rAttrs: Seq[Attribute]) extends Serializable {
-  @transient lazy val lKeyProj: UnsafeProjection = UnsafeProjection.create(lKeyExprs)
-  @transient lazy val rKeyProj: UnsafeProjection = UnsafeProjection.create(rKeyExprs)
-  @transient lazy val keyOrd: BaseOrdering =
-    RowOrdering.createNaturalAscendingOrdering(keyTypes)
-  @transient private lazy val rToUnsafe: UnsafeProjection =
-    UnsafeProjection.create(rAttrs, rAttrs)
-  def toUnsafe(r: InternalRow): UnsafeRow = r match {
-    case u: UnsafeRow => u
-    case o => rToUnsafe(o)
-  }
-}
-
 /** The broadcast-mode quote side: the collected rows sorted once,
   * before they are broadcast, by `ordering` (bound to the right
   * output) — the order the shuffled mode gets from its per-partition
@@ -163,7 +92,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     leftTime: Expression, rightTime: Expression,
     strict: Boolean, toleranceUs: Option[Long],
     forward: Boolean = false, broadcastRight: Boolean = false)
-  extends BinaryExecNode with CodegenSupport {
+  extends BinaryExecNode {
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
@@ -195,170 +124,6 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  // ---- whole-stage codegen (SMJ-style iterator-fed produce) ----
-  //
-  // Codegen engages ONLY when AsOfShieldRule has wrapped both inputs:
-  // the shields make CollapseCodegenStages treat the children exactly
-  // as it treats SortMergeJoinExec's (InputAdapter + own stages below),
-  // so fusing the merge loop UP into the parent stage never costs the
-  // subtree BELOW its codegen. Without shields (AQE off, extension not
-  // installed, broadcast mode) supportCodegen=false and the exec runs
-  // its interpreted merge.
-  override def supportCodegen: Boolean =
-    left.isInstanceOf[AsOfInputExec] && right.isInstanceOf[AsOfInputExec]
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.execute() :: right.execute() :: Nil
-
-  // output rows reference the retained match row's buffer; a buffering
-  // parent (sort, agg hash map) must copy — same contract as SMJ
-  override def needCopyResult: Boolean = true
-
-  override protected def doProduce(ctx: CodegenContext): String = {
-    val ur = classOf[UnsafeRow].getName
-    val row = classOf[InternalRow].getName
-    val leftInput = ctx.addMutableState("scala.collection.Iterator", "asofLeftInput",
-      v => s"$v = inputs[0];", forceInline = true)
-    val rightInput = ctx.addMutableState("scala.collection.Iterator", "asofRightInput",
-      v => s"$v = inputs[1];", forceInline = true)
-    // merge cursor state — persists across processNext() re-entries
-    val rHead = ctx.addMutableState(ur, "asofRHead")
-    val rHeadKey = ctx.addMutableState(ur, "asofRHeadKey")
-    val rHeadTime = ctx.addMutableState("long", "asofRHeadTime")
-    val lastMatch = ctx.addMutableState(ur, "asofLastMatch")
-    val lastMatchKey = ctx.addMutableState(ur, "asofLastMatchKey")
-    val lastMatchTime = ctx.addMutableState("long", "asofLastMatchTime")
-    val rInit = ctx.addMutableState("boolean", "asofRInit")
-
-    val runtime = new AsOfCodegenRuntime(
-      leftKeys.map(BindReferences.bindReference(_, left.output)),
-      rightKeys.map(BindReferences.bindReference(_, right.output)),
-      leftKeys.map(_.dataType),
-      right.output.map(_.withNullability(true)))
-    val rt = ctx.addReferenceObj("asofRuntime", runtime, classOf[AsOfCodegenRuntime].getName)
-    val numOutput = metricTerm(ctx, "numOutputRows")
-
-    // same consume-equal-time rule as the interpreted merge
-    val consumeEq = if (forward) strict else !strict
-    val consumeEqJ = if (consumeEq) "true" else "false"
-    val noTolJ = if (toleranceUs.isEmpty) "true" else "false"
-    val tolL = s"${toleranceUs.getOrElse(0L)}L"
-
-    // advanceRight(): pull the next right row with non-null time+key,
-    // retained as owned copies (sorter iterators reuse row buffers)
-    val rrow = ctx.freshName("asofRRow")
-    ctx.INPUT_ROW = rrow
-    ctx.currentVars = null
-    val rtEv = BindReferences.bindReference(rightTime, right.output).genCode(ctx)
-    val rkey = ctx.freshName("asofRKey")
-    val advanceRight = ctx.addNewFunction("asofAdvanceRight",
-      s"""
-         |private void asofAdvanceRight() {
-         |  $rHead = null;
-         |  while ($rHead == null && $rightInput.hasNext()) {
-         |    $row $rrow = ($row) $rightInput.next();
-         |    ${rtEv.code}
-         |    if (!${rtEv.isNull}) {
-         |      $ur $rkey = $rt.rKeyProj().apply($rrow);
-         |      if (!$rkey.anyNull()) {
-         |        $rHead = $rt.toUnsafe($rrow).copy();
-         |        $rHeadKey = $rkey.copy();
-         |        $rHeadTime = ${rtEv.value};
-         |      }
-         |    }
-         |  }
-         |}
-       """.stripMargin)
-
-    // per-probe code: evaluate left time/key, run the merge scan, pick
-    // the match, then emit left vars + null-guarded right vars
-    val lrow = ctx.freshName("asofLRow")
-    ctx.INPUT_ROW = lrow
-    ctx.currentVars = null
-    val ltEv = BindReferences.bindReference(leftTime, left.output).genCode(ctx)
-    val leftVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    val leftVarsCode = evaluateVariables(leftVars)
-    val matched = ctx.freshName("asofMatched")
-    val rightVars = right.output.zipWithIndex.map { case (a, i) =>
-      val isNull = ctx.freshName("asofRIsNull")
-      val value = ctx.freshName("asofRValue")
-      val jt = CodeGenerator.javaType(a.dataType)
-      val dv = CodeGenerator.defaultValue(a.dataType)
-      val getter = CodeGenerator.getValue(matched, a.dataType, i.toString)
-      ExprCode(
-        code"""
-              |boolean $isNull = true;
-              |$jt $value = $dv;
-              |if ($matched != null) {
-              |  $isNull = $matched.isNullAt($i);
-              |  if (!$isNull) { $value = $getter; }
-              |}
-        """.stripMargin,
-        JavaCode.isNullVariable(isNull),
-        JavaCode.variable(value, a.dataType))
-    }
-    val rightVarsCode = evaluateVariables(rightVars)
-    val outputCode = consume(ctx, leftVars ++ rightVars)
-
-    val lkey = ctx.freshName("asofLKey")
-    val ltime = ctx.freshName("asofLTime")
-    val cmp = ctx.freshName("asofCmp")
-    val scan = ctx.freshName("asofScan")
-    val retain =
-      if (forward) ""
-      else s"$lastMatch = $rHead; $lastMatchKey = $rHeadKey; $lastMatchTime = $rHeadTime;"
-    val matchSel =
-      // Tolerance distance via compareUnsigned: the match invariant puts
-      // the candidate's time on the correct side of the probe time
-      // (rHeadTime >= ltime forward / lastMatchTime <= ltime backward),
-      // so the true distance is non-negative and < 2^64 — the raw Long
-      // subtraction wraps to exactly that distance as an UNSIGNED value
-      // even when the signed subtraction overflows (Long.MIN/MAX
-      // sentinel times). Same arithmetic in the interpreted path.
-      if (forward)
-        s"""if ($rHead != null && $rt.keyOrd().compare($rHeadKey, $lkey) == 0 &&
-           |    ($noTolJ || Long.compareUnsigned($rHeadTime - $ltime, $tolL) <= 0)) { $matched = $rHead; }""".stripMargin
-      else
-        s"""if ($lastMatch != null && $rt.keyOrd().compare($lastMatchKey, $lkey) == 0 &&
-           |    ($noTolJ || Long.compareUnsigned($ltime - $lastMatchTime, $tolL) <= 0)) { $matched = $lastMatch; }""".stripMargin
-
-    s"""
-       |if (!$rInit) { $rInit = true; $advanceRight(); }
-       |// no limitNotReachedCond here: Spark allowlists only its own
-       |// leaf/blocking/SMJ nodes for that check; the shouldStop() exit
-       |// below bounds the loop under a LIMIT the same way
-       |while ($leftInput.hasNext()) {
-       |  $row $lrow = ($row) $leftInput.next();
-       |  ${ltEv.code}
-       |  $ur $lkey = $rt.lKeyProj().apply($lrow);
-       |  $ur $matched = null;
-       |  if (!${ltEv.isNull} && !$lkey.anyNull()) {
-       |    long $ltime = ${ltEv.value};
-       |    boolean $scan = true;
-       |    while ($scan && $rHead != null) {
-       |      int $cmp = $rt.keyOrd().compare($rHeadKey, $lkey);
-       |      if ($cmp < 0) {
-       |        $advanceRight();
-       |      } else if ($cmp == 0 && ($rHeadTime < $ltime || ($consumeEqJ && $rHeadTime == $ltime))) {
-       |        $retain
-       |        $advanceRight();
-       |      } else {
-       |        $scan = false;
-       |      }
-       |    }
-       |    $matchSel
-       |  }
-       |  $numOutput.add(1);
-       |  $leftVarsCode
-       |  $rightVarsCode
-       |  $outputCode
-       |  if (shouldStop()) return;
-       |}
-     """.stripMargin
-  }
-
   override protected def doExecute(): RDD[InternalRow] = {
     val merge = mergeFn()
     if (broadcastRight) {
@@ -369,10 +134,13 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     }
   }
 
-  /** The interpreted merge of one probe partition against a quote
-    * iterator sorted on (keys, time): a co-partition in the shuffled
-    * mode, the whole sorted broadcast in the broadcast mode. Captures
-    * only serializable locals, so the closure ships to the tasks.
+  /** The merge of one probe partition against a quote iterator sorted
+    * on (keys, time): a co-partition in the shuffled mode, the whole
+    * sorted broadcast in the broadcast mode. The exec's only
+    * implementation: it takes no part in whole-stage codegen, so each
+    * child sort keeps its own codegen stage and the parent starts a new
+    * one. Captures only serializable locals, so the closure ships to
+    * the tasks.
     */
   private def mergeFn(): (Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow] = {
     val lOut = left.output

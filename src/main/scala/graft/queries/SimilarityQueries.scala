@@ -903,7 +903,7 @@ object SimilarityQueries extends QueryModule {
             round(coalesce(col("hits"), lit(0L)).cast("double") / 10.0, 6).as("recall_at_10"))
           .orderBy("qid")
       },
-      oracle = Some("WITH" + ivfVecsSql + """,
+      oracle = Some("WITH" + ivfCellsSql + """,
         qs AS (SELECT vec_id AS qid, emb AS qemb, nrm AS qnrm FROM v
                ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 200),
         exact AS (
@@ -913,15 +913,7 @@ object SimilarityQueries extends QueryModule {
                      round(list_dot_product(a.emb, q.qemb) / (a.nrm * q.qnrm), 6) DESC,
                      a.vec_id ASC) AS rn
             FROM v a CROSS JOIN qs q WHERE a.vec_id <> q.qid)
-          WHERE rn <= 10),""" + ivfCentsSql + """,
-        assigned AS (
-          SELECT vec_id, cell, emb, nrm FROM (
-            SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                     round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
-                     c.cent_id ASC) AS rn
-            FROM v CROSS JOIN cents c)
-          WHERE rn = 1),
+          WHERE rn <= 10),
         qa AS (
           SELECT a.cell, a.vec_id AS qid, a.emb AS qemb, a.nrm AS qnrm
           FROM assigned a JOIN qs q ON a.vec_id = q.qid),
@@ -1014,15 +1006,7 @@ object SimilarityQueries extends QueryModule {
               .when(col("cos2") > col("cos1"), 1).otherwise(0))
           .orderBy("qid")
       },
-      oracle = Some("WITH" + ivfVecsSql + "," + ivfCentsSql + """,
-        assigned AS (
-          SELECT vec_id, cell, emb, nrm FROM (
-            SELECT v.vec_id, c.cent_id AS cell, v.emb, v.nrm,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                     round(list_dot_product(v.emb, c.cent_emb) / (v.nrm * c.cent_nrm), 6) DESC,
-                     c.cent_id ASC) AS rn
-            FROM v CROSS JOIN cents c)
-          WHERE rn = 1),
+      oracle = Some("WITH" + ivfCellsSql + """,
         qs AS (
           SELECT vec_id AS qid, emb AS qemb, nrm AS qnrm
           FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 200),

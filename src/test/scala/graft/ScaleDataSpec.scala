@@ -127,9 +127,9 @@ class ScaleDataSpec extends AnyFunSuite {
     assert(v4 === 4 * v0, s"vocab $v0 -> $v4")
     // a WRONG baseScale fails loudly instead of aliasing keys
     val bad = new java.io.File(sys.props("java.io.tmpdir"), "graft_scaledata_bad")
-    val ex = intercept[IllegalArgumentException] {
+    val ex = try intercept[IllegalArgumentException] {
       ScaleData.generate(spark, dst, bad.getAbsolutePath, 2, baseScale = 1L)
-    }
+    } finally graft.queries.TempPaths.delete(bad)
     assert(ex.getMessage.contains("replicas would collide"))
   }
 

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Property layer over the as-of join — the operator with the newest
-  * codegen path gets the broadest input coverage: random probe/quote
+/** Property layer over the as-of join — the engine's own merge operator
+  * gets the broadest input coverage: random probe/quote
   * sets (few keys to force collisions, duplicate and tied times, null
   * times) checked against a driver-side brute-force reference on every
   * variant (backward/forward × strict × tolerance), and the

@@ -68,19 +68,21 @@ class DeferProjectPastSortSpec extends AnyFunSuite {
     // element, so by bytes alone carrying it past the sort looks no
     // wider than the double it replaces
     val arrays = new java.io.File(java.nio.file.Files.createTempDirectory("defer-array").toFile, "t")
-    spark.range(100).select(col("id"),
-        array((0 until 16).map(i => col("id").cast("double") + i): _*).as("arr"))
-      .write.parquet(arrays.getAbsolutePath)
     val cases = Seq[(String, SparkSession => DataFrame)](
       "rand()" -> (s => lineitem(s).select(k :+ (sin(col("l_discount")) + rand(1)).as("s"): _*).orderBy(k: _*)),
       "computed key" -> (s => trig(s).orderBy(col("l_orderkey") + 1, col("l_linenumber"))),
       "length(string)" -> (s => lineitem(s).select(k :+ length(col("l_returnflag")).as("n"): _*).orderBy(k: _*)),
       "element_at(array)" -> (s => s.read.parquet(arrays.getAbsolutePath)
         .select(col("id"), (element_at(col("arr"), 1) * 2.0).as("x")).orderBy("id")))
-    try cases.foreach { case (what, q) =>
-      val df = q(spark)
-      df.collect()
-      assert(!fired(df), what)
+    try {
+      spark.range(100).select(col("id"),
+          array((0 until 16).map(i => col("id").cast("double") + i): _*).as("arr"))
+        .write.parquet(arrays.getAbsolutePath)
+      cases.foreach { case (what, q) =>
+        val df = q(spark)
+        df.collect()
+        assert(!fired(df), what)
+      }
     } finally graft.queries.TempPaths.delete(arrays.getParentFile)
     // the same projection fires once the string is a sort key: the sort
     // carries it either way, so nothing is newly carried

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -13,13 +14,14 @@ import graft.TestSpark
   * block together and match (identical 32-char prefixes), and proves the
   * q196/q197 gates exclude it while keeping the ASCII control pair.
   */
-class AsciiBoundarySpec extends AnyFunSuite {
+class AsciiBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
+
+  private val d = java.nio.file.Files.createTempDirectory("graft_ascii_boundary").toFile
+  override def afterAll(): Unit = TempPaths.delete(d)
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_ascii_boundary").toFile
-    d.deleteOnExit()
     val asciiA = "the quick brown fox jumps over the lazy dog once more"
     val asciiB = "the quick brown fox jumps over the lazy dog once mere"
     // identical non-ASCII prefix: would share every chunk and score

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.Row
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -10,7 +11,7 @@ import graft.TestSpark
   * construction: chunk boundaries, contamination flags, repetition
   * verdicts, and the unigram-LM score.
   */
-class PretrainQueriesSpec extends AnyFunSuite {
+class PretrainQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
   private lazy val q = PretrainQueries.queries.toMap
@@ -21,9 +22,11 @@ class PretrainQueriesSpec extends AnyFunSuite {
     *   2  unrelated, 60 distinct tokens t1..t60 -> 3 chunks, keep=1
     *   3  "a a a a a a" -> maximal repetition, keep=0
     */
+  private val d = java.nio.file.Files.createTempDirectory("pretrain_fixture")
+  override def afterAll(): Unit = TempPaths.delete(d.toFile)
+
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("pretrain_fixture")
     val docs = Seq(
       (0L, (1 to 10).map(i => s"e$i").mkString(" "), "en", "src0"),
       (1L, "x1 x2 " + (3 to 7).map(i => s"e$i").mkString(" ") + " x3 x4", "en", "src0"),

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.queries.TempPaths
 
 /** Checkpoint-recovery pins — the restart path a 24/7 ingest actually
   * exercises, which no single processAllAvailable run covers: a stream
@@ -29,29 +30,31 @@ class StreamingRecoverySpec extends AnyFunSuite {
   test("stateless file-source stream restarts exactly-once from its checkpoint") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-recovery-stateless")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val out = base.resolve("out"); val ck = base.resolve("ck")
-    def writeBatch(ids: Range): Unit =
-      ids.map(i => (i.toLong, s"payload-$i")).toDF("event_id", "payload")
-        .coalesce(1).write.mode("append").parquet(in.toString)
-    writeBatch(1 to 3)
-    val schema = spark.read.parquet(in.toString).schema
-    def run(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(in.toString)
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ck.toString)
-        .outputMode(OutputMode.Append).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()                 // processes file 1, commits it to the source log
-    writeBatch(4 to 6)
-    run()                 // cold restart: must pick up ONLY the new file
-    val got = spark.read.parquet(out.toString)
-      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-    // each id exactly once: a lost file shows as a gap, a replayed
-    // file as a duplicate — both fail this exact-sequence compare
-    assert(got === (1L to 6L))
+    try {
+      val in = base.resolve("in"); Files.createDirectories(in)
+      val out = base.resolve("out"); val ck = base.resolve("ck")
+      def writeBatch(ids: Range): Unit =
+        ids.map(i => (i.toLong, s"payload-$i")).toDF("event_id", "payload")
+          .coalesce(1).write.mode("append").parquet(in.toString)
+      writeBatch(1 to 3)
+      val schema = spark.read.parquet(in.toString).schema
+      def run(): Unit = {
+        val q = spark.readStream.schema(schema).parquet(in.toString)
+          .writeStream.format("parquet")
+          .option("path", out.toString)
+          .option("checkpointLocation", ck.toString)
+          .outputMode(OutputMode.Append).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()                 // processes file 1, commits it to the source log
+      writeBatch(4 to 6)
+      run()                 // cold restart: must pick up ONLY the new file
+      val got = spark.read.parquet(out.toString)
+        .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+      // each id exactly once: a lost file shows as a gap, a replayed
+      // file as a duplicate — both fail this exact-sequence compare
+      assert(got === (1L to 6L))
+    } finally TempPaths.delete(base.toFile)
   }
 
   test("the RocksDB state store runs the stateful shapes with identical results (production backend)") {
@@ -94,40 +97,42 @@ class StreamingRecoverySpec extends AnyFunSuite {
   test("windowed aggregation state survives a restart (watermark + counts from the store)") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-recovery-stateful")
-    val in = base.resolve("in"); Files.createDirectories(in)
-    val out = base.resolve("out"); val ck = base.resolve("ck")
-    def writeEvents(rows: Seq[(Long, Timestamp)]): Unit =
-      rows.toDF("event_id", "ts").coalesce(1).write.mode("append").parquet(in.toString)
-    // run 1: three events in the 10:00 tumbling minute — state only,
-    // nothing finalized (watermark still below the window end at stop)
-    writeEvents(Seq(
-      (1L, Timestamp.valueOf("2024-01-01 10:00:05")),
-      (2L, Timestamp.valueOf("2024-01-01 10:00:25")),
-      (3L, Timestamp.valueOf("2024-01-01 10:00:45"))))
-    val schema = spark.read.parquet(in.toString).schema
-    def run(): Unit = {
-      val windowed = spark.readStream.schema(schema).parquet(in.toString)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 minute"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_micros(col("window.start")).as("window_start_us"), col("n_events"))
-      val q = windowed.writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ck.toString)
-        .outputMode(OutputMode.Append).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    // run 2, cold restart: one late-hour event pushes the watermark past
-    // the 10:00 window end. The count=3 it finalizes exists ONLY in the
-    // recovered state store — losing state on restart would emit 0 or
-    // a partial count here.
-    writeEvents(Seq((4L, Timestamp.valueOf("2024-01-01 11:00:00"))))
-    run()
-    val rows = spark.read.parquet(out.toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w1000 = java.time.Instant.parse("2024-01-01T10:00:00Z").toEpochMilli * 1000L
-    assert(rows.get(w1000) === Some(3L),
-      s"10:00 window must finalize with the 3 pre-restart events, got $rows")
+    try {
+      val in = base.resolve("in"); Files.createDirectories(in)
+      val out = base.resolve("out"); val ck = base.resolve("ck")
+      def writeEvents(rows: Seq[(Long, Timestamp)]): Unit =
+        rows.toDF("event_id", "ts").coalesce(1).write.mode("append").parquet(in.toString)
+      // run 1: three events in the 10:00 tumbling minute — state only,
+      // nothing finalized (watermark still below the window end at stop)
+      writeEvents(Seq(
+        (1L, Timestamp.valueOf("2024-01-01 10:00:05")),
+        (2L, Timestamp.valueOf("2024-01-01 10:00:25")),
+        (3L, Timestamp.valueOf("2024-01-01 10:00:45"))))
+      val schema = spark.read.parquet(in.toString).schema
+      def run(): Unit = {
+        val windowed = spark.readStream.schema(schema).parquet(in.toString)
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 minute"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(unix_micros(col("window.start")).as("window_start_us"), col("n_events"))
+        val q = windowed.writeStream.format("parquet")
+          .option("path", out.toString)
+          .option("checkpointLocation", ck.toString)
+          .outputMode(OutputMode.Append).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()
+      // run 2, cold restart: one late-hour event pushes the watermark past
+      // the 10:00 window end. The count=3 it finalizes exists ONLY in the
+      // recovered state store — losing state on restart would emit 0 or
+      // a partial count here.
+      writeEvents(Seq((4L, Timestamp.valueOf("2024-01-01 11:00:00"))))
+      run()
+      val rows = spark.read.parquet(out.toString)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val w1000 = java.time.Instant.parse("2024-01-01T10:00:00Z").toEpochMilli * 1000L
+      assert(rows.get(w1000) === Some(3L),
+        s"10:00 window must finalize with the 3 pre-restart events, got $rows")
+    } finally TempPaths.delete(base.toFile)
   }
 }
