@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, SimpleMode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dumps the formatted physical plans of the headline queries to
   * PLANS.md — the plan shapes `PlanAuditSpec` pins, in reviewable form.
@@ -63,19 +66,45 @@ object Plans {
     * recorded: queries that checkpoint an intermediate (CacheScope /
     * DedupOps.neardupEdges) surface as `Scan ExistingRDD` in the outer
     * plan, and the plan that actually did the work is the recorded
-    * inner one (pre-checkpoint, as executed). Lines past 400 chars are
-    * elided: giant inlined literals (e.g. q129's serialized bloom
-    * filter renders as ~400 KB of hex) — the plan SHAPE is the record.
+    * inner one (pre-checkpoint).
+    *
+    * Every run renders the same text. An inner plan renders as AQE's
+    * initial plan, as the outer one does, not as executed: an executed
+    * plan's query-stage ids and join sides follow the order its stages
+    * happened to finish in. In each plan, expression ids (`#n`) and
+    * exchange `plan_id`s are renumbered in order of first appearance
+    * (the global counters behind them drift with everything the JVM
+    * planned before); the session's application id in staged paths
+    * renders as `<app>`, and a JVM lambda's identity
+    * (`Foo$$$Lambda$5322/0x…@6cd79426`) as `Foo$$$Lambda`. Lines past
+    * 400 chars are elided: giant inlined literals (e.g. q129's
+    * serialized bloom filter renders as ~400 KB of hex) — the plan
+    * SHAPE is the record.
     */
   def render(spark: SparkSession, sfDir: String, name: String,
              mode: ExplainMode): (String, Seq[String]) = {
-    def trim(plan: String): String = plan.linesIterator.map { l =>
-      if (l.length <= 400) l else l.take(400) + s"…[${l.length - 400} chars elided]"
-    }.mkString("\n")
+    def stable(plan: String): String = {
+      def renumber(re: Regex, prefix: String)(text: String): String = {
+        val ids = scala.collection.mutable.HashMap.empty[String, Int]
+        re.replaceAllIn(text, m => prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+      }
+      val fixed = LambdaId.replaceAllIn(plan.replace(spark.sparkContext.applicationId, "<app>"),
+        Regex.quoteReplacement("$Lambda"))
+      renumber(PlanId, "plan_id=")(renumber(ExprId, "#")(fixed)).linesIterator.map { l =>
+        if (l.length <= 400) l else l.take(400) + s"…[${l.length - 400} chars elided]"
+      }.mkString("\n")
+    }
     graft.ops.CacheScope.reset()
     val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(mode)
-    (trim(plan), graft.ops.CacheScope.inners.map(qe => trim(qe.executedPlan.toString)))
+    (stable(plan), graft.ops.CacheScope.inners.map(qe => stable((qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }).toString)))
   }
+
+  private val LambdaId = """\$Lambda\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+""".r
+  private val ExprId = """#([0-9]+)""".r
+  private val PlanId = """plan_id=([0-9]+)""".r
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -93,7 +122,7 @@ object Plans {
       val (plan, inners) = render(spark, sfDir, name, SimpleMode)
       sb.append(s"\n## $name\n\n```\n$plan\n```\n")
       inners.zipWithIndex.foreach { case (inner, i) =>
-        sb.append(s"\n### $name — inner plan ${i + 1} (pre-checkpoint, as executed)\n\n")
+        sb.append(s"\n### $name — inner plan ${i + 1} (pre-checkpoint, AQE's initial plan)\n\n")
         sb.append(s"```\n$inner\n```\n")
       }
     }

@@ -46,6 +46,13 @@ object QueryLoop {
     case c => c.toString
   } + "\""
 
+  /** The `ScaleGuardTrip` in `e`'s cause chain, if any: a guard that
+    * trips inside a task (the exact-sum bound) reaches the driver
+    * wrapped in a `SparkException`.
+    */
+  def guardTrip(e: Throwable): Option[ScaleGuardTrip] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst { case g: ScaleGuardTrip => g }
+
   /** Run one query's `action`, classify how it ended, then clean up.
     * Returns the action's wall seconds (cleanup excluded) and outcome.
     */
@@ -54,8 +61,7 @@ object QueryLoop {
     val outcome =
       try { action; Ok }
       catch {
-        case g: ScaleGuardTrip => Skip(g.successor)
-        case e: Throwable => Err(e)
+        case e: Throwable => guardTrip(e).fold[Outcome](Err(e))(g => Skip(g.successor))
       }
     val elapsed = (System.nanoTime() - t0) / 1e9
     // Queries that persist() intermediates can't unpersist before the

@@ -72,6 +72,7 @@ object GraftFunctions {
     */
   val table: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
     ("vec_dot", classOf[FloatVecDot], e => FloatVecDot(e(0), e(1))),
+    ("cents", classOf[Cents], Cents.build),
     ("top_k_pairs", classOf[TopKPairs],
       e => TopKPairs(Cast(e(0), DoubleType), Cast(e(1), LongType), e(2)).toAggregateExpression()),
     ("kmv_distinct", classOf[KmvDistinct],

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expr.ExactSums
+
 /** Skew-handling utilities (SURVEY.md §4 scale posture). AQE's skew-join
   * split handles join-side skew automatically; these cover the
   * aggregation side: a hot group key (e.g. one viral gameId/playId, one
@@ -13,10 +15,10 @@ import org.apache.spark.sql.functions._
 object SkewOps {
 
   /** Two-phase salted sum/count: phase 1 aggregates (key, salt) partials
-    * across `saltBuckets` tasks, phase 2 combines per key. Results are
-    * identical to a direct groupBy (sums of longs/decimals are
-    * order-independent; doubles would be salted identically by Spark's
-    * own partial aggregation anyway).
+    * across `saltBuckets` tasks, phase 2 combines per key. `aggs` are
+    * exact long terms (counts, `cents`); both phases sum them with the
+    * overflow-guarded exact sum (`graft.expr.ExactSums.total`), which is
+    * order-independent, so results are identical to a direct groupBy.
     */
   def saltedAgg(keys: Seq[String], saltBuckets: Int, aggs: Map[String, Column])(df: DataFrame): DataFrame = {
     require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets " +
@@ -24,11 +26,11 @@ object SkewOps {
     val salted = df.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(saltBuckets)))
     val phase1 = salted
       .groupBy((keys :+ "__salt").map(col): _*)
-      .agg(count(lit(1)).as("__cnt"), aggs.map { case (n, c) => sum(c).as(s"__sum_$n") }.toSeq: _*)
+      .agg(count(lit(1)).as("__cnt"), aggs.map { case (n, c) => ExactSums.total(Seq(c)).as(s"__sum_$n") }.toSeq: _*)
     phase1
       .groupBy(keys.map(col): _*)
       .agg(sum(col("__cnt")).as("n_rows"),
-        aggs.keys.map(n => sum(col(s"__sum_$n")).as(n)).toSeq: _*)
+        aggs.keys.map(n => ExactSums.total(Seq(col(s"__sum_$n"))).as(n)).toSeq: _*)
   }
 
   /** Salted shuffle join for a pathologically hot join key, for when

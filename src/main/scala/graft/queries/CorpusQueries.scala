@@ -826,14 +826,14 @@ object CorpusQueries extends QueryModule {
     // it — sums of double products are partition-order dependent): every
     // transcendental is rounded to 6 decimals FIRST, products of those
     // rounded doubles are exact IEEE ops (identical everywhere), rounded
-    // again, and all four sums run in DECIMAL(18,6) — exact and
+    // again, and all four sums run exact at scale 6 (the oracle's
+    // DECIMAL(18,6); exactSum) — exact and
     // order-independent — so the final slope arithmetic consumes
     // identical inputs on any engine and any partitioning. Scale: one
     // corpus-sized keyed agg to (source, tok), a per-source window
     // (keyed), then source-grain math — nothing global.
     "q143_zipf_fit" -> NamedQuery(
       fn = (s, d) => {
-        val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val cnt = Tables.documents(s, d)
           .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("tok"))
           .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
@@ -848,10 +848,10 @@ object CorpusQueries extends QueryModule {
             round(col("x") * col("y"), 6).as("xys"))
         val agg = xy.groupBy("source").agg(
           count(lit(1)).cast("double").as("n"),
-          sum(col("x").cast(dec6)).cast("double").as("sx"),
-          sum(col("y").cast(dec6)).cast("double").as("sy"),
-          sum(col("xx").cast(dec6)).cast("double").as("sxx"),
-          sum(col("xys").cast(dec6)).cast("double").as("sxy"))
+          exactSum(col("x"), 6).as("sx"),
+          exactSum(col("y"), 6).as("sy"),
+          exactSum(col("xx"), 6).as("sxx"),
+          exactSum(col("xys"), 6).as("sxy"))
         val den = col("n") * col("sxx") - col("sx") * col("sx")
         val slopeRaw = (col("n") * col("sxy") - col("sx") * col("sy")) / den
         agg.select(col("source"),
@@ -903,13 +903,12 @@ object CorpusQueries extends QueryModule {
     // probability ratios are pure IEEE division trees mirrored exactly
     // (never pre-multiplied integers, which would overflow at corpus
     // scale), ln is rounded to 6 before the product, the p·ln term is
-    // rounded again, and the per-source sum runs in DECIMAL(18,6) —
+    // rounded again, and the per-source sum runs exact at scale 6 —
     // exact and order-independent. Scale: two corpus-sized keyed aggs
     // (source×tok, tok), one vocab-sized join on tok, broadcast totals;
     // nothing global, nothing quadratic.
     "q146_kl_drift" -> NamedQuery(
       fn = (s, d) => {
-        val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val toks = Tables.documents(s, d)
           .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("tok"))
         val sc = toks.groupBy("source", "tok").agg(count(lit(1)).as("cnt_s"))
@@ -927,7 +926,7 @@ object CorpusQueries extends QueryModule {
         terms.groupBy("source").agg(
             count(lit(1)).as("n_types"),
             max(col("tot_s")).as("src_toks"),
-            round(sum(col("term").cast(dec6)).cast("double"), 6).as("kl_nats"))
+            round(exactSum(col("term"), 6), 6).as("kl_nats"))
           .orderBy("source")
       },
       oracle = Some("""
@@ -963,15 +962,14 @@ object CorpusQueries extends QueryModule {
     // the corpus's 3 highest-df terms (ties to token asc). Parity per
     // the Registry recipe: ln(idf) rounds to 6, the tf/length
     // normalization is a pure IEEE division tree mirrored literally,
-    // per-term scores round again, and the per-doc sum runs in
-    // DECIMAL(18,6). Ranking is the native partial top-k (k-sized
+    // per-term scores round again, and the per-doc sum runs exact at
+    // scale 6. Ranking is the native partial top-k (k-sized
     // buffers, payload tie-break = doc_id) with posexplode emitting the
     // rank. Scale: postings and lengths are keyed corpus aggs; query
     // terms and the 1-row corpus stats broadcast; the final shuffle is
     // ONE k-row partial per partition — never a corpus sort.
     "q152_bm25_topk" -> NamedQuery(
       fn = (s, d) => {
-        val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
         val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -989,7 +987,7 @@ object CorpusQueries extends QueryModule {
             (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avglen")))))
           .withColumn("term", round(col("idf") * col("tfc"), 6))
         terms.groupBy("doc_id")
-          .agg(sum(col("term").cast(dec6)).cast("double").as("score"))
+          .agg(exactSum(col("term"), 6).as("score"))
           .agg(expr("top_k_pairs(score, doc_id, 20)").as("topk"))
           .select(posexplode(col("topk")).as(Seq("pos", "p")))
           .select((col("pos") + 1).cast("long").as("rnk"),
@@ -1054,7 +1052,6 @@ object CorpusQueries extends QueryModule {
     // candidate id.
     "q171_rrf_fusion" -> NamedQuery(
       fn = (s, d) => {
-        val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val vecs = Tables.embeddings(s, d)
           .withColumn("nrm", sqrt(expr("vec_dot(embedding, embedding)")))
         // candidate universe: documents that HAVE an embedding
@@ -1122,7 +1119,7 @@ object CorpusQueries extends QueryModule {
             (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avglen")))))
           .withColumn("term", round(col("idf") * col("tfc"), 6))
         val lex = terms.groupBy("probe_id", "doc_id")
-          .agg(sum(col("term").cast(dec6)).cast("double").as("bm25"))
+          .agg(exactSum(col("term"), 6).as("bm25"))
           .groupBy("probe_id")
           .agg(expr("top_k_pairs(bm25, doc_id, 100)").as("topk"))
           .select(col("probe_id"), posexplode(col("topk")).as(Seq("pos", "p")))

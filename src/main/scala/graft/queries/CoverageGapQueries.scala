@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 
@@ -26,7 +25,7 @@ object CoverageGapQueries extends QueryModule {
           .groupBy("qty_bucket")
           .agg(
             count(lit(1)).as("n_lines"),
-            sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double").as("sum_qty"))
+            exactSum(col("l_quantity")).as("sum_qty"))
           .orderBy("qty_bucket")
       },
       oracle = Some("""
@@ -334,7 +333,7 @@ object CoverageGapQueries extends QueryModule {
               .otherwise("test"))
           .groupBy(col("split"), col("o_orderpriority").as("coverage"))
           .agg(count(lit(1)).as("n_rows"),
-            sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double").as("sum_price"))
+            exactSum(col("o_totalprice")).as("sum_price"))
           .orderBy("split", "coverage")
       },
       oracle = Some("""

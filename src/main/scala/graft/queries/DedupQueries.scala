@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.expr.ExactSums
 import graft.ops.{DedupOps, RelationalOps}
 
 /** Deduplication operators over `documents` (builder-prompt north-star):
@@ -407,7 +408,7 @@ object DedupQueries extends QueryModule {
     // this grades the sketch's PRECISION. Shapes are the dedup
     // family's (banded candidates, signature join keyed by (doc, seed),
     // exploded exact Jaccard); the token table persists only for the
-    // build (CacheScope); means are decimal-exact sums over rounded-6
+    // build (CacheScope); means are exact scale-6 sums over rounded-6
     // terms divided by exact counts. Candidates are (lang, source)-
     // scoped EXACTLY like the q50 pipeline this audits — the unscoped
     // candidate set is quadratic in the cross-source template
@@ -417,7 +418,6 @@ object DedupQueries extends QueryModule {
       fn = (s, d) => {
         implicit val sp: SparkSession = s
         val scope = Seq("lang", "source")
-        val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val toks = graft.ops.DedupOps.tokenSet(Tables.documents(s, d), "text", scope)
         graft.ops.CacheScope.withPersisted(toks) {
           // ONE wide signature aggregate feeds bands AND the estimator
@@ -452,8 +452,8 @@ object DedupQueries extends QueryModule {
             .agg(
               max(col("est_j")).as("est_j"),
               count(lit(1)).as("n_pairs"),
-              (sum(col("jacc").cast(dec6)) * lit(1000000L)).cast("long").as("jmicro"),
-              (sum(col("abs_err").cast(dec6)) * lit(1000000L)).cast("long").as("emicro"),
+              ExactSums.total(Seq(ExactSums.cents(col("jacc"), 6))).as("jmicro"),
+              ExactSums.total(Seq(ExactSums.cents(col("abs_err"), 6))).as("emicro"),
               min(col("jacc")).as("min_jacc"),
               max(col("jacc")).as("max_jacc"))
             // means as exact rationals, half-away in integer math (PARITY

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.expr.ExactSums
 import graft.ops.RelationalOps
 
 /** Event-stream shapes (SURVEY.md §2.B8/J) over the `events` table —
@@ -93,7 +94,7 @@ object EventQueries extends QueryModule {
           .groupBy("event_type")
           .agg(
             count(lit(1)).as("n_events"),
-            dsum(col("value")).as("sum_value"))
+            exactSum(col("value")).as("sum_value"))
           .withColumn("avg_value", col("sum_value") / col("n_events"))
           .orderBy("event_type")
       },
@@ -163,7 +164,7 @@ object EventQueries extends QueryModule {
           .agg(
             count(lit(1)).as("n_events"),
             countDistinct(col("user_id")).as("n_users"),
-            dsum(col("value")).as("sum_value"))
+            exactSum(col("value")).as("sum_value"))
           .orderBy("hour_bucket")
       },
       oracle = Some(s"""
@@ -219,8 +220,7 @@ object EventQueries extends QueryModule {
         Tables.events(s, d)
           .withColumn("n_last_hour", count(lit(1)).over(w))
           .withColumn("sum_last_hour",
-            sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))).over(w)
-              .cast("double"))
+            ExactSums.toDouble(ExactSums.total(Seq(ExactSums.cents(col("value"), 2)), _.over(w)), 2))
           .select("event_id", "user_id", "n_last_hour", "sum_last_hour")
           .orderBy("user_id", "event_id")
       },
@@ -263,16 +263,15 @@ object EventQueries extends QueryModule {
     // ~1/5 of ALL rows through each of 5 reduce tasks no matter how many
     // executors exist — the textbook hot-key shape. SkewOps.saltedAgg
     // splits each key across 32 salt buckets (phase 1) and recombines
-    // (phase 2); decimal sums keep both phases order-independent so the
+    // (phase 2); guarded cents sums keep both phases order-independent so the
     // result is bit-identical to the direct plan the oracle runs.
     "q79_salted_hot_agg" -> NamedQuery(
       fn = (s, d) => {
         graft.ops.SkewOps.saltedAgg(
           keys = Seq("event_type"), saltBuckets = 32,
-          aggs = Map("sum_value" ->
-            col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))))(
+          aggs = Map("sum_value" -> ExactSums.cents(col("value"), 2)))(
           Tables.events(s, d))
-          .withColumn("sum_value", col("sum_value").cast("double"))
+          .withColumn("sum_value", ExactSums.toDouble(col("sum_value"), 2))
           .orderBy("event_type")
       },
       oracle = Some("""
@@ -309,8 +308,7 @@ object EventQueries extends QueryModule {
           .filter(col("tu2") >= col("tu") - binUs && col("tu2") < col("tu"))
           .groupBy("event_id")
           .agg(count(lit(1)).as("n_prev_10m"),
-            sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-              .cast("double").as("sum_prev_10m"))
+            exactSum(col("value")).as("sum_prev_10m"))
         e.select("event_id").join(agg, Seq("event_id"), "left")
           .na.fill(0L, Seq("n_prev_10m")).na.fill(0.0, Seq("sum_prev_10m"))
           .orderBy("event_id")
@@ -380,7 +378,7 @@ object EventQueries extends QueryModule {
           .select(col("user_id"), expr(s"ts_us div $hourUs").as("h"), col("value"))
         val stratum = e.filter(col("user_id") % 30 === 0)
         val hourly = stratum.groupBy("user_id", "h")
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sv"))
+          .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sv"))
         // Resample each user over ITS OWN [min, max] hour span (a keyed
         // generator — no global-bounds pull, no cross join). The
         // previous grid was users × the GLOBAL hour range, which is
@@ -691,7 +689,7 @@ object EventQueries extends QueryModule {
             sum(when(col("value") < col("lo"), 1L).otherwise(0L)).as("n_clipped_low"),
             sum(when(col("value") > col("hi"), 1L).otherwise(0L)).as("n_clipped_high"),
             max(col("lo")).as("p05"), max(col("hi")).as("p95"),
-            sum(dec(round(col("clamped"), 2))).cast("double").as("sum_clamped"))
+            exactSum(round(col("clamped"), 2)).as("sum_clamped"))
           .orderBy("event_type")
       },
       oracle = Some("""
@@ -1069,7 +1067,7 @@ object EventQueries extends QueryModule {
         s.read.parquet(dir)
           .filter(col("tile").isin(tiles: _*) && col("xb").between(4, 135))
           .groupBy("xb")
-          .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
+          .agg(count(lit(1)).as("n_rows"), exactSum(col("value")).as("sum_value"))
           .orderBy("xb")
       },
       oracle = Some("""
@@ -1100,7 +1098,7 @@ object EventQueries extends QueryModule {
           .groupBy(col("user_id"), session_window(col("ts_m"), "30 minutes"))
           .agg(
             count(lit(1)).as("n_events"),
-            dsum(col("value")).as("sum_value"))
+            exactSum(col("value")).as("sum_value"))
           .select(
             col("user_id"),
             unix_micros(col("session_window.start")).as("start_us"),
@@ -1151,10 +1149,7 @@ object EventQueries extends QueryModule {
         val quotes = ev
           .groupBy(col("event_type").as("q_type"),
             (expr(s"ts_us div ${HourUs}L") * HourUs).as("q_ts_us"))
-          .agg(sum(dec(col("value"))).as("sv"), count(lit(1)).as("n"))
-          // sv stays DECIMAL here (dsum's double cast would truncate a
-          // cent on the long conversion below)
-          .withColumn("cents", (col("sv") * lit(100L)).cast("long"))
+          .agg(ExactSums.total(Seq(ExactSums.cents(col("value"), 2))).as("cents"), count(lit(1)).as("n"))
           .withColumn("q_rate",
             (when(col("cents") < 0, lit(-1L)).otherwise(lit(1L)) *
               expr("(2 * 10000 * abs(cents) + n) div (2 * n)"))
@@ -1224,7 +1219,7 @@ object EventQueries extends QueryModule {
               .when(col("value") <= col("e75"), 3)
               .otherwise(4))
           .groupBy("event_type", "bin")
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
+          .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_val"))
           .orderBy("event_type", "bin")
       },
       oracle = Some("""
@@ -1307,7 +1302,7 @@ object EventQueries extends QueryModule {
           .agg(
             count(lit(1)).as("n_events"),
             countDistinct(col("user_id")).as("n_users"),
-            dsum(col("value")).as("sum_value"))
+            exactSum(col("value")).as("sum_value"))
           .orderBy("day", "event_type")
       },
       oracle = Some("""
@@ -2094,7 +2089,7 @@ object EventQueries extends QueryModule {
     // md5(type#b#i) mod n, so the B×n resample grid is a pure function
     // of the data (the md5 idiom of the sampling family q26/q27,
     // partition-count-independent) and both engines build the SAME
-    // resamples. Replicate means are exact DECIMAL(18,2) sums over a
+    // resamples. Replicate means are exact cents sums over a
     // keyed index join; the CI is a discrete quantile over the B=32
     // replicate means (rank formula, (mean, b)-pinned order). At
     // 100 TB: the grid is B× the fact rows, sharded by the same index
@@ -2105,7 +2100,7 @@ object EventQueries extends QueryModule {
         val ev = graft.Tables.events(s, d)
           .withColumn("idx",
             row_number().over(Window.partitionBy("event_type").orderBy("event_id")) - 1)
-          .select(col("event_type"), col("idx").cast("long").as("idx"), dec(col("value")).as("y"))
+          .select(col("event_type"), col("idx").cast("long").as("idx"), ExactSums.cents(col("value"), 2).as("y"))
         // Per-type sizes collected to the driver (one row per event
         // type — bounded metadata, the q123 maxUs idiom): the i domain
         // is exactly 0..n-1 per type, so it can be GENERATED from a
@@ -2145,7 +2140,7 @@ object EventQueries extends QueryModule {
         val means = draws.join(ev,
             col("et") === col("event_type") && col("j") === col("idx"))
           .groupBy(col("et").as("event_type"), col("b"))
-          .agg((sum(col("y")).cast("double") / min(col("n")).cast("double")).as("mean_b"))
+          .agg((ExactSums.toDouble(ExactSums.total(Seq(col("y"))), 2) / min(col("n")).cast("double")).as("mean_b"))
         val wq = Window.partitionBy("event_type").orderBy(col("mean_b"), col("b"))
         val loRank = 1 + math.floor(0.025 * (B - 1)).toLong
         val hiRank = 1 + math.floor(0.975 * (B - 1)).toLong

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.expr.ExactSums
 
 /** Lakehouse / incremental-maintenance surface: the operations that keep
   * a 100 TB table LIVE rather than just queryable — a streaming
@@ -83,34 +84,33 @@ object LakehouseQueries extends QueryModule {
     // --------------------------------------------------------------- q126
     // Incremental view maintenance: refresh a per-customer aggregate
     // from PARTIAL STATES instead of rescanning history. The mergeable
-    // state for (count, sum, avg) is (n, decimal sum) — both partials
+    // state for (count, sum, avg) is (n, sum of cents) — both partials
     // merge by addition, avg derives at read time. Here the "stored"
     // partial covers orders before the cut and the increment covers the
     // rest; the refresh is partial ∪ partial → re-add — the plan never
     // recombines raw history with raw increment. At 100 TB this is the
     // difference between a nightly full rescan and touching one day of
-    // data; it works because the decimal sum is exact and
-    // order-independent (same reason dsum exists, Registry parity
+    // data; it works because the cents sum is exact and
+    // order-independent (same reason exactSum exists, Registry parity
     // rules). Oracle: the full recompute it must equal.
     "q126_incremental_agg" -> NamedQuery(
       fn = (s, d) => {
         val cut = "1996-01-01"
         def partial(df: DataFrame): DataFrame =
           df.groupBy("o_custkey")
-            .agg(count(lit(1)).as("n"), sum(dec(col("o_totalprice"))).as("sd"))
+            .agg(count(lit(1)).as("n"), ExactSums.total(Seq(ExactSums.cents(col("o_totalprice"), 2))).as("cents"))
         val orders = Tables.orders(s, d)
         val stored = partial(orders.filter(col("o_orderdate") < lit(cut)))
         val incr = partial(orders.filter(col("o_orderdate") >= lit(cut)))
         stored.unionByName(incr)
           .groupBy("o_custkey")
-          .agg(sum(col("n")).as("n_orders"), sum(col("sd")).as("sd"))
+          .agg(sum(col("n")).as("n_orders"), ExactSums.total(Seq(col("cents"))).as("cents"))
           // mean as the exact rational cents/(100·n), half-away in
           // integer math (PARITY rule 4 fix 2; o_totalprice > 0 so no
           // sign branch) — round(double, 6) splits engines on decimal
           // midpoints (q70 hit one at sf1)
-          .withColumn("cents", (col("sd") * lit(100L)).cast("long"))
           .select(col("o_custkey"), col("n_orders"),
-            col("sd").cast("double").as("sum_price"),
+            ExactSums.toDouble(col("cents"), 2).as("sum_price"),
             (expr("(2 * 10000 * cents + n_orders) div (2 * n_orders)")
               .cast("double") / lit(1e6)).as("avg_price"))
           .orderBy("o_custkey")
@@ -147,7 +147,7 @@ object LakehouseQueries extends QueryModule {
           .groupBy("l_returnflag")
           .agg(count(lit(1)).as("n_rows"),
             sum(col("l_quantity").cast("long")).as("sum_qty"),
-            dsum(col("l_extendedprice")).as("sum_price"))
+            exactSum(col("l_extendedprice")).as("sum_price"))
           .orderBy("l_returnflag")
       },
       oracle = Some("""
@@ -207,7 +207,7 @@ object LakehouseQueries extends QueryModule {
           Tables.lineitem(s, d), "l_orderkey", urgent, "o_orderkey")
         reduced.join(urgent, col("l_orderkey") === col("o_orderkey"))
           .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n_rows"), dsum(col("l_extendedprice")).as("sum_price"))
+          .agg(count(lit(1)).as("n_rows"), exactSum(col("l_extendedprice")).as("sum_price"))
           .orderBy("l_returnflag")
       },
       oracle = Some("""
@@ -447,7 +447,7 @@ object LakehouseQueries extends QueryModule {
         withPos.join(broadcast(dv), Seq("__file", "__pos"), "left_anti")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_live"),
-            dsum(col("o_totalprice")).as("sum_price"))
+            exactSum(col("o_totalprice")).as("sum_price"))
           .orderBy("o_orderpriority")
       },
       oracle = Some("""
@@ -484,7 +484,7 @@ object LakehouseQueries extends QueryModule {
         fact.join(broadcast(years), Seq("o_year"))
           .groupBy("o_year")
           .agg(count(lit(1)).as("n_orders"),
-            dsum(col("o_totalprice")).as("sum_price"))
+            exactSum(col("o_totalprice")).as("sum_price"))
           .select(col("o_year").cast("long").as("o_year"), col("n_orders"), col("sum_price"))
           .orderBy("o_year")
       },

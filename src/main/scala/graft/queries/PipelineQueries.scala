@@ -91,7 +91,7 @@ object PipelineQueries extends QueryModule {
     // ---------------------------------------------------------------- q60
     // The streaming surface through the correctness gate: a watermarked
     // hourly tumbling-window aggregation (per event type: count and
-    // exact decimal sum — its own shape, not EventWindows.tumblingCounts'
+    // exact cents sum — its own shape, not EventWindows.tumblingCounts'
     // 1-minute double-sum windows) runs as a real Structured Streaming
     // query (file source over the events parquet, AvailableNow semantics
     // via processAllAvailable, Complete mode to a memory sink) and must
@@ -106,7 +106,7 @@ object PipelineQueries extends QueryModule {
             .groupBy(window(col("ts"), "1 hour"), col("event_type"))
             .agg(
               count(lit(1)).as("n_events"),
-              sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
+              exactSum(col("value")).as("sum_value"))
             .select(unix_micros(col("window.start")).as("window_start_us"),
               col("event_type"), col("n_events"), col("sum_value"))
         }.orderBy("window_start_us", "event_type"),
@@ -589,7 +589,7 @@ object PipelineQueries extends QueryModule {
             .groupBy("c_mktsegment", "event_type")
             .agg(
               count(lit(1)).as("n_events"),
-              sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
+              exactSum(col("value")).as("sum_value"))
         }.orderBy("c_mktsegment", "event_type")
       },
       oracle = Some("""

@@ -887,12 +887,11 @@ object PretrainQueries extends QueryModule {
     // machinery into the published selection op. Scale: both LMs are
     // keyed token aggregates; the target LM and vocab total are
     // bounded (vocab-sized / 1-row) broadcasts; the per-doc sum is one
-    // keyed agg in DECIMAL(18,6) — no sort until the final bounded
+    // keyed agg, exact at scale 6 — no sort until the final bounded
     // top-k. Parity: ln-ratio rounds to 6 per token (Registry
-    // transcendental rule), decimal per-doc sums.
+    // transcendental rule), exact per-doc sums.
     "q172_dsir_weights" -> NamedQuery(
       fn = (s, d) => {
-        val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), col("source"), explode(split(trim(col("text")), "\\s+")).as("tok"))
         val rawCnt = toks.groupBy("tok").agg(count(lit(1)).as("c_raw"))
@@ -919,7 +918,7 @@ object PretrainQueries extends QueryModule {
         // a corpus-wide sort; semantics = row_number() <= 100 exactly
         tf.join(broadcast(lm), Seq("tok"))
           .groupBy("doc_id")
-          .agg(sum((col("tf") * col("lnr")).cast(dec6)).cast("double").as("logw"))
+          .agg(exactSum(col("tf") * col("lnr"), 6).as("logw"))
           .agg(expr("top_k_pairs(logw, doc_id, 100)").as("topk"))
           .select(posexplode(col("topk")).as(Seq("pos", "p")))
           .select((col("pos") + 1).cast("long").as("rnk"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** One named engine query: a Spark DataFrame program over the driver's
   * parquet tables plus (optionally) an equivalent DuckDB SQL oracle the
@@ -8,8 +8,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Oracle parity rules used throughout (so Spark and DuckDB agree
   * bit-for-bit):
-  *  - sums/avgs of doubles go through DECIMAL(18,2) casts (exact,
-  *    order-independent) and back to DOUBLE;
+  *  - sums/avgs of doubles are exact: the oracle sums
+  *    CAST(x AS DECIMAL(18,2)) and casts the total to DOUBLE; Spark sums
+  *    the same values as scaled longs (`exactSum`, `graft.expr.ExactSums`):
+  *    `cents(x, 2)` is the cast's unscaled long for every double (HALF_UP
+  *    on `Double.toString`, through Spark's own cast near a .5 tie or past
+  *    2^50; null for NaN, ±Inf and |x| ≥ 10^16), the long sum refuses with
+  *    a typed `ScaleGuardTrip` once count × max |term| could pass 2^62
+  *    (never a wrapped total), and the total goes long → DECIMAL(38,2) →
+  *    DOUBLE, the double the oracle's cast gives;
   *  - transcendental math (trig/exp/pow) is rounded to 6 decimals —
   *    JVM and libm may differ in the last ulp;
   *  - extracted integers (year, substring-casts) are cast to BIGINT to
@@ -110,15 +117,11 @@ object TempPaths {
 trait QueryModule {
   def queries: Seq[(String, NamedQuery)]
 
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.sum
-  import org.apache.spark.sql.types.DecimalType
-
-  /** The exact-decimal sum idiom from the parity rules above, shared so
-    * the recipe has ONE spelling: DECIMAL(18,2) per-term cast (exact,
-    * order-independent across any partitioning), decimal SUM, back to
-    * DOUBLE. DuckDB mirror: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE).
+  /** The exact-sum rule above, spelled once: `x` becomes the unscaled
+    * long of CAST(x AS DECIMAL(18,k)) (`cents`), the longs sum under the
+    * overflow guard, and the total turns into a double once per group.
+    * DuckDB mirror: CAST(SUM(CAST(x AS DECIMAL(18,k))) AS DOUBLE).
     */
-  protected def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  protected def dsum(c: Column): Column = sum(dec(c)).cast("double")
+  protected def exactSum(x: Column, k: Int = 2): Column =
+    graft.expr.ExactSums.sumOf(k, graft.expr.ExactSums.cents(x, k))
 }

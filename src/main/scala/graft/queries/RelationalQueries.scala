@@ -1,10 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
+import graft.expr.ExactSums
 import graft.ops.{RelationalOps, SkewOps}
 
 /** Relational operator coverage (SURVEY.md §2 classes A-H, F-G) expressed
@@ -13,6 +13,9 @@ import graft.ops.{RelationalOps, SkewOps}
   */
 object RelationalQueries extends QueryModule {
 
+  /** Σ price·(1 − discount), exact at scale 4: cents × (100 − cents). */
+  private def discountedRevenue: Column =
+    ExactSums.sumOf(4, ExactSums.cents(col("l_extendedprice"), 2), lit(100L) - ExactSums.cents(col("l_discount"), 2))
 
   def queries: Seq[(String, NamedQuery)] = Seq(
 
@@ -24,10 +27,9 @@ object RelationalQueries extends QueryModule {
         Tables.lineitem(s, d)
           .groupBy("l_returnflag", "l_linestatus")
           .agg(
-            dsum(col("l_quantity")).as("sum_qty"),
-            dsum(col("l_extendedprice")).as("sum_base_price"),
-            sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(12, 2)) - dec(col("l_discount"))))
-              .cast("double").as("sum_disc_price"),
+            exactSum(col("l_quantity")).as("sum_qty"),
+            exactSum(col("l_extendedprice")).as("sum_base_price"),
+            discountedRevenue.as("sum_disc_price"),
             count(lit(1)).as("count_order"))
           .withColumn("avg_qty", col("sum_qty") / col("count_order"))
           .orderBy("l_returnflag", "l_linestatus")
@@ -61,8 +63,7 @@ object RelationalQueries extends QueryModule {
           .groupBy("r_name")
           .agg(
             count(lit(1)).as("n_lines"),
-            sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(12, 2)) - dec(col("l_discount"))))
-              .cast("double").as("revenue"))
+            discountedRevenue.as("revenue"))
           .orderBy("r_name")
       },
       oracle = Some("""
@@ -89,7 +90,7 @@ object RelationalQueries extends QueryModule {
               .when(col("o_orderpriority") === "3-MEDIUM", "warm")
               .otherwise("cold"))
           .groupBy("order_year", "urgency")
-          .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
+          .agg(count(lit(1)).as("n_orders"), exactSum(col("o_totalprice")).as("total_price"))
           .orderBy("order_year", "urgency")
       },
       oracle = Some("""
@@ -200,7 +201,7 @@ object RelationalQueries extends QueryModule {
         val p = Tables.lineitem(s, d)
           .groupBy("l_returnflag")
           .pivot("l_linestatus", Seq("F", "O"))
-          .agg(dsum(col("l_quantity")))
+          .agg(exactSum(col("l_quantity")))
           .withColumnRenamed("F", "qty_F")
           .withColumnRenamed("O", "qty_O")
         p.na.fill(0.0, Seq("qty_F", "qty_O")).orderBy("l_returnflag")
@@ -225,7 +226,7 @@ object RelationalQueries extends QueryModule {
         a.unionByName(n)
           .withColumn("ship_year", year(col("l_shipdate")).cast("long"))
           .groupBy("ship_year")
-          .agg(count(lit(1)).as("n_lines"), dsum(col("l_quantity")).as("sum_qty"))
+          .agg(count(lit(1)).as("n_lines"), exactSum(col("l_quantity")).as("sum_qty"))
           .orderBy("ship_year")
       },
       oracle = Some("""
@@ -308,7 +309,7 @@ object RelationalQueries extends QueryModule {
       fn = (s, d) => {
         Tables.lineitem(s, d)
           .groupBy("l_suppkey")
-          .agg(count(lit(1)).as("n_lines"), dsum(col("l_quantity")).as("sum_qty"))
+          .agg(count(lit(1)).as("n_lines"), exactSum(col("l_quantity")).as("sum_qty"))
           .filter(col("n_lines") > 400)
           .orderBy("l_suppkey")
       },
@@ -404,7 +405,7 @@ object RelationalQueries extends QueryModule {
           .groupBy("measure")
           .agg(
             count(lit(1)).as("n"),
-            sum(dec(col("value"))).cast("double").as("sum_value"))
+            exactSum(col("value")).as("sum_value"))
           .orderBy("measure")
       },
       oracle = Some("""
@@ -490,7 +491,7 @@ object RelationalQueries extends QueryModule {
           .groupBy("o_orderpriority", "quartile")
           .agg(
             count(lit(1)).as("n_orders"),
-            dsum(col("o_totalprice")).as("sum_price"))
+            exactSum(col("o_totalprice")).as("sum_price"))
           .orderBy("o_orderpriority", "quartile")
       },
       oracle = Some("""
@@ -656,7 +657,7 @@ object RelationalQueries extends QueryModule {
         s.table("q89_orders").hint("merge")
           .join(s.table("q89_customer"), col("o_custkey") === col("c_custkey"))
           .groupBy("c_nationkey")
-          .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
+          .agg(count(lit(1)).as("n_orders"), exactSum(col("o_totalprice")).as("total_price"))
           .orderBy("c_nationkey")
       },
       oracle = Some("""
@@ -685,7 +686,7 @@ object RelationalQueries extends QueryModule {
           factKey = "l_orderkey", dimKey = "o_orderkey", saltBuckets = 8,
           saltCols = Seq("l_linenumber", "l_partkey", "l_suppkey"))
           .groupBy("o_orderpriority")
-          .agg(count(lit(1)).as("n_items"), dsum(col("l_extendedprice")).as("sum_price"))
+          .agg(count(lit(1)).as("n_items"), exactSum(col("l_extendedprice")).as("sum_price"))
           .orderBy("o_orderpriority")
       },
       oracle = Some("""
@@ -725,7 +726,7 @@ object RelationalQueries extends QueryModule {
             coalesce(col("c_status"), col("o_orderstatus")).as("status"),
             coalesce(col("c_price"), col("o_totalprice")).as("price"))
           .groupBy("status")
-          .agg(count(lit(1)).as("n_rows"), dsum(col("price")).as("sum_price"))
+          .agg(count(lit(1)).as("n_rows"), exactSum(col("price")).as("sum_price"))
           .orderBy("status")
       },
       oracle = Some("""
@@ -763,7 +764,7 @@ object RelationalQueries extends QueryModule {
               Seq(col("o_orderstatus")), Seq()),
             col("o_orderstatus"), col("o_orderpriority"))
           .agg(grouping_id().cast("long").as("gid"),
-            count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("sum_price"))
+            count(lit(1)).as("n_orders"), exactSum(col("o_totalprice")).as("sum_price"))
           .select(
             coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
             coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
@@ -800,7 +801,7 @@ object RelationalQueries extends QueryModule {
           .withColumn("rk", row_number().over(w).cast("long"))
           .filter(col("rk") <= 20)
           .select(col("o_orderpriority"), col("rk"), col("o_orderkey"),
-            dec(col("o_totalprice")).cast("double").as("o_totalprice"))
+            ExactSums.toDouble(ExactSums.cents(col("o_totalprice"), 2), 2).as("o_totalprice"))
           .orderBy("o_orderpriority", "rk")
       },
       oracle = Some("""

@@ -692,8 +692,7 @@ object SimilarityQueries extends QueryModule {
             max(when(col("sub") === 1, col("code"))).as("code_1"),
             max(when(col("sub") === 2, col("code"))).as("code_2"),
             max(when(col("sub") === 3, col("code"))).as("code_3"),
-            sum(col("d2").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-              .cast("double").as("qerr"))
+            exactSum(col("d2"), 6).as("qerr"))
           .orderBy("vec_id")
       },
       oracle = Some("""

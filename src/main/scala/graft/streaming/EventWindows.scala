@@ -123,7 +123,7 @@ object EventWindows {
     * form of q84's trailing window: 10-minute windows sliding every 2
     * minutes, so each event lands in exactly 5 windows. Unkeyed means a
     * single grouping key per window — safe because per-window state is
-    * ONE partial aggregate (count + decimal sum), not a row set, and the
+    * ONE partial aggregate (count + cents sum), not a row set, and the
     * 10-minute watermark bounds the set of open windows. Same Append vs
     * Complete contract as slidingCounts: Append is the production path
     * (each window emits once when the watermark passes its end, state
@@ -136,8 +136,7 @@ object EventWindows {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "10 minutes", "2 minutes"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("sum_value"))
+        graft.expr.ExactSums.sumOf(2, graft.expr.ExactSums.cents(col("value"), 2)).as("sum_value"))
       .select(col("window.start").as("window_start"), col("n_events"), col("sum_value"))
 
   /** Stream-static enrichment: join the event stream against a static

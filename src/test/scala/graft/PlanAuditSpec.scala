@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{Round, Sin}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Round, Sin}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests (SURVEY.md §4): the physical plans that
@@ -27,6 +30,24 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"))
     // lineitem scan reads only the 3 needed columns
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_extendedprice:double,l_discount:double>"))
+  }
+
+  test("q01 sums scaled longs: its partial HashAggregate holds cents, no decimal(18,2) cast") {
+    val exec = SparkEntry.queries("q01_pricing_summary")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val partials = exec.collect {
+      case h: HashAggregateExec if h.aggregateExpressions.forall(_.mode == Partial) => h
+    }
+    assert(partials.size === 1, exec.toString)
+    val exprs = partials.head.expressions
+    assert(exprs.exists(_.exists(_.isInstanceOf[graft.expr.Cents])))
+    assert(!exprs.exists(_.exists {
+      case c: Cast => c.dataType.isInstanceOf[DecimalType]
+      case _ => false
+    }), partials.head.toString)
+    assert(!partials.head.toString.contains("decimal(18,2)"))
   }
 
   test("q05 computes the anchor in a single window shuffle over a pruned scan") {
