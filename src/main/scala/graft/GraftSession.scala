@@ -3,22 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-import graft.expr.GraftFunctions
-import graft.plans.{AsOfJoinStrategy, DeferProjectPastSort}
+import graft.expr.{GraftExtensions, GraftFunctions}
+import graft.plans.AsOfJoinStrategy
 
 /** The one place a graft session is built and made ready.
   *
   * `create` yields a session with the engine's required configs
   * (ns-timestamp reads, UTC, AQE, R-like non-ANSI semantics and the
   * `GraftExtensions` extension — see [[Tables.sessionConfigs]]), so its
-  * native functions, as-of strategy and `DeferProjectPastSort` rule are
-  * present from the start. `install` adds the same three to a session
-  * built elsewhere, so an as-of join plans the same way on either;
-  * `SparkEntry.queries` calls it before every query, so a caller-supplied
-  * session without the extension still works; a caller that runs SQL
-  * on such a session calls it once itself. `registerTables` exposes the
-  * testdata as SQL views so `spark.sql("SELECT ... FROM lineitem")`
-  * works directly.
+  * native functions, as-of strategy and optimizer rules
+  * (`GraftExtensions.optimizerRules`) are present from the start.
+  * `install` adds the same to a session built elsewhere, so a query
+  * plans the same way on either; `SparkEntry.queries` calls it before
+  * every query, so a caller-supplied session without the extension
+  * still works; a caller that runs SQL on such a session calls it once
+  * itself. `registerTables` exposes the testdata as SQL views so
+  * `spark.sql("SELECT ... FROM lineitem")` works directly.
   */
 object GraftSession {
 
@@ -49,10 +49,11 @@ object GraftSession {
   }
 
   /** Register each native function `spark` lacks, add the as-of
-    * strategy if its planner has none and `DeferProjectPastSort` if its
-    * optimizer has none. A session built with `GraftExtensions` already
-    * has all three, so this changes nothing there — in particular it
-    * never replaces an injected function. Idempotent.
+    * strategy if its planner has none and each of
+    * `GraftExtensions.optimizerRules` its optimizer lacks. A session
+    * built with `GraftExtensions` already has them all, so this changes
+    * nothing there — in particular it never replaces an injected
+    * function. Idempotent.
     */
   def install(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -62,9 +63,9 @@ object GraftSession {
     }
     if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules ++ spark.experimental.extraOptimizations
-    if (!rules.contains(DeferProjectPastSort))
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ DeferProjectPastSort
+    val present = spark.sessionState.optimizer.extendedOperatorOptimizationRules ++ spark.experimental.extraOptimizations
+    val missing = GraftExtensions.optimizerRules.filterNot(present.contains)
+    if (missing.nonEmpty) spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ missing
   }
 
   /** Register every testdata table as a temp view named after itself. */

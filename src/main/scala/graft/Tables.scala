@@ -1,8 +1,11 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver's parquet test tables (TESTDATA.md).
   *
@@ -47,7 +50,17 @@ object Tables {
     "embeddings" -> Seq("vec_id", "embedding", "label"))
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = stampOf(spark, path) match {
+      case Some((qualified, stamp)) => schemas.get(qualified) match {
+        case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val inferred = spark.read.parquet(path)
+          schemas.put(qualified, (stamp, inferred.schema))
+          inferred
+      }
+      case None => spark.read.parquet(path)
+    }
     requiredColumns.get(name).foreach { req =>
       val have = df.columns.toSet
       val missing = req.filterNot(have)
@@ -59,6 +72,41 @@ object Tables {
     }
     df
   }
+
+  /** The session settings that change the schema parquet infers. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** What an inferred schema depends on: (name, size, mtime) of the file
+    * or of every file under the directory, and the session's
+    * [[schemaConfs]].
+    */
+  private type Stamp = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** Inferred schema per qualified path, with the stamp it was inferred
+    * under: inference runs a Spark job over the parquet footers, so
+    * [[load]] infers once per file state and then reads with the schema.
+    */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, (Stamp, StructType)]
+
+  /** The qualified path and stamp of `path`, or None where the path does
+    * not name a file or directory (missing, a glob), which [[load]] then
+    * reads as before, inferring its schema.
+    */
+  private def stampOf(spark: SparkSession, path: String): Option[(String, Stamp)] = Try {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.getFileStatus(p)
+    val files = if (!root.isDirectory) Seq(root) else {
+      val it = fs.listFiles(root.getPath, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).toSeq
+    }
+    val stamp = (files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted,
+      schemaConfs.map(spark.conf.getOption))
+    (root.getPath.toString, stamp)
+  }.toOption
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")
@@ -174,8 +222,8 @@ object Tables {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     // deployment-grade extension loading: native functions, the as-of
-    // strategy and DeferProjectPastSort (GraftSession.install adds the
-    // same three to a session built without it)
+    // strategy and the optimizer rules (GraftSession.install adds the
+    // same to a session built without it)
     "spark.sql.extensions" -> "graft.expr.GraftExtensions",
     // The reference's R semantics are permissive (NaN-guards, NA casts —
     // SURVEY.md §2.I4/I10); ANSI hard-errors would change behavior.

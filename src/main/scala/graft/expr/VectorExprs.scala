@@ -98,9 +98,8 @@ object GraftFunctions {
   * the deployment path: any session built with
   * `spark.sql.extensions=graft.expr.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) resolves every function in
-  * [[GraftFunctions.table]], plans the as-of join and defers row-wise
-  * projections past global sorts (`graft.plans.DeferProjectPastSort`)
-  * with no imperative call.
+  * [[GraftFunctions.table]], plans the as-of join and runs every rule in
+  * [[GraftExtensions.optimizerRules]] with no imperative call.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -109,10 +108,23 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     GraftFunctions.table.foreach { case (name, cls, builder) =>
       e.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name, cls), builder))
     }
-    // row-wise projections run after a global sort's range exchange,
-    // once, instead of twice below it (in the operator-optimization batch)
-    e.injectOptimizerRule(_ => graft.plans.DeferProjectPastSort)
+    // in the operator-optimization batch
+    GraftExtensions.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
     // physical planning for AsOfJoinPlan (graft.plans.AsOfJoinOps)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.catalyst.rules.Rule
+
+  /** graft's optimizer rules, spelled once for [[GraftExtensions]] and
+    * `graft.GraftSession.install`: row-wise projections run after a
+    * global sort's range exchange, once, instead of twice below it
+    * (`graft.plans.DeferProjectPastSort`), and `round` on doubles skips
+    * its per-row `BigDecimal` ([[ExactRoundRule]]). Each is always on;
+    * `spark.sql.optimizer.excludedRules` switches one off by class name.
+    */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(graft.plans.DeferProjectPastSort, ExactRoundRule)
 }

@@ -37,8 +37,9 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.{PROJECT, SORT}
   * `length(text)` or `element_at(arr, 1)` stays below the sort.
   * Idempotent: after a rewrite the sort's child projects attributes only.
   *
-  * Injected by `graft.expr.GraftExtensions` and added by
-  * `graft.GraftSession.install` when absent; switch it off with
+  * One of `graft.expr.GraftExtensions.optimizerRules`: injected by the
+  * extension and added by `graft.GraftSession.install` when absent;
+  * switch it off with
   * `spark.sql.optimizer.excludedRules=graft.plans.DeferProjectPastSort`.
   */
 object DeferProjectPastSort extends Rule[LogicalPlan] {

@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.expr.ExactRound
+
 /** Plan-shape regression tests (SURVEY.md §4): the physical plans that
   * make these queries scale must survive refactors — broadcast joins for
   * dims and grids, pushed filters + pruned scans, window top-k pushdown.
@@ -80,10 +82,14 @@ class PlanAuditSpec extends AnyFunSuite {
     val range = exec.collectFirst { case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
     assert(range.map(_.child.output.map(_.name).toSet) ===
       Some(Set("l_orderkey", "l_linenumber", "l_quantity", "l_tax", "l_discount")))
-    def math(n: SparkPlan) = n.expressions.exists(_.exists(e => e.isInstanceOf[Round] || e.isInstanceOf[Sin]))
+    def holds(n: SparkPlan, c: Class[_]) = n.expressions.exists(_.exists(c.isInstance))
+    def math(n: SparkPlan) = Seq(classOf[Round], classOf[ExactRound], classOf[Sin]).exists(holds(n, _))
     val sort = exec.collectFirst { case s: SortExec => s }.get
     assert(!sort.exists(math), s"round/SIN below the Sort:\n$exec")
     assert(exec.exists(n => n.isInstanceOf[ProjectExec] && math(n) && n.exists(_ eq sort)))
+    // ExactRoundRule: every round(_, 6) runs as exact_round, above the Sort
+    assert(!exec.exists(holds(_, classOf[Round])), s"a Round is left:\n$exec")
+    assert(exec.exists(n => holds(n, classOf[ExactRound]) && n.exists(_ eq sort)), s"no exact_round above the Sort:\n$exec")
   }
 
   test("q37 top-k runs as partial+final native aggregate (k-sized buffers, no pair sort)") {

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -129,5 +133,78 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
     assert(r.getLong(2) > 0)
     // sanity: epoch micros in a plausible range (2000-01-01 .. 2100-01-01)
     assert(r.getLong(0) > 946684800000000L && r.getLong(1) < 4102444800000000L)
+  }
+
+  /** The Spark jobs `body` starts. Listener events arrive in order, so
+    * the jobs counted are those between a marker job run before `body`
+    * and one run after it.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    def next(): String = {
+      val d = seen.poll(60, TimeUnit.SECONDS)
+      assert(d != null, "listener events stopped arriving")
+      d
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-before")
+      while (next() != "jobs-before") {}
+      body
+      marker("jobs-after")
+      Iterator.continually(next()).takeWhile(_ != "jobs-after").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `Tables.load` and the number of jobs it started. */
+  private def loadJobs(s: SparkSession, dir: String, name: String): (DataFrame, Int) = {
+    var df: DataFrame = null
+    val jobs = jobsDuring { df = Tables.load(s, dir, name) }
+    (df, jobs)
+  }
+
+  test("load infers a schema once per file state and schema settings; a rewrite or a flipped nanosAsLong infers again") {
+    val dir = Files.createTempDirectory("graft_schema_memo")
+    try {
+      val d = dir.toString
+      // a directory of part files
+      spark.range(5).selectExpr("id AS a").coalesce(1).write.parquet(s"$d/t.parquet")
+      assert(loadJobs(spark, d, "t")._2 > 0)
+      val (again, jobs) = loadJobs(spark, d, "t")
+      assert(jobs === 0)
+      assert(again.columns.toSeq === Seq("a") && again.count() === 5L)
+      spark.range(5).selectExpr("id AS a", "id * 2 AS b").coalesce(1)
+        .write.mode("overwrite").parquet(s"$d/t.parquet")
+      val (rewritten, rewriteJobs) = loadJobs(spark, d, "t")
+      assert(rewriteJobs > 0 && rewritten.columns.toSeq === Seq("a", "b"))
+      assert(loadJobs(spark, d, "t")._2 === 0)
+
+      // a single file, rewritten in place
+      def part(table: String) = Files.list(dir.resolve(table)).filter(_.toString.endsWith(".parquet")).findFirst().get
+      spark.range(3).selectExpr("id AS c").coalesce(1).write.parquet(s"$d/src.parquet")
+      Files.copy(part("t.parquet"), dir.resolve("f.parquet"))
+      assert(loadJobs(spark, d, "f")._2 > 0)
+      assert(loadJobs(spark, d, "f")._2 === 0)
+      Files.copy(part("src.parquet"), dir.resolve("f.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      val (replaced, replaceJobs) = loadJobs(spark, d, "f")
+      assert(replaceJobs > 0 && replaced.columns.toSeq === Seq("c") && replaced.count() === 3L)
+
+      // the same files under another nanosAsLong
+      val flipped = spark.newSession()
+      flipped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      assert(loadJobs(flipped, d, "t")._2 > 0)
+      assert(loadJobs(flipped, d, "t")._2 === 0)
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    }
   }
 }

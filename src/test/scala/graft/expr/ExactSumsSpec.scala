@@ -42,9 +42,7 @@ class ExactSumsSpec extends AnyFunSuite {
       Seq.fill(3000)(rng.nextInt(10000000) / 100.0) ++
       Seq.fill(1000)(rng.nextInt(100000000) / 1000.0)
 
-  private def doubles(xs: Seq[Double]): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(xs.map(Row(_)): _*),
-      StructType(Seq(StructField("x", DoubleType))))
+  private def doubles(xs: Seq[Double]): DataFrame = TestSpark.doubles(spark, xs)
 
   for (k <- Seq(2, 6)) test(s"cents(x, $k) is the unscaled CAST(x AS DECIMAL(18,$k)) on ties, specials and random doubles") {
     val xs = ties(k) ++ specials(k) ++ randoms

@@ -84,14 +84,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // spark.sql.extensions applies GraftExtensions too, so a
     // withExtensions session holds each injection twice
     withNewSession(identity) { spark =>
-      def copies = (spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
-        spark.experimental.extraOptimizations).count(_ == DeferProjectPastSort)
-      assert(copies === 1)
+      def copies = GraftExtensions.optimizerRules.map(r => (spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
+        spark.experimental.extraOptimizations).count(_ == r))
+      assert(GraftExtensions.optimizerRules.contains(DeferProjectPastSort))
+      assert(copies.forall(_ == 1), copies)
       val extra = spark.experimental.extraOptimizations
       GraftSession.install(spark)
       GraftSession.install(spark)
       assert(spark.experimental.extraOptimizations === extra)
-      assert(copies === 1)
+      assert(copies.forall(_ == 1), copies)
     }
   }
 
