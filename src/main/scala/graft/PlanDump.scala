@@ -31,7 +31,7 @@ object PlanDump {
       sb.append(s"# $name — $tag (sf: $sfDir)\n\n")
       sb.append(plan)
       inners.zipWithIndex.foreach { case (inner, i) =>
-        sb.append(s"\n\n## inner plan ${i + 1} (pre-checkpoint, as executed)\n\n")
+        sb.append(s"\n\n## inner plan ${i + 1} (pre-checkpoint, AQE's initial plan)\n\n")
         sb.append(inner)
       }
       sb.append("\n")

@@ -42,8 +42,9 @@ case class JaroWinkler(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Byte-mode Jaro-Winkler: the identical pinned algorithm run over the
-  * raw UTF-8 BYTES instead of UTF-16 code units. DuckDB's
+/** Byte-mode Jaro-Winkler: the identical pinned algorithm (one core,
+  * `JaroWinklerImpl.jaroWinkler`) run over the raw UTF-8 BYTES instead
+  * of UTF-16 code units. DuckDB's
   * `jaro_winkler_similarity` is byte-based, so this variant is
   * bit-exact with the oracle on ARBITRARY text, not just ASCII —
   * closing PARITY rule 9's boundary ('héllo'/'hello' = 0.84…01 on
@@ -72,14 +73,28 @@ case class JaroWinklerBytes(left: Expression, right: Expression)
 
 object JaroWinklerImpl {
 
-  /** See JaroWinkler scaladoc for the pinned semantics. One scratch
-    * boolean array pass per call; O(l1·window) matching loop.
-    */
+  /** Jaro-Winkler over UTF-16 code units (see JaroWinkler). */
   def similarity(lu: UTF8String, ru: UTF8String): Double = {
     val s1 = lu.toString
     val s2 = ru.toString
-    val l1 = s1.length
-    val l2 = s2.length
+    jaroWinkler(s1.length, s2.length, (i, j) => s1.charAt(i) == s2.charAt(j))
+  }
+
+  /** Jaro-Winkler over UTF-8 bytes (see JaroWinklerBytes). For
+    * pure-ASCII input it equals `similarity` by construction.
+    */
+  def similarityBytes(lu: UTF8String, ru: UTF8String): Double = {
+    val s1 = lu.getBytes
+    val s2 = ru.getBytes
+    jaroWinkler(s1.length, s2.length, (i, j) => s1(i) == s2(j))
+  }
+
+  /** The pinned algorithm (see JaroWinkler's scaladoc) over two symbol
+    * sequences of lengths `l1`/`l2`, where `same(i, j)` compares symbol
+    * i of the first with symbol j of the second. One scratch boolean
+    * array pass per call; O(l1·window) matching loop.
+    */
+  private def jaroWinkler(l1: Int, l2: Int, same: (Int, Int) => Boolean): Double = {
     if (l1 == 0 || l2 == 0) return 0.0
     val w = math.max(0, math.max(l1, l2) / 2 - 1)
     val m1 = new Array[Boolean](l1)
@@ -91,7 +106,7 @@ object JaroWinklerImpl {
       var j = math.max(0, i - w)
       var done = false
       while (j <= hi && !done) {
-        if (!m2(j) && s1.charAt(i) == s2.charAt(j)) {
+        if (!m2(j) && same(i, j)) {
           m1(i) = true; m2(j) = true; m += 1; done = true
         }
         j += 1
@@ -106,7 +121,7 @@ object JaroWinklerImpl {
     while (i1 < l1) {
       if (m1(i1)) {
         while (!m2(j2)) j2 += 1
-        if (s1.charAt(i1) != s2.charAt(j2)) mis += 1
+        if (!same(i1, j2)) mis += 1
         j2 += 1
       }
       i1 += 1
@@ -116,59 +131,7 @@ object JaroWinklerImpl {
     var jaro = (md / l1 + md / l2 + (md - t) / md) / 3.0
     if (jaro > 0.7) {
       var p = 0
-      while (p < 4 && p < l1 && p < l2 && s1.charAt(p) == s2.charAt(p)) p += 1
-      jaro = jaro + 0.1 * p * (1.0 - jaro)
-    }
-    jaro
-  }
-
-  /** Byte-alphabet twin of `similarity` (see JaroWinklerBytes): same
-    * greedy matching window, integer-halved transpositions, 0.7 boost
-    * threshold, prefix cap 4, same IEEE association order — only the
-    * symbol alphabet changes (UTF-8 bytes, DuckDB's native reading).
-    * For pure-ASCII input the two are identical by construction.
-    */
-  def similarityBytes(lu: UTF8String, ru: UTF8String): Double = {
-    val s1 = lu.getBytes
-    val s2 = ru.getBytes
-    val l1 = s1.length
-    val l2 = s2.length
-    if (l1 == 0 || l2 == 0) return 0.0
-    val w = math.max(0, math.max(l1, l2) / 2 - 1)
-    val m1 = new Array[Boolean](l1)
-    val m2 = new Array[Boolean](l2)
-    var m = 0
-    var i = 0
-    while (i < l1) {
-      val hi = math.min(l2 - 1, i + w)
-      var j = math.max(0, i - w)
-      var done = false
-      while (j <= hi && !done) {
-        if (!m2(j) && s1(i) == s2(j)) {
-          m1(i) = true; m2(j) = true; m += 1; done = true
-        }
-        j += 1
-      }
-      i += 1
-    }
-    if (m == 0) return 0.0
-    var mis = 0
-    var i1 = 0
-    var j2 = 0
-    while (i1 < l1) {
-      if (m1(i1)) {
-        while (!m2(j2)) j2 += 1
-        if (s1(i1) != s2(j2)) mis += 1
-        j2 += 1
-      }
-      i1 += 1
-    }
-    val t = mis / 2
-    val md = m.toDouble
-    var jaro = (md / l1 + md / l2 + (md - t) / md) / 3.0
-    if (jaro > 0.7) {
-      var p = 0
-      while (p < 4 && p < l1 && p < l2 && s1(p) == s2(p)) p += 1
+      while (p < 4 && p < l1 && p < l2 && same(p, p)) p += 1
       jaro = jaro + 0.1 * p * (1.0 - jaro)
     }
     jaro

@@ -41,15 +41,10 @@ object FieldControlPipeline {
     // football rows themselves don't project influence (Field Control.R:230)
     val withBall = CoveragePipeline.withBall(Standardize.directionStandardize(tracking))
       .filter(col("team") =!= "football")
-    val k = Kinematics.withProjection(Kinematics.withVelocity(withBall))
+    val projected = Kinematics.withProjection(Kinematics.withVelocity(withBall))
       .withColumn("dist_from_ball",
         Kinematics.dist(col("x"), col("y"), col("xFootball"), col("yFootball")))
-      .withColumn("r", Kinematics.radiusOfInfluence(col("dist_from_ball")))
-      // Scaling axes exactly as the reference (Field Control.R:250,
-      // 304-311): S = diag(r·(1+s_ratio), r·(1−s_ratio)) with the
-      // UNSQUARED speed ratio s/13 and no halving.
-      .withColumn("sx", col("r") * (lit(1.0) + col("s_ratio")))
-      .withColumn("sy", col("r") * (lit(1.0) - col("s_ratio")))
+    val k = Kinematics.withAxes(projected, col("dist_from_ball"))
       // Field Control.R:363-367 flips the HOME team to −1 so that a
       // home-dominated cell has control_sum → −∞ and control → 1.
       .withColumn("sgn", when(col("team") === "home", -1.0).otherwise(1.0))

@@ -49,7 +49,7 @@ object TrackingOps {
     * frameId, so the whole op is ONE exchange + ONE sort —
     *   rn        = row position in the timeline,
     *   brk       = 1 where the streak resets (s not above its lag —
-    *               null-speed rows reset too, matching the scan form),
+    *               null-speed rows reset too),
     *   start_rn  = running max of rn at reset rows = current island's
     *               first position,
     *   streak    = rn − start_rn + 1, and the answer is max(streak) —
@@ -67,48 +67,6 @@ object TrackingOps {
       .withColumn("streak", col("rn") - col("start_rn") + 1)
       .groupBy("gameId", "playId", "nflId")
       .agg(max(col("streak")).as("longest_accel_streak"))
-  }
-
-  /** The same operator through §1.1's grouped-scan escape hatch, kept
-    * as the pattern demonstration (and spec cross-check) for operators
-    * that genuinely have no window form: a SECONDARY SORT
-    * (hash-repartition on the group key, sortWithinPartitions on
-    * (key, frameId) — Spark's sort spills to disk) followed by a
-    * streaming boundary scan with O(1) state, so an unbounded timeline
-    * never materializes in one task's heap. For THIS operator the
-    * windows form above is equivalent (TrackingOpsSpec pins both forms
-    * row-identical on 50k-frame shuffled timelines) and preferred —
-    * it stays inside Catalyst/codegen and needs no Dataset encoder.
-    */
-  def longestAccelStreakScan(tracking: DataFrame)(implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import spark.implicits._
-    tracking
-      .select(col("gameId"), col("playId"), col("nflId"), col("frameId"), col("s"))
-      .repartition(col("gameId"), col("playId"), col("nflId"))
-      .sortWithinPartitions("gameId", "playId", "nflId", "frameId")
-      .as[(Long, Long, Long, Int, Double)]
-      .mapPartitions { it =>
-        // rows arrive grouped and frame-ordered; each next() consumes
-        // exactly one group off the shared buffered iterator
-        val in = it.buffered
-        new Iterator[(Long, Long, Long, Int)] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): (Long, Long, Long, Int) = {
-            val (g, p, n, _, s0) = in.next()
-            var prevS = s0
-            var run = 1
-            var best = 1
-            while (in.hasNext && { val h = in.head; h._1 == g && h._2 == p && h._3 == n }) {
-              val sv = in.next()._5
-              run = if (sv > prevS) run + 1 else 1
-              if (run > best) best = run
-              prevS = sv
-            }
-            (g, p, n, best)
-          }
-        }
-      }
-      .toDF("gameId", "playId", "nflId", "longest_accel_streak")
   }
 
   /** Derived per-frame speed from positions (yd/s at `hz` frames/sec) —

@@ -23,12 +23,6 @@ object DedupOps {
   val SignatureCount = 8
   val RowsPerBand = 2
 
-  /** First 60 bits of md5(s) as a non-negative long — the hash-aggregable
-    * minhash primitive (15 hex digits < 2^60, so the cast is exact).
-    */
-  private def md5Long(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Carter–Wegman double hashing: the k minhash functions are
     * h_i(tok) = (h1 + i·h2) mod (2^61−1), where h1/h2 are the
     * first/second 60-bit halves of ONE md5 (hex digits 1-15 and
@@ -50,7 +44,7 @@ object DedupOps {
   /** toks + `__h1`/`__h2` projected ONCE (one md5 per row; seeds then
     * cost only long arithmetic).
     */
-  private def withTokenHashes(toks: DataFrame): DataFrame =
+  private[graft] def withTokenHashes(toks: DataFrame): DataFrame =
     toks.withColumn("__md5", md5(col("tok")))
       .withColumn("__h1", h60(col("__md5"), 1))
       .withColumn("__h2", h60(col("__md5"), 17))
@@ -65,34 +59,15 @@ object DedupOps {
     docs.select((scopeCols :+ "doc_id").map(col) :+
       explode(array_distinct(split(trim(col(textCol)), "\\s+"))).as("tok"): _*)
 
-  /** k numeric-min signatures per doc: min(h1 + seed·h2). */
-  def minhashSignatures(toks: DataFrame, k: Int, scopeCols: Seq[String])(implicit s: SparkSession): DataFrame = {
-    require(k <= 8, s"k=$k: seeds past 7 overflow h1 + seed*h2 beyond 2^63")
-    val seeds = s.range(k.toLong).select(col("id").as("seed"))
-    withTokenHashes(toks).crossJoin(broadcast(seeds))
-      .groupBy((scopeCols ++ Seq("doc_id", "seed")).map(col): _*)
-      .agg(min((col("__h1") + col("seed") * col("__h2")) % MersennePrime61).as("mh"))
-  }
-
-  /** LSH bands of `rowsPerBand` signatures → one band_hash per (doc, band).
-    * The decimal renderings are '#'-separated (variable width, unlike the
-    * old fixed-width hex concat) so distinct (min, max) pairs can't
-    * collide on concatenation.
-    */
-  def lshBands(sig: DataFrame, rowsPerBand: Int, scopeCols: Seq[String]): DataFrame =
-    sig.withColumn("band", expr(s"seed div $rowsPerBand"))
-      .groupBy((scopeCols ++ Seq("doc_id", "band")).map(col): _*)
-      .agg(md5(concat(min(col("mh")).cast("string"), lit("#"),
-        max(col("mh")).cast("string"))).as("band_hash"))
-
-  /** Fused [[minhashSignatures]]+[[lshBands]]: all k signature mins as
+  /** MinHash band hashes: all k signature mins as
     * agg columns of ONE groupBy (map-side partial combine, no k× row
     * fan-out), band hashes derived with least/greatest (band min/max
     * over `rowsPerBand` signature columns), then unpivoted to the same
     * (scope…, doc_id, band, band_hash) long form. One keyed shuffle
     * carrying |docs| rows instead of two carrying k·|docs| — the shape
-    * that holds at 100 TB. Semantics identical to the two-step path
-    * (DedupRecallSpec pins the equivalence).
+    * that holds at 100 TB. Semantics identical to the two-step
+    * signatures-then-bands reference in test scope (DedupRecallSpec pins
+    * the equivalence).
     */
   def bandHashes(toks: DataFrame, k: Int, rowsPerBand: Int, scopeCols: Seq[String]): DataFrame =
     bandHashesFromWide(minhashSignaturesWide(toks, k, scopeCols), k, rowsPerBand, scopeCols)
@@ -101,9 +76,8 @@ object DedupOps {
     * (scope…, doc_id, mh0..mh{k-1}). The map-side-combining wide form
     * behind [[bandHashes]], exposed so a query that needs BOTH the band
     * hashes and the per-seed signatures (q148's estimator audit)
-    * computes the aggregate once instead of paying [[minhashSignatures]]'
-    * k× row fan-out a second time. `mh{i}` here is bit-identical to the
-    * long form's `mh` at `seed = i` (same expression, same groups).
+    * computes the aggregate once instead of paying a per-seed long
+    * form's k× row fan-out a second time.
     */
   def minhashSignaturesWide(toks: DataFrame, k: Int, scopeCols: Seq[String]): DataFrame = {
     require(k <= 8, s"k=$k: seeds past 7 overflow h1 + seed*h2 beyond 2^63")
@@ -263,15 +237,15 @@ object DedupOps {
     * derivation, five consumers, instead of five hand-copied pipelines.
     *
     * Resource discipline: the token table is persisted ONLY for the
-    * duration of this call — the returned edge frame is EAGERLY
-    * materialized (localCheckpoint) while the tokens are hot, then the
-    * tokens are unpersisted in a finally. Callers get a compact,
-    * lineage-free edge table they can branch over as many times as they
-    * like (degree aggregates, wedge joins, label propagation rounds)
-    * with no recomputation and no persist left behind for a harness to
-    * clean. The eager action inside the op is the price of that pairing
-    * — the same trade duplicateClusters makes for its convergence
-    * counts, and it is timed inside the query that calls it.
+    * duration of this call (CacheScope.withPersisted) — the returned
+    * edge frame is EAGERLY materialized (localCheckpoint) while the
+    * tokens are hot, then the tokens are unpersisted. Callers get a
+    * compact, lineage-free edge table they can branch over as many
+    * times as they like (degree aggregates, wedge joins, label
+    * propagation rounds) with no recomputation and no persist left
+    * behind for a harness to clean. The eager action inside the op is
+    * the price of that pairing, and it is timed inside the query that
+    * calls it.
     *
     * At 100 TB: every stage is keyed (doc_id / band bucket / pair) —
     * the only all-pairs-shaped step is the band-bucket self-join, whose
@@ -281,45 +255,46 @@ object DedupOps {
     */
   def neardupEdges(docs: DataFrame, textCol: String, scopeCols: Seq[String], threshold: Double)
                   (implicit s: SparkSession): DataFrame = {
-    val toks = tokenSet(docs, textCol, scopeCols).persist()
-    try {
-      val bands = bandHashes(toks, SignatureCount, RowsPerBand, scopeCols)
-      val candidates = candidatePairs(bands, scopeCols)
-      val edges = jaccardExploded(toks, candidates)
+    val toks = tokenSet(docs, textCol, scopeCols)
+    CacheScope.withPersisted(toks) {
+      val candidates = candidatePairs(bandHashes(toks, SignatureCount, RowsPerBand, scopeCols), scopeCols)
+      jaccardExploded(toks, candidates)
         .filter(col("jacc") >= threshold)
         .select("d1", "d2", "jacc")
-      // expose the pre-checkpoint plan (the LSH pipeline the checkpoint
-      // hides behind a Scan ExistingRDD) for plan specs and graft.Plans
-      CacheScope.record(edges.queryExecution)
-      edges.localCheckpoint(true)
-    } finally toks.unpersist(false)
+    }
   }
+
+  /** `pairs` (d1, d2) as undirected edges (src, dst): one generator
+    * emits every pair in both directions, so the pair input is read
+    * once — a union of two renamed branches would plan it twice. The
+    * Spark twin of the oracles' `undirectedEdgesSql`.
+    */
+  def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(inline(array(
+      struct(col("d1").as("src"), col("d2").as("dst")),
+      struct(col("d2").as("src"), col("d1").as("dst")))))
 
   /** Duplicate clusters from a near-dup pair list: connected components
     * by iterative min-label propagation (each doc adopts the smallest
-    * doc_id reachable so far; converges in O(component diameter)
-    * rounds — near-dup clusters are dense, so a handful). Each round is
-    * two keyed shuffles; intermediate frames are localCheckpoint-ed so
-    * the lineage doesn't grow with iterations (the classic iterative-
-    * algorithm hazard on Spark at scale).
+    * doc_id reachable so far). Labels only ever fall, so the rounds
+    * reach the fixpoint after at most diameter + 1 rounds; the loop runs
+    * until a round changes nothing, with no round budget (Kiveris et
+    * al., SoCC 2014, give variants whose rounds are polylogarithmic in
+    * the vertex count instead). Each
+    * round is two keyed shuffles; the edge table and every round's
+    * labels are localCheckpoint-ed so the lineage doesn't grow with
+    * iterations (the classic iterative-algorithm hazard on Spark at
+    * scale).
     *
     * Returns (doc_id, cluster) where cluster = min doc_id of the
     * component; docs absent from `pairs` are their own cluster only if
     * included via `allDocs`.
     */
-  def duplicateClusters(pairs: DataFrame, allDocs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // Checkpoint the (expensive) pair pipeline ONCE, then mirror the
-    // checkpointed result — a union of two live branches would compute
-    // the whole upstream pipeline twice (no exchange reuse across the
-    // renamed branches). Lazy checkpoints: the plan is cut (lineage
-    // stays flat across iterations) but materialization rides on the
-    // next action instead of costing one of its own.
-    val p = pairs.select(col("d1").as("src"), col("d2").as("dst")).localCheckpoint(false)
-    val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    // only docs that appear in a pair need the iteration; the rest are
-    // their own cluster by definition (usually the large majority)
-    val pairedDocs = edges.select(col("src").as("doc_id")).distinct().localCheckpoint(false)
+  def duplicateClusters(pairs: DataFrame, allDocs: DataFrame): DataFrame = {
+    // the one edge table every round joins, cut from the (expensive)
+    // pair pipeline; a lazy checkpoint, so the first round's count
+    // materializes it instead of a job of its own
+    val edges = undirected(pairs).localCheckpoint(false)
     // one min-label round: each doc adopts min(own, neighbors') cluster;
     // lazy-checkpointed so lineage stays flat (materialized by the next
     // convergence-count action downstream)
@@ -344,10 +319,12 @@ object DedupOps {
         .agg(min(col("cand")).as("cluster"), min(col("old")).as("old_cluster"))
         .localCheckpoint(false)
     }
-    var labels = pairedDocs.select(col("doc_id"), col("doc_id").as("cluster"))
-    var converged = false
-    var round = 0
-    while (!converged && round < maxIter) {
+    // only docs that appear in a pair need the iteration; the rest are
+    // their own cluster by definition (usually the large majority)
+    var labels = edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cluster"))
+    var changed = 1L
+    while (changed > 0) {
       // TWO propagation rounds per driver action: the count is the
       // per-round fixed cost (job launch + full scan), and min-label
       // propagation is monotone, so "the second round changed nothing"
@@ -356,20 +333,11 @@ object DedupOps {
       // round 16 and measured SLOWER — the extra per-action round costs
       // more than the saved count job.)
       val step2 = propagate(propagate(labels))
-      round += 2
-      val changed = step2.filter(col("cluster") =!= col("old_cluster")).count()
-      converged = changed == 0
+      changed = step2.filter(col("cluster") =!= col("old_cluster")).count()
       labels = step2.select("doc_id", "cluster")
     }
-    if (!converged)
-      // labels are WRONG for any component whose diameter exceeds the
-      // round budget (one component splits into several clusters) —
-      // say so loudly instead of letting the caller chase a silent
-      // mismatch downstream
-      System.err.println(s"[duplicateClusters] WARNING: not converged after $round rounds; " +
-        "components wider than the budget are split — raise maxIter")
     val isolated = allDocs.select("doc_id")
-      .join(pairedDocs, Seq("doc_id"), "left_anti")
+      .join(edges.select(col("src").as("doc_id")), Seq("doc_id"), "left_anti")
       .withColumn("cluster", col("doc_id"))
     labels.unionByName(isolated)
   }

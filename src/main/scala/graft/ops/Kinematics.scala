@@ -51,6 +51,16 @@ object Kinematics {
       lit(MinRadius) + pow(dist, 3) * lit((MaxRadius - MinRadius) / MaxDistFromBall),
       lit(MaxRadius))
 
+  /** The Gaussian's radius and scaling axes (Field Control.R:250,
+    * 277-292, 304-311): `r` = [[radiusOfInfluence]] at `distFromBall`,
+    * S = diag(r·(1+s_ratio), r·(1−s_ratio)) as `sx`/`sy`, with the
+    * UNSQUARED speed ratio s/13 of [[withProjection]] and no halving.
+    */
+  def withAxes(df: DataFrame, distFromBall: Column): DataFrame =
+    df.withColumn("r", radiusOfInfluence(distFromBall))
+      .withColumn("sx", col("r") * (lit(1.0) + col("s_ratio")))
+      .withColumn("sy", col("r") * (lit(1.0) - col("s_ratio")))
+
   /** I1 (Tutorial.R:198-203 and 3 other sites): Euclidean distance —
     * the single most-used expression in the reference.
     */

@@ -177,7 +177,7 @@ object CorpusQueries extends QueryModule {
             Tables.documents(s, d), "text", Seq("lang", "source"), 0.5)
           .select("d1", "d2")
         val docs = Tables.documents(s, d).select("doc_id")
-        graft.ops.DedupOps.duplicateClusters(pairs, docs, maxIter = 15)
+        graft.ops.DedupOps.duplicateClusters(pairs, docs)
           .groupBy("cluster").agg(count(lit(1)).as("n_docs"))
           .orderBy("cluster")
       },
@@ -219,7 +219,7 @@ object CorpusQueries extends QueryModule {
       fn = (s, d) => {
         val pairs = s.read.parquet(edgeArtifact(s, d)).select("d1", "d2")
         val docs = Tables.documents(s, d).select("doc_id")
-        graft.ops.DedupOps.duplicateClusters(pairs, docs, maxIter = 15)
+        graft.ops.DedupOps.duplicateClusters(pairs, docs)
           .groupBy("cluster").agg(count(lit(1)).as("n_docs"))
           .orderBy("cluster")
       },
@@ -448,8 +448,7 @@ object CorpusQueries extends QueryModule {
         val pairs = graft.ops.DedupOps.neardupEdges(
             docs, "text", Seq("lang", "source"), 0.5)
           .select("d1", "d2")
-        val clusters = graft.ops.DedupOps.duplicateClusters(
-          pairs, docs.select("doc_id"), maxIter = 15)
+        val clusters = graft.ops.DedupOps.duplicateClusters(pairs, docs.select("doc_id"))
         // larger n_chars wins; ties resolve to the SMALLER doc_id
         // (subtracting doc_id keeps the key monotone in both)
         val pack = col("n_chars") * lit(10000000000L) - col("doc_id")
@@ -538,9 +537,9 @@ object CorpusQueries extends QueryModule {
     // and every division is a floor division, so Spark (`div`) and
     // DuckDB (`//`) agree bit-for-bit with no float accumulation order
     // anywhere. Each round is ONE keyed join (edges ⋈ ranks on src —
-    // the edge frame is persisted once and reused all rounds) + ONE
+    // the edges re-read neardupEdges' checkpoint every round) + ONE
     // keyed aggregate on dst: the iterative-graph pattern at scale,
-    // bounded rounds by construction (cf. duplicateClusters' budget).
+    // bounded rounds by construction.
     // Overflow headroom: a node's in-sum is ≤ deg × 1e9 and 85× that
     // must fit a long, so deg ≤ ~1e8 — near-dup degrees are
     // clique-bounded far below that (a general web graph would cap or
@@ -553,10 +552,9 @@ object CorpusQueries extends QueryModule {
           .select("d1", "d2")
         // undirected graph as symmetric directed edges; deg per source.
         // pairs is already checkpoint-materialized by neardupEdges, so
-        // both union branches and every iteration's join re-read compact
-        // blocks — no persist needed, nothing left for a harness to clean
-        val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-          .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+        // every iteration's join re-reads compact blocks — no persist
+        // needed, nothing left for a harness to clean
+        val edges = graft.ops.DedupOps.undirected(pairs)
         val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         val docs = Tables.documents(s, d).select("doc_id")
         var ranks = docs.withColumn("r", lit(1000000000L)) // 1.0 fixed-point

@@ -736,7 +736,7 @@ object DedupQueries extends QueryModule {
           .filter(col("score") >= 3)
           .select(col("doc_a").as("d1"), col("doc_b").as("d2"))
         val docs = Tables.documents(s, d).select("doc_id")
-        graft.ops.DedupOps.duplicateClusters(edges, docs, maxIter = 15)
+        graft.ops.DedupOps.duplicateClusters(edges, docs)
           .groupBy("cluster").agg(count(lit(1)).as("n_docs"))
           .filter(col("n_docs") >= 2)
           .orderBy("cluster")

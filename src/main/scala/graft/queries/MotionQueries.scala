@@ -52,7 +52,7 @@ object MotionQueries extends QueryModule {
                  x + v_x * 0.5 AS next_x, y + v_y * 0.5 AS next_y,
                  ${radiusSql(dBall)} AS r"""
 
-  /** The Gaussian's axes: unsquared s_ratio, no halving (FieldControlPipeline). */
+  /** The Gaussian's axes: unsquared s_ratio, no halving (Kinematics.withAxes). */
   private[queries] val axesSql = "r * (1.0 + s_ratio) AS sx, r * (1.0 - s_ratio) AS sy"
 
   /** FieldControl.fieldGrid: the nx × ny grid (grid_x, grid_y). */
@@ -117,12 +117,8 @@ object MotionQueries extends QueryModule {
     "q14_field_control" -> NamedQuery(
       fn = (s, d) => {
         val players0 = supplierPlayers(s, d)
-        val k = Kinematics.withProjection(Kinematics.withVelocity(players0))
-          .withColumn("r", Kinematics.radiusOfInfluence(col("d_ball")))
-          // same scaling axes as FieldControlPipeline (Field Control.R:250,
-          // 304-311): unsquared s_ratio, no halving
-          .withColumn("sx", col("r") * (lit(1.0) + col("s_ratio")))
-          .withColumn("sy", col("r") * (lit(1.0) - col("s_ratio")))
+        val k = Kinematics.withAxes(
+          Kinematics.withProjection(Kinematics.withVelocity(players0)), col("d_ball"))
         val grid = FieldControl.fieldGrid(s, 24, 12)
         val infl = k.crossJoin(broadcast(grid))
           .withColumn("influence", FieldControl.gaussianInfluence(

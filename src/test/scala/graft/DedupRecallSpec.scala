@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +17,25 @@ import graft.ops.DedupOps
 class DedupRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+
+  /** The two-step reference for `DedupOps.bandHashes`: k signature
+    * rows per doc (min(h1 + seed·h2) mod 2^61−1, one row per seed),
+    * then one band_hash per (doc, band) over `rowsPerBand` consecutive
+    * seeds. The decimal renderings are '#'-separated (variable width) so
+    * distinct (min, max) pairs can't collide on concatenation.
+    */
+  private def minhashSignatures(toks: DataFrame, k: Int, scopeCols: Seq[String])(implicit s: SparkSession): DataFrame = {
+    val seeds = s.range(k.toLong).select(col("id").as("seed"))
+    DedupOps.withTokenHashes(toks).crossJoin(broadcast(seeds))
+      .groupBy((scopeCols ++ Seq("doc_id", "seed")).map(col): _*)
+      .agg(min((col("__h1") + col("seed") * col("__h2")) % DedupOps.MersennePrime61).as("mh"))
+  }
+
+  private def lshBands(sig: DataFrame, rowsPerBand: Int, scopeCols: Seq[String]): DataFrame =
+    sig.withColumn("band", expr(s"seed div $rowsPerBand"))
+      .groupBy((scopeCols ++ Seq("doc_id", "band")).map(col): _*)
+      .agg(md5(concat(min(col("mh")).cast("string"), lit("#"),
+        max(col("mh")).cast("string"))).as("band_hash"))
 
   test("MinHash band candidates recover >=70% of true Jaccard>=0.5 pairs") {
     implicit val s = spark
@@ -36,7 +56,7 @@ class DedupRecallSpec extends AnyFunSuite {
       .select("d1", "d2")
 
     val candidates = DedupOps.candidatePairs(
-      DedupOps.lshBands(DedupOps.minhashSignatures(toks, 8, scope), 2, scope), scope)
+      lshBands(minhashSignatures(toks, 8, scope), 2, scope), scope)
 
     val nTruth = truth.count().toDouble
     assert(nTruth > 0, "testdata has no high-Jaccard pairs — harness vacuous")
@@ -50,7 +70,7 @@ class DedupRecallSpec extends AnyFunSuite {
     implicit val s = spark
     val scope = Seq("lang", "source")
     val toks = DedupOps.tokenSet(Tables.documents(spark, sf), "text", scope)
-    val twoStep = DedupOps.lshBands(DedupOps.minhashSignatures(toks, 8, scope), 2, scope)
+    val twoStep = lshBands(minhashSignatures(toks, 8, scope), 2, scope)
       .select("lang", "source", "doc_id", "band", "band_hash")
     val fused = DedupOps.bandHashes(toks, 8, 2, scope)
       .select("lang", "source", "doc_id", "band", "band_hash")

@@ -531,8 +531,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = innerPlan("q148_minhash_accuracy")
     // est side: candidates join signatures keyed by (doc, seed); exact
     // side: jaccardExploded's token joins — hash joins, no cartesian
-    // products (the BroadcastNestedLoopJoin Cross in this plan is the
-    // deliberate 8-row seed fan-out inside minhashSignatures)
+    // products
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
       p.contains("ShuffledHashJoin"), s"no hash join in:\n$p")
     assert(!p.contains("CartesianProduct"))

@@ -1,5 +1,6 @@
 package graft.football
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +8,45 @@ import graft.TestSpark
 
 class TrackingOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Reference for `TrackingOps.longestAccelStreak`: the same operator
+    * through §1.1's grouped-scan escape hatch, the pattern for operators
+    * that have no window form — a SECONDARY SORT (hash-repartition on
+    * the group key, sortWithinPartitions on (key, frameId); Spark's sort
+    * spills to disk) followed by a streaming boundary scan with O(1)
+    * state, so an unbounded timeline never materializes in one task's
+    * heap. The windows form must match it row for row.
+    */
+  private def longestAccelStreakScan(tracking: DataFrame): DataFrame = {
+    import spark.implicits._
+    tracking
+      .select(col("gameId"), col("playId"), col("nflId"), col("frameId"), col("s"))
+      .repartition(col("gameId"), col("playId"), col("nflId"))
+      .sortWithinPartitions("gameId", "playId", "nflId", "frameId")
+      .as[(Long, Long, Long, Int, Double)]
+      .mapPartitions { it =>
+        // rows arrive grouped and frame-ordered; each next() consumes
+        // exactly one group off the shared buffered iterator
+        val in = it.buffered
+        new Iterator[(Long, Long, Long, Int)] {
+          override def hasNext: Boolean = in.hasNext
+          override def next(): (Long, Long, Long, Int) = {
+            val (g, p, n, _, s0) = in.next()
+            var prevS = s0
+            var run = 1
+            var best = 1
+            while (in.hasNext && { val h = in.head; h._1 == g && h._2 == p && h._3 == n }) {
+              val sv = in.next()._5
+              run = if (sv > prevS) run + 1 else 1
+              if (run > best) best = run
+              prevS = sv
+            }
+            (g, p, n, best)
+          }
+        }
+      }
+      .toDF("gameId", "playId", "nflId", "longest_accel_streak")
+  }
 
   private def straightLine = {
     import spark.implicits._
@@ -39,7 +79,6 @@ class TrackingOpsSpec extends AnyFunSuite {
 
   test("longestAccelStreak finds the longest increasing run (gaps-and-islands windows)") {
     import spark.implicits._
-    implicit val s = spark
     // speeds: 1,2,3,1,2 → longest increasing run = 3
     val df = Seq(
       (1L, 1L, 7L, "P", 1, 0.0, 0.0, 1.0),
@@ -53,14 +92,13 @@ class TrackingOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(2) -> r.getInt(3)).toMap
     assert(streaks(7L) === 3)
     assert(streaks(8L) === 1)
-    val scanned = TrackingOps.longestAccelStreakScan(df)
+    val scanned = longestAccelStreakScan(df)
       .collect().map(r => r.getLong(2) -> r.getInt(3)).toMap
     assert(scanned === streaks)
   }
 
   test("windows and secondary-sort streak forms match brute force on large shuffled timelines") {
     import spark.implicits._
-    implicit val s = spark
     // 50k-frame timelines (far beyond any real play) in SHUFFLED input
     // order across many partitions: the secondary sort must restore the
     // frame order per group without materializing a timeline in memory
@@ -83,7 +121,7 @@ class TrackingOpsSpec extends AnyFunSuite {
     val got = TrackingOps.longestAccelStreak(df)
       .collect().map(r => r.getLong(2) -> r.getInt(3)).toMap
     assert(got === expected)
-    val gotScan = TrackingOps.longestAccelStreakScan(df)
+    val gotScan = longestAccelStreakScan(df)
       .collect().map(r => r.getLong(2) -> r.getInt(3)).toMap
     assert(gotScan === expected)
   }

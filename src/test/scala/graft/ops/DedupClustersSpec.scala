@@ -34,7 +34,19 @@ class DedupClustersSpec extends AnyFunSuite {
     val n = 12
     val pairs = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
     val docs = (1 to n).map(_.toLong).toDF("doc_id")
-    val clusters = DedupOps.duplicateClusters(pairs, docs, maxIter = 20)
+    val clusters = DedupOps.duplicateClusters(pairs, docs)
     assert(clusters.select("cluster").distinct().collect().map(_.getLong(0)).toSeq === Seq(1L))
+  }
+
+  test("a 40-node chain, wider than any fixed round budget, comes back as one cluster") {
+    import spark.implicits._
+    // diameter 39: min-label propagation needs ~40 rounds to carry
+    // label 1 to the far end, so a 10- or 15-round budget splits it
+    val n = 40
+    val pairs = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
+    val docs = (1 to n + 1).map(_.toLong).toDF("doc_id")
+    val clusters = DedupOps.duplicateClusters(pairs, docs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(clusters === ((1 to n).map(_.toLong -> 1L) :+ ((n + 1).toLong -> (n + 1).toLong)).toMap)
   }
 }
