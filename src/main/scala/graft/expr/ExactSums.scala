@@ -2,14 +2,12 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, MakeDecimal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, MakeDecimal, Multiply, NumericEvalContext, UnaryExpression}
 import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.graft.ExprColumn
-import org.apache.spark.sql.functions.{abs, count, max, sum}
 import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, LongType}
-
-import graft.ops.ScaleGuards.ScaleGuardTrip
 
 /** The tie test that lets a double skip the decimal string on its way to
   * a HALF_UP rounding at k places ([[Cents]], [[ExactRound]]).
@@ -101,57 +99,24 @@ object Cents {
     }
 }
 
-/** The overflow guard of an exact long sum. Children: the sum, the count
-  * n of its non-null terms, then one bound per factor of the terms (the
-  * max |factor| over the group). n × Π bounds ≥ |any partial sum|, so
-  * while it stays ≤ 2^62 no partial or final sum can wrap; past that the
-  * guard throws a `ScaleGuardTrip` instead of returning a sum the non-ANSI
-  * long `SUM` may have wrapped. A null sum (no non-null term) stays null.
-  * Runs once per group (per row for a window sum), so it is interpreted.
-  */
-case class CheckedSum(children: Seq[Expression]) extends Expression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "checked_sum"
-
-  override def eval(input: InternalRow): Any = {
-    val s = children.head.eval(input)
-    if (s != null) {
-      val n = children(1).eval(input).asInstanceOf[Long]
-      // n × Π b ≤ 2^62  ⟺  n ≤ ⌊…⌊2^62 / b1⌋ … / bm⌋ (a zero bound zeroes the product)
-      val room = children.drop(2).foldLeft(CheckedSum.Limit) { (r, b) =>
-        val m = b.eval(input).asInstanceOf[Long]
-        if (m == 0L) Long.MaxValue else if (r == Long.MaxValue) r else r / m
-      }
-      if (n > room)
-        throw new ScaleGuardTrip("exact sum", "a coarser scale or a finer grouping",
-          s"exact sum over $n terms bounded by ${children.drop(2).map(_.eval(input)).mkString(" × ")} " +
-            "could pass 2^62: the long total might wrap, so it is refused")
-    }
-    s
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CheckedSum = copy(children = c)
-}
-
-object CheckedSum {
-  val Limit: Long = 1L << 62
-}
-
 /** Column builders for the exact-sum rule (`graft.queries.Registry`):
-  * terms are scaled longs from [[Cents]], summed as longs under
-  * [[CheckedSum]]'s guard, and turned into a double once per group.
+  * terms are scaled longs from [[Cents]], summed as longs by Spark's
+  * overflow-checked sum, and turned into a double once per group.
   */
 object ExactSums {
   def cents(x: Column, k: Int): Column = ExprColumn(Cents(Cast(expression(x), DoubleType), k))
 
-  /** The guarded long sum of the product of `factors` (exact longs).
-    * `over` places each aggregate, e.g. `_.over(w)` for a window sum.
+  private val Checked = NumericEvalContext(EvalMode.ANSI)
+
+  /** The long sum of the product of `factors` (exact longs). The product
+    * and the sum run in ANSI mode (`multiplyExact`, `addExact`) in any
+    * session, so a total that passes a long fails with Spark's
+    * `ARITHMETIC_OVERFLOW` instead of wrapping. `over` places the
+    * aggregate, e.g. `_.over(w)` for a window sum.
     */
   def total(factors: Seq[Column], over: Column => Column = identity): Column = {
-    val term = factors.reduce(_ * _)
-    ExprColumn(CheckedSum(
-      (Seq(sum(term), count(term)) ++ factors.map(f => max(abs(f)))).map(a => expression(over(a)))))
+    val term = factors.map(expression).reduce(Multiply(_, _, Checked))
+    over(ExprColumn(Sum(term, Checked).toAggregateExpression()))
   }
 
   /** An unscaled long at scale k as a double: through DECIMAL(38,k), the

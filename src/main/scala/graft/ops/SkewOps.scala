@@ -17,7 +17,7 @@ object SkewOps {
   /** Two-phase salted sum/count: phase 1 aggregates (key, salt) partials
     * across `saltBuckets` tasks, phase 2 combines per key. `aggs` are
     * exact long terms (counts, `cents`); both phases sum them with the
-    * overflow-guarded exact sum (`graft.expr.ExactSums.total`), which is
+    * overflow-checked exact sum (`graft.expr.ExactSums.total`), which is
     * order-independent, so results are identical to a direct groupBy.
     */
   def saltedAgg(keys: Seq[String], saltBuckets: Int, aggs: Map[String, Column])(df: DataFrame): DataFrame = {

@@ -263,7 +263,7 @@ object EventQueries extends QueryModule {
     // ~1/5 of ALL rows through each of 5 reduce tasks no matter how many
     // executors exist — the textbook hot-key shape. SkewOps.saltedAgg
     // splits each key across 32 salt buckets (phase 1) and recombines
-    // (phase 2); guarded cents sums keep both phases order-independent so the
+    // (phase 2); exact cents sums keep both phases order-independent so the
     // result is bit-identical to the direct plan the oracle runs.
     "q79_salted_hot_agg" -> NamedQuery(
       fn = (s, d) => {
@@ -1925,11 +1925,10 @@ object EventQueries extends QueryModule {
         val c0 = dev.groupBy("event_type")
           .agg(sum(col("dv").cast(DecimalType(19, 0)) * col("dv")).as("c0"))
         val ks = s.range(1, 7).select(col("id").as("k"))
-        val partner = dev.select(col("event_type"), col("h").as("hb"), col("dv").as("dvb"))
+        val partner = dev.select(col("event_type").as("etb"), col("h").as("hb"), col("dv").as("dvb"))
         dev.crossJoin(broadcast(ks))
-          .join(partner,
-            partner("event_type") === dev("event_type") && col("hb") === col("h") + col("k"))
-          .drop(partner("event_type"))
+          .join(partner, col("etb") === col("event_type") && col("hb") === col("h") + col("k"))
+          .drop("etb")
           .groupBy("event_type", "k")
           .agg(count(lit(1)).as("n_pairs"),
             sum(col("dv").cast(DecimalType(19, 0)) * col("dvb")).as("ck"))

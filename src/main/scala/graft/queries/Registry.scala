@@ -13,10 +13,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    the same values as scaled longs (`exactSum`, `graft.expr.ExactSums`):
   *    `cents(x, 2)` is the cast's unscaled long for every double (HALF_UP
   *    on `Double.toString`, through Spark's own cast near a .5 tie or past
-  *    2^50; null for NaN, ±Inf and |x| ≥ 10^16), the long sum refuses with
-  *    a typed `ScaleGuardTrip` once count × max |term| could pass 2^62
-  *    (never a wrapped total), and the total goes long → DECIMAL(38,2) →
-  *    DOUBLE, the double the oracle's cast gives;
+  *    2^50; null for NaN, ±Inf and |x| ≥ 10^16), the longs are summed by
+  *    Spark's overflow-checked long sum (a total past a long fails with
+  *    `ARITHMETIC_OVERFLOW`, never wraps), and the total goes long →
+  *    DECIMAL(38,2) → DOUBLE, the double the oracle's cast gives;
   *  - transcendental math (trig/exp/pow) is rounded to 6 decimals —
   *    JVM and libm may differ in the last ulp;
   *  - extracted integers (year, substring-casts) are cast to BIGINT to
@@ -118,8 +118,9 @@ trait QueryModule {
   def queries: Seq[(String, NamedQuery)]
 
   /** The exact-sum rule above, spelled once: `x` becomes the unscaled
-    * long of CAST(x AS DECIMAL(18,k)) (`cents`), the longs sum under the
-    * overflow guard, and the total turns into a double once per group.
+    * long of CAST(x AS DECIMAL(18,k)) (`cents`), the longs sum with
+    * Spark's overflow-checked long sum, and the total turns into a double
+    * once per group.
     * DuckDB mirror: CAST(SUM(CAST(x AS DECIMAL(18,k))) AS DOUBLE).
     */
   protected def exactSum(x: Column, k: Int = 2): Column =

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{Cast, Round, Sin}
-import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Round, Sin}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Max, Partial, Sum}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -50,6 +50,13 @@ class PlanAuditSpec extends AnyFunSuite {
       case _ => false
     }), partials.head.toString)
     assert(!partials.head.toString.contains("decimal(18,2)"))
+    // one overflow-checked long sum per exact sum, and no side aggregate
+    val fns = partials.head.aggregateExpressions.map(_.aggregateFunction)
+    val sums = fns.collect { case s: Sum => s }
+    assert(sums.size === 3 && sums.forall(_.evalContext.evalMode == EvalMode.ANSI), fns.mkString("; "))
+    assert(fns.count(_.isInstanceOf[Count]) === 1, fns.mkString("; "))
+    assert(fns.size === 4, fns.mkString("; "))
+    assert(!fns.exists(_.isInstanceOf[Max]), fns.mkString("; "))
   }
 
   test("q05 computes the anchor in a single window shuffle over a pruned scan") {

@@ -1,14 +1,35 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The JSON string escaper Bench and Verify share: every string must
-  * come back unchanged through a strict parser, and the literal itself
-  * must be pure ASCII.
+import graft.expr.ExactSums
+import graft.ops.ScaleGuards
+
+/** What Bench and Verify share: the outcome classification of a query
+  * run, and the JSON string escaper (every string must come back
+  * unchanged through a strict parser, and the literal itself must be
+  * pure ASCII).
   */
 class QueryLoopSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
   private val mapper = new ObjectMapper()
+
+  test("run files an all-pairs guard trip as Skip(successor) and an exact-sum overflow as Err") {
+    val key = "spark.graft.allPairs.maxRows"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "3")
+    val (_, tripped) = try {
+      QueryLoop.run(spark)(ScaleGuards.requireAllPairsSafe(spark.range(10).toDF(), "probe", "the banded path").collect())
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(tripped === QueryLoop.Skip("the banded path"))
+
+    // 100 × 9e17 cents passes Long.MaxValue: a real overflow, not a refusal
+    val (_, overflowed) = QueryLoop.run(spark)(
+      TestSpark.doubles(spark, Seq.fill(100)(9e15)).agg(ExactSums.sumOf(2, ExactSums.cents(col("x"), 2))).collect())
+    assert(overflowed.isInstanceOf[QueryLoop.Err], overflowed.toString)
+  }
 
   test("jsonString round-trips quotes, controls, non-ASCII, emoji and a lone surrogate through Jackson") {
     val cases = Seq(

@@ -1,12 +1,13 @@
 package graft.expr
 
-import org.apache.spark.SparkException
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{QueryLoop, TestSpark}
+import graft.TestSpark
 
 /** `cents(x, k)` against the cast it replaces, and the exact sum built on
   * it against `CAST(SUM(CAST(x AS DECIMAL(18,k))) AS DOUBLE)`, bit for bit.
@@ -119,20 +120,65 @@ class ExactSumsSpec extends AnyFunSuite {
       java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.toString))
   }
 
-  test("a group whose cents total passes Long.MaxValue trips the typed guard, never wraps") {
+  /** The `ARITHMETIC_OVERFLOW` error in `e`'s cause chain, if any. */
+  private def overflow(e: Throwable): Option[SparkThrowable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case t: SparkThrowable if t.getCondition == "ARITHMETIC_OVERFLOW" => t
+    }
+
+  private def centsSum: Column = ExactSums.sumOf(2, ExactSums.cents(col("x"), 2))
+
+  test("a group whose cents total passes Long.MaxValue fails with ARITHMETIC_OVERFLOW, never wraps") {
     // 100 × 9e17 cents = 9e19 > Long.MaxValue ≈ 9.2e18
     val rows = Seq.fill(100)("hot" -> java.lang.Double.valueOf(9e15)) ++ Seq("cold" -> java.lang.Double.valueOf(1.0))
-    val e = intercept[SparkException] {
-      grouped(rows).groupBy("g").agg(ExactSums.sumOf(2, ExactSums.cents(col("x"), 2))).collect()
+    for (byGroup <- Seq(true, false)) {
+      val df = grouped(rows)
+      val e = intercept[Exception] {
+        (if (byGroup) df.groupBy("g").agg(centsSum) else df.agg(centsSum)).collect()
+      }
+      assert(overflow(e).isDefined, e.toString)
     }
-    val trip = QueryLoop.guardTrip(e)
-    assert(trip.map(_.what) === Some("exact sum"), e.toString)
-    // the harness files it as a guard skip, not as an error
-    val (_, outcome) = QueryLoop.run(spark)(
-      grouped(rows).agg(ExactSums.sumOf(2, ExactSums.cents(col("x"), 2))).collect())
-    assert(outcome.isInstanceOf[QueryLoop.Skip])
-    // below the bound the same values sum exactly
-    val ok = grouped(rows.take(4)).agg(ExactSums.sumOf(2, ExactSums.cents(col("x"), 2))).collect()
+    // the same values sum exactly where the total fits
+    val ok = grouped(rows.take(4)).agg(centsSum).collect()
     assert(ok.head.getDouble(0) === 3.6e16)
+  }
+
+  test("a total past 2^62 that fits a long is returned exactly, not refused") {
+    // 10 × 9e17 cents = 9e18: n × max passes 2^62, the total stays below Long.MaxValue
+    val rows = Seq.fill(10)("hot" -> java.lang.Double.valueOf(9e15))
+    val out = both(grouped(rows).repartition(3), 2, byGroup = true)
+    assert(out.size === 1)
+    val (_, exact, dec) = out.head
+    assert(exact === dec)
+    assert(exact.map(java.lang.Double.longBitsToDouble) === Some(9e16))
+  }
+
+  test("a two-factor term past Long.MaxValue raises instead of wrapping") {
+    // cents(1e10, 2)² = 1e24, past a long in the product, before any add
+    val df = grouped(Seq("g" -> java.lang.Double.valueOf(1e10)))
+    val e = intercept[Exception] {
+      df.agg(ExactSums.sumOf(4, ExactSums.cents(col("x"), 2), ExactSums.cents(col("x"), 2))).collect()
+    }
+    assert(overflow(e).isDefined, e.toString)
+  }
+
+  test("the windowed exact sum equals the decimal window sum bit for bit on grouped data with nulls") {
+    import spark.implicits._
+    val rows = (0 until 5000).map { _ =>
+      val x = if (rng.nextInt(8) == 0) None else Some((rng.nextDouble() - 0.4) * math.pow(10, rng.nextInt(8) - 2))
+      (s"g${rng.nextInt(25)}", rng.nextInt(400).toLong, x)
+    } ++ Seq(("all_null", 1L, None), ("all_null", 2L, None))
+    val df = rows.toDF("g", "t", "x").repartition(5)
+    // q53's shape: a trailing RANGE frame per group
+    val w = Window.partitionBy("g").orderBy("t").rangeBetween(-20, 0)
+    val out = df
+      .withColumn("exact", ExactSums.toDouble(ExactSums.total(Seq(ExactSums.cents(col("x"), 2)), _.over(w)), 2))
+      .withColumn("dec", sum(col("x").cast(DecimalType(18, 2))).over(w).cast("double"))
+      .collect()
+    assert(out.length === 5002)
+    def bits(r: Row, c: String) = Option(r.getAs[java.lang.Double](c)).map(d => java.lang.Double.doubleToRawLongBits(d))
+    val bad = out.filter(r => bits(r, "exact") != bits(r, "dec"))
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
+    assert(out.exists(r => r.isNullAt(r.fieldIndex("exact"))), "no all-null frame exercised")
   }
 }
