@@ -179,11 +179,13 @@ object Bench {
         s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${ok.size},"n_errors":${allErrs.size},"n_skipped":${skips.size}$skipsCompact,"queries":$slowest,"errors":$errsCompact,"sf":"$sfName","full":"BENCH_FULL.json"}"""
       }
     println(line)
-    // The committed repo copy is each round's FULL-suite record; an
-    // args-restricted profiling run must not overwrite it with a subset
-    // (observed: a 6-query BENCH_FULL.json committed in round 6).
+    // The checkout's copy (BENCH_FULL.json in the working directory,
+    // which is the project base dir under sbt's forked `run`) is each
+    // round's FULL-suite record; an args-restricted profiling run must
+    // not overwrite it with a subset (observed: a 6-query
+    // BENCH_FULL.json committed in round 6).
     val fullPaths =
-      if (args.isEmpty) Seq("/root/repo/BENCH_FULL.json", "/tmp/bench_full.json")
+      if (args.isEmpty) Seq("BENCH_FULL.json", "/tmp/bench_full.json")
       else Seq("/tmp/bench_full.json")
     for (path <- fullPaths)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), fullLine + "\n")

@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{ExplainMode, SimpleMode}
+import org.apache.spark.sql.execution.SimpleMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Dumps the formatted physical plans of the headline queries to
+/** Dumps the physical plans (`SimpleMode`) of the headline queries to
   * PLANS.md — the plan shapes `PlanAuditSpec` pins, in reviewable form.
   * `sbt "runMain graft.Plans [sfDir] [outFile]"`.
   */
@@ -62,7 +62,7 @@ object Plans {
     "q213_prefix_filter_audit", "q214_field_control_capstone",
     "q215_coverages_capstone")
 
-  /** Query `name`'s plan in `mode`, then the inner plans its build
+  /** Query `name`'s plan, then the inner plans its build
     * recorded: queries that checkpoint an intermediate (CacheScope /
     * DedupOps.neardupEdges) surface as `Scan ExistingRDD` in the outer
     * plan, and the plan that actually did the work is the recorded
@@ -81,8 +81,7 @@ object Plans {
     * serialized bloom filter renders as ~400 KB of hex) — the plan
     * SHAPE is the record.
     */
-  def render(spark: SparkSession, sfDir: String, name: String,
-             mode: ExplainMode): (String, Seq[String]) = {
+  def render(spark: SparkSession, sfDir: String, name: String): (String, Seq[String]) = {
     def stable(plan: String): String = {
       def renumber(re: Regex, prefix: String)(text: String): String = {
         val ids = scala.collection.mutable.HashMap.empty[String, Int]
@@ -95,7 +94,7 @@ object Plans {
       }.mkString("\n")
     }
     graft.ops.CacheScope.reset()
-    val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(mode)
+    val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(SimpleMode)
     (stable(plan), graft.ops.CacheScope.inners.map(qe => stable((qe.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
@@ -119,7 +118,7 @@ object Plans {
     sb.append("`partial_top_k_pairs` — are asserted by `PlanAuditSpec`; this file\n")
     sb.append("is the human-readable record.\n")
     headline.foreach { name =>
-      val (plan, inners) = render(spark, sfDir, name, SimpleMode)
+      val (plan, inners) = render(spark, sfDir, name)
       sb.append(s"\n## $name\n\n```\n$plan\n```\n")
       inners.zipWithIndex.foreach { case (inner, i) =>
         sb.append(s"\n### $name — inner plan ${i + 1} (pre-checkpoint, AQE's initial plan)\n\n")

@@ -50,7 +50,7 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = args.drop(1).headOption.getOrElse("/root/repo/scaledata/sf1")
+    val dst = args.drop(1).headOption.getOrElse("scaledata/sf1")
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val baseScale = args.drop(3).headOption.map(_.toLong).getOrElse(1L)
     val spark = GraftSession.create()

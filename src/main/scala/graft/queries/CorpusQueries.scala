@@ -55,6 +55,37 @@ object CorpusQueries extends QueryModule {
         GROUP BY cluster
         ORDER BY cluster"""
 
+  /** Okapi BM25 (k1 = 1.2, b = 0.75), q152's and q171's one scoring
+    * recipe: each row of `postings` (a query term's `tf` in a doc, its
+    * `df` and the doc's `len`) gets its score `term` against the 1-row
+    * corpus `stats` (`n_docs`, `tot_len`). ln(idf) and the term score
+    * round to 6 (the Registry recipe); the tf/length normalization is a
+    * pure IEEE division tree, mirrored literally in the oracles.
+    */
+  private def bm25Terms(postings: DataFrame, stats: DataFrame): DataFrame =
+    postings.crossJoin(broadcast(stats))
+      .withColumn("avglen", col("tot_len").cast("double") / col("n_docs"))
+      .withColumn("idf", round(log(
+        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)), 6))
+      .withColumn("tfc", (col("tf") * lit(2.2)) /
+        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avglen")))))
+      .withColumn("term", round(col("idf") * col("tfc"), 6))
+
+  /** Round `i` of q122's oracle: CTE `i<i>`, the ranks after `i`
+    * rounds, from the ranks of the round before (`r0` for round 1).
+    */
+  private def pageRankRoundSql(i: Int): String = s"""
+        i$i AS (
+          SELECT d0.doc_id,
+                 CAST(150000000 + (85 * COALESCE(s.in_sum, 0)) // 100 AS BIGINT) AS r
+          FROM documents d0
+          LEFT JOIN (
+            SELECT e.dst AS doc_id, CAST(SUM(p.r // g.deg) AS BIGINT) AS in_sum
+            FROM edges e
+            JOIN ${if (i == 1) "r0" else s"i${i - 1}"} p ON p.doc_id = e.src
+            JOIN deg g ON g.src = e.src
+            GROUP BY e.dst) s USING (doc_id))"""
+
   def queries: Seq[(String, NamedQuery)] = Seq(
 
     // ---------------------------------------------------------------- q47
@@ -576,36 +607,7 @@ object CorpusQueries extends QueryModule {
         WITH $neardupPairsSql,$undirectedEdgesSql,
         deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
         r0 AS (SELECT doc_id, CAST(1000000000 AS BIGINT) AS r FROM documents),
-        i1 AS (
-          SELECT d0.doc_id,
-                 CAST(150000000 + (85 * COALESCE(s.in_sum, 0)) // 100 AS BIGINT) AS r
-          FROM documents d0
-          LEFT JOIN (
-            SELECT e.dst AS doc_id, CAST(SUM(p.r // g.deg) AS BIGINT) AS in_sum
-            FROM edges e
-            JOIN r0 p ON p.doc_id = e.src
-            JOIN deg g ON g.src = e.src
-            GROUP BY e.dst) s USING (doc_id)),
-        i2 AS (
-          SELECT d0.doc_id,
-                 CAST(150000000 + (85 * COALESCE(s.in_sum, 0)) // 100 AS BIGINT) AS r
-          FROM documents d0
-          LEFT JOIN (
-            SELECT e.dst AS doc_id, CAST(SUM(p.r // g.deg) AS BIGINT) AS in_sum
-            FROM edges e
-            JOIN i1 p ON p.doc_id = e.src
-            JOIN deg g ON g.src = e.src
-            GROUP BY e.dst) s USING (doc_id)),
-        i3 AS (
-          SELECT d0.doc_id,
-                 CAST(150000000 + (85 * COALESCE(s.in_sum, 0)) // 100 AS BIGINT) AS r
-          FROM documents d0
-          LEFT JOIN (
-            SELECT e.dst AS doc_id, CAST(SUM(p.r // g.deg) AS BIGINT) AS in_sum
-            FROM edges e
-            JOIN i2 p ON p.doc_id = e.src
-            JOIN deg g ON g.src = e.src
-            GROUP BY e.dst) s USING (doc_id))
+        ${(1 to 3).map(pageRankRoundSql).mkString(",")}
         SELECT d.doc_id, COALESCE(g.deg, 0) AS deg, i3.r
         FROM documents d
         LEFT JOIN deg g ON g.src = d.doc_id
@@ -975,15 +977,7 @@ object CorpusQueries extends QueryModule {
         val stats = len.agg(count(lit(1)).as("n_docs"), sum(col("len")).as("tot_len"))
         val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
         val qterms = dfq.orderBy(col("df").desc, col("tok").asc).limit(3)
-        val terms = tf.join(broadcast(qterms), Seq("tok"))
-          .join(len, Seq("doc_id"))
-          .crossJoin(broadcast(stats))
-          .withColumn("avglen", col("tot_len").cast("double") / col("n_docs"))
-          .withColumn("idf", round(log(
-            (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)), 6))
-          .withColumn("tfc", (col("tf") * lit(2.2)) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avglen")))))
-          .withColumn("term", round(col("idf") * col("tfc"), 6))
+        val terms = bm25Terms(tf.join(broadcast(qterms), Seq("tok")).join(len, Seq("doc_id")), stats)
         terms.groupBy("doc_id")
           .agg(exactSum(col("term"), 6).as("score"))
           .agg(expr("top_k_pairs(score, doc_id, 20)").as("topk"))
@@ -1105,17 +1099,10 @@ object CorpusQueries extends QueryModule {
         val dfqRare = dfq.crossJoin(broadcast(stats.select("n_docs")))
           .filter(col("df") * lit(10) <= col("n_docs"))
           .select("tok", "df")
-        val terms = tf
+        val terms = bm25Terms(tf
           .join(broadcast(dfqRare), Seq("tok"))
           .join(broadcast(ptoks), Seq("tok"))
-          .join(len, Seq("doc_id"))
-          .crossJoin(broadcast(stats))
-          .withColumn("avglen", col("tot_len").cast("double") / col("n_docs"))
-          .withColumn("idf", round(log(
-            (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)), 6))
-          .withColumn("tfc", (col("tf") * lit(2.2)) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len").cast("double") / col("avglen")))))
-          .withColumn("term", round(col("idf") * col("tfc"), 6))
+          .join(len, Seq("doc_id")), stats)
         val lex = terms.groupBy("probe_id", "doc_id")
           .agg(exactSum(col("term"), 6).as("bm25"))
           .groupBy("probe_id")

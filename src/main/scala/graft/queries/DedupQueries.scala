@@ -21,14 +21,6 @@ import graft.ops.{DedupOps, RelationalOps}
   */
 object DedupQueries extends QueryModule {
 
-  /** Distinct (doc_id, token) pairs — the unigram set per document.
-    * doc_id is unique → per-row array_distinct replaces a global
-    * distinct shuffle (see DedupOps.tokenSet).
-    */
-  private def docTokens(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("doc_id"), explode(array_distinct(split(trim(col("text")), "\\s+"))).as("tok"))
-
   // The DuckDB side of DedupOps.neardupEdges, written once for every
   // oracle of the near-dup family. No fragment carries WITH, so a caller
   // opens with WITH or WITH RECURSIVE, or appends them to its own CTEs.
@@ -142,25 +134,18 @@ object DedupQueries extends QueryModule {
     // |∩| / (|A|+|B|−|∩|) — exact integer counts, no float drift.
     "q34_ngram_jaccard" -> NamedQuery(
       fn = (s, d) => {
-        val docs = graft.ops.ScaleGuards.requireAllPairsSafe(
-          Tables.documents(s, d)
-            .select(col("doc_id"), col("lang"), col("source"),
-              split(trim(col("text")), "\\s+").as("toks"))
-            .filter(size(col("toks")) >= 3),
+        val docs = graft.ops.ScaleGuards.requireAllPairsSafe(Tables.documents(s, d),
           "q34_ngram_jaccard",
           successor = "q212_prefix_filter_join (exact threshold join, unguarded, output-sensitive)")
         // the shingle set feeds three consumers (sizes + both join sides);
         // Catalyst can't reuse the exchange across the renamed branches,
         // so materialize it once, scoped (SURVEY.md §4: cache reused inputs)
-        val sh = docs.select(col("doc_id"), col("lang"), col("source"),
-          explode(array_distinct(expr(
-            "transform(sequence(1, size(toks)-2), i -> concat(element_at(toks,i),' ',element_at(toks,i+1),' ',element_at(toks,i+2)))")))
-            .as("shingle"))
+        val sh = shingleSets(docs)
         graft.ops.CacheScope.withPersisted(sh) {
           val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-          val s1 = sh.select(col("doc_id").as("d1"), col("lang"), col("source"), col("shingle"))
-          val s2 = sh.select(col("doc_id").as("d2"), col("lang"), col("source"), col("shingle"))
-          val inter = s1.join(s2, Seq("lang", "source", "shingle"))
+          val s1 = sh.select(col("doc_id").as("d1"), col("lang"), col("source"), col("tok"))
+          val s2 = sh.select(col("doc_id").as("d2"), col("lang"), col("source"), col("tok"))
+          val inter = s1.join(s2, Seq("lang", "source", "tok"))
             .filter(col("d1") < col("d2"))
             .groupBy("d1", "d2").agg(count(lit(1)).as("c"))
           val j = inter
@@ -174,22 +159,7 @@ object DedupQueries extends QueryModule {
             .orderBy("d1", "d2")
         }
       },
-      oracle = Some("""
-        WITH docs AS (
-          SELECT doc_id, lang, source, regexp_split_to_array(trim(text), '\s+') AS a
-          FROM documents
-          WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
-        sh AS (
-          SELECT DISTINCT doc_id, lang, source,
-                 unnest(list_transform(range(1, len(a) - 1), i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS shingle
-          FROM docs),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-        inter AS (
-          SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS c
-          FROM sh s1 JOIN sh s2
-            ON s1.lang = s2.lang AND s1.source = s2.source
-           AND s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-          GROUP BY 1, 2),
+      oracle = Some(shingleSqlHead + "," + shingleInterSql + """,
         j AS (
           SELECT d1, d2, CAST((2 * 1000000 * c + (n1.n + n2.n - c)) // (2 * (n1.n + n2.n - c)) AS DOUBLE) / 1e6 AS jacc
           FROM inter
@@ -210,7 +180,7 @@ object DedupQueries extends QueryModule {
     "q35_minhash_bands" -> NamedQuery(
       fn = (s, d) => {
         implicit val sp = s
-        val toks = docTokens(s, d)
+        val toks = DedupOps.tokenSet(Tables.documents(s, d), "text", Seq.empty)
         val bands = DedupOps.bandHashes(toks, DedupOps.SignatureCount, DedupOps.RowsPerBand, Seq.empty)
         val buckets = bands.groupBy("band", "band_hash")
           .agg(count(lit(1)).as("bucket_size"))
@@ -255,7 +225,8 @@ object DedupQueries extends QueryModule {
         // same long-arithmetic vote extraction as q71 (one conv parse of
         // the first 16 nibbles split 11/5, then shift+mask per bit)
         // instead of 16 substring/isin string compares per token
-        val toks = docTokens(s, d).withColumn("h", md5(col("tok")))
+        val toks = DedupOps.tokenSet(Tables.documents(s, d), "text", Seq.empty)(s)
+          .withColumn("h", md5(col("tok")))
           .withColumn("c0", conv(substring(col("h"), 1, 11), 16, 10).cast("long"))
           .withColumn("c1", conv(substring(col("h"), 12, 5), 16, 10).cast("long"))
         def voteBit(i: Int) =
@@ -310,9 +281,7 @@ object DedupQueries extends QueryModule {
         // and read vote bits with shift+mask — 3 parses + 32 shift/ands
         // per token instead of 32 substring allocations × 8-way isin
         // string comparisons (the r3 bench hotspot).
-        val toks = Tables.documents(s, d)
-          .select(col("lang"), col("source"), col("doc_id"),
-            explode(array_distinct(split(trim(col("text")), "\\s+"))).as("tok"))
+        val toks = DedupOps.tokenSet(Tables.documents(s, d), "text", Seq("lang", "source"))(s)
           .withColumn("h", md5(col("tok")))
           .withColumn("c0", conv(substring(col("h"), 1, 11), 16, 10).cast("long"))
           .withColumn("c1", conv(substring(col("h"), 12, 11), 16, 10).cast("long"))
@@ -631,13 +600,11 @@ object DedupQueries extends QueryModule {
       .distinct()
   }
 
-  private val fuzzySqlBlocks = """
-        WITH d AS (
-          SELECT doc_id, lang, source, n_chars,
-                 CAST(floor(n_chars / 64) AS BIGINT) AS band,
-                 substr(text, 1, 32) AS sig
-          FROM documents
-          WHERE strlen(substr(text, 1, 32)) = length(substr(text, 1, 32))),
+  /** `c0` (each signature's four 8-char chunks) and `c` (the chunks of
+    * blocks of at most 64 docs) over a `d` CTE of (doc_id, lang, source,
+    * n_chars, band, sig): the DuckDB side of `chunkBlockPairs`.
+    */
+  private val chunkBlocksSql = """
         c0 AS (
           SELECT doc_id, lang, source, n_chars, band, sig, g.cid,
                  substr(sig, g.cid * 8 + 1, 8) AS chunk
@@ -647,7 +614,15 @@ object DedupQueries extends QueryModule {
           SELECT * FROM (
             SELECT *, COUNT(*) OVER (PARTITION BY lang, source, band, cid, chunk) AS block_n
             FROM c0)
-          WHERE block_n <= 64),
+          WHERE block_n <= 64)"""
+
+  private val fuzzySqlBlocks = """
+        WITH d AS (
+          SELECT doc_id, lang, source, n_chars,
+                 CAST(floor(n_chars / 64) AS BIGINT) AS band,
+                 substr(text, 1, 32) AS sig
+          FROM documents
+          WHERE strlen(substr(text, 1, 32)) = length(substr(text, 1, 32))),""" + chunkBlocksSql + """,
         p AS (
           SELECT DISTINCT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
                  a.sig AS sig_a, b.sig AS sig_b,
@@ -819,17 +794,7 @@ object DedupQueries extends QueryModule {
                  CAST(floor(n_chars / 64) AS BIGINT) AS band,
                  translate(substr(text, 1, 32),
                            'aeo', chr(228) || chr(233) || chr(248)) AS sig
-          FROM documents),
-        c0 AS (
-          SELECT doc_id, lang, source, n_chars, band, sig, g.cid,
-                 substr(sig, g.cid * 8 + 1, 8) AS chunk
-          FROM d CROSS JOIN generate_series(0, 3) g(cid)
-          WHERE substr(sig, g.cid * 8 + 1, 8) <> ''),
-        c AS (
-          SELECT * FROM (
-            SELECT *, COUNT(*) OVER (PARTITION BY lang, source, band, cid, chunk) AS block_n
-            FROM c0)
-          WHERE block_n <= 64),
+          FROM documents),""" + chunkBlocksSql + """,
         p AS (
           SELECT DISTINCT a.lang, a.source, a.doc_id AS doc_a, b.doc_id AS doc_b,
                  a.sig AS sig_a, b.sig AS sig_b
@@ -846,12 +811,13 @@ object DedupQueries extends QueryModule {
       doc = "byte-mode Jaro-Winkler linkage via the native jaro_winkler_bytes expression: non-ASCII signatures participate with bit-exact UTF-8-byte parity, closing PARITY rule 9's boundary (record linkage)")
   )
 
-  /** Word-3-gram shingle sets, (lang, source)-scoped, in the DedupOps
-    * `tok` column convention — the q34 shingle relation without the
-    * all-pairs guard (q212/q213 exist precisely to not need one).
+  /** Word-3-gram shingle sets of `docs` (documents rows), (lang,
+    * source)-scoped, in the DedupOps `tok` column convention. q34 passes
+    * its all-pairs-guarded documents; q212/q213 exist precisely to not
+    * need the guard.
     */
-  private def shingleSets(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+  private def shingleSets(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), col("lang"), col("source"),
         split(trim(col("text")), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -862,7 +828,7 @@ object DedupQueries extends QueryModule {
 
   private val prefixScope = Seq("lang", "source")
 
-  /** The shared shingle/size/intersection CTE head both oracles reuse. */
+  /** The shared shingle/size CTE head of the q34, q212 and q213 oracles. */
   private val shingleSqlHead = """
         WITH docs AS (
           SELECT doc_id, lang, source, regexp_split_to_array(trim(text), '\s+') AS a
@@ -873,6 +839,17 @@ object DedupQueries extends QueryModule {
                  unnest(list_transform(range(1, len(a) - 1), i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS shingle
           FROM docs),
         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1)"""
+
+  /** `inter`: the shared-shingle count `c` of each same-(lang, source)
+    * pair d1 < d2 in `sh` — the all-pairs join of q34 and q212's oracles.
+    */
+  private val shingleInterSql = """
+        inter AS (
+          SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS c
+          FROM sh s1 JOIN sh s2
+            ON s1.lang = s2.lang AND s1.source = s2.source
+           AND s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
+          GROUP BY 1, 2)"""
 
   private def prefixJoinQueries: Seq[(String, NamedQuery)] = Seq(
 
@@ -893,20 +870,14 @@ object DedupQueries extends QueryModule {
     // of the prefix filter's perfect-recall guarantee, not a port.
     "q212_prefix_filter_join" -> NamedQuery(
       fn = (s, d) => {
-        val sh = shingleSets(s, d)
+        val sh = shingleSets(Tables.documents(s, d))
         graft.ops.CacheScope.withPersisted(sh) {
           graft.ops.DedupOps.jaccardThresholdJoin(sh, prefixScope, 1, 2)
             .select("d1", "d2", "c", "n1", "n2", "jacc")
             .orderBy("d1", "d2")
         }
       },
-      oracle = Some(shingleSqlHead + """,
-        inter AS (
-          SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS c
-          FROM sh s1 JOIN sh s2
-            ON s1.lang = s2.lang AND s1.source = s2.source
-           AND s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-          GROUP BY 1, 2)
+      oracle = Some(shingleSqlHead + "," + shingleInterSql + """
         SELECT d1, d2, c, n1.n AS n1, n2.n AS n2,
                CAST((2 * 1000000 * c + (n1.n + n2.n - c)) // (2 * (n1.n + n2.n - c)) AS DOUBLE) / 1e6 AS jacc
         FROM inter
@@ -930,7 +901,7 @@ object DedupQueries extends QueryModule {
     // model's x-axis, and the ratio is what the prefix buys.
     "q213_prefix_filter_audit" -> NamedQuery(
       fn = (s, d) => {
-        val sh = shingleSets(s, d)
+        val sh = shingleSets(Tables.documents(s, d))
         graft.ops.CacheScope.withPersisted(sh) {
           val pre = DedupOps.prefixRows(sh, prefixScope, 1, 2)
           graft.ops.CacheScope.withPersisted(pre) {

@@ -80,6 +80,89 @@ object EventQueries extends QueryModule {
           SELECT user_id, $clock AS $quoteClock, MAX(value) AS signup_value
           FROM e WHERE event_type = 'signup' GROUP BY 1, 2)"""
 
+  /** The oracle of q95 and q157: DuckDB's native backward ASOF LEFT JOIN
+    * of each non-signup event on its user's latest signup.
+    */
+  private val signupAsofOracle = "WITH" + signupSidesSql("epoch_us(ts)", "ts_us", "q_ts") + """
+        SELECT p.event_id, p.user_id, q.signup_value,
+               p.ts_us - q.q_ts AS us_since_signup
+        FROM probes p ASOF LEFT JOIN quotes q
+          ON p.user_id = q.user_id AND p.ts_us >= q.q_ts
+        ORDER BY p.event_id"""
+
+  /** Events' (event_type, value, event_id) with `rn`, each value's rank
+    * in its event_type (value, then event_id), and `n`, the type's row
+    * count: the all-integer order statistics of q85 and q100.
+    */
+  private def rankedValues(e: DataFrame): DataFrame =
+    e.select(col("event_type"), col("value"), col("event_id"))
+      .withColumn("rn", row_number().over(Window.partitionBy("event_type")
+        .orderBy(col("value").asc, col("event_id").asc)).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
+
+  /** The DuckDB side of `rankedValues`: `r`; no WITH. */
+  private val rankedValuesSql = """
+        r AS (
+          SELECT event_type, value,
+                 CAST(row_number() OVER (PARTITION BY event_type
+                                         ORDER BY value ASC, event_id ASC) AS BIGINT) AS rn,
+                 COUNT(*) OVER (PARTITION BY event_type) AS n
+          FROM events)"""
+
+  /** Per distinct `value` of the click and purchase events: `cnt`,
+    * `cnt_a` (the clicks) and `cum`, the running `cnt` over the value
+    * order (PrefixSum, floor(value) buckets `vbucket`) — the value
+    * histogram q194's and q195's two-sample tests read.
+    */
+  private def clickPurchaseValues(e: DataFrame): DataFrame = {
+    val vals = e.filter(col("event_type").isin("click", "purchase"))
+      .groupBy("value")
+      .agg(count(lit(1)).as("cnt"),
+        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("cnt_a"))
+    graft.ops.PrefixSum.scalableRunningSum(vals,
+      bucket = floor(col("value")).cast("long"), bucketName = "vbucket",
+      orderCols = Seq("value"), valueCol = "cnt", outCol = "cum")
+  }
+
+  /** The DuckDB side of `clickPurchaseValues` without the running sum:
+    * `f` and `vals`; no WITH.
+    */
+  private val clickPurchaseValuesSql = """
+        f AS (
+          SELECT value, event_type FROM events
+          WHERE event_type IN ('click', 'purchase')),
+        vals AS (
+          SELECT value, COUNT(*) AS cnt,
+                 CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT) AS cnt_a
+          FROM f GROUP BY value)"""
+
+  /** The hourly series per event_type in centi-units (`yc` at hour
+    * index `h`), with the type's hour count `n`, total `s` and each
+    * hour's n-scaled deviation `dv` = n·yc − s: the exact-integer
+    * scaffolding of q204 and q205 (no rational mean anywhere).
+    */
+  private def hourlyDeviations(e: DataFrame): DataFrame = {
+    val hours = e.withColumn("h", expr("ts_us div 3600000000"))
+      .groupBy("event_type", "h")
+      .agg(sum(round(col("value") * 100).cast("long")).as("yc"))
+    val tot = hours.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum(col("yc")).as("s"))
+    hours.join(tot, Seq("event_type"))
+      .withColumn("dv", col("n") * col("yc") - col("s"))
+  }
+
+  /** The DuckDB side of `hourlyDeviations` up to the totals: `hours` and
+    * `tot`; no WITH.
+    */
+  private val hourlyTotalsSql = """
+        hours AS (
+          SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+                 CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS yc
+          FROM events GROUP BY 1, 2),
+        tot AS (
+          SELECT event_type, COUNT(*) AS n, CAST(SUM(yc) AS BIGINT) AS s
+          FROM hours GROUP BY 1)"""
+
   def queries: Seq[(String, NamedQuery)] = Seq(
 
     // ---------------------------------------------------------------- q11
@@ -334,12 +417,7 @@ object EventQueries extends QueryModule {
     // cost model at any scale: a sort per group key, never a global one.
     "q85_exact_quantiles" -> NamedQuery(
       fn = (s, d) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("value").asc, col("event_id").asc)
-        Tables.events(s, d)
-          .select(col("event_type"), col("value"), col("event_id"))
-          .withColumn("rn", row_number().over(w).cast("long"))
-          .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
+        rankedValues(Tables.events(s, d))
           .groupBy("event_type")
           .agg(
             max(col("n")).as("n_rows"),
@@ -348,12 +426,7 @@ object EventQueries extends QueryModule {
           .orderBy("event_type")
       },
       oracle = Some("""
-        WITH r AS (
-          SELECT event_type, value,
-                 CAST(row_number() OVER (PARTITION BY event_type
-                                         ORDER BY value ASC, event_id ASC) AS BIGINT) AS rn,
-                 COUNT(*) OVER (PARTITION BY event_type) AS n
-          FROM events)
+        WITH""" + rankedValuesSql + """
         SELECT event_type, MAX(n) AS n_rows,
                MAX(CASE WHEN rn = (n - 1) // 2 + 1 THEN value END) AS p50,
                MAX(CASE WHEN rn = ((n - 1) * 9) // 10 + 1 THEN value END) AS p90
@@ -481,12 +554,7 @@ object EventQueries extends QueryModule {
             (col("ts_us") - col("q_ts")).as("us_since_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("WITH" + signupSidesSql("epoch_us(ts)", "ts_us", "q_ts") + """
-        SELECT p.event_id, p.user_id, q.signup_value,
-               p.ts_us - q.q_ts AS us_since_signup
-        FROM probes p ASOF LEFT JOIN quotes q
-          ON p.user_id = q.user_id AND p.ts_us >= q.q_ts
-        ORDER BY p.event_id"""),
+      oracle = Some(signupAsofOracle),
       doc = "backward as-of join via custom AsOfJoinExec vs DuckDB native ASOF (§7.3(c))"),
 
     // --------------------------------------------------------------- q157
@@ -513,12 +581,7 @@ object EventQueries extends QueryModule {
             (col("ts_us") - col("q_ts")).as("us_since_signup"))
           .orderBy("event_id")
       },
-      oracle = Some("WITH" + signupSidesSql("epoch_us(ts)", "ts_us", "q_ts") + """
-        SELECT p.event_id, p.user_id, q.signup_value,
-               p.ts_us - q.q_ts AS us_since_signup
-        FROM probes p ASOF LEFT JOIN quotes q
-          ON p.user_id = q.user_id AND p.ts_us >= q.q_ts
-        ORDER BY p.event_id"""),
+      oracle = Some(signupAsofOracle),
       doc = "skew-salted as-of join (probe salt + quote replication) vs DuckDB native ASOF"),
 
     // ---------------------------------------------------------------- q96
@@ -670,12 +733,7 @@ object EventQueries extends QueryModule {
     // onto the stream; one keyed window sort + one map-side clamp.
     "q100_winsorize" -> NamedQuery(
       fn = (s, d) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("value").asc, col("event_id").asc)
-        val bands = Tables.events(s, d)
-          .select(col("event_type"), col("value"), col("event_id"))
-          .withColumn("rn", row_number().over(w).cast("long"))
-          .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
+        val bands = rankedValues(Tables.events(s, d))
           .groupBy("event_type")
           .agg(
             max(when(col("rn") === expr("(n - 1) div 20") + 1L, col("value"))).as("lo"),
@@ -693,12 +751,7 @@ object EventQueries extends QueryModule {
           .orderBy("event_type")
       },
       oracle = Some("""
-        WITH r AS (
-          SELECT event_type, value,
-                 CAST(row_number() OVER (PARTITION BY event_type
-                                         ORDER BY value ASC, event_id ASC) AS BIGINT) AS rn,
-                 COUNT(*) OVER (PARTITION BY event_type) AS n
-          FROM events),
+        WITH""" + rankedValuesSql + """,
         bands AS (
           SELECT event_type,
                  MAX(CASE WHEN rn = (n - 1) // 20 + 1 THEN value END) AS lo,
@@ -1444,14 +1497,7 @@ object EventQueries extends QueryModule {
     // Spearman (correlation), Mann-Whitney (distribution shift).
     "q194_mann_whitney" -> NamedQuery(
       fn = (s, d) => {
-        val vals = graft.Tables.events(s, d)
-          .filter(col("event_type").isin("click", "purchase"))
-          .groupBy("value")
-          .agg(count(lit(1)).as("cnt"),
-            sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("cnt_a"))
-        val pre = graft.ops.PrefixSum.scalableRunningSum(vals,
-            bucket = floor(col("value")).cast("long"), bucketName = "vbucket",
-            orderCols = Seq("value"), valueCol = "cnt", outCol = "cum")
+        val pre = clickPurchaseValues(graft.Tables.events(s, d))
           .withColumn("cumbefore", col("cum") - col("cnt"))
         val agg = pre.agg(
           sum(col("cnt_a")).as("n_a"),
@@ -1469,13 +1515,7 @@ object EventQueries extends QueryModule {
           .select("n_a", "n_b", "two_r_a", "two_u_a", "ties", "z")
       },
       oracle = Some("""
-        WITH f AS (
-          SELECT value, event_type FROM events
-          WHERE event_type IN ('click', 'purchase')),
-        vals AS (
-          SELECT value, COUNT(*) AS cnt,
-                 CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT) AS cnt_a
-          FROM f GROUP BY value),
+        WITH""" + clickPurchaseValuesSql + """,
         pre AS (
           SELECT value, cnt, cnt_a,
                  CAST(COALESCE(SUM(cnt) OVER (ORDER BY value
@@ -1509,14 +1549,7 @@ object EventQueries extends QueryModule {
     // are a 1-row broadcast attach (F5-class).
     "q195_ks_test" -> NamedQuery(
       fn = (s, d) => {
-        val vals = graft.Tables.events(s, d)
-          .filter(col("event_type").isin("click", "purchase"))
-          .groupBy("value")
-          .agg(count(lit(1)).as("cnt"),
-            sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("cnt_a"))
-        val cum = graft.ops.PrefixSum.scalableRunningSum(vals,
-          bucket = floor(col("value")).cast("long"), bucketName = "vbucket",
-          orderCols = Seq("value"), valueCol = "cnt", outCol = "cum")
+        val cum = clickPurchaseValues(graft.Tables.events(s, d))
         val pre = graft.ops.PrefixSum.scalableRunningSum(cum,
             bucket = col("vbucket"), bucketName = "vbucket",
             orderCols = Seq("value"), valueCol = "cnt_a", outCol = "cum_a")
@@ -1531,13 +1564,7 @@ object EventQueries extends QueryModule {
           .select("n_a", "n_b", "d_num", "d")
       },
       oracle = Some("""
-        WITH f AS (
-          SELECT value, event_type FROM events
-          WHERE event_type IN ('click', 'purchase')),
-        vals AS (
-          SELECT value, COUNT(*) AS cnt,
-                 CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT) AS cnt_a
-          FROM f GROUP BY value),
+        WITH""" + clickPurchaseValuesSql + """,
         pre AS (
           SELECT value, cnt, cnt_a,
                  CAST(SUM(cnt) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
@@ -1913,14 +1940,7 @@ object EventQueries extends QueryModule {
     // hour-grain frame, not on rows.
     "q204_hourly_acf" -> NamedQuery(
       fn = (s, d) => {
-        val hours = graft.Tables.events(s, d)
-          .withColumn("h", expr("ts_us div 3600000000"))
-          .groupBy("event_type", "h")
-          .agg(sum(round(col("value") * 100).cast("long")).as("yc"))
-        val tot = hours.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum(col("yc")).as("s"))
-        val dev = hours.join(tot, Seq("event_type"))
-          .withColumn("dv", col("n") * col("yc") - col("s"))
+        val dev = hourlyDeviations(graft.Tables.events(s, d))
           .select("event_type", "h", "n", "dv")
         val c0 = dev.groupBy("event_type")
           .agg(sum(col("dv").cast(DecimalType(19, 0)) * col("dv")).as("c0"))
@@ -1943,13 +1963,7 @@ object EventQueries extends QueryModule {
           .orderBy("event_type", "k")
       },
       oracle = Some("""
-        WITH hours AS (
-          SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-                 CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS yc
-          FROM events GROUP BY 1, 2),
-        tot AS (
-          SELECT event_type, COUNT(*) AS n, CAST(SUM(yc) AS BIGINT) AS s
-          FROM hours GROUP BY 1),
+        WITH""" + hourlyTotalsSql + """,
         dev AS (
           SELECT h.event_type, h.h, t.n, t.n * h.yc - t.s AS dv
           FROM hours h JOIN tot t USING (event_type)),
@@ -1981,16 +1995,9 @@ object EventQueries extends QueryModule {
     // identically 0 (Σd = 0), a built-in self-check the spec asserts.
     "q205_cusum_changepoint" -> NamedQuery(
       fn = (s, d) => {
-        val hours = graft.Tables.events(s, d)
-          .withColumn("h", expr("ts_us div 3600000000"))
-          .groupBy("event_type", "h")
-          .agg(sum(round(col("value") * 100).cast("long")).as("yc"))
-        val tot = hours.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum(col("yc")).as("s"))
         val w = Window.partitionBy("event_type").orderBy("h")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cusum = hours.join(tot, Seq("event_type"))
-          .withColumn("dv", col("n") * col("yc") - col("s"))
+        val cusum = hourlyDeviations(graft.Tables.events(s, d))
           .withColumn("cusum", sum(col("dv")).over(w))
         val pick = Window.partitionBy("event_type")
           .orderBy(abs(col("cusum")).desc, col("h").asc)
@@ -2001,13 +2008,7 @@ object EventQueries extends QueryModule {
           .orderBy("event_type")
       },
       oracle = Some("""
-        WITH hours AS (
-          SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-                 CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS yc
-          FROM events GROUP BY 1, 2),
-        tot AS (
-          SELECT event_type, COUNT(*) AS n, CAST(SUM(yc) AS BIGINT) AS s
-          FROM hours GROUP BY 1),
+        WITH""" + hourlyTotalsSql + """,
         cusum AS (
           SELECT h.event_type, h.h, t.n,
                  CAST(SUM(t.n * h.yc - t.s) OVER (PARTITION BY h.event_type ORDER BY h.h

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.ops.TextOps
 
 /** Pretraining-corpus curation extensions (builder-prompt north-star):
   * eval-set decontamination, repetition quality metrics, deterministic
@@ -21,6 +22,56 @@ object PretrainQueries extends QueryModule {
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         split(trim(col("text")), "\\s+").as("arr"))
+
+  /** Distinct (doc_id, gram) word 5-grams of the documents with at
+    * least 5 tokens: the gram set of q66 and q106. The distinct is keyed
+    * by doc_id ALONE (subset partitioning satisfies the (doc_id, gram)
+    * aggregate), so a persisted gram set sits in the partitioning every
+    * downstream doc-keyed aggregate needs, with zero further exchange of
+    * the corpus gram table (guide §2.4; the q93 cache-keying pattern).
+    * Per-doc fan-in is bounded by document length.
+    */
+  private def docGrams(s: SparkSession, d: String): DataFrame =
+    tokenArrays(s, d)
+      .filter(size(col("arr")) >= 5)
+      .select(col("doc_id"),
+        explode(expr(
+          "transform(sequence(1, size(arr) - 4), i -> concat_ws(' ', slice(arr, i, 5)))"))
+          .as("gram"))
+      .repartition(col("doc_id"))
+      .distinct()
+
+  /** The DuckDB side of `docGrams`: `arrs`, `grams`, and the eval set's
+    * grams `eval_grams` (doc_id % 97 = 0); no WITH.
+    */
+  private val docGramsSql = """
+        arrs AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS arr
+          FROM documents),
+        grams AS (
+          SELECT DISTINCT doc_id, unnest(list_transform(range(1, len(arr) - 3),
+                 i -> array_to_string(list_slice(arr, i, i + 4), ' '))) AS gram
+          FROM arrs WHERE len(arr) >= 5),
+        eval_grams AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0)"""
+
+  /** `docs` with the quality statistics q185 and q192 filter on:
+    * `n_tokens`, `stop_ratio` and `avg_token_len` (`TextOps`).
+    */
+  private def withTokenStats(docs: DataFrame): DataFrame =
+    docs.withColumn("n_tokens", TextOps.tokenCount(col("text")))
+      .withColumn("stop_ratio",
+        TextOps.stopwordCount(col("text")).cast("double") / TextOps.tokenCount(col("text")))
+      .withColumn("avg_token_len", TextOps.avgTokenLen(col("text")))
+
+  /** The DuckDB side of `withTokenStats`, as `n_stop` for the stopword
+    * count: a select-list fragment over `documents`.
+    */
+  private val tokenStatsSql = """
+                 CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+                 CAST(len(regexp_split_to_array(trim(text), '\s+'))
+                    - len(regexp_split_to_array(trim(regexp_replace(' ' || text || ' ', ' (the|a|of|and|to|in) ', ' ', 'g')), '\s+')) AS BIGINT) AS n_stop,
+                 CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
+                   / len(regexp_split_to_array(trim(text), '\s+')) AS avg_token_len"""
 
   /** The lang × source contingency grid of q191/q208, zero cells
     * included: observed `o`, margins `n_l`/`n_s`, total `n` and the
@@ -69,23 +120,10 @@ object PretrainQueries extends QueryModule {
         // scoped persist: the gram set (a full tokenize + distinct
         // shuffle) feeds BOTH the broadcast eval-gram build job and the
         // probe side — without it the corpus pipeline runs twice
-        // (q93 pattern); CacheScope pairs the unpersist on this path
-        val grams = tokenArrays(s, d)
-          .filter(size(col("arr")) >= 5)
-          .select(col("doc_id"),
-            explode(expr(
-              "transform(sequence(1, size(arr) - 4), i -> concat_ws(' ', slice(arr, i, 5)))"))
-              .as("gram"))
-          // distinct keyed by doc_id ALONE (subset partitioning
-          // satisfies the (doc_id, gram) aggregate), so the persisted
-          // gram set is cached in the partitioning every downstream
-          // doc-keyed aggregate needs: the countDistinct's partial
-          // (doc_id, gram) distinct AND its final doc_id aggregate both
-          // ride the cache's partitioning with zero further exchange of
-          // the corpus gram table (guide §2.4; the q93 cache-keying
-          // pattern). Per-doc fan-in is bounded by document length.
-          .repartition(col("doc_id"))
-          .distinct()
+        // (q93 pattern); CacheScope pairs the unpersist on this path.
+        // The countDistinct's partial (doc_id, gram) distinct AND its
+        // final doc_id aggregate both ride the cache's partitioning.
+        val grams = docGrams(s, d)
         graft.ops.CacheScope.withPersisted(grams) {
           val evalGrams = grams.filter(col("doc_id") % 97 === 0)
             .select("gram").distinct()
@@ -97,14 +135,7 @@ object PretrainQueries extends QueryModule {
         }
       },
       oracle = Some("""
-        WITH arrs AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS arr
-          FROM documents),
-        grams AS (
-          SELECT DISTINCT doc_id, unnest(list_transform(range(1, len(arr) - 3),
-                 i -> array_to_string(list_slice(arr, i, i + 4), ' '))) AS gram
-          FROM arrs WHERE len(arr) >= 5),
-        eval_grams AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0)
+        WITH""" + docGramsSql + """
         SELECT doc_id, COUNT(DISTINCT gram) AS n_shared_grams
         FROM grams JOIN eval_grams USING (gram)
         WHERE doc_id % 97 <> 0
@@ -424,19 +455,10 @@ object PretrainQueries extends QueryModule {
     // left join is doc_id-keyed.
     "q106_contamination_rate" -> NamedQuery(
       fn = (s, d) => {
-        val grams = tokenArrays(s, d)
-          .filter(size(col("arr")) >= 5)
-          .select(col("doc_id"),
-            explode(expr(
-              "transform(sequence(1, size(arr) - 4), i -> concat_ws(' ', slice(arr, i, 5)))"))
-              .as("gram"))
-          // distinct keyed by doc_id ALONE (q66/q93 cache-keying
-          // pattern): totals' groupBy(doc_id), shared's broadcast-join
-          // + groupBy(doc_id), and the totals⋈shared join all ride the
-          // cache's doc_id partitioning — zero further exchange of the
-          // corpus gram table (guide §2.4).
-          .repartition(col("doc_id"))
-          .distinct()
+        // totals' groupBy(doc_id), shared's broadcast-join +
+        // groupBy(doc_id), and the totals⋈shared join all ride the
+        // cache's doc_id partitioning (see docGrams)
+        val grams = docGrams(s, d)
         graft.ops.CacheScope.withPersisted(grams) {
           val evalGrams = grams.filter(col("doc_id") % 97 === 0)
             .select("gram").distinct()
@@ -453,14 +475,7 @@ object PretrainQueries extends QueryModule {
         }
       },
       oracle = Some("""
-        WITH arrs AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS arr
-          FROM documents),
-        grams AS (
-          SELECT DISTINCT doc_id, unnest(list_transform(range(1, len(arr) - 3),
-                 i -> array_to_string(list_slice(arr, i, i + 4), ' '))) AS gram
-          FROM arrs WHERE len(arr) >= 5),
-        eval_grams AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0),
+        WITH""" + docGramsSql + """,
         train AS (SELECT doc_id, gram FROM grams WHERE doc_id % 97 <> 0),
         totals AS (SELECT doc_id, COUNT(*) AS n_grams FROM train GROUP BY doc_id),
         shared AS (
@@ -1120,16 +1135,11 @@ object PretrainQueries extends QueryModule {
     // identical inputs — deterministic on both sides.
     "q185_keep_rate_ci" -> NamedQuery(
       fn = (s, d) => {
-        import graft.ops.TextOps
         val z = 1.96
         val keep = (col("n_tokens") >= 20 && col("n_tokens") <= 1000) &&
           col("stop_ratio") < 0.5 &&
           (col("avg_token_len") >= 2.0 && col("avg_token_len") <= 12.0)
-        val agg = Tables.documents(s, d)
-          .withColumn("n_tokens", TextOps.tokenCount(col("text")))
-          .withColumn("stop_ratio",
-            TextOps.stopwordCount(col("text")).cast("double") / TextOps.tokenCount(col("text")))
-          .withColumn("avg_token_len", TextOps.avgTokenLen(col("text")))
+        val agg = withTokenStats(Tables.documents(s, d))
           .groupBy("source")
           .agg(count(lit(1)).as("n"),
             sum(when(keep, 1L).otherwise(0L)).as("k"))
@@ -1148,12 +1158,7 @@ object PretrainQueries extends QueryModule {
       },
       oracle = Some("""
         WITH m AS (
-          SELECT source,
-                 CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-                 CAST(len(regexp_split_to_array(trim(text), '\s+'))
-                    - len(regexp_split_to_array(trim(regexp_replace(' ' || text || ' ', ' (the|a|of|and|to|in) ', ' ', 'g')), '\s+')) AS BIGINT) AS n_stop,
-                 CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-                   / len(regexp_split_to_array(trim(text), '\s+')) AS avg_token_len
+          SELECT source,""" + tokenStatsSql + """
           FROM documents),
         agg AS (
           SELECT source, COUNT(*) AS n,
@@ -1312,15 +1317,10 @@ object PretrainQueries extends QueryModule {
     // bucket-offset frame.
     "q192_curation_pipeline" -> NamedQuery(
       fn = (s, d) => {
-        import graft.ops.TextOps
         val budget = 64L
         val W = 32
         val S = 24
-        val kept = Tables.documents(s, d)
-          .withColumn("n_tokens", TextOps.tokenCount(col("text")))
-          .withColumn("stop_ratio",
-            TextOps.stopwordCount(col("text")).cast("double") / TextOps.tokenCount(col("text")))
-          .withColumn("avg_token_len", TextOps.avgTokenLen(col("text")))
+        val kept = withTokenStats(Tables.documents(s, d))
           .filter(col("n_tokens") >= 20 && col("n_tokens") <= 1000 &&
             col("stop_ratio") < 0.5 &&
             col("avg_token_len") >= 2.0 && col("avg_token_len") <= 12.0)
@@ -1355,12 +1355,7 @@ object PretrainQueries extends QueryModule {
       },
       oracle = Some("""
         WITH m AS (
-          SELECT doc_id, text,
-                 CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-                 CAST(len(regexp_split_to_array(trim(text), '\s+'))
-                    - len(regexp_split_to_array(trim(regexp_replace(' ' || text || ' ', ' (the|a|of|and|to|in) ', ' ', 'g')), '\s+')) AS BIGINT) AS n_stop,
-                 CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-                   / len(regexp_split_to_array(trim(text), '\s+')) AS avg_token_len
+          SELECT doc_id, text,""" + tokenStatsSql + """
           FROM documents),
         kept AS (
           SELECT doc_id, text, n_tokens FROM m

@@ -270,6 +270,62 @@ object SimilarityQueries extends QueryModule {
     s"vec_dot(embedding, array($ws))"
   }
 
+  /** Product quantization of the 64-dim embeddings `emb`, q142's and
+    * q144's one encode: `subs`, each vector's 4 sub-vectors `sv` of 16
+    * dims (`sub` 0–3); `codes`, the codebook `cv` (the first 8 vectors'
+    * sub-slices, `code` = vec_id); and `best`, each (vec_id, sub)'s
+    * nearest code by L2² `d2`, rounded to 6 before the argmin (ties to
+    * the lower code).
+    */
+  private def pqAssign(emb: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val subIdx = array((0 until 4).map(lit): _*)
+    val subs = emb.select(col("vec_id"), explode(subIdx).as("sub"), col("embedding"))
+      .select(col("vec_id"), col("sub"), expr("slice(embedding, sub * 16 + 1, 16)").as("sv"))
+    val codes = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("code"), explode(subIdx).as("sub"), col("embedding"))
+      .select(col("code"), col("sub"), expr("slice(embedding, sub * 16 + 1, 16)").as("cv"))
+    val best = subs.join(broadcast(codes), Seq("sub"))
+      .withColumn("d2", round(
+        expr("vec_dot(sv, sv) - 2 * vec_dot(sv, cv) + vec_dot(cv, cv)"), 6))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("vec_id", "sub").orderBy(col("d2").asc, col("code").asc)))
+      .filter(col("rn") === 1)
+    (subs, codes, best)
+  }
+
+  /** `nn`: each `v1`'s most similar `v2` (cosine `cos`, ties to the
+    * lower id) among the candidate `pairs` — q40's and q218's in-cell
+    * search; no WITH.
+    */
+  private val nearestNeighbourSql = """
+        nn AS (
+          SELECT v1 AS vec_id, v2 AS nn_id, cos AS nn_cos
+          FROM (SELECT v1, v2, cos,
+                       row_number() OVER (PARTITION BY v1 ORDER BY cos DESC, v2 ASC) AS rn
+                FROM pairs)
+          WHERE rn = 1)"""
+
+  /** The DuckDB side of `pqAssign` up to the argmin: `s4`, `subs`,
+    * `codes` and `scored` (every sub-vector × code `d2`); no WITH.
+    */
+  private val pqScoredSql = """
+        s4 AS (SELECT unnest(range(0, 4)) AS sub),
+        subs AS (
+          SELECT vec_id, sub,
+                 CAST(list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS DOUBLE[]) AS sv
+          FROM embeddings CROSS JOIN s4),
+        codes AS (
+          SELECT vec_id AS code, sub,
+                 CAST(list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS DOUBLE[]) AS cv
+          FROM embeddings CROSS JOIN s4
+          WHERE vec_id < 8),
+        scored AS (
+          SELECT v.vec_id, v.sub, c.code,
+                 round(list_dot_product(v.sv, v.sv)
+                       - 2 * list_dot_product(v.sv, c.cv)
+                       + list_dot_product(c.cv, c.cv), 6) AS d2
+          FROM subs v JOIN codes c USING (sub))"""
+
   def queries: Seq[(String, NamedQuery)] = Seq(
 
     // ---------------------------------------------------------------- q37
@@ -421,13 +477,7 @@ object SimilarityQueries extends QueryModule {
         pairs AS (
           SELECT a.vec_id AS v1, b.vec_id AS v2,
                  round(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm), 6) AS cos
-          FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-        nn AS (
-          SELECT v1 AS vec_id, v2 AS nn_id, cos AS nn_cos
-          FROM (SELECT v1, v2, cos,
-                       row_number() OVER (PARTITION BY v1 ORDER BY cos DESC, v2 ASC) AS rn
-                FROM pairs)
-          WHERE rn = 1)
+          FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id <> b.vec_id),""" + nearestNeighbourSql + """
         SELECT a.vec_id, a.cell, nn.nn_id, nn.nn_cos
         FROM assigned a LEFT JOIN nn ON a.vec_id = nn.vec_id
         ORDER BY a.vec_id"""),
@@ -670,22 +720,7 @@ object SimilarityQueries extends QueryModule {
     // per-vec regroup — keyed by vec_id.
     "q142_pq_assign" -> NamedQuery(
       fn = (s, d) => {
-        val subIdx = array((0 until 4).map(lit): _*)
-        val subs = Tables.embeddings(s, d)
-          .select(col("vec_id"), explode(subIdx).as("sub"), col("embedding"))
-          .select(col("vec_id"), col("sub"),
-            expr("slice(embedding, sub * 16 + 1, 16)").as("sv"))
-        val codes = Tables.embeddings(s, d).filter(col("vec_id") < 8)
-          .select(col("vec_id").as("code"), explode(subIdx).as("sub"), col("embedding"))
-          .select(col("code"), col("sub"),
-            expr("slice(embedding, sub * 16 + 1, 16)").as("cv"))
-        val scored = subs.join(broadcast(codes), Seq("sub"))
-          .withColumn("d2", round(
-            expr("vec_dot(sv, sv) - 2 * vec_dot(sv, cv) + vec_dot(cv, cv)"), 6))
-        val best = scored
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("vec_id", "sub").orderBy(col("d2").asc, col("code").asc)))
-          .filter(col("rn") === 1)
+        val (_, _, best) = pqAssign(Tables.embeddings(s, d))
         best.groupBy("vec_id")
           .agg(
             max(when(col("sub") === 0, col("code"))).as("code_0"),
@@ -696,22 +731,7 @@ object SimilarityQueries extends QueryModule {
           .orderBy("vec_id")
       },
       oracle = Some("""
-        WITH s4 AS (SELECT unnest(range(0, 4)) AS sub),
-        subs AS (
-          SELECT vec_id, sub,
-                 CAST(list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS DOUBLE[]) AS sv
-          FROM embeddings CROSS JOIN s4),
-        codes AS (
-          SELECT vec_id AS code, sub,
-                 CAST(list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS DOUBLE[]) AS cv
-          FROM embeddings CROSS JOIN s4
-          WHERE vec_id < 8),
-        scored AS (
-          SELECT v.vec_id, v.sub, c.code,
-                 round(list_dot_product(v.sv, v.sv)
-                       - 2 * list_dot_product(v.sv, c.cv)
-                       + list_dot_product(c.cv, c.cv), 6) AS d2
-          FROM subs v JOIN codes c USING (sub)),
+        WITH""" + pqScoredSql + """,
         best AS (
           SELECT * FROM (
             SELECT *, row_number() OVER (PARTITION BY vec_id, sub
@@ -748,21 +768,9 @@ object SimilarityQueries extends QueryModule {
     "q144_pq_adc_topk" -> NamedQuery(
       fn = (s, d) => {
         val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-        val subIdx = array((0 until 4).map(lit): _*)
-        val emb = Tables.embeddings(s, d)
-        val subs = emb.select(col("vec_id"), explode(subIdx).as("sub"), col("embedding"))
-          .select(col("vec_id"), col("sub"), expr("slice(embedding, sub * 16 + 1, 16)").as("sv"))
-        val codes = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("code"), explode(subIdx).as("sub"), col("embedding"))
-          .select(col("code"), col("sub"), expr("slice(embedding, sub * 16 + 1, 16)").as("cv"))
+        val (subs, codes, best) = pqAssign(Tables.embeddings(s, d))
         // encode: q142's assignment, regrouped wide — (vec_id, c0..c3)
-        val encoded = subs.join(broadcast(codes), Seq("sub"))
-          .withColumn("d2", round(
-            expr("vec_dot(sv, sv) - 2 * vec_dot(sv, cv) + vec_dot(cv, cv)"), 6))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("vec_id", "sub").orderBy(col("d2").asc, col("code").asc)))
-          .filter(col("rn") === 1)
-          .groupBy("vec_id")
+        val encoded = best.groupBy("vec_id")
           .agg(
             max(when(col("sub") === 0, col("code"))).as("c0"),
             max(when(col("sub") === 1, col("code"))).as("c1"),
@@ -795,22 +803,7 @@ object SimilarityQueries extends QueryModule {
           .orderBy("qid", "nn_id")
       },
       oracle = Some("""
-        WITH s4 AS (SELECT unnest(range(0, 4)) AS sub),
-        subs AS (
-          SELECT vec_id, sub,
-                 CAST(list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS DOUBLE[]) AS sv
-          FROM embeddings CROSS JOIN s4),
-        codes AS (
-          SELECT vec_id AS code, sub,
-                 CAST(list_slice(embedding, sub * 16 + 1, sub * 16 + 16) AS DOUBLE[]) AS cv
-          FROM embeddings CROSS JOIN s4
-          WHERE vec_id < 8),
-        scored AS (
-          SELECT v.vec_id, v.sub, c.code,
-                 round(list_dot_product(v.sv, v.sv)
-                       - 2 * list_dot_product(v.sv, c.cv)
-                       + list_dot_product(c.cv, c.cv), 6) AS d2
-          FROM subs v JOIN codes c USING (sub)),
+        WITH""" + pqScoredSql + """,
         encoded AS (
           SELECT vec_id,
                  MAX(CASE WHEN sub = 0 THEN code END) AS c0,
@@ -874,7 +867,8 @@ object SimilarityQueries extends QueryModule {
         val (qa, _, index) = ivfServingParts(s, d, nQueries = 200, nprobe = 1)
         val qs = v.orderBy(md5(col("vec_id").cast("string"))).limit(200)
           .select(col("vec_id").as("qid"), col("embedding").as("qemb"), col("nrm").as("qnrm"))
-        val exact = v.crossJoin(broadcast(qs))
+        // each query's top-10 neighbours `nn` among its candidate rows
+        def top10(cands: DataFrame): DataFrame = cands
           .filter(col("vec_id") =!= col("qid"))
           .withColumn("cos", round(
             expr("vec_dot(embedding, qemb)") / (col("nrm") * col("qnrm")), 6))
@@ -882,14 +876,8 @@ object SimilarityQueries extends QueryModule {
           .agg(expr("top_k_pairs(cos, vec_id, 10)").as("topk"))
           .select(col("qid"), expr("inline(topk)"))
           .select(col("qid"), col("payload").as("nn"))
-        val ivf = index.join(broadcast(qa), Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("cos", round(
-            expr("vec_dot(embedding, qemb)") / (col("nrm") * col("qnrm")), 6))
-          .groupBy("qid")
-          .agg(expr("top_k_pairs(cos, vec_id, 10)").as("topk"))
-          .select(col("qid"), expr("inline(topk)"))
-          .select(col("qid"), col("payload").as("nn"))
+        val exact = top10(v.crossJoin(broadcast(qs)))
+        val ivf = top10(index.join(broadcast(qa), Seq("cell")))
         val hits = exact.join(ivf, Seq("qid", "nn"))
           .groupBy("qid").agg(count(lit(1)).as("hits"))
         val ivfN = ivf.groupBy("qid").agg(count(lit(1)).as("ivf_n"))
@@ -1101,13 +1089,7 @@ object SimilarityQueries extends QueryModule {
         pairs AS (
           SELECT q.v1, a.vec_id AS v2,
                  round(list_dot_product(q.emb1, a.emb) / (q.n1 * a.nrm), 6) AS cos
-          FROM probes q JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.v1),
-        nn AS (
-          SELECT v1 AS vec_id, v2 AS nn_id, cos AS nn_cos
-          FROM (SELECT v1, v2, cos,
-                       row_number() OVER (PARTITION BY v1 ORDER BY cos DESC, v2 ASC) AS rn
-                FROM pairs)
-          WHERE rn = 1)
+          FROM probes q JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.v1),""" + nearestNeighbourSql + """
         SELECT v.vec_id, nn.nn_id, nn.nn_cos
         FROM v LEFT JOIN nn ON v.vec_id = nn.vec_id
         ORDER BY v.vec_id"""),
@@ -1215,10 +1197,9 @@ object SimilarityQueries extends QueryModule {
             round(expr("vec_dot(embedding, p_emb)") / (col("nrm") * col("p_nrm")), 6))
           .select(col("probe_id"), col("vec_id").as("doc_id"), col("cos"),
             lit(0L).as("sh"))
-        val toks = Tables.documents(s, d)
-          .join(v.select(col("vec_id").as("doc_id")), Seq("doc_id"))
-          .select(col("doc_id"),
-            explode(array_distinct(split(trim(col("text")), "\\s+"))).as("tok"))
+        val toks = graft.ops.DedupOps.tokenSet(
+            Tables.documents(s, d).join(v.select(col("vec_id").as("doc_id")), Seq("doc_id")),
+            "text", Seq.empty)(s)
           .localCheckpoint(false) // doc side + probe side of the shared-token join
         val ptoks = toks.join(probes.select(col("probe_id").as("doc_id")), Seq("doc_id"))
           .select(col("doc_id").as("probe_id"), col("tok"))

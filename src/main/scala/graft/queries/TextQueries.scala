@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 import graft.Tables
 import graft.ops.TextOps
@@ -11,6 +13,72 @@ import graft.ops.TextOps
   * and each has an exact DuckDB oracle (md5 and regexp semantics align).
   */
 object TextQueries extends QueryModule {
+
+  /** `docs` with the language-ID heuristic's marker-token votes `v_en`,
+    * `v_es`, `v_de` and its argmax `pred_lang` (ties to en, then es):
+    * q31's and q188's one classifier.
+    */
+  private def withPredictedLang(docs: DataFrame): DataFrame = {
+    def votes(markers: String) =
+      size(split(col("padded"), s" ($markers) ")).cast("long") - 1L
+    docs.withColumn("padded", concat(lit(" "), col("text"), lit(" ")))
+      .withColumn("v_en", votes("the|and|of"))
+      .withColumn("v_es", votes("el|la|de"))
+      .withColumn("v_de", votes("der|die|und"))
+      .withColumn("pred_lang",
+        when(col("v_en") >= col("v_es") && col("v_en") >= col("v_de"), "en")
+          .when(col("v_es") >= col("v_de"), "es")
+          .otherwise("de"))
+  }
+
+  /** The DuckDB side of `withPredictedLang`'s votes: `scored`; no WITH. */
+  private val langVotesSql = """
+        scored AS (
+          SELECT lang,
+                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (the|and|of) ')) AS BIGINT) - 1 AS v_en,
+                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (el|la|de) ')) AS BIGINT) - 1 AS v_es,
+                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (der|die|und) ')) AS BIGINT) - 1 AS v_de
+          FROM documents)"""
+
+  /** The DuckDB side of `withPredictedLang`'s argmax, over `scored`'s votes. */
+  private val predLangSql = """CASE WHEN v_en >= v_es AND v_en >= v_de THEN 'en'
+                    WHEN v_es >= v_de THEN 'es'
+                    ELSE 'de' END AS pred_lang"""
+
+  /** Winnowing fingerprints (MOSS-style) of the documents with at least
+    * 6 tokens (≥ 3 shingles → ≥ 1 full-ish window): every 3-token
+    * shingle hashes to the first 60 bits of its md5 as a LONG, and each
+    * document keeps the distinct minima `fp` of its 4-shingle windows.
+    * q56's per-doc fingerprints and q154's cross-doc overlap.
+    */
+  private def winnowFingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+      .filter(size(col("toks")) >= 6)
+      .select(col("doc_id"),
+        posexplode(expr(
+          "transform(sequence(1, size(toks)-2), i -> " +
+            "cast(conv(substring(md5(concat(element_at(toks,i),' ',element_at(toks,i+1),' ',element_at(toks,i+2))), 1, 15), 16, 10) as bigint))"))
+          .as(Seq("pos", "h")))
+      .withColumn("fp", min(col("h")).over(Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)))
+      .select("doc_id", "fp").distinct()
+
+  /** The DuckDB side of `winnowFingerprints`: `docs`, `sh` and `fps`,
+    * whose window minima are named `fp`; no WITH.
+    */
+  private def winnowSql(fp: String): String = """
+        docs AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
+          FROM documents
+          WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 6),
+        sh AS (
+          SELECT doc_id, i AS pos,
+                 CAST('0x' || substr(md5(a[i] || ' ' || a[i+1] || ' ' || a[i+2]), 1, 15) AS BIGINT) AS h
+          FROM docs CROSS JOIN LATERAL unnest(range(1, len(a) - 1)) AS t(i)),
+        fps AS (
+          SELECT DISTINCT doc_id,
+                 min(h) OVER (PARTITION BY doc_id ORDER BY pos
+                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS """ + fp + """
+          FROM sh)"""
 
   def queries: Seq[(String, NamedQuery)] = Seq(
 
@@ -44,32 +112,14 @@ object TextQueries extends QueryModule {
     // pinned tie-break; compared against the labeled lang column.
     "q31_langid" -> NamedQuery(
       fn = (s, d) => {
-        val t = Tables.documents(s, d)
-          .withColumn("padded", concat(lit(" "), col("text"), lit(" ")))
-        def votes(markers: String) =
-          size(split(col("padded"), s" ($markers) ")).cast("long") - 1L
-        val scored = t
-          .withColumn("v_en", votes("the|and|of"))
-          .withColumn("v_es", votes("el|la|de"))
-          .withColumn("v_de", votes("der|die|und"))
-        val pred = scored.withColumn("pred_lang",
-          when(col("v_en") >= col("v_es") && col("v_en") >= col("v_de"), "en")
-            .when(col("v_es") >= col("v_de"), "es")
-            .otherwise("de"))
-        pred.groupBy("lang", "pred_lang").agg(count(lit(1)).as("n_docs"))
+        withPredictedLang(Tables.documents(s, d))
+          .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n_docs"))
           .orderBy("lang", "pred_lang")
       },
       oracle = Some("""
-        WITH scored AS (
-          SELECT lang,
-                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (the|and|of) ')) AS BIGINT) - 1 AS v_en,
-                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (el|la|de) ')) AS BIGINT) - 1 AS v_es,
-                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (der|die|und) ')) AS BIGINT) - 1 AS v_de
-          FROM documents)
+        WITH""" + langVotesSql + """
         SELECT lang,
-               CASE WHEN v_en >= v_es AND v_en >= v_de THEN 'en'
-                    WHEN v_es >= v_de THEN 'es'
-                    ELSE 'de' END AS pred_lang,
+               """ + predLangSql + """,
                COUNT(*) AS n_docs
         FROM scored
         GROUP BY 1, 2
@@ -105,41 +155,16 @@ object TextQueries extends QueryModule {
     // SortAggregate). Output: per-doc fingerprint-set stats (bounded).
     "q56_winnowing" -> NamedQuery(
       fn = (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-          .filter(size(col("toks")) >= 6) // ≥ 3 shingles → ≥ 1 full-ish window
-        val shingles = docs.select(col("doc_id"),
-          posexplode(expr(
-            "transform(sequence(1, size(toks)-2), i -> " +
-              "cast(conv(substring(md5(concat(element_at(toks,i),' ',element_at(toks,i+1),' ',element_at(toks,i+2))), 1, 15), 16, 10) as bigint))"))
-            .as(Seq("pos", "h")))
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-          .rowsBetween(0, 3)
-        val fps = shingles
-          .withColumn("win_min", min(col("h")).over(w))
-          .select("doc_id", "win_min").distinct()
-        fps.groupBy("doc_id")
+        winnowFingerprints(Tables.documents(s, d))
+          .groupBy("doc_id")
           .agg(
             count(lit(1)).as("n_fingerprints"),
-            min(col("win_min")).as("min_fp"),
-            max(col("win_min")).as("max_fp"))
+            min(col("fp")).as("min_fp"),
+            max(col("fp")).as("max_fp"))
           .orderBy("doc_id")
       },
       oracle = Some("""
-        WITH docs AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
-          FROM documents
-          WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 6),
-        sh AS (
-          SELECT doc_id, i AS pos,
-                 CAST('0x' || substr(md5(a[i] || ' ' || a[i+1] || ' ' || a[i+2]), 1, 15) AS BIGINT) AS h
-          FROM docs CROSS JOIN LATERAL unnest(range(1, len(a) - 1)) AS t(i)),
-        fps AS (
-          SELECT DISTINCT doc_id,
-                 min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS win_min
-          FROM sh)
+        WITH""" + winnowSql("win_min") + """
         SELECT doc_id, COUNT(*) AS n_fingerprints,
                MIN(win_min) AS min_fp, MAX(win_min) AS max_fp
         FROM fps
@@ -214,19 +239,7 @@ object TextQueries extends QueryModule {
     // short excerpt inside a long doc still scores high.
     "q154_winnow_overlap" -> NamedQuery(
       fn = (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-          .filter(size(col("toks")) >= 6)
-        val shingles = docs.select(col("doc_id"),
-          posexplode(expr(
-            "transform(sequence(1, size(toks)-2), i -> " +
-              "cast(conv(substring(md5(concat(element_at(toks,i),' ',element_at(toks,i+1),' ',element_at(toks,i+2))), 1, 15), 16, 10) as bigint))"))
-            .as(Seq("pos", "h")))
-        val w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
-        val fps = shingles
-          .withColumn("fp", min(col("h")).over(w))
-          .select("doc_id", "fp").distinct()
+        val fps = winnowFingerprints(Tables.documents(s, d))
           // 4 consumers (sizes, the stop-fp counts, both self-join
           // sides) and Catalyst reuses no exchange across the renamed
           // branches: without the cut the tokenize+hash+window+distinct
@@ -254,19 +267,7 @@ object TextQueries extends QueryModule {
           .orderBy("d1", "d2")
       },
       oracle = Some("""
-        WITH docs AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
-          FROM documents
-          WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 6),
-        sh AS (
-          SELECT doc_id, i AS pos,
-                 CAST('0x' || substr(md5(a[i] || ' ' || a[i+1] || ' ' || a[i+2]), 1, 15) AS BIGINT) AS h
-          FROM docs CROSS JOIN LATERAL unnest(range(1, len(a) - 1)) AS t(i)),
-        fps AS (
-          SELECT DISTINCT doc_id,
-                 min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-          FROM sh),
+        WITH""" + winnowSql("fp") + """,
         sizes AS (SELECT doc_id, COUNT(*) AS nfp FROM fps GROUP BY doc_id),
         rare AS (
           SELECT fp FROM (SELECT fp, COUNT(*) AS ndocs FROM fps GROUP BY fp)
@@ -618,18 +619,7 @@ object TextQueries extends QueryModule {
     // engines, so no rounding (and no rounding-tie hazard) is needed.
     "q188_langid_kappa" -> NamedQuery(
       fn = (s, d) => {
-        val t = Tables.documents(s, d)
-          .withColumn("padded", concat(lit(" "), col("text"), lit(" ")))
-        def votes(markers: String) =
-          size(split(col("padded"), s" ($markers) ")).cast("long") - 1L
-        val counts = t
-          .withColumn("v_en", votes("the|and|of"))
-          .withColumn("v_es", votes("el|la|de"))
-          .withColumn("v_de", votes("der|die|und"))
-          .withColumn("pred_lang",
-            when(col("v_en") >= col("v_es") && col("v_en") >= col("v_de"), "en")
-              .when(col("v_es") >= col("v_de"), "es")
-              .otherwise("de"))
+        val counts = withPredictedLang(Tables.documents(s, d))
           .groupBy("lang", "pred_lang").agg(count(lit(1)).as("c"))
           .localCheckpoint(false)
         val n = counts.agg(sum(col("c")).as("n"))
@@ -647,16 +637,10 @@ object TextQueries extends QueryModule {
           .select("n", "agree", "cross_sum", "p_o", "p_e", "kappa")
       },
       oracle = Some("""
-        WITH scored AS (
-          SELECT lang,
-                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (the|and|of) ')) AS BIGINT) - 1 AS v_en,
-                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (el|la|de) ')) AS BIGINT) - 1 AS v_es,
-                 CAST(len(regexp_split_to_array(' ' || text || ' ', ' (der|die|und) ')) AS BIGINT) - 1 AS v_de
-          FROM documents),
+        WITH""" + langVotesSql + """,
         counts AS (
           SELECT lang,
-                 CASE WHEN v_en >= v_es AND v_en >= v_de THEN 'en'
-                      WHEN v_es >= v_de THEN 'es' ELSE 'de' END AS pred_lang,
+                 """ + predLangSql + """,
                  COUNT(*) AS c
           FROM scored GROUP BY 1, 2),
         nn AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM counts),
